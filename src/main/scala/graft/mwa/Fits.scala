@@ -196,6 +196,15 @@ object Fits {
     } finally raf.close()
   }
 
+  /** The primary header alone: what scan planning needs, without walking
+    * the file's other HDUs. */
+  def readPrimary(path: String): Header = {
+    val raf = new RandomAccessFile(path, "r")
+    try readHeader(raf, 0L).getOrElse(
+      throw new IllegalArgumentException(s"$path: empty FITS file"))
+    finally raf.close()
+  }
+
   /** Generic BINTABLE row decoder: yields one Array[Any] per row, aligned
     * with the TTYPEn order; J->Int, D->Double, L->Boolean, A->String. */
   def readRows(raf: RandomAccessFile, h: Header): Iterator[Array[Any]] = {
@@ -301,6 +310,9 @@ object Fits {
       PCount + 3 * spec.pols.length * spec.nCoarse * spec.nFine
 
     def write(dir: Path, spec: VisGenerator.Spec): Path = {
+      // 256*(ant1+1) + (ant2+1) is only unambiguous for ant2+1 < 256
+      require(spec.nAnts <= 255,
+        s"uvfits baseline codes hold at most 255 antennas, got nAnts=${spec.nAnts}")
       Files.createDirectories(dir)
       val path = dir.resolve(s"${spec.obsid}.uvfits")
       val baselines =

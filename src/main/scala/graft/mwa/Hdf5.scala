@@ -228,27 +228,26 @@ object Hdf5 {
 
   final case class Ds(dtype: Dtype, dims: Seq[Long], dataAddr: Long, dataLen: Long)
 
-  /** Parse the full dataset map ("group/name" -> Ds) of a subset file.
-    * Metadata only — no data bytes are touched (the scan's planning pass). */
-  def datasets(path: String): Map[String, Ds] = {
-    val raf = new RandomAccessFile(path, "r")
-    try {
-      val sigBuf = new Array[Byte](8)
-      raf.readFully(sigBuf)
-      require(sigBuf.sameElements(
-        Array(0x89, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n').map(_.toByte)),
-        s"$path: not an HDF5 file")
-      raf.seek(13)
-      require(raf.read() == 8 && raf.read() == 8,
-        s"$path: only 8-byte offsets/lengths supported")
-      raf.seek(64)
-      val rootOh = readLong(raf)
-      groupMembers(raf, rootOh).flatMap { case (gName, gOh) =>
-        groupMembers(raf, gOh).flatMap { case (dName, dOh) =>
-          parseDataset(raf, dOh).map(ds => s"$gName/$dName" -> ds)
-        }
-      }.toMap
-    } finally raf.close()
+  /** Parse the full dataset map ("group/name" -> Ds) of the subset file
+    * open in `raf` (`path` names it in errors). Metadata only — no data
+    * bytes are touched (the scan's planning pass). */
+  def datasets(raf: RandomAccessFile, path: String): Map[String, Ds] = {
+    raf.seek(0)
+    val sigBuf = new Array[Byte](8)
+    raf.readFully(sigBuf)
+    require(sigBuf.sameElements(
+      Array(0x89, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n').map(_.toByte)),
+      s"$path: not an HDF5 file")
+    raf.seek(13)
+    require(raf.read() == 8 && raf.read() == 8,
+      s"$path: only 8-byte offsets/lengths supported")
+    raf.seek(64)
+    val rootOh = readLong(raf)
+    groupMembers(raf, rootOh).flatMap { case (gName, gOh) =>
+      groupMembers(raf, gOh).flatMap { case (dName, dOh) =>
+        parseDataset(raf, dOh).map(ds => s"$gName/$dName" -> ds)
+      }
+    }.toMap
   }
 
   private def readLong(raf: RandomAccessFile): Long = {
@@ -412,10 +411,6 @@ object Hdf5 {
   def readFloats(raf: RandomAccessFile, ds: Ds, from: Long, n: Int): Array[Float] = {
     val bb = readBytesOf(raf, ds, from, n)
     Array.fill(n)(bb.getFloat)
-  }
-  def scalarLong(path: String, ds: Ds): Long = {
-    val raf = new RandomAccessFile(path, "r")
-    try readLongs(raf, ds, 0, 1)(0) finally raf.close()
   }
 
   // ------------------------------------------------------- encode helpers

@@ -1,10 +1,10 @@
 package graft.sources
 
+import java.io.{File, RandomAccessFile}
 import java.util
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -13,21 +13,24 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.mwa.VisGenerator.Spec
+import graft.mwa.{Fits, Hdf5, Uvh5}
 
-/** DataSource V2 for the synthetic visibility table: `format("graft-vis")`.
+/** DataSource V2 over raw visibility files: `format("graft-vis")`.
+  * Options: `path`, a directory holding ONE input family (gpubox `.fits`,
+  * `.uvfits` or `.uvh5`), and `timeslice`, integrations per partition
+  * (default 4).
   *
-  * This is the SURVEY §2.1 S2 Phase-2 shape: a custom TableProvider whose
-  * Batch plans ONE InputPartition PER (coarse_chan, time-slice) — exactly
-  * the two axes the reference's batched reader splits work by
-  * (`processors.py:166-172`, gpubox files × time batches) — so a real
-  * correlator-format reader drops in by replacing the row kernel with a
-  * file decoder, keeping the planning identical. Implements
+  * This is the SURVEY §2.1 S2 Phase-2 shape with the reference's one
+  * processor interface and a per-format strategy behind it
+  * (`processors.py:23-38`): a single [[VisScan]] plans ONE InputPartition
+  * PER (file, time-slice) — the two axes the reference's batched reader
+  * splits work by (`processors.py:166-172`, gpubox files × time batches;
+  * a gpubox file is one coarse channel). Only two things differ per
+  * format, both behind [[VisFile]]: the planning-time metadata parse and
+  * the decode of one time slice into the 13-column layout. Listing, pruning,
+  * projection and the file handle exist once. Implements
   * SupportsPushDownRequiredColumns, so narrow projections (e.g. the
-  * metadata-only time scan, S3) never materialize payload columns.
-  *
-  * Values are bit-identical to VisGenerator.vis: VisKernel reproduces the
-  * Catalyst xxhash64 seed chain of the column-expression generator.
+  * metadata-only time scan, S3) hand Spark only the columns they need.
   */
 class VisSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-vis"
@@ -35,24 +38,7 @@ class VisSourceProvider extends TableProvider with DataSourceRegister {
     VisSource.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new VisTable(VisSource.specFrom(new CaseInsensitiveStringMap(properties)))
-}
-
-/** One gpubox FITS file of an observation: its coarse channel and the
-  * geometry keywords from its primary header (parsed once, driver-side,
-  * at planning time — the reference's manifest scan). */
-case class FitsFileMeta(path: String, obsid: Long, coarseChan: Int,
-                        nTimes: Int, nFine: Int,
-                        freq0Hz: Double, dfHz: Double,
-                        jd0: Double, dtDays: Double)
-
-object FitsFileMeta {
-  def fromPrimary(path: String): FitsFileMeta = {
-    val h = graft.mwa.Fits.readHeaders(path).head
-    FitsFileMeta(path, h.long("OBSID"), h.int("COARSE"), h.int("NTIMES"),
-      h.int("NFINE"), h.double("FREQ0"), h.double("DFHZ"),
-      h.double("JD0"), h.double("DTDAYS"))
-  }
+    new VisTable(VisSource.path(new CaseInsensitiveStringMap(properties)))
 }
 
 object VisSource {
@@ -71,32 +57,40 @@ object VisSource {
     StructField("flag", BooleanType, nullable = false),
     StructField("nsample", DoubleType, nullable = false)))
 
-  def specFrom(o: CaseInsensitiveStringMap): Spec = Spec(
-    obsid = o.getLong("obsid", Spec().obsid),
-    nTimes = o.getInt("ntimes", Spec().nTimes),
-    nAnts = o.getInt("nants", Spec().nAnts),
-    nCoarse = o.getInt("ncoarse", Spec().nCoarse),
-    nFine = o.getInt("nfine", Spec().nFine),
-    seed = o.getLong("seed", Spec().seed),
-    noiseSigma = o.getDouble("noisesigma", Spec().noiseSigma))
-
   def timeSlice(o: CaseInsensitiveStringMap): Int = o.getInt("timeslice", 4)
 
-  def path(o: CaseInsensitiveStringMap): Option[String] =
-    Option(o.get("path")).filter(_.nonEmpty)
+  def path(o: CaseInsensitiveStringMap): String =
+    Option(o.get("path")).filter(_.nonEmpty).getOrElse(
+      throw new IllegalArgumentException(
+        "graft-vis needs option 'path': a directory of gpubox .fits, " +
+          ".uvfits or .uvh5 files"))
+
+  /** The metadata parse of each decoded family, by file extension. */
+  val formats: Map[String, String => VisFile] = Map(
+    ".fits" -> FitsFile.open, ".uvfits" -> UvfitsFile.open,
+    ".uvh5" -> Uvh5File.open)
+
+  /** The inputs directly under `dir` by extension, each sorted by name:
+    * files of a decoded family, and `.ms` table directories. */
+  def inputs(dir: String): Map[String, Seq[String]] =
+    Option(new File(dir).listFiles()).getOrElse(Array.empty[File])
+      .sortBy(_.getName).toSeq.flatMap { f =>
+        (formats.keys.toSeq :+ MsFormat.Ext).find(f.getName.endsWith)
+          .filter(ext => f.isDirectory == (ext == MsFormat.Ext))
+          .map(_ -> f.getPath)
+      }.groupMap(_._1)(_._2)
 }
 
-class VisTable(spec: Spec) extends Table with SupportsRead {
-  override def name(): String = s"graft_vis_${spec.obsid}"
+class VisTable(path: String) extends Table with SupportsRead {
+  override def name(): String = s"graft_vis $path"
   override def schema(): StructType = VisSource.schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new VisScanBuilder(VisSource.specFrom(options), VisSource.timeSlice(options),
-      VisSource.path(options))
+    new VisScanBuilder(path, VisSource.timeSlice(options))
 }
 
-class VisScanBuilder(spec: Spec, slice: Int, path: Option[String] = None)
+class VisScanBuilder(path: String, slice: Int)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   private var required: StructType = VisSource.schema
@@ -116,16 +110,25 @@ class VisScanBuilder(spec: Spec, slice: Int, path: Option[String] = None)
   }
   override def pushedFilters(): Array[sources.Filter] = pushed
 
-  override def build(): Scan = path match {
-    case Some(p) if UvfitsVisScan.hasUvfits(p) =>
-      new UvfitsVisScan(p, slice, required, pushed)
-    case Some(p) if Uvh5VisScan.hasUvh5(p) =>
-      new Uvh5VisScan(p, slice, required, pushed)
-    case Some(p) if MsFormat.hasMs(p) => throw MsFormat.unsupported(p)
-    case Some(p) => new FitsVisScan(p, slice, required, pushed)
-    case None => new VisScan(spec, slice, required, pushed)
+  /** Lists `path` once and picks its one input family; a directory mixing
+    * families fails rather than silently reading only one of them. */
+  override def build(): Scan = {
+    val found = VisSource.inputs(path)
+    if (found.size > 1)
+      throw new MixedVisFormatsException(
+        s"$path holds more than one input family (${found.keys.toSeq.sorted
+          .mkString(", ")}); graft-vis reads one family per directory")
+    found.headOption match {
+      case Some((MsFormat.Ext, ms)) => throw MsFormat.unsupported(ms)
+      case Some((ext, files)) =>
+        new VisScan(path, ext, files, slice, required, pushed)
+      case None => throw new IllegalArgumentException(
+        s"No gpubox .fits, .uvfits or .uvh5 files under $path")
+    }
   }
 }
+
+class MixedVisFormatsException(msg: String) extends IllegalArgumentException(msg)
 
 /** CASA MeasurementSet: typed + validated as an input family
   * (`mwa/FileSet.scala`, `mwa/Validation.scala` — the reference accepts
@@ -144,15 +147,12 @@ class VisScanBuilder(spec: Spec, slice: Int, path: Option[String] = None)
   * conversion path (every MS exports losslessly to uvfits/uvh5, both
   * decoded natively here) is the honest contract. */
 object MsFormat {
-  def listMs(path: String): Seq[String] =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.endsWith(".ms"))
-      .sortBy(_.getName).map(_.getPath).toSeq
-  def hasMs(path: String): Boolean = listMs(path).nonEmpty
-  def unsupported(path: String): MsNotSupportedException =
+  val Ext = ".ms"
+  def hasMs(path: String): Boolean = VisSource.inputs(path).contains(Ext)
+  def unsupported(found: Seq[String]): MsNotSupportedException =
     new MsNotSupportedException(
       s"CASA MeasurementSet input is typed and validated but not decoded " +
-        s"(found: ${listMs(path).mkString(", ")}). The CASA Table Data " +
+        s"(found: ${found.mkString(", ")}). The CASA Table Data " +
         "System has no public byte-level specification to decode against " +
         "(its layout is defined by the casacore implementation only). " +
         "Convert to uvfits or uvh5 — both are decoded natively by this " +
@@ -186,460 +186,250 @@ object VisScan {
     case _ => true
   }
 
-  def keepPartition(p: VisPartition, pushed: Array[sources.Filter]): Boolean =
-    keepSlice(p.coarseChan, p.timeStart, p.timeEnd, pushed)
-
-  /** Time-axis-only pruning for partitions that span every coarse channel
-    * (uvfits groups carry the whole frequency axis per visibility). */
-  def keepTimeSlice(timeStart: Int, timeEnd: Int,
-                    pushed: Array[sources.Filter]): Boolean =
-    (timeStart until timeEnd).exists(t =>
-      pushed.forall(f => sat(f, "time_idx", t)))
-
-  def keepSlice(coarseChan: Int, timeStart: Int, timeEnd: Int,
-                pushed: Array[sources.Filter]): Boolean =
-    pushed.forall(f => sat(f, "coarse_chan", coarseChan)) &&
-      (timeStart until timeEnd).exists(t =>
-        pushed.forall(f => sat(f, "time_idx", t)))
+  /** Can a partition of time slice [t0, t1) hold a row the pushed filters
+    * accept? `chan` is the partition's one coarse channel, or None when
+    * it spans them all (coarse_chan filters then stay residual). */
+  def keep(chan: Option[Int], t0: Int, t1: Int,
+           pushed: Array[sources.Filter]): Boolean =
+    chan.forall(c => pushed.forall(f => sat(f, "coarse_chan", c))) &&
+      (t0 until t1).exists(t => pushed.forall(f => sat(f, "time_idx", t)))
 }
 
-class VisScan(spec: Spec, slice: Int, required: StructType,
-              pushed: Array[sources.Filter] = Array.empty) extends Scan with Batch {
+/** The scan over one directory's files of family `ext`: parses each
+  * file's metadata once, at planning time (no payload bytes)
+  * and plans one partition per (file, time-slice) that the pushed
+  * time_idx/coarse_chan filters keep. */
+class VisScan(path: String, ext: String, files: Seq[String], slice: Int,
+              required: StructType, pushed: Array[sources.Filter])
+    extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"graft-vis PushedFilters: [${pushed.mkString(", ")}]"
-  override def planInputPartitions(): Array[InputPartition] =
-    (for {
-      chan <- 0 until spec.nCoarse
-      t0 <- 0 until spec.nTimes by slice
-      p = VisPartition(chan, t0, math.min(t0 + slice, spec.nTimes))
-      if VisScan.keepPartition(p, pushed)
-    } yield p: InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new VisReaderFactory(spec, required)
-}
+    s"graft-vis $ext path=$path PushedFilters: [${pushed.mkString(", ")}]"
 
-case class VisPartition(coarseChan: Int, timeStart: Int, timeEnd: Int)
-    extends InputPartition
-
-class VisReaderFactory(spec: Spec, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new VisPartitionReader(partition.asInstanceOf[VisPartition], spec, required)
-}
-
-class VisPartitionReader(part: VisPartition, spec: Spec, required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val baselines =
-    (for (a1 <- 0 until spec.nAnts; a2 <- a1 until spec.nAnts) yield (a1, a2)).toArray
-  private val fieldIdx = required.fieldNames.map(n =>
-    n -> VisSource.schema.fieldIndex(n)).toMap
-  private val it: Iterator[InternalRow] = for {
-    t <- (part.timeStart until part.timeEnd).iterator
-    (a1, a2) <- baselines.iterator
-    f <- (0 until spec.nFine).iterator
-    pol <- spec.pols.iterator
-  } yield makeRow(t, a1, a2, part.coarseChan * spec.nFine + f, pol)
-  private var current: InternalRow = _
-
-  private def makeRow(t: Int, a1: Int, a2: Int, freqIdx: Int, pol: String): InternalRow = {
-    val baseline = a1.toLong * 2048 + a2
-    val k = VisKernel
-    val sky = k.uniform(spec.seed, 1, None, baseline, freqIdx, pol) * spec.skyAmp
-    val narrow = if (freqIdx == spec.rfiFreqIdx &&
-      t >= spec.rfiTimes._1 && t <= spec.rfiTimes._2) spec.rfiAmp else 0.0
-    val streak = if (t == spec.streakTime) spec.streakAmp else 0.0
-    val gain = 1.0 + spec.bandRipple *
-      math.sin(math.Pi * (freqIdx % spec.nFine) / (spec.nFine - 1))
-    val re = gain * (sky + narrow + streak +
-      k.gaussian(spec.seed, 3, Some(t), baseline, freqIdx, pol) * spec.noiseSigma)
-    val im = gain * (sky + narrow + streak +
-      k.gaussian(spec.seed, 5, Some(t), baseline, freqIdx, pol) * spec.noiseSigma)
-    val full: Array[Any] = Array(
-      spec.obsid, t, spec.jd0 + t * spec.dtDays, a1, a2, baseline,
-      freqIdx / spec.nFine, spec.freq0Hz + freqIdx * spec.dfHz,
-      UTF8String.fromString(pol), re, im, false, 1.0)
-    new GenericInternalRow(required.fieldNames.map(n => full(fieldIdx(n))))
-  }
-
-  override def next(): Boolean = { if (it.hasNext) { current = it.next(); true } else false }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-// ------------------------------------------------------- FITS-backed variant
-
-/** Scan over real gpubox FITS files (option `path`): plans one partition
-  * per (file=coarse channel, time-slice) from the primary headers —
-  * driver-side metadata only, no payload bytes — and lets the pushed
-  * time_idx/coarse_chan filters prune whole files and HDU ranges before
-  * any data is opened. This is the same planning shape the synthetic scan
-  * uses, with the row kernel replaced by the binary-table decoder. */
-class FitsVisScan(path: String, slice: Int, required: StructType,
-                  pushed: Array[sources.Filter]) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-vis fits path=$path PushedFilters: [${pushed.mkString(", ")}]"
-
-  private lazy val files: Seq[FitsFileMeta] = {
-    val dir = new java.io.File(path)
-    val fits = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".fits")).sortBy(_.getName)
-    require(fits.nonEmpty, s"No .fits files under $path")
-    fits.toSeq.map(f => FitsFileMeta.fromPrimary(f.getPath))
-  }
+  private lazy val parsed: Seq[VisFile] = files.map(VisSource.formats(ext))
 
   override def planInputPartitions(): Array[InputPartition] =
     (for {
-      m <- files
-      t0 <- 0 until m.nTimes by slice
-      p = FitsVisPartition(m, t0, math.min(t0 + slice, m.nTimes))
-      if VisScan.keepSlice(m.coarseChan, p.timeStart, p.timeEnd, pushed)
-    } yield p: InputPartition).toArray
+      f <- parsed
+      t0 <- 0 until f.nTimes by slice
+      t1 = math.min(t0 + slice, f.nTimes)
+      if VisScan.keep(f.coarseChan, t0, t1, pushed)
+    } yield VisPartition(f, t0, t1): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FitsReaderFactory(required)
+    new VisReaderFactory(required)
 }
 
-case class FitsVisPartition(meta: FitsFileMeta, timeStart: Int, timeEnd: Int)
+case class VisPartition(file: VisFile, timeStart: Int, timeEnd: Int)
     extends InputPartition
 
-class FitsReaderFactory(required: StructType) extends PartitionReaderFactory {
+class VisReaderFactory(required: StructType) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new FitsPartitionReader(partition.asInstanceOf[FitsVisPartition], required)
+    new VisPartitionReader(partition.asInstanceOf[VisPartition], required)
 }
 
-/** Decodes the BINTABLE HDUs whose TIMEIDX falls in this partition's
-  * slice. Headers are walked sequentially (cheap: 2880-byte records);
-  * only in-slice data units are read. */
-class FitsPartitionReader(part: FitsVisPartition, required: StructType)
+/** Reads one partition: owns the file handle and projects the decoder's
+  * full rows onto `required`, with the column ordinals resolved once. If
+  * setup (the decoder's eager reads) throws, the handle is closed here —
+  * Spark only closes readers it got back. */
+class VisPartitionReader(part: VisPartition, required: StructType)
     extends PartitionReader[InternalRow] {
-  import graft.mwa.Fits
-
-  private val m = part.meta
-  private val raf = new java.io.RandomAccessFile(m.path, "r")
-  private val fieldIdx = required.fieldNames.map(n =>
-    n -> VisSource.schema.fieldIndex(n)).toMap
-
-  private val hdus: Seq[Fits.Header] = {
-    val out = Seq.newBuilder[Fits.Header]
-    var off = 0L
-    var h = Fits.readHeader(raf, off)
-    while (h.isDefined) {
-      val hd = h.get
-      if (hd.has("TIMEIDX") &&
-        hd.int("TIMEIDX") >= part.timeStart && hd.int("TIMEIDX") < part.timeEnd)
-        out += hd
-      off = hd.nextHduOffset
-      h = Fits.readHeader(raf, off)
-    }
-    out.result()
-  }
-
-  private val colOf = Fits.VisFields.map(_.name).zipWithIndex.toMap
-
-  private val it: Iterator[InternalRow] = hdus.iterator.flatMap { h =>
-    val t = h.int("TIMEIDX")
-    val jd = h.double("TIMEJD")
-    Fits.readRows(raf, h).map { r =>
-      val a1 = r(colOf("ANT1")).asInstanceOf[Int]
-      val a2 = r(colOf("ANT2")).asInstanceOf[Int]
-      val fine = r(colOf("FINECH")).asInstanceOf[Int]
-      val freqIdx = m.coarseChan * m.nFine + fine
-      val full: Array[Any] = Array(
-        m.obsid, t, jd, a1, a2, a1.toLong * 2048 + a2,
-        m.coarseChan, m.freq0Hz + freqIdx * m.dfHz,
-        UTF8String.fromString(r(colOf("POL")).asInstanceOf[String]),
-        r(colOf("VISRE")).asInstanceOf[Double],
-        r(colOf("VISIM")).asInstanceOf[Double],
-        r(colOf("FLAG")).asInstanceOf[Boolean],
-        r(colOf("NSAMP")).asInstanceOf[Double])
-      new GenericInternalRow(required.fieldNames.map(n => full(fieldIdx(n))))
-    }
-  }
+  private val raf = new RandomAccessFile(part.file.path, "r")
+  private val rows: Iterator[Array[Any]] =
+    try part.file.decode(raf, part.timeStart, part.timeEnd)
+    catch { case e: Throwable => raf.close(); throw e }
+  private val ordinals = required.fieldNames.map(VisSource.schema.fieldIndex)
 
   private var current: InternalRow = _
-  override def next(): Boolean = { if (it.hasNext) { current = it.next(); true } else false }
+  override def next(): Boolean = rows.hasNext && {
+    val full = rows.next()
+    current = new GenericInternalRow(ordinals.map(i => full(i)))
+    true
+  }
   override def get(): InternalRow = current
   override def close(): Unit = raf.close()
 }
 
-// ----------------------------------------------------- uvfits-backed variant
+/** One input file with its planning metadata, parsed once when the scan
+  * is planned and carried in every partition of the file. */
+sealed trait VisFile extends Serializable {
+  def path: String
+  def nTimes: Int
+  /** The file's one coarse channel, if it holds only one (gpubox). */
+  def coarseChan: Option[Int]
+  /** Time slice [t0, t1) of the file open in `raf` as full rows in
+    * [[VisSource.schema]] order. Eager reads happen before this returns. */
+  def decode(raf: RandomAccessFile, t0: Int, t1: Int): Iterator[Array[Any]]
+}
 
-/** One uvfits (FITS random-groups) file: whole-observation geometry from
-  * the primary header — parsed driver-side at planning time, like the
-  * gpubox manifest scan. */
-case class UvfitsFileMeta(path: String, obsid: Long, nTimes: Int, nAnts: Int,
-                          nFine: Int, nCoarse: Int, pols: Seq[String],
-                          freq0Hz: Double, dfHz: Double,
-                          jd0: Double, dtDays: Double)
+/** A gpubox FITS file: one coarse channel, one BINTABLE HDU per
+  * integration; planning reads its primary header only. */
+case class FitsFile(path: String, obsid: Long, chan: Int, nTimes: Int,
+                    nFine: Int, freq0Hz: Double, dfHz: Double) extends VisFile {
+  override def coarseChan: Option[Int] = Some(chan)
 
-object UvfitsFileMeta {
-  def fromPrimary(path: String): UvfitsFileMeta = {
-    val h = graft.mwa.Fits.readHeaders(path).head
+  /** Walks the HDU headers sequentially (cheap: 2880-byte records) and
+    * decodes only the data units whose TIMEIDX falls in the slice. */
+  override def decode(raf: RandomAccessFile, t0: Int, t1: Int): Iterator[Array[Any]] = {
+    val hdus = Seq.newBuilder[Fits.Header]
+    var next = Fits.readHeader(raf, 0L)
+    while (next.isDefined) {
+      val hd = next.get
+      if (hd.has("TIMEIDX") && hd.int("TIMEIDX") >= t0 && hd.int("TIMEIDX") < t1)
+        hdus += hd
+      next = Fits.readHeader(raf, hd.nextHduOffset)
+    }
+    val colOf = FitsFile.colOf
+    hdus.result().iterator.flatMap { h =>
+      val t = h.int("TIMEIDX")
+      val jd = h.double("TIMEJD")
+      Fits.readRows(raf, h).map { r =>
+        val a1 = r(colOf("ANT1")).asInstanceOf[Int]
+        val a2 = r(colOf("ANT2")).asInstanceOf[Int]
+        val freqIdx = chan * nFine + r(colOf("FINECH")).asInstanceOf[Int]
+        Array[Any](
+          obsid, t, jd, a1, a2, a1.toLong * 2048 + a2,
+          chan, freq0Hz + freqIdx * dfHz,
+          UTF8String.fromString(r(colOf("POL")).asInstanceOf[String]),
+          r(colOf("VISRE")).asInstanceOf[Double],
+          r(colOf("VISIM")).asInstanceOf[Double],
+          r(colOf("FLAG")).asInstanceOf[Boolean],
+          r(colOf("NSAMP")).asInstanceOf[Double])
+      }
+    }
+  }
+}
+
+object FitsFile {
+  private val colOf = Fits.VisFields.map(_.name).zipWithIndex.toMap
+
+  def open(path: String): FitsFile = {
+    val h = Fits.readPrimary(path)
+    FitsFile(path, h.long("OBSID"), h.int("COARSE"), h.int("NTIMES"),
+      h.int("NFINE"), h.double("FREQ0"), h.double("DFHZ"))
+  }
+}
+
+/** A uvfits (FITS random-groups) file: whole-observation geometry from
+  * its primary header. A group is one (time, baseline) visibility over the
+  * full frequency axis, so a time slice is a seek to group t0*nBaselines
+  * while coarse_chan filters stay residual (the reference's pyuvdata read
+  * has the same shape: `select` on times subsets groups, frequencies
+  * post-filter). */
+case class UvfitsFile(path: String, head: Fits.Header, obsid: Long,
+                      nTimes: Int, nAnts: Int, nFine: Int, nCoarse: Int,
+                      pols: Seq[String], freq0Hz: Double, dfHz: Double,
+                      jd0: Double, dtDays: Double) extends VisFile {
+  override def coarseChan: Option[Int] = None
+
+  /** Unpacks each group's AIPS baseline code and DATE offset and emits one
+    * row per (freq, pol) cell. time_idx/time_jd are re-derived from the
+    * header's time grid so float32 DATE rounding cannot leak into the
+    * output. */
+  override def decode(raf: RandomAccessFile, t0: Int, t1: Int): Iterator[Array[Any]] = {
+    val nBl = Fits.Uvfits.nBaselines(nAnts)
+    val nPol = pols.length
+    val nFreq = nCoarse * nFine
+    val polU = pols.map(UTF8String.fromString).toArray
+    Fits.Uvfits.readGroups(raf, head, t0 * nBl, t1 * nBl).zipWithIndex
+      .flatMap { case ((params, data), i) =>
+        val bl = math.round(params(3)).toInt
+        val a1 = bl / 256 - 1
+        val a2 = bl % 256 - 1
+        if (a1 < 0 || a2 < a1 || a2 >= nAnts)
+          throw new IllegalStateException(s"$path: group ${t0 * nBl + i} " +
+            s"has baseline code $bl (ant1=$a1, ant2=$a2), outside " +
+            s"0 <= ant1 <= ant2 < NANTS=$nAnts")
+        val t = math.round(params(4) / dtDays).toInt
+        val jd = jd0 + t * dtDays
+        for (f <- (0 until nFreq).iterator; pi <- (0 until nPol).iterator) yield {
+          val base = (f * nPol + pi) * 3
+          val wt = data(base + 2)
+          Array[Any](
+            obsid, t, jd, a1, a2, a1.toLong * 2048 + a2,
+            f / nFine, freq0Hz + f * dfHz, polU(pi),
+            data(base).toDouble, data(base + 1).toDouble,
+            wt <= 0f, math.abs(wt).toDouble)
+        }
+      }
+  }
+}
+
+object UvfitsFile {
+  def open(path: String): UvfitsFile = {
+    val h = Fits.readPrimary(path)
     require(h.has("GROUPS") && h.int("PCOUNT") > 0,
       s"$path is not a FITS random-groups (uvfits) file")
-    UvfitsFileMeta(path, h.long("OBSID"), h.int("NTIMES"), h.int("NANTS"),
+    UvfitsFile(path, h, h.long("OBSID"), h.int("NTIMES"), h.int("NANTS"),
       h.int("NFINE"), h.int("NCOARSE"), h.str("POLS").split(',').toSeq,
       h.double("FREQ0"), h.double("DFHZ"), h.double("JD0"), h.double("DTDAYS"))
   }
 }
 
-/** Scan over uvfits files: one partition per (file, time-slice). A group is
-  * one (time, baseline) visibility carrying the full frequency axis, so the
-  * time axis prunes by direct seek (fixed group size) while coarse_chan
-  * filters stay residual — Spark re-checks them row-level, the scan just
-  * cannot skip bytes for them (the reference's pyuvdata read has the same
-  * shape: `select` on times subsets groups, frequencies post-filter). */
-class UvfitsVisScan(path: String, slice: Int, required: StructType,
-                    pushed: Array[sources.Filter]) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-vis uvfits path=$path PushedFilters: [${pushed.mkString(", ")}]"
+/** A uvh5 (HDF5) file: its dataset map and the /Header scalars + tiny
+  * freq/pol arrays. The /Data arrays are blt-major with contiguous layout,
+  * so a time slice is a contiguous element range of every dataset —
+  * pruning is a seek, like the uvfits group seek; coarse_chan filters stay
+  * residual (each blt row carries the whole frequency axis). */
+case class Uvh5File(path: String, ds: Map[String, Hdf5.Ds], obsid: Long,
+                    nTimes: Int, nBls: Int, nFine: Int, freqs: Array[Double],
+                    pols: Seq[String]) extends VisFile {
+  override def coarseChan: Option[Int] = None
 
-  private lazy val files: Seq[UvfitsFileMeta] = {
-    val uv = UvfitsVisScan.listUvfits(path)
-    require(uv.nonEmpty, s"No .uvfits files under $path")
-    uv.map(f => UvfitsFileMeta.fromPrimary(f))
-  }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    (for {
-      m <- files
-      t0 <- 0 until m.nTimes by slice
-      p = UvfitsVisPartition(m, t0, math.min(t0 + slice, m.nTimes))
-      if VisScan.keepTimeSlice(p.timeStart, p.timeEnd, pushed)
-    } yield p: InputPartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new UvfitsReaderFactory(required)
-}
-
-object UvfitsVisScan {
-  def listUvfits(path: String): Seq[String] =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".uvfits")).sortBy(_.getName).map(_.getPath).toSeq
-  def hasUvfits(path: String): Boolean = listUvfits(path).nonEmpty
-}
-
-case class UvfitsVisPartition(meta: UvfitsFileMeta, timeStart: Int, timeEnd: Int)
-    extends InputPartition
-
-class UvfitsReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new UvfitsPartitionReader(partition.asInstanceOf[UvfitsVisPartition], required)
-}
-
-/** Decodes the random groups of this partition's time-slice: seeks straight
-  * to group timeStart*nBaselines (no bytes touched for pruned times),
-  * unpacks the AIPS baseline code and DATE offset, and emits one row per
-  * (freq, pol) cell of each group. time_idx/time_jd are re-derived from the
-  * header's time grid so float32 DATE rounding cannot leak into the output. */
-class UvfitsPartitionReader(part: UvfitsVisPartition, required: StructType)
-    extends PartitionReader[InternalRow] {
-  import graft.mwa.Fits
-
-  private val m = part.meta
-  private val raf = new java.io.RandomAccessFile(m.path, "r")
-  private val fieldIdx = required.fieldNames.map(n =>
-    n -> VisSource.schema.fieldIndex(n)).toMap
-  private val head = Fits.readHeader(raf, 0L).getOrElse(
-    throw new IllegalStateException(s"empty FITS file ${m.path}"))
-  private val nBl = Fits.Uvfits.nBaselines(m.nAnts)
-  private val nPol = m.pols.length
-  private val nFreq = m.nCoarse * m.nFine
-  private val polU = m.pols.map(UTF8String.fromString).toArray
-
-  private val it: Iterator[InternalRow] =
-    Fits.Uvfits.readGroups(raf, head, part.timeStart * nBl, part.timeEnd * nBl)
-      .flatMap { case (params, data) =>
-        val bl = math.round(params(3)).toInt
-        val a1 = bl / 256 - 1
-        val a2 = bl % 256 - 1
-        val t = math.round(params(4) / m.dtDays).toInt
-        val jd = m.jd0 + t * m.dtDays
-        for (f <- (0 until nFreq).iterator; pi <- (0 until nPol).iterator) yield {
-          val base = (f * nPol + pi) * 3
-          val wt = data(base + 2)
-          val full: Array[Any] = Array(
-            m.obsid, t, jd, a1, a2, a1.toLong * 2048 + a2,
-            f / m.nFine, m.freq0Hz + f * m.dfHz, polU(pi),
-            data(base).toDouble, data(base + 1).toDouble,
-            wt <= 0f, math.abs(wt).toDouble)
-          new GenericInternalRow(required.fieldNames.map(n => full(fieldIdx(n))))
-        }
-      }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = { if (it.hasNext) { current = it.next(); true } else false }
-  override def get(): InternalRow = current
-  override def close(): Unit = raf.close()
-}
-
-// ------------------------------------------------------ uvh5-backed variant
-
-/** One uvh5 file's planning metadata, parsed driver-side from the HDF5
-  * /Header datasets (scalars + the tiny freq/pol arrays — no /Data bytes
-  * are touched at planning time). */
-case class Uvh5FileMeta(path: String, obsid: Long, nTimes: Int, nBls: Int,
-                        nFine: Int, freqs: Array[Double], pols: Seq[String],
-                        jd0: Double, dtDays: Double)
-
-object Uvh5FileMeta {
-  def fromHeader(path: String): Uvh5FileMeta = {
-    import graft.mwa.Hdf5
-    val ds = Hdf5.datasets(path)
-    def scalar(n: String): Long = Hdf5.scalarLong(path, ds(s"Header/$n"))
-    val raf = new java.io.RandomAccessFile(path, "r")
-    try {
-      val nBls = scalar("Nbls").toInt
-      val nFreq = scalar("Nfreqs").toInt
-      val nPol = scalar("Npols").toInt
-      val freqs = Hdf5.readDoubles(raf, ds("Header/freq_array"), 0, nFreq)
-      val pols = Hdf5.readLongs(raf, ds("Header/polarization_array"), 0, nPol)
-        .map(graft.mwa.Uvh5.PolName).toSeq
-      // time grid from the blt-major time_array: jd0 = first entry, dt =
-      // first step (one row per baseline per time, time-major)
-      val t01 = Hdf5.readDoubles(raf, ds("Header/time_array"), 0, 1) ++
-        Hdf5.readDoubles(raf, ds("Header/time_array"), nBls.toLong, 1)
-      Uvh5FileMeta(path, scalar("obsid"), scalar("Ntimes").toInt, nBls,
-        scalar("nfine").toInt, freqs, pols, t01(0), t01(1) - t01(0))
-    } finally raf.close()
-  }
-}
-
-/** Scan over uvh5 (HDF5) files: one partition per (file, time-slice).
-  * The /Data arrays are blt-major with contiguous layout, so a
-  * time-slice is a contiguous element range of every dataset — pruning
-  * is a seek, exactly like the uvfits group seek; coarse_chan filters
-  * stay residual (each blt row carries the whole frequency axis). */
-class Uvh5VisScan(path: String, slice: Int, required: StructType,
-                  pushed: Array[sources.Filter]) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-vis uvh5 path=$path PushedFilters: [${pushed.mkString(", ")}]"
-
-  private lazy val files: Seq[Uvh5FileMeta] = {
-    val uv = Uvh5VisScan.listUvh5(path)
-    require(uv.nonEmpty, s"No .uvh5 files under $path")
-    uv.map(Uvh5FileMeta.fromHeader)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    (for {
-      m <- files
-      t0 <- 0 until m.nTimes by slice
-      p = Uvh5VisPartition(m, t0, math.min(t0 + slice, m.nTimes))
-      if VisScan.keepTimeSlice(p.timeStart, p.timeEnd, pushed)
-    } yield p: InputPartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new Uvh5ReaderFactory(required)
-}
-
-object Uvh5VisScan {
-  def listUvh5(path: String): Seq[String] =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".uvh5")).sortBy(_.getName).map(_.getPath).toSeq
-  def hasUvh5(path: String): Boolean = listUvh5(path).nonEmpty
-}
-
-case class Uvh5VisPartition(meta: Uvh5FileMeta, timeStart: Int, timeEnd: Int)
-    extends InputPartition
-
-class Uvh5ReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new Uvh5PartitionReader(partition.asInstanceOf[Uvh5VisPartition], required)
-}
-
-/** Decodes the blt rows of this partition's time-slice: one bulk read per
-  * /Data dataset over the contiguous element range [blt0*F*P, blt1*F*P)
-  * — bytes outside the slice are never touched. time_idx is the blt's
-  * time ordinal (blt / Nbls), bit-identical to the other decoders. */
-class Uvh5PartitionReader(part: Uvh5VisPartition, required: StructType)
-    extends PartitionReader[InternalRow] {
-  import graft.mwa.Hdf5
-
-  private val m = part.meta
-  private val raf = new java.io.RandomAccessFile(m.path, "r")
-  private val fieldIdx = required.fieldNames.map(n =>
-    n -> VisSource.schema.fieldIndex(n)).toMap
-  private val ds = Hdf5.datasets(m.path)
-  private val nFreq = m.freqs.length
-  private val nPol = m.pols.length
-  private val polU = m.pols.map(UTF8String.fromString).toArray
-
-  private val blt0 = part.timeStart * m.nBls
-  private val blt1 = part.timeEnd * m.nBls
-  private val nBlt = blt1 - blt0
-  private val cells = nBlt * nFreq * nPol
-  private val ant1 = Hdf5.readLongs(raf, ds("Header/ant_1_array"), blt0, nBlt)
-  private val ant2 = Hdf5.readLongs(raf, ds("Header/ant_2_array"), blt0, nBlt)
-  // time_jd comes from time_array VERBATIM (pyuvdata semantics) — deriving
-  // the grid step by subtracting two ~2.46e6 JDs cancels ~18 bits and
-  // perturbs reconstructed times in the last ulps
-  private val timeJd = Hdf5.readDoubles(raf, ds("Header/time_array"), blt0, nBlt)
-  private val vis = Hdf5.readBytesOf(raf, ds("Data/visdata"),
-    blt0.toLong * nFreq * nPol, cells)
-  private val flg = Hdf5.readBytesOf(raf, ds("Data/flags"),
-    blt0.toLong * nFreq * nPol, cells)
-  private val nsm = Hdf5.readBytesOf(raf, ds("Data/nsamples"),
-    blt0.toLong * nFreq * nPol, cells)
-
-  private val it: Iterator[InternalRow] =
+  /** One bulk read per dataset over the slice's element range
+    * [blt0*F*P, blt1*F*P) — bytes outside the slice are never touched.
+    * time_idx is the blt's time ordinal (blt / Nbls), bit-identical to the
+    * other decoders. */
+  override def decode(raf: RandomAccessFile, t0: Int, t1: Int): Iterator[Array[Any]] = {
+    val nFreq = freqs.length
+    val nPol = pols.length
+    val polU = pols.map(UTF8String.fromString).toArray
+    val blt0 = t0 * nBls
+    val nBlt = (t1 - t0) * nBls
+    val cell0 = blt0.toLong * nFreq * nPol
+    val cells = nBlt * nFreq * nPol
+    val ant1 = Hdf5.readLongs(raf, ds("Header/ant_1_array"), blt0, nBlt)
+    val ant2 = Hdf5.readLongs(raf, ds("Header/ant_2_array"), blt0, nBlt)
+    // time_jd comes from time_array VERBATIM (pyuvdata semantics) — deriving
+    // the grid step by subtracting two ~2.46e6 JDs cancels ~18 bits and
+    // perturbs reconstructed times in the last ulps
+    val timeJd = Hdf5.readDoubles(raf, ds("Header/time_array"), blt0, nBlt)
+    val vis = Hdf5.readBytesOf(raf, ds("Data/visdata"), cell0, cells)
+    val flg = Hdf5.readBytesOf(raf, ds("Data/flags"), cell0, cells)
+    val nsm = Hdf5.readBytesOf(raf, ds("Data/nsamples"), cell0, cells)
     (0 until nBlt).iterator.flatMap { b =>
-      val t = (blt0 + b) / m.nBls
+      val t = (blt0 + b) / nBls
       val jd = timeJd(b)
       val a1 = ant1(b).toInt
       val a2 = ant2(b).toInt
       for (f <- (0 until nFreq).iterator; pi <- (0 until nPol).iterator) yield {
         val c = (b * nFreq + f) * nPol + pi
-        val full: Array[Any] = Array(
-          m.obsid, t, jd, a1, a2, a1.toLong * 2048 + a2,
-          f / m.nFine, m.freqs(f), polU(pi),
+        Array[Any](
+          obsid, t, jd, a1, a2, a1.toLong * 2048 + a2,
+          f / nFine, freqs(f), polU(pi),
           vis.getFloat(8 * c).toDouble, vis.getFloat(8 * c + 4).toDouble,
           flg.get(c) != 0, nsm.getFloat(4 * c).toDouble)
-        new GenericInternalRow(required.fieldNames.map(n => full(fieldIdx(n))))
       }
     }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = { if (it.hasNext) { current = it.next(); true } else false }
-  override def get(): InternalRow = current
-  override def close(): Unit = raf.close()
+  }
 }
 
-/** Scala twin of the generator's Catalyst hash chain: xxhash64(lit(seed),
-  * lit(salt), [time_idx,] baseline, freq_idx, pol) with Spark's seed-42
-  * accumulation, then the same uniform/Box-Muller mapping — so DSv2 rows
-  * are bit-identical to the DataFrame generator's. */
-object VisKernel {
-  private def hashChain(seed: Long, salt: Int, time: Option[Int],
-                        baseline: Long, freqIdx: Int, pol: String): Long = {
-    var h = 42L
-    h = XXH64.hashLong(seed, h)
-    h = XXH64.hashInt(salt, h)
-    time.foreach(t => h = XXH64.hashInt(t, h))
-    h = XXH64.hashLong(baseline, h)
-    h = XXH64.hashInt(freqIdx, h)
-    h = XXH64.hashUTF8String(UTF8String.fromString(pol), h)
-    h
+object Uvh5File {
+  /** Parses the dataset map and the /Header metadata through one handle;
+    * no /Data bytes are touched. */
+  def open(path: String): Uvh5File = {
+    val raf = new RandomAccessFile(path, "r")
+    try {
+      val ds = Hdf5.datasets(raf, path)
+      def scalar(n: String): Long = Hdf5.readLongs(raf, ds(s"Header/$n"), 0, 1)(0)
+      val nFreq = scalar("Nfreqs").toInt
+      val nPol = scalar("Npols").toInt
+      Uvh5File(path, ds, scalar("obsid"), scalar("Ntimes").toInt,
+        scalar("Nbls").toInt, scalar("nfine").toInt,
+        Hdf5.readDoubles(raf, ds("Header/freq_array"), 0, nFreq),
+        Hdf5.readLongs(raf, ds("Header/polarization_array"), 0, nPol)
+          .map(Uvh5.PolName).toSeq)
+    } finally raf.close()
   }
-
-  def uniform(seed: Long, salt: Int, time: Option[Int], baseline: Long,
-              freqIdx: Int, pol: String): Double = {
-    val h = hashChain(seed, salt, time, baseline, freqIdx, pol)
-    val m = 1048576L
-    val mod = ((h % m) + m) % m
-    (mod.toDouble + 0.5) / 1048576.0
-  }
-
-  def gaussian(seed: Long, salt: Int, time: Option[Int], baseline: Long,
-               freqIdx: Int, pol: String): Double =
-    math.sqrt(-2.0 * math.log(uniform(seed, salt * 2 + 1, time, baseline, freqIdx, pol))) *
-      math.cos(2.0 * math.Pi * uniform(seed, salt * 2 + 2, time, baseline, freqIdx, pol))
 }

@@ -1,15 +1,17 @@
 package graft.sources
 
+import java.nio.file.{Files, Paths}
 import graft.SparkSpec
-import graft.mwa.Fits
+import graft.mwa.{Fits, VisGenerator}
 
 /** uvfits (FITS random-groups) source: decode parity with the gpubox
-  * decoder, header sizing, and time-axis pushdown via group seek. */
+  * decoder, header sizing, time-axis pushdown via group seek, and the AIPS
+  * baseline-code range on both sides. */
 class UvfitsSpec extends SparkSpec {
 
-  private def loadUvfits(slice: Int = 4) = spark.read.format("graft-vis")
-    .option("path", Fits.Uvfits.ensureFixture())
-    .option("timeslice", slice.toString).load()
+  private def loadUvfits(path: String = Fits.Uvfits.ensureFixture(), slice: Int = 4) =
+    spark.read.format("graft-vis").option("path", path)
+      .option("timeslice", slice.toString).load()
 
   private def loadGpubox = spark.read.format("graft-vis")
     .option("path", Fits.ensureFixture()).load()
@@ -27,7 +29,7 @@ class UvfitsSpec extends SparkSpec {
   }
 
   test("random-groups header sizes the data unit correctly") {
-    val file = UvfitsVisScan.listUvfits(Fits.Uvfits.ensureFixture()).head
+    val file = VisSource.inputs(Fits.Uvfits.ensureFixture())(".uvfits").head
     val hs = Fits.readHeaders(file)
     assert(hs.length == 1) // everything lives in the primary HDU
     val h = hs.head
@@ -40,13 +42,41 @@ class UvfitsSpec extends SparkSpec {
 
   test("time filters prune group-slices at the source (seek, no decode)") {
     // 17 times, slice 4 -> 5 slices; one file covers all channels
-    assert(loadUvfits(4).rdd.getNumPartitions == 5)
-    val pruned = loadUvfits(4).filter("time_idx < 4")
+    assert(loadUvfits(slice = 4).rdd.getNumPartitions == 5)
+    val pruned = loadUvfits(slice = 4).filter("time_idx < 4")
     assert(pruned.rdd.getNumPartitions == 1)
     assert(pruned.count() == 4 * 10 * 16 * 2)
     // coarse_chan filters stay residual (groups span the freq axis) but
     // still evaluate correctly row-level
-    val chan = loadUvfits(4).filter("coarse_chan = 1")
+    val chan = loadUvfits(slice = 4).filter("coarse_chan = 1")
     assert(chan.count() == 17 * 10 * 8 * 2)
+  }
+
+  test("the writer rejects arrays whose baseline codes would alias (> 255 antennas)") {
+    val dir = Paths.get(tmpDir("graft_uvfits_256_"))
+    val e = intercept[IllegalArgumentException] {
+      Fits.Uvfits.write(dir, VisGenerator.Spec(nTimes = 1, nAnts = 256,
+        nCoarse = 1, nFine = 1))
+    }
+    assert(e.getMessage.contains("nAnts=256"))
+    assert(!Files.exists(dir.resolve(s"${VisGenerator.Spec().obsid}.uvfits")))
+  }
+
+  test("a group whose baseline code decodes outside the array fails naming file and group") {
+    val dir = Paths.get(tmpDir("graft_uvfits_badbl_"))
+    val spec = VisGenerator.Spec(nTimes = 2, nAnts = 3, nCoarse = 1, nFine = 2)
+    val file = Fits.Uvfits.write(dir, spec)
+    // group 4's BASELINE parameter (the 4th float) := 512, which decodes to
+    // ant1 = 1, ant2 = -1
+    val h = Fits.readPrimary(file.toString)
+    val raf = new java.io.RandomAccessFile(file.toFile, "rw")
+    try {
+      raf.seek(h.dataOffset + 4L * Fits.Uvfits.groupFloats(spec) * 4 + 3 * 4)
+      raf.writeFloat(512f)
+    } finally raf.close()
+    val e = intercept[Exception](loadUvfits(dir.toString).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msgs.contains(s"$file: group 4 has baseline code 512"), msgs)
   }
 }

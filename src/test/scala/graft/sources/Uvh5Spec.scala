@@ -23,14 +23,14 @@ class Uvh5Spec extends SparkSpec {
         Dataset("m", F32, Seq(2, 2), floats(Seq(1f, 2f, 3f, 4f))),
         Dataset("z", C64, Seq(2), floats(Seq(1f, -1f, 2f, -2f))),
         Dataset("b", I8, Seq(4), Array[Byte](0, 1, 0, 1))))))
-    val ds = datasets(p.toString)
-    assert(ds.keySet == Set("A/s", "A/v", "B/m", "B/z", "B/b"))
-    assert(ds("A/s").dtype == I64 && ds("A/s").dims.isEmpty)
-    assert(scalarLong(p.toString, ds("A/s")) == 42L)
-    assert(ds("B/m").dims == Seq(2L, 2L))
-    assert(ds("B/z").dtype == C64)
     val raf = new java.io.RandomAccessFile(p.toString, "r")
     try {
+      val ds = datasets(raf, p.toString)
+      assert(ds.keySet == Set("A/s", "A/v", "B/m", "B/z", "B/b"))
+      assert(ds("A/s").dtype == I64 && ds("A/s").dims.isEmpty)
+      assert(readLongs(raf, ds("A/s"), 0, 1).toSeq == Seq(42L))
+      assert(ds("B/m").dims == Seq(2L, 2L))
+      assert(ds("B/z").dtype == C64)
       assert(readDoubles(raf, ds("A/v"), 1, 2).toSeq == Seq(-2.25, 3.0))
       assert(readFloats(raf, ds("B/m"), 0, 4).toSeq == Seq(1f, 2f, 3f, 4f))
       val zb = readBytesOf(raf, ds("B/z"), 1, 1)

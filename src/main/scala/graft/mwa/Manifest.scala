@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** File-manifest construction: the reference's dict-of-lists file grouping
   * (`configurators.py:228-248`) re-expressed as a manifest DataFrame with
-  * derived columns, so grouping/validation are relational operations that
-  * scale to millions of files.
+  * derived columns. Grouping stays relational; validation collects the
+  * manifest to the driver ([[Validation]]), which is no new limit, since
+  * Spark's own file index already holds every listed path there.
   *
   * Scalar derivations (SURVEY §2.7):
   *  - C1 channel token:  regex `(gpubox|ch)(\d+)` over the file NAME
@@ -47,22 +48,20 @@ object Manifest {
       .withColumn("chan_kind", regexp_extract(col("name"), "(gpubox|ch)(\\d+)", 1))
       .withColumn("chan_token",
         when(col("chan_kind") =!= "",
-          regexp_extract(col("name"), "(gpubox|ch)(\\d+)", 2).cast("int")))
+          regexp_extract(col("name"), "(gpubox|ch)(\\d+)", 2).try_cast("int")))
 
-  /** C1 completed: resolve channel numbers, joining gpubox tokens against
-    * the (broadcast) coarse-channel dimension (J1, `utils.py:49-59`).
-    * Unresolvable rows keep channel = null; the validation layer turns
-    * them into errors. */
-  def withChannel(manifest: DataFrame, channels: DataFrame): DataFrame = {
-    val chanDim = broadcast(channels.select(
-      col("gpubox_number"), col("rec_chan_number")).distinct())
-    manifest
-      .join(chanDim, manifest("chan_token") === chanDim("gpubox_number"), "left")
-      .withColumn("channel",
-        when(col("chan_kind") === "ch", col("chan_token"))
-          .when(col("chan_kind") === "gpubox", col("rec_chan_number")))
-      .drop("gpubox_number", "rec_chan_number")
-  }
+  /** C1 completed: resolve channel numbers (J1, `utils.py:49-59`). A `ch`
+    * token is the channel itself; a `gpubox` token is looked up in the
+    * metafits' gpubox_number -> rec_chan_number pairs, a literal map (an
+    * observation has 24 coarse channels), so each file keeps one row even
+    * when metafits disagree on a gpubox (`channel_tables_differ` reports
+    * that). Unresolvable rows, including a token past Int.MaxValue, keep
+    * channel = null; the validation layer turns them into errors. */
+  def withChannel(manifest: DataFrame, recChanByGpubox: Map[Int, Int]): DataFrame =
+    manifest.withColumn("channel",
+      when(col("chan_kind") === "ch", col("chan_token"))
+        .when(col("chan_kind") === "gpubox",
+          element_at(typedLit(recChanByGpubox), col("chan_token"))))
 
   /** G1: ext -> sorted file list (`configurators.py:228-235`). */
   def groupByExtension(manifest: DataFrame): DataFrame =

@@ -32,13 +32,16 @@ object MatchFilter {
 
   /** Run the match filter over an INS DataFrame (output of VisOps.ins).
     * Returns one row per cell with its final flag and the event kind that
-    * flagged it ("narrow", "streak", "time_broadcast" or ""). */
+    * flagged it ("narrow", "streak", "time_broadcast" or ""). A null
+    * metric (a cell with no unflagged baseline) becomes NaN, the value
+    * `run` gives a cell with no data; such a cell is never flagged. */
   def apply(insDf: DataFrame, config: GraftConfig = GraftConfig()): DataFrame = {
     val spark = insDf.sparkSession
     import spark.implicits._
     val cells = insDf.select(
       col("obsid"), col("time_idx"), col("freq_hz"), col("pol"),
-      col("metric").cast("double"), col("nsamples").cast("double")).as[InsCell]
+      coalesce(col("metric").cast("double"), lit(Double.NaN)).as("metric"),
+      col("nsamples").cast("double")).as[InsCell]
     cells.groupByKey(c => (c.obsid, c.pol))
       .flatMapGroups((_: (Long, String), it: Iterator[InsCell]) => run(it.toSeq, config))
       .toDF()
@@ -62,6 +65,9 @@ object MatchFilter {
       val t = tIdx(c.time_idx); val f = fIdx(c.freq_hz)
       metric(t)(f) = c.metric; nsamp(t)(f) = c.nsamples
     }
+    // events flag only cells with data: a NaN cell saw no RFI
+    def mark(t: Int, f: Int, kind: String): Unit =
+      if (!flag(t)(f) && !metric(t)(f).isNaN) { flag(t)(f) = true; event(t)(f) = kind }
 
     // z-scores from the current mask: per freq, mean over unflagged times
     def zscores(): Array[Array[Double]] = {
@@ -146,21 +152,15 @@ object MatchFilter {
         t += 1
       }
       if (bestKind == "") iterating = false
-      else if (bestKind == "narrow") {
-        flag(bestT)(bestF) = true; event(bestT)(bestF) = "narrow"
-      } else if (bestKind == "streak") {
+      else if (bestKind == "narrow") mark(bestT, bestF, "narrow")
+      else if (bestKind == "streak") {
         var f = 0
-        while (f < nF) {
-          if (!flag(bestT)(f)) { flag(bestT)(f) = true; event(bestT)(f) = "streak" }
-          f += 1
-        }
+        while (f < nF) { mark(bestT, f, "streak"); f += 1 }
       } else { // shape:<name> — flag only the shape's channel span
         val (lo, hi) = config.shapes(bestKind.stripPrefix("shape:"))
         var f = 0
         while (f < nF) {
-          if (freqs(f) >= lo && freqs(f) <= hi && !flag(bestT)(f)) {
-            flag(bestT)(f) = true; event(bestT)(f) = bestKind
-          }
+          if (freqs(f) >= lo && freqs(f) <= hi) mark(bestT, f, bestKind)
           f += 1
         }
       }
@@ -173,10 +173,7 @@ object MatchFilter {
       while (f < nF) { if (flag(t)(f)) nf += 1; f += 1 }
       if (nf.toDouble / nF > config.tbAggro && nf < nF) {
         f = 0
-        while (f < nF) {
-          if (!flag(t)(f)) { flag(t)(f) = true; event(t)(f) = "time_broadcast" }
-          f += 1
-        }
+        while (f < nF) { mark(t, f, "time_broadcast"); f += 1 }
       }
       t += 1
     }

@@ -1,113 +1,106 @@
 package graft.mwa
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Multi-error validation (G8): every rule emits a violations DataFrame
-  * (code, message); all rules run and ALL violations are reported together,
-  * matching the reference's enumerate-all-errors design
-  * (`configurators.py:136-185`, `processors.py:131-148`).
+/** Multi-error validation (G8), run on the driver like the reference's
+  * rules over plain lists (`configurators.py:136-185`,
+  * `processors.py:131-148`): each check reads its inputs with one
+  * `collect()` per input, evaluates every rule in plain Scala and returns
+  * ALL violations together, in rule order, as one local (code, message)
+  * DataFrame that [[enforce]] collects without launching a job. Neither
+  * input needs a distributed query: a manifest is one row per listed file,
+  * and Spark's own file index already holds every listed path on the
+  * driver; a channel table has one row per coarse channel (24 for an MWA
+  * observation).
   */
 object Validation {
 
-  private def violation(spark: SparkSession, code: String, msg: String): DataFrame = {
+  private def violations(spark: SparkSession, rules: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
-    Seq((code, msg)).toDF("code", "message")
-  }
-
-  private def empty(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, String)].toDF("code", "message")
+    rules.toDF("code", "message")
   }
 
   /** File-set rules (entry point A, `configurators.py:136-185`). */
   def validateFileSet(spark: SparkSession, manifest: DataFrame,
                       config: GraftConfig = GraftConfig()): DataFrame = {
-    val exts = manifest.select("ext").distinct().collect().map(_.getString(0)).toSet
-    val rules = Seq.newBuilder[DataFrame]
+    val files = manifest.select("ext", "obsid").collect()
+      .map(r => (r.getString(0), r.getString(1)))
+    val exts = files.map(_._1).distinct
+    val rules = Seq.newBuilder[(String, String)]
 
     // no supported type at all (configurators.py:148-150)
-    if (exts.intersect(Model.supportedTypes).isEmpty)
-      rules += violation(spark, "no_supported_type",
-        s"No supported file types found. Supported types are: ${Model.supportedTypes.mkString(", ")}")
+    if (!exts.exists(Model.supportedTypes))
+      rules += "no_supported_type" ->
+        s"No supported file types found. Supported types are: ${Model.supportedTypes.mkString(", ")}"
 
     // fits => metafits present (configurators.py:153-154)
     if (exts.contains("fits") && !exts.contains("metafits"))
-      rules += violation(spark, "fits_requires_metafits",
-        "FITS files require metafits files to be present.")
+      rules += "fits_requires_metafits" -> "FITS files require metafits files to be present."
     else if (exts.contains("fits")) {
       // every obsid group (ANY extension — reference groups all files by
       // obsid, configurators.py:238-248) must contain a metafits
-      // (configurators.py:157-162, 250-256) — left anti join J2
-      val allObsids = manifest.select("obsid").distinct()
-      val metaObsids = manifest.filter(col("ext") === "metafits").select("obsid").distinct()
-      val missing = allObsids.join(metaObsids, Seq("obsid"), "left_anti")
-      if (!missing.isEmpty)
-        rules += violation(spark, "metafits_missing_for_obsid",
-          "Metafits files are missing for some obsids.")
+      // (configurators.py:157-162, 250-256)
+      val metaObsids = files.collect { case ("metafits", obsid) => obsid }.toSet
+      if (files.exists { case (_, obsid) => !metaObsids(obsid) })
+        rules += "metafits_missing_for_obsid" -> "Metafits files are missing for some obsids."
     }
 
     // unsupported extension set-diff O4 (configurators.py:164-168)
-    val unsupported = exts -- Model.supportedTypes
+    val unsupported = exts.filterNot(Model.supportedTypes)
     if (unsupported.nonEmpty)
-      rules += violation(spark, "unsupported_types",
-        s"Unsupported file types found: ${unsupported.mkString(", ")}")
+      rules += "unsupported_types" -> s"Unsupported file types found: ${unsupported.mkString(", ")}"
 
     // format mutual exclusion (configurators.py:171-176)
     if (exts.contains("uvfits") && exts.contains("uvh5"))
-      rules += violation(spark, "uvfits_uvh5_conflict",
-        "Cannot use both uvfits and uvh5 files.")
+      rules += "uvfits_uvh5_conflict" -> "Cannot use both uvfits and uvh5 files."
     if (exts.contains("ms") && (exts.contains("uvh5") || exts.contains("uvfits")))
-      rules += violation(spark, "ms_conflict",
-        "Cannot use both ms and uvfits/uvh5 files.")
+      rules += "ms_conflict" -> "Cannot use both ms and uvfits/uvh5 files."
 
     // sel/skip conflict (configurators.py:179-180)
     if (config.selAnts.nonEmpty && config.skipAnts.nonEmpty)
-      rules += violation(spark, "sel_skip_conflict",
-        "Cannot specify both sel_ants and skip_ants.")
+      rules += "sel_skip_conflict" -> "Cannot specify both sel_ants and skip_ants."
 
-    rules.result().foldLeft(empty(spark))(_ unionByName _)
+    violations(spark, rules.result())
   }
 
   /** Processor rules (entry point B, `processors.py:131-148`).
     *
     * @param channelTables per-metafits channel dimension rows with a
     *   `source` column naming the metafits file — consistency is checked by
-    *   comparing per-file digests (sha2 over the sorted channel rows), an
-    *   O(n) group-compare instead of the reference's O(n^2) pairwise
-    *   DataFrame.equals loop (`processors.py:88-105`).
+    *   comparing each source's sorted row list (row order ignored,
+    *   duplicates counted), one sort per source instead of the
+    *   reference's O(n^2) pairwise DataFrame.equals loop
+    *   (`processors.py:88-105`).
     */
   def validateProcessor(spark: SparkSession, manifest: DataFrame,
                         channelTables: DataFrame): DataFrame = {
-    val rules = Seq.newBuilder[DataFrame]
+    val chans = channelTables.select("source", "gpubox_number", "rec_chan_number",
+      "chan_start_hz", "chan_centre_hz", "chan_end_hz").collect()
+    val recChanByGpubox = chans.collect {
+      case r if !r.isNullAt(1) && !r.isNullAt(2) =>
+        r.getAs[Number](1).intValue -> r.getAs[Number](2).intValue
+    }.toMap
+    val files = Manifest.withChannel(manifest, recChanByGpubox)
+      .select("ext", "name", "chan_kind", "channel").collect()
+    val rules = Seq.newBuilder[(String, String)]
 
-    val hasMeta = !manifest.filter(col("ext") === "metafits").isEmpty
-    if (!hasMeta)
-      rules += violation(spark, "no_metafits", "No metafits files found.")
+    if (!files.exists(_.getString(0) == "metafits"))
+      rules += "no_metafits" -> "No metafits files found."
 
     // all metafits must describe the same channels (J4)
-    val digests = channelTables
-      .groupBy("source")
-      .agg(sha2(concat_ws("|", sort_array(collect_list(concat_ws(",",
-        col("gpubox_number"), col("rec_chan_number"), col("chan_start_hz"),
-        col("chan_centre_hz"), col("chan_end_hz"))))), 256).as("digest"))
-    if (digests.select("digest").distinct().count() > 1)
-      rules += violation(spark, "channel_tables_differ",
-        "Channels do not match between metafits files.")
+    val tables = chans.groupBy(_.get(0)).values
+      .map(_.map(_.toSeq.tail.mkString(",")).sorted.toSeq)
+    if (tables.toSet.size > 1)
+      rules += "channel_tables_differ" -> "Channels do not match between metafits files."
 
     // every data file must resolve a channel (utils.py:61-78 error paths)
-    val unresolved = Manifest.withChannel(
-        manifest.filter(col("ext") === "fits"), channelTables)
-      .filter(col("channel").isNull)
-    val bad = unresolved.select("name", "chan_kind").collect()
-    bad.foreach { r =>
-      val msg =
-        if (r.getString(1) == "") s"Filename ${r.getString(0)} does not contain channel information."
-        else s"GPUBOX not found in metafits for ${r.getString(0)}."
-      rules += violation(spark, "channel_unresolved", msg)
+    files.filter(r => r.getString(0) == "fits" && r.isNullAt(3)).foreach { r =>
+      rules += "channel_unresolved" -> (
+        if (r.getString(2) == "") s"Filename ${r.getString(1)} does not contain channel information."
+        else s"GPUBOX not found in metafits for ${r.getString(1)}.")
     }
 
-    rules.result().foldLeft(empty(spark))(_ unionByName _)
+    violations(spark, rules.result())
   }
 
   /** on_error policy (`processors.py:142-148`). Returns true when valid. */

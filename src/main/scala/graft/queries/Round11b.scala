@@ -15,7 +15,7 @@ import graft.queries.Catalog.QueryDef
   *    `processors.py:166-172`)
   *  - mwa20 — S7/G7 size-stat rollup (`configurators.py:263-265`,
   *    `utils.py:172-188`)
-  *  - mwa21 — J4 channel-table digest compare + C1 error paths
+  *  - mwa21 — J4 channel-table compare + C1 error paths
   *    (`processors.py:88-105`, `utils.py:61-78`)
   *  - mwa22 — F1/F3/F4/F5/F6/F8 + W3 + C11: the full pyuvdata-select
   *    surface in one pass (`configurators.py:73-78`)
@@ -131,12 +131,12 @@ object R11b {
 
   /** mwa21 — J4 + C1 error paths: processor validation over a planted
     * inconsistency. Two metafits channel tables share (gpubox, rec_chan)
-    * pairs but differ in band edges, so the per-source sha2 digest
-    * group-compare (the O(n) replacement for the reference's O(n^2)
-    * pairwise DataFrame.equals, `processors.py:88-105`) must fire; one
-    * fits file names an absent gpubox and one carries no channel token at
-    * all, covering both `utils.py:61-78` error branches through the J1
-    * broadcast lookup. */
+    * pairs but differ in band edges, so the per-source table compare
+    * (the O(n) replacement for the reference's O(n^2) pairwise
+    * DataFrame.equals, `processors.py:88-105`) must fire; one fits file
+    * names an absent gpubox and one carries no channel token at all,
+    * covering both `utils.py:61-78` error branches through the J1
+    * lookup. */
   private val mwa21 = QueryDef("mwa21_processor_validation",
     (s, d) => {
       import s.implicits._

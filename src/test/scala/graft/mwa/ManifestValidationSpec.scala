@@ -1,6 +1,10 @@
 package graft.mwa
 
 import graft.SparkSpec
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Manifest derivations (C1-C4, G1-G4) and the multi-error validation
@@ -16,6 +20,36 @@ class ManifestValidationSpec extends SparkSpec {
 
   private def codes(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.select("code").collect().map(_.getString(0)).toSet
+
+  /** `f`'s result and the Spark jobs it started, counted by a listener. A
+    * listener sees events in posting order, so once it sees the start of a
+    * marker job submitted after `f` returns, every job of `f` is counted. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val marked = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-end" => marked.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job budget")
+      val result = f
+      sc.setJobGroup(s"$group-end", "job budget marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marked.await(60, TimeUnit.SECONDS))
+      (result, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("manifest derivations: ext, stem, obsid, channel token (C1-C4)") {
     val m = Manifest.fromPaths(spark, goodPaths)
@@ -33,8 +67,10 @@ class ManifestValidationSpec extends SparkSpec {
 
   test("gpubox -> channel via metafits lookup (J1)") {
     val m = Manifest.fromPaths(spark, goodPaths)
-    val chans = VisGenerator.channels(spark, VisGenerator.Spec(nCoarse = 2))
-    val resolved = Manifest.withChannel(m.filter(col("ext") === "fits"), chans)
+    val recChans = VisGenerator.channels(spark, VisGenerator.Spec(nCoarse = 2))
+      .select("gpubox_number", "rec_chan_number").collect()
+      .map(r => r.getInt(0) -> r.getInt(1)).toMap
+    val resolved = Manifest.withChannel(m.filter(col("ext") === "fits"), recChans)
     val byName = resolved.select("name", "channel").collect()
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) -1 else r.getInt(1))).toMap
     assert(byName("1234567890_20230101000000_gpubox01_00.fits") == 0) // gpubox 1 -> rec_chan 0
@@ -103,14 +139,18 @@ class ManifestValidationSpec extends SparkSpec {
   test("processor validation: channel resolution errors (utils.py:57-78)") {
     val chans = VisGenerator.channels(spark, VisGenerator.Spec(nCoarse = 2))
       .withColumn("source", lit("m1"))
-    // gpubox 9 not in metafits; file without channel token at all
+    // gpubox 9 not in metafits; file without channel token at all; a
+    // channel token past Int.MaxValue
     val m = Manifest.fromPaths(spark, Seq(
-      "/d/111_gpubox09.fits", "/d/111_nochannel.fits", "/d/111.metafits"))
+      "/d/111_gpubox09.fits", "/d/111_nochannel.fits", "/d/111_ch99999999999_00.fits",
+      "/d/111.metafits"))
     val v = Validation.validateProcessor(spark, m, chans)
     val msgs = v.filter(col("code") === "channel_unresolved")
       .select("message").collect().map(_.getString(0))
     assert(msgs.exists(_.contains("GPUBOX not found")))
     assert(msgs.exists(_.contains("does not contain channel information")))
+    assert(msgs.exists(_.contains("111_ch99999999999_00.fits")))
+    assert(msgs.length == 3)
   }
 
   test("processor validation: differing channel tables (J4)") {
@@ -121,6 +161,13 @@ class ManifestValidationSpec extends SparkSpec {
     val m = Manifest.fromPaths(spark, Seq("/d/111.metafits"))
     val v = Validation.validateProcessor(spark, m, c1.unionByName(c2))
     assert(codes(v).contains("channel_tables_differ"))
+    // the same rows in another order are the same table
+    val c1Reversed = c1.orderBy(col("gpubox_number").desc).withColumn("source", lit("m2"))
+    assert(Validation.validateProcessor(spark, m, c1.unionByName(c1Reversed)).isEmpty)
+    // one duplicated row makes a different table
+    val c1Dup = c1.unionByName(c1.limit(1)).withColumn("source", lit("m2"))
+    assert(codes(Validation.validateProcessor(spark, m, c1.unionByName(c1Dup)))
+      == Set("channel_tables_differ"))
   }
 
   test("FileSet: construction, accessors, eager validation (UVDataFileSet parity)") {
@@ -151,5 +198,40 @@ class ManifestValidationSpec extends SparkSpec {
     assert(!Validation.enforce(v, OnError.Ignore))
     val ok = Validation.validateFileSet(spark, Manifest.fromPaths(spark, goodPaths))
     assert(Validation.enforce(ok, OnError.Raise))
+    // the error text lists the violations in rule order
+    val all = Manifest.fromPaths(spark,
+      Seq("/d/123_gpubox01.fits", "/d/x.unknownext", "/d/a.uvfits", "/d/b.uvh5"))
+    val e = intercept[IllegalArgumentException](Validation.enforce(Validation.validateFileSet(
+      spark, all, GraftConfig(selAnts = Seq(1), skipAnts = Seq(2)))))
+    assert(e.getMessage == "Validation failed with the following errors:\n" +
+      "FITS files require metafits files to be present., " +
+      "Unsupported file types found: unknownext, " +
+      "Cannot use both uvfits and uvh5 files., " +
+      "Cannot specify both sel_ants and skip_ants.")
+    val c1 = VisGenerator.channels(spark, VisGenerator.Spec(nCoarse = 2))
+      .withColumn("source", lit("m1"))
+    val c2 = c1.limit(1).withColumn("source", lit("m2"))
+    val e2 = intercept[IllegalArgumentException](Validation.enforce(Validation.validateProcessor(
+      spark, Manifest.fromPaths(spark, Seq("/d/111_nochannel.fits")), c1.unionByName(c2))))
+    assert(e2.getMessage == "Validation failed with the following errors:\n" +
+      "No metafits files found., Channels do not match between metafits files., " +
+      "Filename 111_nochannel.fits does not contain channel information.")
+  }
+
+  test("validation job budget on a listed directory: 1 job, 2 jobs, enforce none") {
+    val dir = Paths.get(tmpDir("graft_job_budget"))
+    val fx = Fits.fixtureSpec
+    Fits.writeVis(dir, fx)
+    Files.write(dir.resolve(s"${fx.obsid}.metafits"), Fits.primary(Seq(
+      Fits.cardInt("OBSID", fx.obsid), Fits.cardInt("NCOARSE", fx.nCoarse))))
+    val m = Manifest.fromDirectory(spark, dir.toString)
+    val chans = VisGenerator.channels(spark, fx).withColumn("source", lit("m1"))
+    val (fileSet, fileSetJobs) = jobsOf(Validation.validateFileSet(spark, m))
+    assert(fileSetJobs <= 1)
+    val (processor, processorJobs) = jobsOf(Validation.validateProcessor(spark, m, chans))
+    assert(processorJobs <= 2)
+    val (valid, enforceJobs) =
+      jobsOf(Validation.enforce(fileSet) && Validation.enforce(processor))
+    assert(valid && enforceJobs == 0)
   }
 }

@@ -76,6 +76,20 @@ class MwaPipelineSpec extends SparkSpec {
     assert(flagged.filter(_._1 == 11).forall(_._4 == "streak"))
   }
 
+  test("default config chain over raw gpubox files: no-data cells stay unflagged") {
+    val fx = Fits.fixtureSpec
+    val cfg = GraftConfig() // flag_init on: edge channels have no unflagged baseline
+    val vis = spark.read.format("graft-vis").option("path", Fits.ensureFixture()).load()
+    val insDf = VisOps.ins(VisOps.diff(VisOps.selectSurface(ReadOps.readChain(vis, cfg,
+      ReadOps.FreqLayout(fx.freq0Hz, fx.dfHz, fx.nFine)), cfg)))
+    val cells = Seq("obsid", "time_idx", "freq_hz", "pol")
+    val flags = MatchFilter(insDf, cfg)
+    assert(flags.count() == insDf.count())
+    val noData = flags.join(insDf.filter(col("metric").isNull), cells)
+    assert(!noData.isEmpty)
+    assert(noData.filter(col("flagged") || col("event") =!= "").isEmpty)
+  }
+
   test("select surface: cross/auto/pol/freq/ant filters") {
     val vis = VisGenerator.vis(spark, spec)
     val ants = VisGenerator.antennas(spark, spec)

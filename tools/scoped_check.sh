@@ -7,8 +7,9 @@
 # edit never re-runs the ~30-min all-pairs oracles this way; the full
 # sweep stays the round gate. Queries ADDED since the last round aren't
 # in the artifact yet — pass them explicitly as the second argument.
-# The decoder files name no query, so a change to any of them adds the
-# three read queries that certify the decoders (mwa10/12/16).
+# Most MWA sources (decoders, manifest, validation, match filter) name no
+# query, so a change to any file under mwa/ or to sources/VisSource.scala
+# adds every known query whose name starts with `mwa`.
 #
 #   tools/scoped_check.sh            # uncommitted changes vs HEAD
 #   tools/scoped_check.sh HEAD~3     # last three commits
@@ -21,15 +22,15 @@ if [ -z "$NAMES" ]; then
   FILES=$(git diff --name-only "$BASE" -- 'src/main/scala/graft/' | grep '\.scala$' || true)
   [ -z "$FILES" ] && { echo "no changed engine sources vs $BASE"; exit 0; }
   KNOWN=$(ls CORRECTNESS_r*.json | sort -V | tail -1)
-  DECODER_READS=""
-  echo "$FILES" | grep -qE '^src/main/scala/graft/(sources/VisSource|mwa/(Fits|Hdf5|Uvh5))\.scala$' \
-    && DECODER_READS="mwa10_fits_read mwa12_uvfits_read mwa16_uvh5_read"
-  NAMES=$({ grep -ho '"[a-z0-9_]*"' $FILES | tr -d '"'; printf '%s\n' $DECODER_READS; } \
-    | sort -u | python3 -c "
+  MWA=0
+  echo "$FILES" | grep -qE '^src/main/scala/graft/(mwa/.*|sources/VisSource\.scala)$' && MWA=1
+  NAMES=$({ grep -ho '"[a-z0-9_]*"' $FILES || true; } | tr -d '"' | sort -u | python3 -c "
 import json, sys
 known = set(json.load(open('$KNOWN')))
-hits = [l.strip() for l in sys.stdin if l.strip() in known]
-print(','.join(hits))")
+hits = {l.strip() for l in sys.stdin if l.strip() in known}
+if $MWA:
+    hits |= {k for k in known if k.startswith('mwa')}
+print(','.join(sorted(hits)))")
   [ -z "$NAMES" ] && { echo "no known query names found in: $FILES"; exit 0; }
 fi
 echo "scoped sweep: $NAMES"

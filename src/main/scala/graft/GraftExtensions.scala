@@ -24,12 +24,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectResolutionRule(_ => graft.plans.GroupingInHavingRewrite)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
     ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
-    ext.injectOptimizerRule(s => new graft.plans.BloomJoinRewrite(s))
     ext.injectPlannerStrategy(_ => graft.plans.GroupTopKStrategy)
     ext.injectCheckRule(session => graft.plans.StrictPlanChecks(session))
     // bytes-aware exchange sizing (round-16): per-exchange partition counts
     // derived from plan statistics — the engine-behavior answer to the r15
-    // sf10 partition-sizing experiment (BENCH_sf10.json)
+    // sf10 partition-sizing experiment (BENCH_sf10.json), at the
+    // calibrated constants of ExchangeSizing.Params
     ext.injectQueryStagePrepRule(s => new graft.plans.ExchangeSizingRule(s))
   }
 }

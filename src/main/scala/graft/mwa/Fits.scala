@@ -125,12 +125,29 @@ object Fits {
 
   // ------------------------------------------------------------------ parsing
 
-  final case class Header(cards: Map[String, String], dataOffset: Long, dataLen: Long) {
-    def int(k: String): Int = cards(k).trim.toInt
-    def long(k: String): Long = cards(k).trim.toLong
-    def double(k: String): Double = cards(k).trim.toDouble
+  /** The largest data unit or slice decoded in one read: the JVM's largest
+    * byte array. */
+  private val MaxReadBytes: Long = Int.MaxValue - 8L
+
+  /** One HDU header of the file at `path`, starting at byte `offset`.
+    * Reading a missing or non-numeric keyword fails with a
+    * [[CorruptInputException]] at the header's offset. */
+  final case class Header(path: String, offset: Long, cards: Map[String, String],
+                          dataOffset: Long, dataLen: Long) {
+    def corrupt(reason: String): CorruptInputException =
+      new CorruptInputException(path, offset, reason)
+    private def card(k: String): String =
+      cards.getOrElse(k, throw corrupt(s"missing $k card"))
+    private def number[T](k: String)(parse: String => T): T = {
+      val v = card(k).trim
+      try parse(v)
+      catch { case _: NumberFormatException => throw corrupt(s"$k = '$v' is not a number") }
+    }
+    def int(k: String): Int = number(k)(_.toInt)
+    def long(k: String): Long = number(k)(_.toLong)
+    def double(k: String): Double = number(k)(_.toDouble)
     def str(k: String): String = {
-      val v = cards(k).trim
+      val v = card(k).trim
       if (v.startsWith("'")) v.stripPrefix("'").takeWhile(_ != '\'').trim else v
     }
     def has(k: String): Boolean = cards.contains(k)
@@ -138,17 +155,24 @@ object Fits {
     def nextHduOffset: Long = dataOffset + dataLen + dataPad(dataLen)
   }
 
-  /** Parse one header starting at `offset`; None at EOF. Reads 2880-byte
-    * records until the END card, then sizes the data unit from
-    * BITPIX/NAXISn (or NAXIS1*NAXIS2 + PCOUNT for tables). */
-  def readHeader(raf: RandomAccessFile, offset: Long): Option[Header] = {
-    if (offset >= raf.length()) return None
+  /** Parse one header of `path` starting at `offset`; None at EOF. Reads
+    * 2880-byte records until the END card, then sizes the data unit from
+    * BITPIX/NAXISn (or NAXIS1*NAXIS2 + PCOUNT for tables) and checks that
+    * it fits in the rest of the file. A truncated header, a missing or
+    * malformed size card, or a data unit past EOF is a
+    * [[CorruptInputException]]. */
+  def readHeader(raf: RandomAccessFile, offset: Long, path: String): Option[Header] = {
+    val fileLen = raf.length()
+    if (offset >= fileLen) return None
     raf.seek(offset)
     val cards = scala.collection.mutable.LinkedHashMap[String, String]()
     var done = false
     var read = 0L
     val rec = new Array[Byte](RecordLen)
     while (!done) {
+      if (offset + read + RecordLen > fileLen)
+        throw new CorruptInputException(path, offset + read,
+          "header runs past end of file without an END card")
       raf.readFully(rec)
       read += RecordLen
       val text = new String(rec, StandardCharsets.US_ASCII)
@@ -163,21 +187,33 @@ object Fits {
           }
       }
     }
-    val naxis = cards.get("NAXIS").map(_.trim.toInt).getOrElse(0)
-    val bitpix = math.abs(cards.get("BITPIX").map(_.trim.toInt).getOrElse(8))
-    val axes = (1 to naxis).map(i => cards(s"NAXIS$i").trim.toLong)
-    val pcount = cards.get("PCOUNT").map(_.trim.toLong).getOrElse(0L)
-    val gcount = cards.get("GCOUNT").map(_.trim.toLong).getOrElse(1L)
+    val h = Header(path, offset, cards.toMap, offset + read, 0L)
+    def size(k: String, v: Long): Long =
+      if (v < 0) throw h.corrupt(s"$k = $v is negative") else v
+    def optional(k: String, dflt: Long): Long = if (h.has(k)) h.long(k) else dflt
+    val naxis = size("NAXIS", optional("NAXIS", 0L))
+    val bitpix = math.abs(optional("BITPIX", 8L))
+    val axes = (1L to naxis).map(i => size(s"NAXIS$i", h.long(s"NAXIS$i")))
+    val pcount = size("PCOUNT", optional("PCOUNT", 0L))
+    val gcount = size("GCOUNT", optional("GCOUNT", 1L))
     // FITS 4.0 §7: random-groups records (GROUPS=T, NAXIS1=0) size as
     // BITPIX/8 * GCOUNT * (PCOUNT + NAXIS2*...*NAXISn); everything else as
     // prod(NAXISn) * BITPIX/8 + PCOUNT (heap bytes for BINTABLE).
     val isGroups = cards.get("GROUPS").exists(_.trim == "T")
+    def product(xs: Seq[Long]): Long = xs.foldLeft(1L)(Math.multiplyExact)
     val dataLen =
-      if (naxis == 0) 0L
-      else if (isGroups && axes.headOption.contains(0L))
-        (bitpix / 8).toLong * gcount * (pcount + axes.drop(1).product)
-      else axes.product * (bitpix / 8) + pcount
-    Some(Header(cards.toMap, offset + read, dataLen))
+      try {
+        if (naxis == 0) 0L
+        else if (isGroups && axes.headOption.contains(0L))
+          product(Seq(bitpix / 8, gcount, Math.addExact(pcount, product(axes.drop(1)))))
+        else Math.addExact(product(axes :+ bitpix / 8), pcount)
+      } catch {
+        case _: ArithmeticException => throw h.corrupt("data unit size overflows a Long")
+      }
+    if (dataLen > fileLen - h.dataOffset)
+      throw new CorruptInputException(path, h.dataOffset,
+        s"data unit of $dataLen bytes runs past end of file ($fileLen bytes)")
+    Some(h.copy(dataLen = dataLen))
   }
 
   /** All HDU headers of a file, in order. */
@@ -186,11 +222,11 @@ object Fits {
     try {
       val out = Seq.newBuilder[Header]
       var off = 0L
-      var h = readHeader(raf, off)
+      var h = readHeader(raf, off, path)
       while (h.isDefined) {
         out += h.get
         off = h.get.nextHduOffset
-        h = readHeader(raf, off)
+        h = readHeader(raf, off, path)
       }
       out.result()
     } finally raf.close()
@@ -200,9 +236,21 @@ object Fits {
     * the file's other HDUs. */
   def readPrimary(path: String): Header = {
     val raf = new RandomAccessFile(path, "r")
-    try readHeader(raf, 0L).getOrElse(
-      throw new IllegalArgumentException(s"$path: empty FITS file"))
+    try readHeader(raf, 0L, path).getOrElse(
+      throw new CorruptInputException(path, 0L, "empty file"))
     finally raf.close()
+  }
+
+  /** Check a read of `bytes` from `offset` before allocating for it: it
+    * must end inside the file and fit one array. */
+  private def checkRead(raf: RandomAccessFile, path: String, offset: Long,
+                        bytes: Long, what: String): Unit = {
+    if (bytes > raf.length() - offset)
+      throw new CorruptInputException(path, offset,
+        s"$what of $bytes bytes runs past end of file (${raf.length()} bytes)")
+    if (bytes > MaxReadBytes)
+      throw new CorruptInputException(path, offset,
+        s"$what of $bytes bytes exceeds the $MaxReadBytes-byte single read")
   }
 
   /** Generic BINTABLE row decoder: yields one Array[Any] per row, aligned
@@ -210,15 +258,17 @@ object Fits {
   def readRows(raf: RandomAccessFile, h: Header): Iterator[Array[Any]] = {
     val n = h.int("TFIELDS")
     val forms = (1 to n).map(i => h.str(s"TFORM$i"))
-    val nax1 = h.int("NAXIS1")
-    val nRows = h.int("NAXIS2")
-    require(rowBytes(forms.map(Field("", _))) == nax1,
-      s"NAXIS1=$nax1 does not match TFORMs $forms")
-    val buf = new Array[Byte](nax1 * nRows)
+    val nax1 = h.long("NAXIS1")
+    val nRows = h.long("NAXIS2")
+    if (rowBytes(forms.map(Field("", _))) != nax1)
+      throw h.corrupt(s"NAXIS1=$nax1 does not match TFORMs $forms")
+    if (nRows > Int.MaxValue) throw h.corrupt(s"NAXIS2 = $nRows rows exceeds one read")
+    checkRead(raf, h.path, h.dataOffset, nax1 * nRows, "table data unit")
+    val buf = new Array[Byte]((nax1 * nRows).toInt)
     raf.seek(h.dataOffset)
     raf.readFully(buf)
     val bb = ByteBuffer.wrap(buf)
-    (0 until nRows).iterator.map { _ =>
+    (0 until nRows.toInt).iterator.map { _ =>
       forms.map { tf =>
         val cnt = tformCount(tf)
         tformType(tf) match {
@@ -249,8 +299,6 @@ object Fits {
     * written file paths. */
   def writeVis(dir: Path, spec: VisGenerator.Spec): Seq[Path] = {
     Files.createDirectories(dir)
-    val baselines =
-      for (a1 <- 0 until spec.nAnts; a2 <- a1 until spec.nAnts) yield (a1, a2)
     (0 until spec.nCoarse).map { chan =>
       val path = dir.resolve(f"${spec.obsid}%d_gpubox${chan + 1}%02d_00.fits")
       val out = new DataOutputStream(new BufferedOutputStream(
@@ -262,24 +310,13 @@ object Fits {
           cardInt("NANTS", spec.nAnts),
           cardDouble("FREQ0", spec.freq0Hz), cardDouble("DFHZ", spec.dfHz),
           cardDouble("JD0", spec.jd0), cardDouble("DTDAYS", spec.dtDays))))
+        val f0 = chan * spec.nFine
         for (t <- 0 until spec.nTimes) {
-          val rows = for {
-            (a1, a2) <- baselines.iterator
-            fine <- (0 until spec.nFine).iterator
-            (polName, pi) <- spec.pols.zipWithIndex.iterator
-          } yield {
-            val f = chan * spec.nFine + fine
-            val sky = Math.floorMod(a1 * 7 + a2 * 11 + f * 3 + pi * 17, 64).toDouble
-            val noise =
-              (Math.floorMod(t * 37 + a1 * 13 + a2 * 29 + f * 53 + pi * 71, 128) - 64)
-                .toDouble / 64.0
-            val narrow = if (f == spec.rfiFreqIdx &&
-              t >= spec.rfiTimes._1 && t <= spec.rfiTimes._2) spec.rfiAmp else 0.0
-            val streak = if (t == spec.streakTime) spec.streakAmp else 0.0
-            Seq(a1, a2, fine, polName, sky + narrow + streak + noise, 0.0, false, 1.0)
-          }
+          val rows = VisGenerator.portableCells(spec, t, f0 until f0 + spec.nFine)
+            .map(c => Seq(c.ant1, c.ant2, c.freqIdx - f0, spec.pols(c.polIdx), c.re,
+              0.0, false, 1.0))
           out.write(binTable(VisFields, rows,
-            baselines.length * spec.nFine * spec.pols.length,
+            Uvfits.nBaselines(spec.nAnts) * spec.nFine * spec.pols.length,
             extra = Seq(cardInt("TIMEIDX", t),
               cardDouble("TIMEJD", spec.jd0 + t * spec.dtDays))))
         }
@@ -315,11 +352,9 @@ object Fits {
         s"uvfits baseline codes hold at most 255 antennas, got nAnts=${spec.nAnts}")
       Files.createDirectories(dir)
       val path = dir.resolve(s"${spec.obsid}.uvfits")
-      val baselines =
-        for (a1 <- 0 until spec.nAnts; a2 <- a1 until spec.nAnts) yield (a1, a2)
       val nFreq = spec.nCoarse * spec.nFine
       val nPol = spec.pols.length
-      val gcount = spec.nTimes * baselines.length
+      val gcount = spec.nTimes * nBaselines(spec.nAnts)
       val header = endPad(Seq(
         cardBool("SIMPLE", true), cardInt("BITPIX", -32),
         cardInt("NAXIS", 4), cardInt("NAXIS1", 0),
@@ -338,23 +373,18 @@ object Fits {
       val groupBytes = 4 * groupFloats(spec)
       val dataLen = groupBytes.toLong * gcount
       val data = ByteBuffer.allocate((dataLen + dataPad(dataLen)).toInt)
-      for (t <- 0 until spec.nTimes; (a1, a2) <- baselines) {
-        data.putFloat(0.0f).putFloat(0.0f).putFloat(0.0f) // UU VV WW
-        data.putFloat((256 * (a1 + 1) + (a2 + 1)).toFloat)
-        data.putFloat((t * spec.dtDays).toFloat)
-        // array order: NAXIS2 (re,im,wt) fastest, then pol, then freq
-        for (f <- 0 until nFreq; pi <- 0 until nPol) {
-          val sky = Math.floorMod(a1 * 7 + a2 * 11 + f * 3 + pi * 17, 64).toDouble
-          val noise =
-            (Math.floorMod(t * 37 + a1 * 13 + a2 * 29 + f * 53 + pi * 71, 128) - 64)
-              .toDouble / 64.0
-          val narrow = if (f == spec.rfiFreqIdx &&
-            t >= spec.rfiTimes._1 && t <= spec.rfiTimes._2) spec.rfiAmp else 0.0
-          val streak = if (t == spec.streakTime) spec.streakAmp else 0.0
-          data.putFloat((sky + narrow + streak + noise).toFloat)
-          data.putFloat(0.0f) // im
-          data.putFloat(1.0f) // weight > 0 => unflagged, nsample = weight
+      // one group per (time, baseline): its parameters ahead of its first
+      // cell; array order NAXIS2 (re,im,wt) fastest, then pol, then freq
+      for (t <- 0 until spec.nTimes;
+           c <- VisGenerator.portableCells(spec, t, 0 until nFreq)) {
+        if (c.freqIdx == 0 && c.polIdx == 0) {
+          data.putFloat(0.0f).putFloat(0.0f).putFloat(0.0f) // UU VV WW
+          data.putFloat((256 * (c.ant1 + 1) + (c.ant2 + 1)).toFloat)
+          data.putFloat((t * spec.dtDays).toFloat)
         }
+        data.putFloat(c.re.toFloat)
+        data.putFloat(0.0f) // im
+        data.putFloat(1.0f) // weight > 0 => unflagged, nsample = weight
       }
       val out = new DataOutputStream(new BufferedOutputStream(
         new FileOutputStream(path.toFile)))
@@ -369,17 +399,19 @@ object Fits {
     def readGroups(raf: RandomAccessFile, h: Header,
                    groupStart: Int, groupEnd: Int): Iterator[(Array[Float], Array[Float])] = {
       val naxis = h.int("NAXIS")
-      val arrLen = (2 to naxis).map(i => h.int(s"NAXIS$i")).product
-      val pcount = h.int("PCOUNT")
+      val arrLen = (2 to naxis).map(i => h.long(s"NAXIS$i")).product
+      val pcount = h.long("PCOUNT")
       val groupBytes = 4 * (pcount + arrLen)
       val n = groupEnd - groupStart
-      val buf = new Array[Byte](groupBytes * n)
-      raf.seek(h.dataOffset + groupBytes.toLong * groupStart)
+      val start = h.dataOffset + groupBytes * groupStart
+      checkRead(raf, h.path, start, groupBytes * n, s"slice of $n groups")
+      val buf = new Array[Byte]((groupBytes * n).toInt)
+      raf.seek(start)
       raf.readFully(buf)
       val bb = ByteBuffer.wrap(buf)
       (0 until n).iterator.map { _ =>
-        val params = Array.fill(pcount)(bb.getFloat)
-        val data = Array.fill(arrLen)(bb.getFloat)
+        val params = Array.fill(pcount.toInt)(bb.getFloat)
+        val data = Array.fill(arrLen.toInt)(bb.getFloat)
         (params, data)
       }
     }
@@ -418,3 +450,9 @@ object Fits {
     fixtureDir
   }
 }
+
+/** A FITS input that cannot be decoded as its headers describe it:
+  * truncated, a missing or malformed size card, or a data unit too large
+  * for one read. The message names the file and the byte offset. */
+final class CorruptInputException(val path: String, val offset: Long, reason: String)
+    extends java.io.IOException(s"$path: corrupt input at byte $offset: $reason")

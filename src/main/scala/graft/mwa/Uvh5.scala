@@ -20,30 +20,20 @@ object Uvh5 {
   def write(dir: Path, spec: VisGenerator.Spec): Path = {
     Files.createDirectories(dir)
     val path = dir.resolve(s"${spec.obsid}.uvh5")
-    val baselines =
-      for (a1 <- 0 until spec.nAnts; a2 <- a1 until spec.nAnts) yield (a1, a2)
+    val baselines = VisGenerator.baselinePairs(spec.nAnts)
     val nBls = baselines.length
     val nBlts = spec.nTimes * nBls
     val nFreq = spec.nCoarse * spec.nFine
     val nPol = spec.pols.length
 
+    // interleaved (re, im) with im = 0; no flags; every nsample 1
     val vis = new Array[Float](2 * nBlts * nFreq * nPol)
     val flags = new Array[Byte](nBlts * nFreq * nPol)
-    val nsamples = new Array[Float](nBlts * nFreq * nPol)
+    val nsamples = Array.fill(nBlts * nFreq * nPol)(1.0f)
     var cell = 0
-    for (t <- 0 until spec.nTimes; (a1, a2) <- baselines;
-         f <- 0 until nFreq; pi <- 0 until nPol) {
-      val sky = Math.floorMod(a1 * 7 + a2 * 11 + f * 3 + pi * 17, 64).toDouble
-      val noise =
-        (Math.floorMod(t * 37 + a1 * 13 + a2 * 29 + f * 53 + pi * 71, 128) - 64)
-          .toDouble / 64.0
-      val narrow = if (f == spec.rfiFreqIdx &&
-        t >= spec.rfiTimes._1 && t <= spec.rfiTimes._2) spec.rfiAmp else 0.0
-      val streak = if (t == spec.streakTime) spec.streakAmp else 0.0
-      vis(2 * cell) = (sky + narrow + streak + noise).toFloat
-      vis(2 * cell + 1) = 0.0f
-      flags(cell) = 0
-      nsamples(cell) = 1.0f
+    for (t <- 0 until spec.nTimes;
+         c <- VisGenerator.portableCells(spec, t, 0 until nFreq)) {
+      vis(2 * cell) = c.re.toFloat
       cell += 1
     }
 

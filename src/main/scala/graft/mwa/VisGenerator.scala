@@ -131,6 +131,35 @@ object VisGenerator {
       lit(1.0).as("nsample"))
   }
 
+  /** Baselines in the on-disk writers' order: ant1-major, ant1 <= ant2. */
+  def baselinePairs(nAnts: Int): IndexedSeq[(Int, Int)] =
+    for (a1 <- 0 until nAnts; a2 <- a1 until nAnts) yield (a1, a2)
+
+  /** One cell of [[portable]]: global freq index, pol index, vis_re. */
+  final case class PortableCell(ant1: Int, ant2: Int, freqIdx: Int, polIdx: Int,
+                                re: Double)
+
+  /** [[portable]]'s values at integration `t`, computed in plain Scala for
+    * the on-disk writers (gpubox FITS, uvfits, uvh5), in their row order:
+    * baselines (see [[baselinePairs]]), then the global freq indices
+    * `freqs`, then pols. Every value is dyadic over 64ths, so it is exact
+    * in float32 too. */
+  def portableCells(spec: Spec, t: Int, freqs: Range): Iterator[PortableCell] =
+    for {
+      (a1, a2) <- baselinePairs(spec.nAnts).iterator
+      f <- freqs.iterator
+      pi <- spec.pols.indices.iterator
+    } yield {
+      val sky = Math.floorMod(a1 * 7 + a2 * 11 + f * 3 + pi * 17, 64).toDouble
+      val noise =
+        (Math.floorMod(t * 37 + a1 * 13 + a2 * 29 + f * 53 + pi * 71, 128) - 64)
+          .toDouble / 64.0
+      val narrow = if (f == spec.rfiFreqIdx &&
+        t >= spec.rfiTimes._1 && t <= spec.rfiTimes._2) spec.rfiAmp else 0.0
+      val streak = if (t == spec.streakTime) spec.streakAmp else 0.0
+      PortableCell(a1, a2, f, pi, sky + narrow + streak + noise)
+    }
+
   /** Portable variant with a PLANTED MULTIPLICATIVE BANDPASS whose
     * data-estimated removal is IEEE-exact end to end, so the full
     * remove_coarse_band chain can be certified bit-for-bit by a SQL oracle

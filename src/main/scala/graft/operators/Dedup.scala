@@ -656,8 +656,8 @@ object Dedup {
       if (bij.getLong(0) == bij.getLong(1))
         sets.select(col("id"), transform(col("sh"), t => xxhash64(t)).as("sh"))
       else sets
-    // SHUFFLE_HASH on the corpus side (round-15, measured at sf10 via
-    // ProbeD27/BENCH_sf10): sort-merge would SORT the candidate-many
+    // SHUFFLE_HASH on the corpus side (round-15, measured at sf10, numbers
+    // in BENCH_sf10.json): sort-merge would SORT the candidate-many
     // stream twice, and after the first join every stream row carries a
     // full shingle array — at sf10 that sort alone spilled ~17 GB/run
     // (103 GB over a 6-run bench session) and, on the pre-fix folded

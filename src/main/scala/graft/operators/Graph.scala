@@ -300,8 +300,8 @@ object Graph {
     * round's removed nodes, the sequential Matula–Beck trick) lost both
     * times — 25.8s vs 13.0s with the round-11 variant, and 14.29s/16.43s
     * vs 13.58s/15.43s (best/median of 3, identical 494,310-row core)
-    * with a leaner round-13 rewrite (graft.ProbeKcoreDelta, kept as the
-    * re-runnable A/B harness). The mechanism holds at any depth: without
+    * with a leaner round-13 rewrite; the sf10 spill-regime re-A/B is in
+    * KCORE_AB_sf10_r18.json. The mechanism holds at any depth: without
     * an adjacency index, the "removed's incident edges" semi join still
     * scans the full pinned edge table every round, so the O(E)-total
     * bound never materializes, and the running (id, deg) table adds an

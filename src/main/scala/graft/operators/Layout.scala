@@ -128,8 +128,8 @@ object Layout {
       .groupBy(shiftright(col("__pos"), 6).as("__word"))
       .agg(bit_or(shl(lit(1L), (col("__pos") % 64).cast("int")))
         .as("__bits"))
-    // the __graft_bloom prefix doubles as BloomJoinRewrite's reentrance
-    // marker: the rule skips joins whose subtree already carries it
+    // the __graft_bloom prefix keeps the per-hash working columns clear of
+    // the probe side's own column names
     (0 until k).foldLeft(probe) { (df, j) =>
       val w = words.select(col("__word").as(s"__graft_bloom_w$j"),
         col("__bits").as(s"__graft_bloom_b$j"))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, BroadcastDistrib
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION_BY_COL, ShuffleExchangeExec, ShuffleOrigin}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 
 /** Bytes-aware exchange sizing: derive each shuffle's partition count from
@@ -81,7 +80,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, Str
   * graph/edge shape, where the gap is largest and the r15 win was
   * measured) may INITIATE an upscale; the expansion factor is
   * `fileExpansion` (24) for file-scaled estimates and `runtimeExpansion`
-  * (6) when the subtree contains materialized bytes (columnar cache /
+  * (12) when the subtree contains materialized bytes (columnar cache /
   * completed stage); string-bearing rows never initiate (upscaling d27's
   * token-keyed string exchanges to 64-256 was measured at +30% median and
   * fresh spill, r16) but may follow a fixed-width sibling in a
@@ -107,31 +106,32 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, Str
   * and "plans correctly": the reference's bounded-memory north star
   * (`/root/reference/README.md:9-10`, automated batching to protect peak
   * memory) re-expressed as Spark partitioning derived from plan
-  * statistics. Opt out: `spark.graft.sizing.enabled=false`.
+  * statistics. Opt out: `spark.graft.sizing.enabled=false`; decision log
+  * on stderr: `spark.graft.sizing.log=true`. The calibration constants
+  * come in through `params` (GraftExtensions uses the defaults).
   */
-class ExchangeSizingRule(session: SparkSession) extends Rule[SparkPlan] {
+class ExchangeSizingRule(session: SparkSession,
+                         val params: ExchangeSizing.Params = ExchangeSizing.Params())
+    extends Rule[SparkPlan] {
   import ExchangeSizing._
 
   override def apply(plan: SparkPlan): SparkPlan = {
     val c = session.sessionState.conf
-    // env fallback mirrors the log flag: A/B sessions driven by env, the
-    // SPARK_GRAFT_* convention (sbt's forked run JVM sees no -D flags)
-    val enabled = c.getConfString("spark.graft.sizing.enabled",
-      sys.env.getOrElse("SPARK_GRAFT_SIZING", "true")).toBoolean
-    if (!enabled) plan
-    else walk(plan, frozen = false, Params(c))
+    if (!c.getConfString("spark.graft.sizing.enabled", "true").toBoolean) plan
+    else walk(plan, frozen = false,
+      log = c.getConfString("spark.graft.sizing.log", "false").toBoolean)
   }
 
-  private def walk(p: SparkPlan, frozen: Boolean, prm: Params): SparkPlan = p match {
+  private def walk(p: SparkPlan, frozen: Boolean, log: Boolean): SparkPlan = p match {
     case ex: ShuffleExchangeExec =>
       // the exchange re-partitions whatever is beneath it, so its child
       // subtree is free regardless of constraints from above
-      val newChild = walk(ex.child, frozen = false, prm)
+      val newChild = walk(ex.child, frozen = false, log)
       val ex2 =
         if (newChild eq ex.child) ex
         else ex.withNewChildren(Seq(newChild)).asInstanceOf[ShuffleExchangeExec]
       if (frozen) ex2
-      else resized(ex2, prm).getOrElse(ex2)
+      else resized(ex2, log).getOrElse(ex2)
     case _ =>
       val dists = p.requiredChildDistribution
       val clusteredIdx = dists.zipWithIndex.collect {
@@ -162,21 +162,21 @@ class ExchangeSizingRule(session: SparkSession) extends Rule[SparkPlan] {
             // doesn't NEED more partitions (tiny side of a join) follows
             // the bigger sibling — resizing a small side up is harmless,
             // and the big side is the one spilling.
-            val targets = exs.map(e => decide(e, prm))
+            val targets = exs.map(e => decide(e, log))
             val common =
               if (targets.contains(ExchangeSizing.Veto)) None
               else targets.collect { case ExchangeSizing.Up(n) => n }
                 .reduceOption(math.max)
             p.children.zipWithIndex.map { case (c, i) =>
-              if (!clusteredIdx.contains(i)) walk(c, frozen, prm)
-              else rebuildMember(c, common, prm)
+              if (!clusteredIdx.contains(i)) walk(c, frozen, log)
+              else rebuildMember(c, common, log)
             }
           } else {
             // group pinned from outside (cached layout, materialized
             // stage, stateful requirement): everything that could define
             // a member's partitioning is frozen below this node
             p.children.zipWithIndex.map { case (c, i) =>
-              walk(c, frozen = frozen || clusteredIdx.contains(i), prm)
+              walk(c, frozen = frozen || clusteredIdx.contains(i), log)
             }
           }
         if (newChildren.zip(p.children).forall { case (a, b) => a eq b }) p
@@ -186,7 +186,7 @@ class ExchangeSizingRule(session: SparkSession) extends Rule[SparkPlan] {
         // children resize independently; a solo pinned count still freezes
         val newChildren = p.children.zipWithIndex.map { case (c, i) =>
           val pinned = i < dists.size && dists(i).requiredNumPartitions.isDefined
-          walk(c, frozen = frozen || pinned, prm)
+          walk(c, frozen = frozen || pinned, log)
         }
         if (newChildren.zip(p.children).forall { case (a, b) => a eq b }) p
         else p.withNewChildren(newChildren)
@@ -205,36 +205,36 @@ class ExchangeSizingRule(session: SparkSession) extends Rule[SparkPlan] {
     * resized to the group's common count (recursing below the exchange,
     * which is un-frozen by its own shuffle). */
   private def rebuildMember(member: SparkPlan, common: Option[Int],
-                            prm: Params): SparkPlan = member match {
+                            log: Boolean): SparkPlan = member match {
     case ex: ShuffleExchangeExec =>
-      val inner = walk(ex.child, frozen = false, prm)
+      val inner = walk(ex.child, frozen = false, log)
       val base =
         if (inner eq ex.child) ex
         else ex.withNewChildren(Seq(inner)).asInstanceOf[ShuffleExchangeExec]
-      common.flatMap(n => withCount(base, n, prm)).getOrElse(base)
+      common.flatMap(n => withCount(base, n)).getOrElse(base)
     case s: org.apache.spark.sql.execution.SortExec =>
-      val newChild = rebuildMember(s.child, common, prm)
+      val newChild = rebuildMember(s.child, common, log)
       if (newChild eq s.child) s else s.withNewChildren(Seq(newChild))
     case other => other // unreachable when resizable held
   }
 
   /** Resize a standalone eligible exchange (not part of a join group). */
-  private def resized(ex: ShuffleExchangeExec, prm: Params): Option[SparkPlan] =
+  private def resized(ex: ShuffleExchangeExec, log: Boolean): Option[SparkPlan] =
     if (!eligibleOrigin(ex.shuffleOrigin)) None
-    else decide(ex, prm) match {
-      case Up(n) => withCount(ex, n, prm)
+    else decide(ex, log) match {
+      case Up(n) => withCount(ex, n)
       case _ => None
     }
 
   /** The sizing decision for one exchange. */
-  private def decide(ex: ShuffleExchangeExec, prm: Params): Decision = {
+  private def decide(ex: ShuffleExchangeExec, log: Boolean): Decision = {
     val schema = ex.child.schema
     val current = ex.outputPartitioning.numPartitions
-    val est = estimateBytes(ex.child, prm.log)
+    val est = estimateBytes(ex.child, log)
     val runtime = hasRuntimeStats(ex.child)
     val d = est.map(b => targetCount(b, schema, current,
-      session.sparkContext.defaultParallelism, runtime, prm)).getOrElse(Veto)
-    if (prm.log) {
+      session.sparkContext.defaultParallelism, runtime, params)).getOrElse(Veto)
+    if (log) {
       val leaves = ex.child.collectLeaves().map(l =>
         s"${l.getClass.getSimpleName}:" +
           l.logicalLink.map(_.stats.sizeInBytes.toString).getOrElse("n/a"))
@@ -258,8 +258,7 @@ class ExchangeSizingRule(session: SparkSession) extends Rule[SparkPlan] {
       case _ => false
     }
 
-  private def withCount(ex: ShuffleExchangeExec, n: Int,
-                        prm: Params): Option[SparkPlan] = {
+  private def withCount(ex: ShuffleExchangeExec, n: Int): Option[SparkPlan] = {
     if (n <= ex.outputPartitioning.numPartitions) None
     else repartitioned(ex.outputPartitioning, n).map { newPart =>
       ShuffleExchangeExec(newPart, ex.child, ex.shuffleOrigin,
@@ -362,17 +361,12 @@ class ExchangeSizingRule(session: SparkSession) extends Rule[SparkPlan] {
   * and shared by the rule. */
 object ExchangeSizing {
 
-  /** Confs snapshot (read once per rule application). */
-  final case class Params(targetTaskBytes: Long, activationTaskBytes: Long,
-                          maxPartitions: Int,
-                          maxWaves: Int, fileExpansion: Int,
-                          runtimeExpansion: Int,
-                          maxTrustedBytes: Long, log: Boolean)
-  object Params {
-    def apply(c: SQLConf): Params = Params(
-      targetTaskBytes =
-        c.getConfString("spark.graft.sizing.targetTaskBytes",
-          (32L * 1024 * 1024).toString).toLong,
+  /** The calibrated constants (see the rule's CALIBRATION notes). The
+    * rule takes them through its constructor: production uses these
+    * defaults, ExchangeSizingSpec shrinks them so toy data crosses the
+    * thresholds. */
+  final case class Params(
+      targetTaskBytes: Long = 32L * 1024 * 1024,
       // the DO-NOTHING band: an exchange whose per-task working set at
       // the CURRENT count already fits is left alone even though the
       // target formula would pick more partitions — at sf1 the whole
@@ -382,25 +376,12 @@ object ExchangeSizing {
       // Up(96) at a 96 MB/task estimate — 128 MB clears it, and the
       // file-flavor overestimate means the REAL bytes at the trigger are
       // ~3x lower, still far inside the ~300 MB pooled per-task budget)
-      activationTaskBytes =
-        c.getConfString("spark.graft.sizing.activationTaskBytes",
-          (128L * 1024 * 1024).toString).toLong,
-      maxPartitions =
-        c.getConfString("spark.graft.sizing.maxPartitions", "1024").toInt,
-      maxWaves =
-        c.getConfString("spark.graft.sizing.maxWaves", "16").toInt,
-      fileExpansion =
-        c.getConfString("spark.graft.sizing.fileExpansion", "24").toInt,
-      runtimeExpansion =
-        c.getConfString("spark.graft.sizing.runtimeExpansion", "12").toInt,
-      maxTrustedBytes =
-        c.getConfString("spark.graft.sizing.maxTrustedBytes",
-          (1L << 40).toString).toLong, // 1 TiB: beyond it, assume sentinel
-      // env fallback: sbt's forked `run` JVM doesn't inherit -D flags, and
-      // probe sessions are driven by env (the SPARK_GRAFT_* convention)
-      log = c.getConfString("spark.graft.sizing.log",
-        sys.env.getOrElse("SPARK_GRAFT_SIZING_LOG", "false")).toBoolean)
-  }
+      activationTaskBytes: Long = 128L * 1024 * 1024,
+      maxPartitions: Int = 1024,
+      maxWaves: Int = 16,
+      fileExpansion: Int = 24,
+      runtimeExpansion: Int = 12,
+      maxTrustedBytes: Long = 1L << 40) // 1 TiB: beyond it, assume sentinel
 
   def eligibleOrigin(o: ShuffleOrigin): Boolean =
     o == ENSURE_REQUIREMENTS || o == REPARTITION_BY_COL

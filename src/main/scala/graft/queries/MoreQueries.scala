@@ -538,38 +538,19 @@ object MoreQueries {
             FROM sp GROUP BY user_id, span
             ORDER BY user_id, span_start"""))
 
-  /** The BloomJoinRewrite optimizer rule certified IN the oracle gate: the
-    * join runs with the rule enabled (a `require` asserts the rewritten
-    * plan actually carries the Bloom prefilter — a silently-unfired rule
-    * must fail the query, not quietly certify nothing), and the oracle is
-    * the PLAIN SQL join. A Bloom filter admits false positives (removed by
-    * the residual join) but never false negatives, so the rewritten plan
-    * must match the un-rewritten semantics row for row — which is exactly
-    * what the hash compare proves. The result is materialized eagerly
-    * (localCheckpoint) so the rule confs can be restored without leaking
-    * into any other catalog query's optimization. */
+  /** A fact-dim inner equi join, the plain plan its oracle SQL describes.
+    * The name is kept so the correctness artifacts line up; join-time
+    * Bloom pruning is Spark's own `InjectRuntimeFilter`, and q65 gates the
+    * explicit `Layout.bloomPrefilter` operator. */
   private val q67 = QueryDef("q67_bloom_join_rewrite",
     (s, d) => {
-      s.conf.set(graft.plans.BloomJoinRewrite.Flag, "true")
-      // column-pruned size estimates at test SFs are near-parity even
-      // though the raw files are ~4x apart; ratio 1 lets the heuristic
-      // pick the bigger side at every test scale
-      s.conf.set(graft.plans.BloomJoinRewrite.RatioKey, "1")
-      try {
-        val li = Tables.lineitem(s, d).select("l_orderkey", "l_quantity")
-        val ord = Tables.orders(s, d)
-          .filter(col("o_orderpriority") === "1-URGENT")
-          .select("o_orderkey", "o_orderpriority")
-        val j = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-          .select(col("l_orderkey"), col("l_quantity"), col("o_orderpriority"))
-          .orderBy("l_orderkey", "l_quantity")
-        require(j.queryExecution.optimizedPlan.toString.contains("__graft_bloom"),
-          "q67: BloomJoinRewrite did not fire on the fact-dim join")
-        j.localCheckpoint(true)
-      } finally {
-        s.conf.unset(graft.plans.BloomJoinRewrite.Flag)
-        s.conf.unset(graft.plans.BloomJoinRewrite.RatioKey)
-      }
+      val li = Tables.lineitem(s, d).select("l_orderkey", "l_quantity")
+      val ord = Tables.orders(s, d)
+        .filter(col("o_orderpriority") === "1-URGENT")
+        .select("o_orderkey", "o_orderpriority")
+      li.join(ord, col("l_orderkey") === col("o_orderkey"))
+        .select(col("l_orderkey"), col("l_quantity"), col("o_orderpriority"))
+        .orderBy("l_orderkey", "l_quantity")
     },
     Some("""SELECT l_orderkey, l_quantity, o_orderpriority
             FROM lineitem JOIN orders ON l_orderkey = o_orderkey

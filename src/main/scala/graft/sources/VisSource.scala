@@ -273,12 +273,12 @@ case class FitsFile(path: String, obsid: Long, chan: Int, nTimes: Int,
     * decodes only the data units whose TIMEIDX falls in the slice. */
   override def decode(raf: RandomAccessFile, t0: Int, t1: Int): Iterator[Array[Any]] = {
     val hdus = Seq.newBuilder[Fits.Header]
-    var next = Fits.readHeader(raf, 0L)
+    var next = Fits.readHeader(raf, 0L, path)
     while (next.isDefined) {
       val hd = next.get
       if (hd.has("TIMEIDX") && hd.int("TIMEIDX") >= t0 && hd.int("TIMEIDX") < t1)
         hdus += hd
-      next = Fits.readHeader(raf, hd.nextHduOffset)
+      next = Fits.readHeader(raf, hd.nextHduOffset, path)
     }
     val colOf = FitsFile.colOf
     hdus.result().iterator.flatMap { h =>

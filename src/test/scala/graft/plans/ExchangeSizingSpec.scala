@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,12 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * `BENCH_sf10.json:partition_sizing_experiment_r15`).
   *
   * Layer 1 pins the pure decision function on the EXACT estimates the rule
-  * logged at sf10 (SPARK_GRAFT_SIZING_LOG=true probes, r16): the d28/d24
+  * logged at sf10 (spark.graft.sizing.log=true probes, r16): the d28/d24
   * edge-family exchanges must land on 256 — the measured-fastest arm —
   * and the same family at sf1/sf0.1 scale must keep the session default
   * (flat protocol). Layer 2 certifies the production wiring: a dedicated
-  * session through GraftExtensions with calibration shrunk so toy data
-  * crosses the thresholds, asserting actual executed partition counts for
+  * session through GraftExtensions (whose rule holds the default
+  * constants) plus a second rule instance whose calibration is shrunk
+  * through its constructor so toy data crosses the thresholds — the
+  * default-calibrated rule Keeps everything at this scale — asserting
+  * actual executed partition counts for
   * the three measured shapes (narrow-fixed stream -> upscaled;
   * array-carrying stream -> untouched; co-partitioned join -> one common
   * count on both sides).
@@ -25,7 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ExchangeSizingSpec extends AnyFunSuite with BeforeAndAfterAll {
   import ExchangeSizing._
 
-  private val defaults = Params(new SQLConf)
+  private val defaults = Params()
 
   private val edgeSchema = StructType(Seq(
     StructField("src", LongType), StructField("dst", LongType)))
@@ -147,6 +149,10 @@ class ExchangeSizingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var prevDefault: Option[SparkSession] = None
 
+  // calibration shrunk 2^13 x so toy row counts cross the thresholds
+  private val toyCalibration =
+    Params(targetTaskBytes = 4096, activationTaskBytes = 4096, maxWaves = 4)
+
   override def beforeAll(): Unit = {
     // serialize with SizingFlatAtGateSpec — see ExclusiveSessionGate
     ExclusiveSessionGate.sem.acquire()
@@ -166,13 +172,11 @@ class ExchangeSizingSpec extends AnyFunSuite with BeforeAndAfterAll {
       // not AQE's post-hoc trim of them
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // calibration shrunk 2^13 x so toy row counts cross the thresholds
-      .config("spark.graft.sizing.targetTaskBytes", "4096")
-      .config("spark.graft.sizing.activationTaskBytes", "4096")
-      .config("spark.graft.sizing.maxWaves", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.GraftExtensions()(_))
+      .withExtensions(_.injectQueryStagePrepRule(s =>
+        new ExchangeSizingRule(s, toyCalibration)))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -188,6 +192,12 @@ class ExchangeSizingSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     } finally ExclusiveSessionGate.sem.release()
     super.afterAll()
+  }
+
+  test("GraftExtensions registers the sizing rule at the default constants") {
+    val sizing = spark.sessionState.adaptiveRulesHolder.queryStagePrepRules
+      .collect { case r: ExchangeSizingRule => r.params }
+    assert(sizing == Seq(Params(), toyCalibration))
   }
 
   test("narrow-fixed aggregation exchange upscales to the wave cap") {

@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import scala.util.Try
 import graft.SparkSpec
-import graft.mwa.{Fits, Uvh5}
+import graft.mwa.{CorruptInputException, Fits, Uvh5}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, Filter, LessThan}
 
@@ -136,6 +136,11 @@ class VisSourceSpec extends SparkSpec {
     }
   }
 
+  private def corruptCause(e: Throwable): CorruptInputException =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case c: CorruptInputException => c }
+      .getOrElse(fail(s"no CorruptInputException in the failure chain of $e"))
+
   test("a reader that fails on a truncated file leaves no handle open") {
     assume(Files.isDirectory(Paths.get("/proc/self/fd")), "needs /proc/self/fd")
     def openOn(file: java.nio.file.Path): Boolean = {
@@ -157,8 +162,55 @@ class VisSourceSpec extends SparkSpec {
       val ch = java.nio.channels.FileChannel.open(victim,
         java.nio.file.StandardOpenOption.WRITE)
       try ch.truncate(Files.size(victim) / 2) finally ch.close()
-      intercept[Exception](rdd.count())
+      val e = intercept[Exception](rdd.count())
       assert(!openOn(victim))
+      // the FITS decoders name the file and the offset (uvh5's HDF5 reader
+      // does not type its errors yet)
+      if (in.ext != ".uvh5") {
+        val c = corruptCause(e)
+        assert(Paths.get(c.path).toRealPath() == victim)
+        assert(c.offset > 0 && c.offset <= Files.size(victim))
+        assert(c.getMessage.contains(c.path) && c.getMessage.contains(s"byte ${c.offset}"),
+          c.getMessage)
+      }
     }
+  }
+
+  test("a FITS header with a size past EOF and 2 GiB, or a bad size card, fails typed") {
+    // a gpubox file with one card of one header record rewritten (record 1
+    // is the first BINTABLE header, right after the primary's), keeping
+    // the first `keep` bytes
+    val src = Paths.get(VisSource.inputs(Fits.ensureFixture())(".fits").head)
+    val rec = Fits.RecordLen
+    def corrupted(record: Int, find: String, card: String, keep: Int = Int.MaxValue) = {
+      val bytes = Files.readAllBytes(src).take(keep)
+      val text = new String(bytes, record * rec, rec, "US-ASCII")
+      val at = record * rec + (0 until rec by Fits.CardLen)
+        .find(i => text.startsWith(find, i)).get
+      card.getBytes("US-ASCII").copyToArray(bytes, at)
+      val dir = Paths.get(tmpDir("graft_fits_corrupt_"))
+      Files.write(dir.resolve(src.getFileName), bytes)
+      dir.resolve(src.getFileName).toString
+    }
+    def check(path: String, offset: Long, reason: String) = {
+      val c = intercept[CorruptInputException](Fits.readHeaders(path))
+      assert(c.path == path && c.offset == offset)
+      assert(c.getMessage.contains(path) && c.getMessage.contains(s"byte $offset") &&
+        c.getMessage.contains(reason), c.getMessage)
+    }
+    // 10^8 rows x 39 B = 3.9 GB: past EOF and past 2 GiB, refused at the
+    // data unit's offset before anything is allocated, through the source
+    // as well
+    val huge = corrupted(1, "NAXIS2", Fits.cardInt("NAXIS2", 100000000L))
+    check(huge, 2L * rec, "data unit of 3900000000 bytes runs past end of file")
+    val e = intercept[Exception](load(Paths.get(huge).getParent.toString).count())
+    assert(corruptCause(e).offset == 2L * rec)
+    // a malformed or missing size card, at the header's own offset
+    check(corrupted(1, "NAXIS2", Fits.card("NAXIS2", "12x")), rec,
+      "NAXIS2 = '12x' is not a number")
+    check(corrupted(1, "NAXIS2", " " * Fits.CardLen), rec, "missing NAXIS2 card")
+    // a header that reaches EOF without its END card, where the file ends
+    check(corrupted(0, "END ", " " * Fits.CardLen, keep = rec), rec,
+      "header runs past end of file without an END card")
   }
 }

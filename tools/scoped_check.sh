@@ -9,7 +9,9 @@
 # in the artifact yet — pass them explicitly as the second argument.
 # Most MWA sources (decoders, manifest, validation, match filter) name no
 # query, so a change to any file under mwa/ or to sources/VisSource.scala
-# adds every known query whose name starts with `mwa`.
+# adds every known query whose name starts with `mwa`. The planner rules
+# (src/main/scala/graft/plans/ and GraftExtensions.scala) run on every
+# plan, so a change to any of them sweeps every known query.
 #
 #   tools/scoped_check.sh            # uncommitted changes vs HEAD
 #   tools/scoped_check.sh HEAD~3     # last three commits
@@ -24,10 +26,14 @@ if [ -z "$NAMES" ]; then
   KNOWN=$(ls CORRECTNESS_r*.json | sort -V | tail -1)
   MWA=0
   echo "$FILES" | grep -qE '^src/main/scala/graft/(mwa/.*|sources/VisSource\.scala)$' && MWA=1
-  NAMES=$({ grep -ho '"[a-z0-9_]*"' $FILES || true; } | tr -d '"' | sort -u | python3 -c "
+  ALL=0
+  echo "$FILES" | grep -qE '^src/main/scala/graft/(plans/.*|GraftExtensions\.scala)$' && ALL=1
+  NAMES=$({ grep -hso '"[a-z0-9_]*"' $FILES || true; } | tr -d '"' | sort -u | python3 -c "
 import json, sys
 known = set(json.load(open('$KNOWN')))
 hits = {l.strip() for l in sys.stdin if l.strip() in known}
+if $ALL:
+    hits |= known
 if $MWA:
     hits |= {k for k in known if k.startswith('mwa')}
 print(','.join(sorted(hits)))")

@@ -3,7 +3,8 @@
 into a JSON artifact (round-16 verdict task 6: "publish the sizing rule's
 decision telemetry as a contract").
 
-Input: the stderr of a Bench run executed with SPARK_GRAFT_SIZING_LOG=true
+Input: the stderr of a Bench run executed with
+SPARK_GRAFT_SQL_CONFS=spark.graft.sizing.log=true
 (decisions print as `[graft-sizing] ... -> Up(n)|Keep|Veto` lines DURING a
 query's execution; the `[bench] <name> ...s` completion marker follows the
 query, so each sizing line is attributed to the NEXT bench marker).
@@ -88,7 +89,8 @@ def main(log_path, out_path, notes_path=None):
                                {"decisions": 0, "up": 0, "keep": 0,
                                 "veto": 0, "ups": {}})
     out = {
-        "protocol": ("Bench run with SPARK_GRAFT_SIZING_LOG=true; each "
+        "protocol": ("Bench run with SPARK_GRAFT_SQL_CONFS="
+                     "spark.graft.sizing.log=true; each "
                      "[graft-sizing] stderr line attributed to the next "
                      "[bench] completion marker. Decision counts span the "
                      "query's warmup + timed runs (re-planned per run)."),

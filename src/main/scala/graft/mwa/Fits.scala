@@ -19,9 +19,11 @@ import java.nio.file.{Files, Path, Paths}
   * the HDUs inside its slice — so time/channel pushdown prunes real bytes,
   * exactly like the reference's gpubox-file x time-batch read planning.
   *
-  * The decoder is a generic BINTABLE reader (TFORMn-driven: J/D/L/A
-  * repeat-counted fields), not a struct hardcoded to this writer, so any
-  * standard-conforming table with these column names decodes.
+  * The reader is a generic BINTABLE layout ([[Fits.Table]]): it finds each
+  * column by its TTYPEn and its byte offset from the TFORMn widths, not
+  * from a struct hardcoded to this writer, so any standard-conforming
+  * table with these column names decodes, whatever its column order or
+  * extra columns.
   */
 object Fits {
 
@@ -82,8 +84,9 @@ object Fits {
   }
   private def tformType(tform: String): Char = tform.dropWhile(_.isDigit).head
 
-  def rowBytes(fields: Seq[Field]): Int =
-    fields.map(f => tformCount(f.tform) * elemSize(tformType(f.tform))).sum
+  private def fieldBytes(f: Field): Int = tformCount(f.tform) * elemSize(tformType(f.tform))
+
+  def rowBytes(fields: Seq[Field]): Int = fields.map(fieldBytes).sum
 
   /** Serialize one BINTABLE HDU (header + big-endian data, both padded to
     * the 2880-byte record boundary). `rows` supplies one Seq[Any] per row,
@@ -125,8 +128,8 @@ object Fits {
 
   // ------------------------------------------------------------------ parsing
 
-  /** The largest data unit or slice decoded in one read: the JVM's largest
-    * byte array. */
+  /** The largest single read: the JVM's largest byte array. Reads are
+    * chunked, so only one table row or one uvfits group part must fit. */
   private val MaxReadBytes: Long = Int.MaxValue - 8L
 
   /** One HDU header of the file at `path`, starting at byte `offset`.
@@ -241,47 +244,56 @@ object Fits {
     finally raf.close()
   }
 
-  /** Check a read of `bytes` from `offset` before allocating for it: it
-    * must end inside the file and fit one array. */
+  /** Check that `bytes` from `offset` lie inside the file, before
+    * anything is allocated or read for them. */
   private def checkRead(raf: RandomAccessFile, path: String, offset: Long,
-                        bytes: Long, what: String): Unit = {
+                        bytes: Long, what: String): Unit =
     if (bytes > raf.length() - offset)
       throw new CorruptInputException(path, offset,
         s"$what of $bytes bytes runs past end of file (${raf.length()} bytes)")
-    if (bytes > MaxReadBytes)
-      throw new CorruptInputException(path, offset,
-        s"$what of $bytes bytes exceeds the $MaxReadBytes-byte single read")
-  }
 
-  /** Generic BINTABLE row decoder: yields one Array[Any] per row, aligned
-    * with the TTYPEn order; J->Int, D->Double, L->Boolean, A->String. */
-  def readRows(raf: RandomAccessFile, h: Header): Iterator[Array[Any]] = {
-    val n = h.int("TFIELDS")
-    val forms = (1 to n).map(i => h.str(s"TFORM$i"))
-    val nax1 = h.long("NAXIS1")
-    val nRows = h.long("NAXIS2")
-    if (rowBytes(forms.map(Field("", _))) != nax1)
-      throw h.corrupt(s"NAXIS1=$nax1 does not match TFORMs $forms")
-    if (nRows > Int.MaxValue) throw h.corrupt(s"NAXIS2 = $nRows rows exceeds one read")
-    checkRead(raf, h.path, h.dataOffset, nax1 * nRows, "table data unit")
-    val buf = new Array[Byte]((nax1 * nRows).toInt)
-    raf.seek(h.dataOffset)
-    raf.readFully(buf)
-    val bb = ByteBuffer.wrap(buf)
-    (0 until nRows.toInt).iterator.map { _ =>
-      forms.map { tf =>
-        val cnt = tformCount(tf)
-        tformType(tf) match {
-          case 'J' => bb.getInt: Any
-          case 'D' => bb.getDouble
-          case 'L' => bb.get() == 'T'.toByte
-          case 'A' =>
-            val a = new Array[Byte](cnt)
-            bb.get(a)
-            new String(a, StandardCharsets.US_ASCII).trim
-          case other => throw new IllegalArgumentException(s"TFORM $other")
-        }
-      }.toArray
+  /** Check that one chunk's read of `bytes` fits a byte array. */
+  private def checkChunk(h: Header, bytes: Long, what: String): Unit =
+    if (bytes > MaxReadBytes)
+      throw h.corrupt(s"$what of $bytes bytes exceeds the $MaxReadBytes-byte single read")
+
+  /** The row layout of a BINTABLE HDU of the file open in `raf`, from its
+    * TTYPEn/TFORMn cards: each named column's byte offset in a row. NAXIS1
+    * is checked against the TFORMs and the whole data unit against the
+    * file before anything is allocated; rows are then read a chunk at a
+    * time into the caller's buffer. */
+  final class Table(raf: RandomAccessFile, val header: Header) {
+    private val fields = (1 to header.int("TFIELDS"))
+      .map(i => Field(header.str(s"TTYPE$i"), header.str(s"TFORM$i")))
+    val rowBytes: Long = header.long("NAXIS1")
+    val nRows: Long = header.long("NAXIS2")
+    if (Fits.rowBytes(fields) != rowBytes)
+      throw header.corrupt(s"NAXIS1=$rowBytes does not match TFORMs ${fields.map(_.tform)}")
+    checkRead(raf, header.path, header.dataOffset, rowBytes * nRows, "table data unit")
+    checkChunk(header, rowBytes, "table row")
+    private val offsets: Map[String, (Int, Field)] = fields.map(_.name)
+      .zip(fields.scanLeft(0)(_ + fieldBytes(_)).zip(fields)).toMap
+
+    /** Byte offset in a row of column `name`, whose TFORM type must be
+      * `code`: one element, or a string of [[width]] bytes for 'A'. */
+    def column(name: String, code: Char): Int = {
+      val (off, f) = offsets.getOrElse(name, throw header.corrupt(s"no $name column"))
+      if (tformType(f.tform) != code || (code != 'A' && tformCount(f.tform) != 1))
+        throw header.corrupt(s"column $name has TFORM ${f.tform}, expected type $code")
+      off
+    }
+    /** Elements of column `name`: the bytes of an 'A' string. */
+    def width(name: String): Int = tformCount(offsets(name)._2.tform)
+
+    /** Rows per chunk: at most `maxRows`, and at most `maxBytes` unless one
+      * row is larger. */
+    def chunkRows(maxRows: Int, maxBytes: Int): Int =
+      math.max(1L, math.min(maxRows.toLong, maxBytes / math.max(1L, rowBytes))).toInt
+
+    /** Rows [row0, row0 + n) into `buf` from index 0. */
+    def read(row0: Long, n: Int, buf: Array[Byte]): Unit = {
+      raf.seek(header.dataOffset + row0 * rowBytes)
+      raf.readFully(buf, 0, n * rowBytes.toInt)
     }
   }
 
@@ -392,27 +404,37 @@ object Fits {
       path
     }
 
-    /** Decode groups [groupStart, groupEnd) of a random-groups primary HDU:
-      * yields (params, data) float arrays per group. Seeks directly to the
-      * first requested group — fixed group size makes time pruning a seek,
-      * no bytes read for pruned groups. */
-    def readGroups(raf: RandomAccessFile, h: Header,
-                   groupStart: Int, groupEnd: Int): Iterator[(Array[Float], Array[Float])] = {
-      val naxis = h.int("NAXIS")
-      val arrLen = (2 to naxis).map(i => h.long(s"NAXIS$i")).product
-      val pcount = h.long("PCOUNT")
-      val groupBytes = 4 * (pcount + arrLen)
-      val n = groupEnd - groupStart
-      val start = h.dataOffset + groupBytes * groupStart
-      checkRead(raf, h.path, start, groupBytes * n, s"slice of $n groups")
-      val buf = new Array[Byte]((groupBytes * n).toInt)
-      raf.seek(start)
-      raf.readFully(buf)
-      val bb = ByteBuffer.wrap(buf)
-      (0 until n).iterator.map { _ =>
-        val params = Array.fill(pcount.toInt)(bb.getFloat)
-        val data = Array.fill(arrLen.toInt)(bb.getFloat)
-        (params, data)
+    /** The random-groups layout of the uvfits primary HDU `header` of the
+      * file open in `raf`: per group, PCOUNT float parameters, then
+      * `cells` (re, im, weight) float triples in pol-fastest order. The
+      * fixed group size makes a time slice a seek; groups are read a chunk
+      * at a time and no byte of a pruned group is read. */
+    final class Groups(raf: RandomAccessFile, val header: Header) {
+      val pcount: Int = header.int("PCOUNT")
+      if (header.int("NAXIS2") != 3)
+        throw header.corrupt(s"NAXIS2 = ${header.int("NAXIS2")}, expected 3 (re, im, weight)")
+      val cells: Long = (3 to header.int("NAXIS")).map(i => header.long(s"NAXIS$i")).product
+      val groupBytes: Long = 4L * pcount + 12L * cells
+      checkChunk(header, 4L * pcount, "group parameter block")
+      private def offset(g: Long): Long = header.dataOffset + groupBytes * g
+
+      /** Check that groups [g, g + n) lie inside the file. */
+      def check(g: Long, n: Long): Unit =
+        checkRead(raf, header.path, offset(g), groupBytes * n, s"slice of $n groups")
+
+      /** Whole groups [g, g + n) into `buf` from index 0. */
+      def read(g: Long, n: Int, buf: Array[Byte]): Unit = {
+        raf.seek(offset(g))
+        raf.readFully(buf, 0, (groupBytes * n).toInt)
+      }
+
+      /** Group `g`'s parameters, then its cells [a, a + n), into `buf` from
+        * index 0: the layout of one group holding only those cells. */
+      def readPart(g: Long, a: Int, n: Int, buf: Array[Byte]): Unit = {
+        raf.seek(offset(g))
+        raf.readFully(buf, 0, 4 * pcount)
+        raf.seek(offset(g) + 4L * pcount + 12L * a)
+        raf.readFully(buf, 4 * pcount, 12 * n)
       }
     }
 
@@ -451,8 +473,9 @@ object Fits {
   }
 }
 
-/** A FITS input that cannot be decoded as its headers describe it:
-  * truncated, a missing or malformed size card, or a data unit too large
-  * for one read. The message names the file and the byte offset. */
+/** A FITS or HDF5 input that cannot be decoded as its headers describe
+  * it: truncated, a missing or malformed size card, data past the end of
+  * the file, or a single row or block too large for one read. The message
+  * names the file and the byte offset. */
 final class CorruptInputException(val path: String, val offset: Long, reason: String)
     extends java.io.IOException(s"$path: corrupt input at byte $offset: $reason")

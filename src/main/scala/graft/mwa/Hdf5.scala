@@ -243,9 +243,9 @@ object Hdf5 {
       s"$path: only 8-byte offsets/lengths supported")
     raf.seek(64)
     val rootOh = readLong(raf)
-    groupMembers(raf, rootOh).flatMap { case (gName, gOh) =>
-      groupMembers(raf, gOh).flatMap { case (dName, dOh) =>
-        parseDataset(raf, dOh).map(ds => s"$gName/$dName" -> ds)
+    groupMembers(raf, path, rootOh).flatMap { case (gName, gOh) =>
+      groupMembers(raf, path, gOh).flatMap { case (dName, dOh) =>
+        parseDataset(raf, path, dOh).map(ds => s"$gName/$dName" -> ds)
       }
     }.toMap
   }
@@ -256,8 +256,11 @@ object Hdf5 {
   }
 
   /** All (type, body) messages of a v1 object header, following
-    * continuation (0x0010) blocks. */
-  private def messages(raf: RandomAccessFile, ohAddr: Long): Seq[(Int, Array[Byte])] = {
+    * continuation (0x0010) blocks. A block that runs past the end of the
+    * file is a [[CorruptInputException]] at the block's offset, raised
+    * before the block is allocated. */
+  private def messages(raf: RandomAccessFile, path: String,
+                       ohAddr: Long): Seq[(Int, Array[Byte])] = {
     raf.seek(ohAddr)
     val head = new Array[Byte](16); raf.readFully(head)
     val hb = ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
@@ -265,15 +268,21 @@ object Hdf5 {
     hb.get()
     val nMsgs = hb.getShort() & 0xffff
     hb.getInt()
-    val blockLen = hb.getInt()
+    val blockLen = hb.getInt() & 0xffffffffL
     val out = Seq.newBuilder[(Int, Array[Byte])]
     var remaining = nMsgs
     // (address, length) block queue: the header block, then continuations
-    var blocks = List((ohAddr + 16, blockLen.toLong))
+    var blocks = List((ohAddr + 16, blockLen))
     while (remaining > 0 && blocks.nonEmpty) {
       val (addr, len) = blocks.head
       blocks = blocks.tail
-      val raw = new Array[Byte]((len min Int.MaxValue).toInt)
+      if (len < 0 || addr < 0 || len > raf.length() - addr)
+        throw new CorruptInputException(path, addr, s"object header block of " +
+          s"$len bytes runs past end of file (${raf.length()} bytes)")
+      if (len > Int.MaxValue - 8)
+        throw new CorruptInputException(path, addr, s"object header block of " +
+          s"$len bytes exceeds one read")
+      val raw = new Array[Byte](len.toInt)
       raf.seek(addr); raf.readFully(raw)
       val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
       while (remaining > 0 && bb.remaining() >= 8) {
@@ -296,8 +305,9 @@ object Hdf5 {
 
   /** Symbol-table group members: walk the stab message's B-tree to its
     * SNOD leaves and resolve names through the local heap. */
-  private def groupMembers(raf: RandomAccessFile, ohAddr: Long): Seq[(String, Long)] = {
-    val stab = messages(raf, ohAddr).collectFirst { case (0x0011, b) => b }
+  private def groupMembers(raf: RandomAccessFile, path: String,
+                           ohAddr: Long): Seq[(String, Long)] = {
+    val stab = messages(raf, path, ohAddr).collectFirst { case (0x0011, b) => b }
       .getOrElse(return Seq.empty)
     val sb = ByteBuffer.wrap(stab).order(ByteOrder.LITTLE_ENDIAN)
     val (btree, heap) = (sb.getLong, sb.getLong)
@@ -368,8 +378,9 @@ object Hdf5 {
     }
   }
 
-  private def parseDataset(raf: RandomAccessFile, ohAddr: Long): Option[Ds] = {
-    val msgs = messages(raf, ohAddr).toMap
+  private def parseDataset(raf: RandomAccessFile, path: String,
+                           ohAddr: Long): Option[Ds] = {
+    val msgs = messages(raf, path, ohAddr).toMap
     for {
       space <- msgs.get(0x0001)
       dtype <- msgs.get(0x0003)
@@ -385,31 +396,64 @@ object Hdf5 {
       val lb = ByteBuffer.wrap(layout).order(ByteOrder.LITTLE_ENDIAN)
       require(lb.get() == 3 && lb.get() == 1,
         s"only v3 contiguous layout supported (dataset at $ohAddr)")
-      Ds(t, dims, lb.getLong, lb.getLong)
+      val (addr, len) = (lb.getLong, lb.getLong)
+      if (addr < 0 || len < 0 || len > raf.length() - addr)
+        throw new CorruptInputException(path, addr, s"data of the dataset at $ohAddr " +
+          s"($len bytes) runs past end of file (${raf.length()} bytes)")
+      Ds(t, dims, addr, len)
     }
   }
 
   // ------------------------------------------------------- typed data reads
 
+  /** The file offset of elements [from, from + n) of the contiguous
+    * dataset `ds` of `path`, after checking, in Longs and before anything
+    * is allocated, that they lie inside the dataset and inside the file.
+    * Either failure is a [[CorruptInputException]] at that offset. */
+  def extent(raf: RandomAccessFile, path: String, ds: Ds, from: Long, n: Long): Long = {
+    val size = ds.dtype.size
+    val offset = ds.dataAddr + from * size
+    if (from < 0 || n < 0 || from + n > ds.dataLen / size)
+      throw new CorruptInputException(path, offset, s"elements [$from, ${from + n}) " +
+        s"lie outside the dataset's ${ds.dataLen} bytes of $size-byte elements")
+    if (n * size > raf.length() - offset)
+      throw new CorruptInputException(path, offset, s"read of ${n * size} bytes " +
+        s"runs past end of file (${raf.length()} bytes)")
+    offset
+  }
+
   /** Read `n` elements starting at element `from` of a contiguous dataset
-    * — a single seek + bulk read, the partition-pruning primitive. */
-  def readBytesOf(raf: RandomAccessFile, ds: Ds, from: Long, n: Int): ByteBuffer = {
+    * into `buf` from index 0 — a single seek + bulk read, the
+    * partition-pruning primitive. */
+  def readInto(raf: RandomAccessFile, path: String, ds: Ds, from: Long, n: Int,
+               buf: Array[Byte]): Unit = {
+    raf.seek(extent(raf, path, ds, from, n))
+    raf.readFully(buf, 0, n * ds.dtype.size)
+  }
+
+  /** [[readInto]] a new little-endian buffer (metadata-sized reads). */
+  def readBytesOf(raf: RandomAccessFile, path: String, ds: Ds, from: Long,
+                  n: Int): ByteBuffer = {
+    val offset = extent(raf, path, ds, from, n)
+    if (n.toLong * ds.dtype.size > Int.MaxValue - 8)
+      throw new CorruptInputException(path, offset,
+        s"read of ${n.toLong * ds.dtype.size} bytes exceeds one array")
     val bb = new Array[Byte](n * ds.dtype.size)
-    raf.seek(ds.dataAddr + from * ds.dtype.size)
+    raf.seek(offset)
     raf.readFully(bb)
     ByteBuffer.wrap(bb).order(ByteOrder.LITTLE_ENDIAN)
   }
 
-  def readLongs(raf: RandomAccessFile, ds: Ds, from: Long, n: Int): Array[Long] = {
-    val bb = readBytesOf(raf, ds, from, n)
+  def readLongs(raf: RandomAccessFile, path: String, ds: Ds, from: Long, n: Int): Array[Long] = {
+    val bb = readBytesOf(raf, path, ds, from, n)
     Array.fill(n)(bb.getLong)
   }
-  def readDoubles(raf: RandomAccessFile, ds: Ds, from: Long, n: Int): Array[Double] = {
-    val bb = readBytesOf(raf, ds, from, n)
+  def readDoubles(raf: RandomAccessFile, path: String, ds: Ds, from: Long, n: Int): Array[Double] = {
+    val bb = readBytesOf(raf, path, ds, from, n)
     Array.fill(n)(bb.getDouble)
   }
-  def readFloats(raf: RandomAccessFile, ds: Ds, from: Long, n: Int): Array[Float] = {
-    val bb = readBytesOf(raf, ds, from, n)
+  def readFloats(raf: RandomAccessFile, path: String, ds: Ds, from: Long, n: Int): Array[Float] = {
+    val bb = readBytesOf(raf, path, ds, from, n)
     Array.fill(n)(bb.getFloat)
   }
 

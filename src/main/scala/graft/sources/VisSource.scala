@@ -1,18 +1,20 @@
 package graft.sources
 
 import java.io.{File, RandomAccessFile}
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets
 import java.util
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import graft.mwa.{Fits, Hdf5, Uvh5}
 
 /** DataSource V2 over raw visibility files: `format("graft-vis")`.
@@ -27,10 +29,12 @@ import graft.mwa.{Fits, Hdf5, Uvh5}
   * splits work by (`processors.py:166-172`, gpubox files × time batches;
   * a gpubox file is one coarse channel). Only two things differ per
   * format, both behind [[VisFile]]: the planning-time metadata parse and
-  * the decode of one time slice into the 13-column layout. Listing, pruning,
-  * projection and the file handle exist once. Implements
+  * the fill of one time slice, a chunk at a time, into the 13-column
+  * layout. Listing, pruning, projection, the file handle and the reused
+  * column vectors exist once. The scan is columnar and implements
   * SupportsPushDownRequiredColumns, so narrow projections (e.g. the
-  * metadata-only time scan, S3) hand Spark only the columns they need.
+  * metadata-only time scan, S3) fill, and read, only the columns they
+  * need.
   */
 class VisSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-vis"
@@ -58,6 +62,13 @@ object VisSource {
     StructField("nsample", DoubleType, nullable = false)))
 
   def timeSlice(o: CaseInsensitiveStringMap): Int = o.getInt("timeslice", 4)
+
+  /** Rows per columnar batch: a reader's column vectors and raw read
+    * buffers are sized by this, never by a data unit. */
+  val Chunk = 4096
+  /** Bytes of one chunk's raw FITS table read at most (unless one row is
+    * larger): under G1's humongous-object threshold, half a 1 MB region. */
+  val ChunkBytes: Int = 256 * 1024
 
   def path(o: CaseInsensitiveStringMap): String =
     Option(o.get("path")).filter(_.nonEmpty).getOrElse(
@@ -217,6 +228,8 @@ class VisScan(path: String, ext: String, files: Seq[String], slice: Int,
       if VisScan.keep(f.coarseChan, t0, t1, pushed)
     } yield VisPartition(f, t0, t1): InputPartition).toArray
 
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.SUPPORTED
   override def createReaderFactory(): PartitionReaderFactory =
     new VisReaderFactory(required)
 }
@@ -225,30 +238,99 @@ case class VisPartition(file: VisFile, timeStart: Int, timeEnd: Int)
     extends InputPartition
 
 class VisReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     new VisPartitionReader(partition.asInstanceOf[VisPartition], required)
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft-vis reads columnar batches only")
 }
 
-/** Reads one partition: owns the file handle and projects the decoder's
-  * full rows onto `required`, with the column ordinals resolved once. If
-  * setup (the decoder's eager reads) throws, the handle is closed here —
-  * Spark only closes readers it got back. */
+/** Reads one partition as batches of at most [[VisSource.Chunk]] rows:
+  * owns the file handle and one reused [[VisColumns]] holding only the
+  * `required` columns. If setup (the decoder's header reads and checks)
+  * throws, the handle is closed here — Spark only closes readers it got
+  * back. */
 class VisPartitionReader(part: VisPartition, required: StructType)
-    extends PartitionReader[InternalRow] {
+    extends PartitionReader[ColumnarBatch] {
+  private val out = new VisColumns(required)
   private val raf = new RandomAccessFile(part.file.path, "r")
-  private val rows: Iterator[Array[Any]] =
-    try part.file.decode(raf, part.timeStart, part.timeEnd)
+  private val fill: () => Int =
+    try part.file.decode(raf, part.timeStart, part.timeEnd, out)
     catch { case e: Throwable => raf.close(); throw e }
-  private val ordinals = required.fieldNames.map(VisSource.schema.fieldIndex)
 
-  private var current: InternalRow = _
-  override def next(): Boolean = rows.hasNext && {
-    val full = rows.next()
-    current = new GenericInternalRow(ordinals.map(i => full(i)))
-    true
+  override def next(): Boolean = {
+    out.reset()
+    val n = fill()
+    out.batch.setNumRows(n)
+    n > 0
   }
-  override def get(): InternalRow = current
-  override def close(): Unit = raf.close()
+  override def get(): ColumnarBatch = out.batch
+  override def close(): Unit = try out.batch.close() finally raf.close()
+}
+
+/** One reader's reused output: an on-heap vector of [[VisSource.Chunk]]
+  * rows per `required` column, batched in `required` order. A column that
+  * is not required is null here, so no decoder reads or fills it. */
+final class VisColumns(required: StructType) {
+  private def vec(name: String): WritableColumnVector =
+    if (required.fieldNames.contains(name))
+      new OnHeapColumnVector(VisSource.Chunk, VisSource.schema(name).dataType)
+    else null
+  val obsid: WritableColumnVector = vec("obsid")
+  val timeIdx: WritableColumnVector = vec("time_idx")
+  val timeJd: WritableColumnVector = vec("time_jd")
+  val ant1: WritableColumnVector = vec("ant1")
+  val ant2: WritableColumnVector = vec("ant2")
+  val baseline: WritableColumnVector = vec("baseline")
+  val coarseChan: WritableColumnVector = vec("coarse_chan")
+  val freqHz: WritableColumnVector = vec("freq_hz")
+  val pol: WritableColumnVector = vec("pol")
+  val visRe: WritableColumnVector = vec("vis_re")
+  val visIm: WritableColumnVector = vec("vis_im")
+  val flag: WritableColumnVector = vec("flag")
+  val nsample: WritableColumnVector = vec("nsample")
+  private val all = Array(obsid, timeIdx, timeJd, ant1, ant2, baseline,
+    coarseChan, freqHz, pol, visRe, visIm, flag, nsample)
+  val batch = new ColumnarBatch(
+    required.fieldNames.map(n => all(VisSource.schema.fieldIndex(n)): ColumnVector))
+
+  def any(vs: WritableColumnVector*): Boolean = vs.exists(_ != null)
+  def reset(): Unit = all.foreach(v => if (v != null) v.reset())
+
+  /** Rows [from, from + n) of one integration: obsid, time_idx, time_jd. */
+  def putTime(from: Int, n: Int, obs: Long, t: Int, jd: Double): Unit = {
+    if (obsid != null) obsid.putLongs(from, n, obs)
+    if (timeIdx != null) timeIdx.putInts(from, n, t)
+    if (timeJd != null) timeJd.putDoubles(from, n, jd)
+  }
+
+  /** Rows [from, from + n) of one baseline: ant1, ant2, baseline. */
+  def putBaseline(from: Int, n: Int, a1: Int, a2: Int): Unit = {
+    if (ant1 != null) ant1.putInts(from, n, a1)
+    if (ant2 != null) ant2.putInts(from, n, a2)
+    if (baseline != null) baseline.putLongs(from, n, a1.toLong * 2048 + a2)
+  }
+}
+
+/** The (frequency, polarisation) cells of one uvfits group or uvh5 blt
+  * row, pol fastest: `hz` per frequency, `nFine` fine channels per coarse
+  * channel. */
+final class CellAxis(nFine: Int, hz: Array[Double], pols: Seq[String]) {
+  private val polBytes = pols.map(_.getBytes(StandardCharsets.UTF_8)).toArray
+  val size: Int = hz.length * polBytes.length
+
+  /** Cells [a, a + n) into rows [from, from + n): coarse_chan, freq_hz, pol. */
+  def put(out: VisColumns, from: Int, a: Int, n: Int): Unit = {
+    val nPol = polBytes.length
+    var c = 0
+    while (c < n) {
+      val f = (a + c) / nPol
+      if (out.coarseChan != null) out.coarseChan.putInt(from + c, f / nFine)
+      if (out.freqHz != null) out.freqHz.putDouble(from + c, hz(f))
+      if (out.pol != null) out.pol.putByteArray(from + c, polBytes((a + c) % nPol))
+      c += 1
+    }
+  }
 }
 
 /** One input file with its planning metadata, parsed once when the scan
@@ -258,9 +340,12 @@ sealed trait VisFile extends Serializable {
   def nTimes: Int
   /** The file's one coarse channel, if it holds only one (gpubox). */
   def coarseChan: Option[Int]
-  /** Time slice [t0, t1) of the file open in `raf` as full rows in
-    * [[VisSource.schema]] order. Eager reads happen before this returns. */
-  def decode(raf: RandomAccessFile, t0: Int, t1: Int): Iterator[Array[Any]]
+  /** The decode of time slice [t0, t1) of the file open in `raf` into
+    * `out`'s columns, in [[VisSource.schema]] row order: each call of the
+    * returned function fills the next chunk of at most
+    * [[VisSource.Chunk]] rows and returns its row count, 0 at the end.
+    * Header reads and size checks happen before this returns. */
+  def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int
 }
 
 /** A gpubox FITS file: one coarse channel, one BINTABLE HDU per
@@ -269,45 +354,138 @@ case class FitsFile(path: String, obsid: Long, chan: Int, nTimes: Int,
                     nFine: Int, freq0Hz: Double, dfHz: Double) extends VisFile {
   override def coarseChan: Option[Int] = Some(chan)
 
-  /** Walks the HDU headers sequentially (cheap: 2880-byte records) and
-    * decodes only the data units whose TIMEIDX falls in the slice. */
-  override def decode(raf: RandomAccessFile, t0: Int, t1: Int): Iterator[Array[Any]] = {
-    val hdus = Seq.newBuilder[Fits.Header]
+  /** Walks the HDU headers sequentially (cheap: 2880-byte records), lays
+    * out and checks the tables whose TIMEIDX falls in the slice, and reads
+    * their rows a chunk at a time. */
+  override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
+    val hdus = IndexedSeq.newBuilder[FitsFile.Hdu]
     var next = Fits.readHeader(raf, 0L, path)
     while (next.isDefined) {
       val hd = next.get
       if (hd.has("TIMEIDX") && hd.int("TIMEIDX") >= t0 && hd.int("TIMEIDX") < t1)
-        hdus += hd
+        hdus += new FitsFile.Hdu(new Fits.Table(raf, hd))
       next = Fits.readHeader(raf, hd.nextHduOffset, path)
     }
-    val colOf = FitsFile.colOf
-    hdus.result().iterator.flatMap { h =>
-      val t = h.int("TIMEIDX")
-      val jd = h.double("TIMEJD")
-      Fits.readRows(raf, h).map { r =>
-        val a1 = r(colOf("ANT1")).asInstanceOf[Int]
-        val a2 = r(colOf("ANT2")).asInstanceOf[Int]
-        val freqIdx = chan * nFine + r(colOf("FINECH")).asInstanceOf[Int]
-        Array[Any](
-          obsid, t, jd, a1, a2, a1.toLong * 2048 + a2,
-          chan, freq0Hz + freqIdx * dfHz,
-          UTF8String.fromString(r(colOf("POL")).asInstanceOf[String]),
-          r(colOf("VISRE")).asInstanceOf[Double],
-          r(colOf("VISIM")).asInstanceOf[Double],
-          r(colOf("FLAG")).asInstanceOf[Boolean],
-          r(colOf("NSAMP")).asInstanceOf[Double])
-      }
-    }
+    new FitsFile.Chunks(this, hdus.result(), out)
   }
 }
 
 object FitsFile {
-  private val colOf = Fits.VisFields.map(_.name).zipWithIndex.toMap
-
   def open(path: String): FitsFile = {
     val h = Fits.readPrimary(path)
     FitsFile(path, h.long("OBSID"), h.int("COARSE"), h.int("NTIMES"),
       h.int("NFINE"), h.double("FREQ0"), h.double("DFHZ"))
+  }
+
+  /** Row `r`'s pol from `len` ASCII bytes at `buf(off)`, trimmed as
+    * `String.trim` trims: bytes up to 0x20 off both ends. A non-ASCII
+    * byte decodes to U+FFFD, as the US-ASCII charset decodes it. */
+  private def putPol(pol: WritableColumnVector, r: Int, buf: Array[Byte],
+                     off: Int, len: Int): Unit = {
+    var s = off
+    var e = off + len
+    while (s < e && (buf(s) & 0xff) <= 0x20) s += 1
+    while (e > s && (buf(e - 1) & 0xff) <= 0x20) e -= 1
+    var ascii = true
+    var k = s
+    while (k < e) { ascii &&= buf(k) >= 0; k += 1 }
+    if (ascii) pol.putByteArray(r, buf, s, e - s)
+    else pol.putByteArray(r,
+      new String(buf, s, e - s, StandardCharsets.US_ASCII).getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** One in-slice HDU: its time, rows per chunk and the byte offset in a
+    * row of each gpubox column, resolved and type-checked at setup. */
+  final class Hdu(val table: Fits.Table) {
+    val ant1: Int = table.column("ANT1", 'J')
+    val ant2: Int = table.column("ANT2", 'J')
+    val fine: Int = table.column("FINECH", 'J')
+    val pol: Int = table.column("POL", 'A')
+    val polLen: Int = table.width("POL")
+    val re: Int = table.column("VISRE", 'D')
+    val im: Int = table.column("VISIM", 'D')
+    val flag: Int = table.column("FLAG", 'L')
+    val nsamp: Int = table.column("NSAMP", 'D')
+    val t: Int = table.header.int("TIMEIDX")
+    val jd: Double = table.header.double("TIMEJD")
+    val rows: Int = table.chunkRows(VisSource.Chunk, VisSource.ChunkBytes)
+  }
+
+  /** Fills chunks of one HDU at a time from one reused row buffer. Only
+    * the time/channel constants need no row bytes: a projection of those
+    * alone (or none, a count) reads no data unit at all. */
+  final class Chunks(f: FitsFile, hdus: IndexedSeq[Hdu], out: VisColumns)
+      extends (() => Int) {
+    private val needsRows = out.any(out.ant1, out.ant2, out.baseline, out.freqHz,
+      out.pol, out.visRe, out.visIm, out.flag, out.nsample)
+    private val buf = new Array[Byte](if (!needsRows) 0
+      else hdus.map(h => h.rows * h.table.rowBytes.toInt).maxOption.getOrElse(0))
+    private val bb = ByteBuffer.wrap(buf)
+    private var i = 0
+    private var row = 0L
+
+    override def apply(): Int = {
+      while (i < hdus.length && row == hdus(i).table.nRows) { i += 1; row = 0 }
+      if (i == hdus.length) return 0
+      val h = hdus(i)
+      val n = math.min(h.rows.toLong, h.table.nRows - row).toInt
+      out.putTime(0, n, f.obsid, h.t, h.jd)
+      if (out.coarseChan != null) out.coarseChan.putInts(0, n, f.chan)
+      if (needsRows) {
+        h.table.read(row, n, buf)
+        val rb = h.table.rowBytes.toInt
+        var r = 0
+        while (r < n) {
+          val p = r * rb
+          val a1 = bb.getInt(p + h.ant1)
+          val a2 = bb.getInt(p + h.ant2)
+          if (out.ant1 != null) out.ant1.putInt(r, a1)
+          if (out.ant2 != null) out.ant2.putInt(r, a2)
+          if (out.baseline != null) out.baseline.putLong(r, a1.toLong * 2048 + a2)
+          if (out.freqHz != null) out.freqHz.putDouble(r,
+            f.freq0Hz + (f.chan * f.nFine + bb.getInt(p + h.fine)) * f.dfHz)
+          if (out.pol != null) putPol(out.pol, r, buf, p + h.pol, h.polLen)
+          if (out.visRe != null) out.visRe.putDouble(r, bb.getDouble(p + h.re))
+          if (out.visIm != null) out.visIm.putDouble(r, bb.getDouble(p + h.im))
+          if (out.flag != null) out.flag.putBoolean(r, buf(p + h.flag) == 'T')
+          if (out.nsample != null) out.nsample.putDouble(r, bb.getDouble(p + h.nsamp))
+          r += 1
+        }
+      }
+      row += n
+      n
+    }
+  }
+}
+
+/** Walks whole groups (uvfits) or blt rows (uvh5) of `cells` cells each,
+  * `count` of them, a chunk at a time: as many whole ones as fit
+  * [[VisSource.Chunk]] rows, or, when one alone is larger, parts of one. */
+private[sources] final class GroupCursor(count: Long, cells: Int) {
+  val whole: Boolean = cells <= VisSource.Chunk
+  /** Groups per chunk at most. */
+  val perChunk: Int =
+    if (whole) math.min(VisSource.Chunk / math.max(1, cells), count).toInt else 1
+  /** Cells per group in a chunk at most. */
+  val cellsPerChunk: Int = math.min(cells, VisSource.Chunk)
+  /** The current chunk: groups [g, g + n), cells [a, a + m) of each. */
+  var g = 0L
+  var a = 0
+  var n = 0
+  var m = 0
+
+  /** Moves to the next chunk; false at the end. */
+  def advance(): Boolean = {
+    if (n > 0) {
+      if (whole) g += n
+      else { a += m; if (a == cells) { a = 0; g += 1 } }
+    }
+    if (g == count) { n = 0; false }
+    else {
+      n = math.min(perChunk.toLong, count - g).toInt
+      m = math.min(cellsPerChunk, cells - a)
+      true
+    }
   }
 }
 
@@ -323,36 +501,54 @@ case class UvfitsFile(path: String, head: Fits.Header, obsid: Long,
                       jd0: Double, dtDays: Double) extends VisFile {
   override def coarseChan: Option[Int] = None
 
-  /** Unpacks each group's AIPS baseline code and DATE offset and emits one
+  /** Unpacks each group's AIPS baseline code and DATE offset and fills one
     * row per (freq, pol) cell. time_idx/time_jd are re-derived from the
     * header's time grid so float32 DATE rounding cannot leak into the
-    * output. */
-  override def decode(raf: RandomAccessFile, t0: Int, t1: Int): Iterator[Array[Any]] = {
+    * output. Every group read is checked, whatever the projection. */
+  override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
+    val groups = new Fits.Uvfits.Groups(raf, head)
+    val axis = new CellAxis(nFine,
+      Array.tabulate(nCoarse * nFine)(f => freq0Hz + f * dfHz), pols)
+    if (groups.pcount < Fits.Uvfits.PCount || groups.cells != axis.size)
+      throw head.corrupt(s"groups of ${groups.pcount} parameters and ${groups.cells} " +
+        s"cells, expected >= ${Fits.Uvfits.PCount} and NCOARSE x NFINE x pols = ${axis.size}")
     val nBl = Fits.Uvfits.nBaselines(nAnts)
-    val nPol = pols.length
-    val nFreq = nCoarse * nFine
-    val polU = pols.map(UTF8String.fromString).toArray
-    Fits.Uvfits.readGroups(raf, head, t0 * nBl, t1 * nBl).zipWithIndex
-      .flatMap { case ((params, data), i) =>
-        val bl = math.round(params(3)).toInt
+    val g0 = t0.toLong * nBl
+    val cur = new GroupCursor((t1 - t0).toLong * nBl, axis.size)
+    groups.check(g0, (t1 - t0).toLong * nBl)
+    val pb = 4 * groups.pcount
+    val buf = new Array[Byte](cur.perChunk * (pb + 12 * cur.cellsPerChunk))
+    val bb = ByteBuffer.wrap(buf)
+    () => if (!cur.advance()) 0 else {
+      if (cur.whole) groups.read(g0 + cur.g, cur.n, buf)
+      else groups.readPart(g0 + cur.g, cur.a, cur.m, buf)
+      for (j <- 0 until cur.n) {
+        val p = j * (pb + 12 * cur.m)
+        val bl = math.round(bb.getFloat(p + 12))
         val a1 = bl / 256 - 1
         val a2 = bl % 256 - 1
         if (a1 < 0 || a2 < a1 || a2 >= nAnts)
-          throw new IllegalStateException(s"$path: group ${t0 * nBl + i} " +
+          throw new IllegalStateException(s"$path: group ${g0 + cur.g + j} " +
             s"has baseline code $bl (ant1=$a1, ant2=$a2), outside " +
             s"0 <= ant1 <= ant2 < NANTS=$nAnts")
-        val t = math.round(params(4) / dtDays).toInt
-        val jd = jd0 + t * dtDays
-        for (f <- (0 until nFreq).iterator; pi <- (0 until nPol).iterator) yield {
-          val base = (f * nPol + pi) * 3
-          val wt = data(base + 2)
-          Array[Any](
-            obsid, t, jd, a1, a2, a1.toLong * 2048 + a2,
-            f / nFine, freq0Hz + f * dfHz, polU(pi),
-            data(base).toDouble, data(base + 1).toDouble,
-            wt <= 0f, math.abs(wt).toDouble)
+        val t = math.round(bb.getFloat(p + 16) / dtDays).toInt
+        val row0 = j * cur.m
+        out.putTime(row0, cur.m, obsid, t, jd0 + t * dtDays)
+        out.putBaseline(row0, cur.m, a1, a2)
+        axis.put(out, row0, cur.a, cur.m)
+        var c = 0
+        while (c < cur.m) {
+          val base = p + pb + 12 * c
+          val wt = bb.getFloat(base + 8)
+          if (out.visRe != null) out.visRe.putDouble(row0 + c, bb.getFloat(base).toDouble)
+          if (out.visIm != null) out.visIm.putDouble(row0 + c, bb.getFloat(base + 4).toDouble)
+          if (out.flag != null) out.flag.putBoolean(row0 + c, wt <= 0f)
+          if (out.nsample != null) out.nsample.putDouble(row0 + c, math.abs(wt).toDouble)
+          c += 1
         }
       }
+      cur.n * cur.m
+    }
   }
 }
 
@@ -377,40 +573,59 @@ case class Uvh5File(path: String, ds: Map[String, Hdf5.Ds], obsid: Long,
                     pols: Seq[String]) extends VisFile {
   override def coarseChan: Option[Int] = None
 
-  /** One bulk read per dataset over the slice's element range
-    * [blt0*F*P, blt1*F*P) — bytes outside the slice are never touched.
+  /** Reads, a chunk at a time, only the datasets the required columns
+    * need, over the slice's blt range [blt0, blt0 + nBlt) and cell range
+    * [blt0*F*P, (blt0 + nBlt)*F*P) — bytes outside the slice are never
+    * touched, and each range is checked against the file up front.
     * time_idx is the blt's time ordinal (blt / Nbls), bit-identical to the
     * other decoders. */
-  override def decode(raf: RandomAccessFile, t0: Int, t1: Int): Iterator[Array[Any]] = {
-    val nFreq = freqs.length
-    val nPol = pols.length
-    val polU = pols.map(UTF8String.fromString).toArray
-    val blt0 = t0 * nBls
-    val nBlt = (t1 - t0) * nBls
-    val cell0 = blt0.toLong * nFreq * nPol
-    val cells = nBlt * nFreq * nPol
-    val ant1 = Hdf5.readLongs(raf, ds("Header/ant_1_array"), blt0, nBlt)
-    val ant2 = Hdf5.readLongs(raf, ds("Header/ant_2_array"), blt0, nBlt)
+  override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
+    val axis = new CellAxis(nFine, freqs, pols)
+    val blt0 = t0.toLong * nBls
+    val nBlt = (t1 - t0).toLong * nBls
+    val cur = new GroupCursor(nBlt, axis.size)
+    // one dataset's reused chunk buffer, or null if no required column
+    // needs it; its whole slice range is checked against the file first
+    def slab(needed: Boolean, name: String, perBlt: Int, chunkElems: Int): Uvh5File.Slab =
+      if (!needed) null else {
+        Hdf5.extent(raf, path, ds(name), blt0 * perBlt, nBlt * perBlt)
+        new Uvh5File.Slab(ds(name), chunkElems)
+      }
+    val chunkBlts = cur.perChunk
+    val chunkCells = cur.perChunk * cur.cellsPerChunk
+    val a1s = slab(out.any(out.ant1, out.ant2, out.baseline), "Header/ant_1_array", 1, chunkBlts)
+    val a2s = slab(out.any(out.ant1, out.ant2, out.baseline), "Header/ant_2_array", 1, chunkBlts)
     // time_jd comes from time_array VERBATIM (pyuvdata semantics) — deriving
     // the grid step by subtracting two ~2.46e6 JDs cancels ~18 bits and
     // perturbs reconstructed times in the last ulps
-    val timeJd = Hdf5.readDoubles(raf, ds("Header/time_array"), blt0, nBlt)
-    val vis = Hdf5.readBytesOf(raf, ds("Data/visdata"), cell0, cells)
-    val flg = Hdf5.readBytesOf(raf, ds("Data/flags"), cell0, cells)
-    val nsm = Hdf5.readBytesOf(raf, ds("Data/nsamples"), cell0, cells)
-    (0 until nBlt).iterator.flatMap { b =>
-      val t = (blt0 + b) / nBls
-      val jd = timeJd(b)
-      val a1 = ant1(b).toInt
-      val a2 = ant2(b).toInt
-      for (f <- (0 until nFreq).iterator; pi <- (0 until nPol).iterator) yield {
-        val c = (b * nFreq + f) * nPol + pi
-        Array[Any](
-          obsid, t, jd, a1, a2, a1.toLong * 2048 + a2,
-          f / nFine, freqs(f), polU(pi),
-          vis.getFloat(8 * c).toDouble, vis.getFloat(8 * c + 4).toDouble,
-          flg.get(c) != 0, nsm.getFloat(4 * c).toDouble)
+    val times = slab(out.timeJd != null, "Header/time_array", 1, chunkBlts)
+    val vis = slab(out.any(out.visRe, out.visIm), "Data/visdata", axis.size, chunkCells)
+    val flg = slab(out.flag != null, "Data/flags", axis.size, chunkCells)
+    val nsm = slab(out.nsample != null, "Data/nsamples", axis.size, chunkCells)
+    def read(s: Uvh5File.Slab, from: Long, n: Int): Unit =
+      if (s != null) Hdf5.readInto(raf, path, s.ds, from, n, s.buf)
+    () => if (!cur.advance()) 0 else {
+      val blt = blt0 + cur.g
+      val cells = cur.n * cur.m
+      Seq(a1s, a2s, times).foreach(read(_, blt, cur.n))
+      Seq(vis, flg, nsm).foreach(read(_, blt * axis.size + cur.a, cells))
+      for (j <- 0 until cur.n) {
+        val row0 = j * cur.m
+        out.putTime(row0, cur.m, obsid, ((blt + j) / nBls).toInt,
+          if (times == null) 0.0 else times.bb.getDouble(8 * j))
+        if (a1s != null)
+          out.putBaseline(row0, cur.m, a1s.bb.getLong(8 * j).toInt, a2s.bb.getLong(8 * j).toInt)
+        axis.put(out, row0, cur.a, cur.m)
       }
+      var c = 0
+      while (c < cells) {
+        if (out.visRe != null) out.visRe.putDouble(c, vis.bb.getFloat(8 * c).toDouble)
+        if (out.visIm != null) out.visIm.putDouble(c, vis.bb.getFloat(8 * c + 4).toDouble)
+        if (out.flag != null) out.flag.putBoolean(c, flg.buf(c) != 0)
+        if (out.nsample != null) out.nsample.putDouble(c, nsm.bb.getFloat(4 * c).toDouble)
+        c += 1
+      }
+      cells
     }
   }
 }
@@ -422,14 +637,20 @@ object Uvh5File {
     val raf = new RandomAccessFile(path, "r")
     try {
       val ds = Hdf5.datasets(raf, path)
-      def scalar(n: String): Long = Hdf5.readLongs(raf, ds(s"Header/$n"), 0, 1)(0)
+      def scalar(n: String): Long = Hdf5.readLongs(raf, path, ds(s"Header/$n"), 0, 1)(0)
       val nFreq = scalar("Nfreqs").toInt
       val nPol = scalar("Npols").toInt
       Uvh5File(path, ds, scalar("obsid"), scalar("Ntimes").toInt,
         scalar("Nbls").toInt, scalar("nfine").toInt,
-        Hdf5.readDoubles(raf, ds("Header/freq_array"), 0, nFreq),
-        Hdf5.readLongs(raf, ds("Header/polarization_array"), 0, nPol)
+        Hdf5.readDoubles(raf, path, ds("Header/freq_array"), 0, nFreq),
+        Hdf5.readLongs(raf, path, ds("Header/polarization_array"), 0, nPol)
           .map(Uvh5.PolName).toSeq)
     } finally raf.close()
+  }
+
+  /** One dataset's chunk buffer, little-endian like the file. */
+  final class Slab(val ds: Hdf5.Ds, elems: Int) {
+    val buf = new Array[Byte](elems * ds.dtype.size)
+    val bb: ByteBuffer = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
   }
 }

@@ -28,12 +28,12 @@ class Uvh5Spec extends SparkSpec {
       val ds = datasets(raf, p.toString)
       assert(ds.keySet == Set("A/s", "A/v", "B/m", "B/z", "B/b"))
       assert(ds("A/s").dtype == I64 && ds("A/s").dims.isEmpty)
-      assert(readLongs(raf, ds("A/s"), 0, 1).toSeq == Seq(42L))
+      assert(readLongs(raf, p.toString, ds("A/s"), 0, 1).toSeq == Seq(42L))
       assert(ds("B/m").dims == Seq(2L, 2L))
       assert(ds("B/z").dtype == C64)
-      assert(readDoubles(raf, ds("A/v"), 1, 2).toSeq == Seq(-2.25, 3.0))
-      assert(readFloats(raf, ds("B/m"), 0, 4).toSeq == Seq(1f, 2f, 3f, 4f))
-      val zb = readBytesOf(raf, ds("B/z"), 1, 1)
+      assert(readDoubles(raf, p.toString, ds("A/v"), 1, 2).toSeq == Seq(-2.25, 3.0))
+      assert(readFloats(raf, p.toString, ds("B/m"), 0, 4).toSeq == Seq(1f, 2f, 3f, 4f))
+      val zb = readBytesOf(raf, p.toString, ds("B/z"), 1, 1)
       assert(zb.getFloat == 2f && zb.getFloat == -2f)
     } finally raf.close()
   }

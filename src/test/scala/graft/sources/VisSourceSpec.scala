@@ -1,11 +1,15 @@
 package graft.sources
 
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 import scala.util.Try
 import graft.SparkSpec
-import graft.mwa.{CorruptInputException, Fits, Uvh5}
+import graft.mwa.{CorruptInputException, Fits, Hdf5, Uvh5, VisGenerator}
+import org.apache.spark.sql.execution.ColumnarToRowExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, Filter, LessThan}
+import org.apache.spark.sql.types.StructType
 
 /** The `graft-vis` source over one input per format, all three carrying
   * the same observation: 17 integrations, 4 antennas (10 baselines),
@@ -164,15 +168,12 @@ class VisSourceSpec extends SparkSpec {
       try ch.truncate(Files.size(victim) / 2) finally ch.close()
       val e = intercept[Exception](rdd.count())
       assert(!openOn(victim))
-      // the FITS decoders name the file and the offset (uvh5's HDF5 reader
-      // does not type its errors yet)
-      if (in.ext != ".uvh5") {
-        val c = corruptCause(e)
-        assert(Paths.get(c.path).toRealPath() == victim)
-        assert(c.offset > 0 && c.offset <= Files.size(victim))
-        assert(c.getMessage.contains(c.path) && c.getMessage.contains(s"byte ${c.offset}"),
-          c.getMessage)
-      }
+      // every decoder names the file and the offset
+      val c = corruptCause(e)
+      assert(Paths.get(c.path).toRealPath() == victim)
+      assert(c.offset > 0 && c.offset <= Files.size(victim))
+      assert(c.getMessage.contains(c.path) && c.getMessage.contains(s"byte ${c.offset}"),
+        c.getMessage)
     }
   }
 
@@ -212,5 +213,139 @@ class VisSourceSpec extends SparkSpec {
     // a header that reaches EOF without its END card, where the file ends
     check(corrupted(0, "END ", " " * Fits.CardLen, keep = rec), rec,
       "header runs past end of file without an END card")
+  }
+
+  /** One observation written in all three formats under `name`. */
+  private def writeAll(name: String, spec: VisGenerator.Spec): Seq[(Input, String)] = {
+    val root = Paths.get(tmpDir(s"graft_vis_${name}_"))
+    Seq(
+      inputs(0) -> { Fits.writeVis(root.resolve("fits"), spec); root.resolve("fits") },
+      inputs(1) -> Fits.Uvfits.write(root.resolve("uvfits"), spec).getParent,
+      inputs(2) -> Uvh5.write(root.resolve("uvh5"), spec).getParent)
+      .map { case (in, dir) => in -> dir.toString }
+  }
+
+  /** Row counts of every batch the source's columnar readers return for
+    * `dir` with `required` columns. */
+  private def batchRows(dir: String, required: StructType): Seq[Int] = {
+    val b = new VisScanBuilder(dir, 4)
+    b.pruneColumns(required)
+    val batch = b.build().toBatch
+    val factory = batch.createReaderFactory()
+    batch.planInputPartitions().toSeq.flatMap { p =>
+      assert(factory.supportColumnarReads(p))
+      val r = factory.createColumnarReader(p)
+      try Iterator.continually(r.next()).takeWhile(identity).map(_ => r.get().numRows()).toList
+      finally r.close()
+    }
+  }
+
+  test("chunk boundaries inside an HDU, a group slice and a blt slice lose no row") {
+    // 13 antennas (91 baselines) x 46 channels x 2 pols: a gpubox HDU holds
+    // 4186 = 4096 + 90 rows, a uvfits group or uvh5 blt row 92 cells (44
+    // per chunk), a 3-integration slice 25116 rows; then 2080 channels: one
+    // group or blt row holds 4160 = 4096 + 64 cells, split across chunks
+    val geometries = Seq(
+      "hdu" -> VisGenerator.Spec(nTimes = 3, nAnts = 13, nCoarse = 2, nFine = 23),
+      "split" -> VisGenerator.Spec(nTimes = 2, nAnts = 2, nCoarse = 2, nFine = 1040))
+    for ((name, spec) <- geometries; (in, dir) <- writeAll(name, spec))
+      withClue(s"$name ${in.name}") {
+        val nFreq = spec.nCoarse * spec.nFine
+        val cells = (0 until spec.nTimes).flatMap(t =>
+          VisGenerator.portableCells(spec, t, 0 until nFreq))
+        val got = load(dir).agg(count(lit(1)), sum("vis_re")).head()
+        assert(got.getLong(0) == cells.length)
+        assert(got.getDouble(1) == cells.map(_.re).sum)
+        val expected = VisGenerator.portable(spark, spec)
+        assert(load(dir).exceptAll(expected).isEmpty)
+        assert(expected.exceptAll(load(dir)).isEmpty)
+        val rows = batchRows(dir, VisSource.schema)
+        assert(rows.sum == cells.length && rows.max <= VisSource.Chunk)
+        assert(rows.length > 1 + in.files)
+      }
+  }
+
+  test("the executed plan reads columnar batches: a BatchScan under ColumnarToRow") {
+    for (in <- inputs) withClue(in.name) {
+      val q = load(in.dir()).filter(col("time_idx") < 4).select("vis_re", "pol")
+      assert(q.count() == 4 * 10 * 16 * 2)
+      // whole-stage codegen puts an InputAdapter between the two
+      val plan = q.queryExecution.executedPlan
+      val columnar = plan.collect { case c: ColumnarToRowExec => c.child }
+        .flatMap(_.collect { case b: BatchScanExec => b })
+      assert(columnar.length == 1 && columnar.head.supportsColumnar)
+      assert(plan.collect { case b: BatchScanExec => b } == columnar)
+    }
+  }
+
+  test("count(*) prunes every column and still counts every row") {
+    for (in <- inputs) withClue(in.name) {
+      val df = load(in.dir())
+      assert(scanOutput(df.groupBy().count()).isEmpty)
+      assert(df.count() == 5440)
+      assert(df.filter(col("time_idx") < 4).count() == 4 * 10 * 16 * 2)
+      assert(batchRows(in.dir(), new StructType()).sum == 5440)
+    }
+  }
+
+  private def datasetsOf(path: String): Map[String, Hdf5.Ds] = {
+    val raf = new java.io.RandomAccessFile(path, "r")
+    try Hdf5.datasets(raf, path) finally raf.close()
+  }
+
+  /** A copy of the uvh5 fixture with `patch` applied to its bytes. */
+  private def patchedUvh5(patch: (Array[Byte], Map[String, Hdf5.Ds]) => Unit): String = {
+    val src = VisSource.inputs(Uvh5.ensureFixture())(".uvh5").head
+    val bytes = Files.readAllBytes(Paths.get(src))
+    patch(bytes, datasetsOf(src))
+    val dir = Paths.get(tmpDir("graft_uvh5_corrupt_"))
+    Files.write(dir.resolve(Paths.get(src).getFileName), bytes).toString
+  }
+
+  private def le(bytes: Array[Byte]) = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+
+  private def checkTyped(path: String, offset: Long, reason: String)(e: => Any): Unit = {
+    val c = corruptCause(intercept[Exception](e))
+    assert(c.path == path && c.offset == offset)
+    assert(c.getMessage.contains(path) && c.getMessage.contains(s"byte $offset") &&
+      c.getMessage.contains(reason), c.getMessage)
+  }
+
+  test("a uvh5 whose visdata length points past EOF fails typed, before allocating") {
+    // the contiguous-layout message body: version 3, class 1, address, length
+    var visAddr = 0L
+    val path = patchedUvh5 { (bytes, ds) =>
+      val v = ds("Data/visdata")
+      visAddr = v.dataAddr
+      val body = le(new Array[Byte](18)).put(3.toByte).put(1.toByte)
+        .putLong(v.dataAddr).putLong(v.dataLen).array()
+      val at = bytes.indexOfSlice(body.toSeq)
+      assert(at > 0)
+      le(bytes).putLong(at + 10, 1L << 40)
+    }
+    val reason = "(1099511627776 bytes) runs past end of file"
+    checkTyped(path, visAddr, reason)(datasetsOf(path))
+    checkTyped(path, visAddr, reason)(load(Paths.get(path).getParent.toString).count())
+    // a read of 3 x 10^8 complex64 elements (2.4 GB, past an Int) is sized
+    // in Long and refused against the file before anything is allocated
+    val src = VisSource.inputs(Uvh5.ensureFixture())(".uvh5").head
+    val huge = datasetsOf(src)("Data/visdata").copy(dataLen = 1L << 40)
+    val raf = new java.io.RandomAccessFile(src, "r")
+    try checkTyped(src, huge.dataAddr, "read of 2400000000 bytes runs past end of file")(
+      Hdf5.readBytesOf(raf, src, huge, 0, 300000000))
+    finally raf.close()
+  }
+
+  test("an HDF5 object header block that claims 2 GiB fails typed, before allocating") {
+    // the root object header (address at superblock byte 64): its 4-byte
+    // block length at +8, the block itself from +16
+    var rootOh = 0L
+    val path = patchedUvh5 { (bytes, _) =>
+      rootOh = le(bytes).getLong(64)
+      le(bytes).putInt((rootOh + 8).toInt, Int.MinValue) // 2^31, unsigned
+    }
+    val reason = "object header block of 2147483648 bytes runs past end of file"
+    checkTyped(path, rootOh + 16, reason)(datasetsOf(path))
+    checkTyped(path, rootOh + 16, reason)(load(Paths.get(path).getParent.toString).count())
   }
 }

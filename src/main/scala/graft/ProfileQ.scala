@@ -17,20 +17,18 @@ object ProfileQ {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
     val spark = Engine.session(32)
-    // SPARK_GRAFT_RULE_DUMP=1: reset Catalyst's rule-time meters after the
-    // warmups, then print per-rule cumulative time at exit — attributes
-    // the wall-minus-jobs planning gap (analyzer/optimizer/AQE re-plan
-    // cost per run) that job metrics cannot see.
+    // SPARK_GRAFT_RULE_DUMP=1: reset Catalyst's rule-time meters after each
+    // query's warmup, then print that query's per-rule time after its
+    // timed runs — attributes the wall-minus-jobs planning gap
+    // (analyzer/optimizer/AQE re-plan cost per run) that job metrics
+    // cannot see.
     val ruleDump = sys.env.get("SPARK_GRAFT_RULE_DUMP").contains("1")
-    names.foreach(n => profileOne(spark, n, sfDir, runs,
-      resetMeters = ruleDump))
-    if (ruleDump) System.err.println(
-      org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent())
+    names.foreach(n => profileOne(spark, n, sfDir, runs, ruleDump = ruleDump))
     spark.stop()
   }
 
   private def profileOne(spark: SparkSession, name: String, sfDir: String,
-                         runs: Int, resetMeters: Boolean = false): Unit = {
+                         runs: Int, ruleDump: Boolean = false): Unit = {
 
     final case class JobRec(id: Int, desc: String, start: Long,
                             var end: Long = 0L,
@@ -75,13 +73,15 @@ object ProfileQ {
     }
     runOnce("warmup")
     jobs.clear(); stageToJob.clear()
-    if (resetMeters)
+    if (ruleDump)
       org.apache.spark.sql.catalyst.rules.RuleExecutor.resetMetrics()
     val times = (1 to runs).map { i =>
       spark.catalog.clearCache()
       if (i > 1) { jobs.clear(); stageToJob.clear() }
       runOnce(s"run $i")
     }
+    if (ruleDump) System.err.println(s"[profile] $name rule times, timed runs only:\n" +
+      org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent())
     // jobs map now holds the LAST run's jobs
     Thread.sleep(500)
     import scala.jdk.CollectionConverters._

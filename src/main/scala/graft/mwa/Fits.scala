@@ -161,9 +161,11 @@ object Fits {
   /** Parse one header of `path` starting at `offset`; None at EOF. Reads
     * 2880-byte records until the END card, then sizes the data unit from
     * BITPIX/NAXISn (or NAXIS1*NAXIS2 + PCOUNT for tables) and checks that
-    * it fits in the rest of the file. A truncated header, a missing or
-    * malformed size card, or a data unit past EOF is a
-    * [[CorruptInputException]]. */
+    * it fits in the rest of the file. A truncated header, a byte outside
+    * printable ASCII (0x20-0x7E), an XTENSION or SIMPLE card after the
+    * first (a lost END card, which would otherwise merge two headers), a
+    * missing or malformed size card, or a data unit past EOF is a
+    * [[CorruptInputException]] at the offending byte. */
   def readHeader(raf: RandomAccessFile, offset: Long, path: String): Option[Header] = {
     val fileLen = raf.length()
     if (offset >= fileLen) return None
@@ -177,11 +179,17 @@ object Fits {
         throw new CorruptInputException(path, offset + read,
           "header runs past end of file without an END card")
       raf.readFully(rec)
-      read += RecordLen
+      val bad = rec.indexWhere(b => b < 0x20 || b > 0x7e)
+      if (bad >= 0)
+        throw new CorruptInputException(path, offset + read + bad,
+          f"header byte 0x${rec(bad) & 0xff}%02X is not printable ASCII")
       val text = new String(rec, StandardCharsets.US_ASCII)
       for (i <- 0 until RecordLen / CardLen; if !done) {
         val c = text.substring(i * CardLen, (i + 1) * CardLen)
         val key = c.take(8).trim
+        if ((key == "XTENSION" || key == "SIMPLE") && read + i > 0)
+          throw new CorruptInputException(path, offset + read + i * CardLen,
+            s"$key card inside the header that starts at byte $offset: a lost END card")
         if (key == "END") done = true
         else if (key.nonEmpty && c.length > 10 && c(8) == '=')
           cards(key) = c.substring(10).takeWhile(_ != '/').trim match {
@@ -189,6 +197,7 @@ object Fits {
             case s => s
           }
       }
+      read += RecordLen
     }
     val h = Header(path, offset, cards.toMap, offset + read, 0L)
     def size(k: String, v: Long): Long =

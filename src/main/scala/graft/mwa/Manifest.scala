@@ -1,13 +1,14 @@
 package graft.mwa
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.functions._
 
 /** File-manifest construction: the reference's dict-of-lists file grouping
   * (`configurators.py:228-248`) re-expressed as a manifest DataFrame with
-  * derived columns. Grouping stays relational; validation collects the
-  * manifest to the driver ([[Validation]]), which is no new limit, since
-  * Spark's own file index already holds every listed path there.
+  * derived columns. A manifest is one row per file, built on the driver
+  * as a local relation, so [[Validation]]'s collects launch no Spark job.
   *
   * Scalar derivations (SURVEY §2.7):
   *  - C1 channel token:  regex `(gpubox|ch)(\d+)` over the file NAME
@@ -23,20 +24,19 @@ object Manifest {
   def fromPaths(spark: SparkSession, paths: Seq[String],
                 sizesMb: Map[String, Long] = Map.empty): DataFrame = {
     import spark.implicits._
-    val sized = paths.map(p => (p, sizesMb.getOrElse(p, 0L)))
-    withDerived(sized.toDF("file_path", "size_mb"))
+    withDerived(paths.map(p => (p, sizesMb.getOrElse(p, 0L))).toDF("file_path", "size_mb"))
   }
 
-  /** Manifest from a real directory listing via the binaryFile source
-    * (path + length only — Parquet-style pruned listing, no payload). */
-  def fromDirectory(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
-    withDerived(spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      // recursive walk, matching disk_usage_in_blocks' rglob (utils.py:188)
-      .option("recursiveFileLookup", "true")
-      .load(dir)
-      .select(col("path").as("file_path"),
-        (col("length") / lit(1024 * 1024)).cast("long").as("size_mb")))
+  /** [[fromPaths]] over Spark's file index of `dir`, listed on the driver: recursive like the
+    * rglob of `utils.py:188`, `_`/`.` names skipped; a missing `dir` fails with PATH_NOT_FOUND. */
+  def fromDirectory(spark: SparkSession, dir: String): DataFrame = {
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val root = fs.makeQualified(new Path(dir))
+    if (!fs.exists(root)) throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> root.toString))
+    val files = new InMemoryFileIndex(spark, Seq(root), Map("recursiveFileLookup" -> "true"), None)
+      .allFiles().map(f => f.getPath.toString -> f.getLen / (1024 * 1024)).sortBy(_._1)
+    fromPaths(spark, files.map(_._1), files.toMap)
+  }
 
   /** Add the derived columns (name, ext, stem, obsid, channel token). */
   def withDerived(files: DataFrame): DataFrame =

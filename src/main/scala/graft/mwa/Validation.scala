@@ -9,9 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ALL violations together, in rule order, as one local (code, message)
   * DataFrame that [[enforce]] collects without launching a job. Neither
   * input needs a distributed query: a manifest is one row per listed file,
-  * and Spark's own file index already holds every listed path on the
-  * driver; a channel table has one row per coarse channel (24 for an MWA
-  * observation).
+  * listed on the driver by Spark's own file index ([[Manifest]]), and a
+  * channel table has one row per coarse channel (24 for an MWA
+  * observation), both local relations. Spark folds a `collect()` over a
+  * local relation on the driver, so on those inputs validation launches
+  * no Spark job at all.
   */
 object Validation {
 

@@ -205,16 +205,16 @@ object VisGenerator {
   }
 
   /** Coarse-channel dimension matching the generated freq axis
-    * (schema: `utils.py:136-142`). */
-  def channels(spark: SparkSession, spec: Spec = Spec()): DataFrame =
-    spark.range(spec.nCoarse).select(
-      lit(spec.obsid).as("obsid"),
-      (col("id") + 1).cast("int").as("gpubox_number"),
-      col("id").cast("int").as("rec_chan_number"),
-      (lit(spec.freq0Hz) + col("id") * (spec.nFine * spec.dfHz)).as("chan_start_hz"),
-      (lit(spec.freq0Hz) + col("id") * (spec.nFine * spec.dfHz) +
-        spec.nFine * spec.dfHz / 2).as("chan_centre_hz"),
-      (lit(spec.freq0Hz) + (col("id") + 1) * (spec.nFine * spec.dfHz)).as("chan_end_hz"))
+    * (schema: `utils.py:136-142`), built as local rows on the driver. */
+  def channels(spark: SparkSession, spec: Spec = Spec()): DataFrame = {
+    import spark.implicits._
+    val width = spec.nFine * spec.dfHz
+    (0 until spec.nCoarse).map { i =>
+      val start = spec.freq0Hz + i * width
+      (spec.obsid, i + 1, i, start, start + width / 2, spec.freq0Hz + (i + 1) * width)
+    }.toDF("obsid", "gpubox_number", "rec_chan_number", "chan_start_hz", "chan_centre_hz",
+      "chan_end_hz")
+  }
 
   /** Raw per-rfinput layer (two rows per antenna, pol X and Y) — the
     * mwalib shape `utils.py:157-168` reads from: receiver fields live on

@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Manifest derivations (C1-C4, G1-G4) and the multi-error validation
   * matrix (FIXTURES.md B.5) — every reference error path. */
@@ -233,5 +235,86 @@ class ManifestValidationSpec extends SparkSpec {
     val (valid, enforceJobs) =
       jobsOf(Validation.enforce(fileSet) && Validation.enforce(processor))
     assert(valid && enforceJobs == 0)
+  }
+
+  test("the file-set glue on a listed gpubox directory launches no Spark job") {
+    // the sequence a raw-files-to-flags pass runs before its first scan:
+    // list, check the file set, read the metafits, build its channel
+    // table, check the processor inputs
+    val dir = Paths.get(tmpDir("graft_glue_jobs"))
+    val fx = Fits.fixtureSpec
+    Fits.writeVis(dir, fx)
+    Files.write(dir.resolve(s"${fx.obsid}.metafits"), Fits.primary(Seq(
+      Fits.cardInt("OBSID", fx.obsid), Fits.cardInt("NCOARSE", fx.nCoarse),
+      Fits.cardInt("NFINE", fx.nFine), Fits.cardDouble("FREQ0", fx.freq0Hz),
+      Fits.cardDouble("DFHZ", fx.dfHz))))
+    val (valid, jobs) = jobsOf {
+      val m = Manifest.fromDirectory(spark, dir.toString)
+      Validation.enforce(Validation.validateFileSet(spark, m)) && {
+        val metaPath = m.filter(col("ext") === "metafits").select("file_path").head().getString(0)
+        val h = Fits.readHeaders(new java.net.URI(metaPath).getPath).head
+        val meta = VisGenerator.Spec(obsid = h.long("OBSID"), nCoarse = h.int("NCOARSE"),
+          nFine = h.int("NFINE"), freq0Hz = h.double("FREQ0"), dfHz = h.double("DFHZ"))
+        val chans = VisGenerator.channels(spark, meta)
+          .withColumn("source", lit(s"${fx.obsid}.metafits"))
+        Validation.enforce(Validation.validateProcessor(spark, m, chans))
+      }
+    }
+    assert(valid && jobs == 0)
+  }
+
+  test("directory listing: hidden entries skipped, nested kept, file: URIs, whole MiB") {
+    val dir = Paths.get(tmpDir("graft_listing"))
+    val MiB = 1024 * 1024
+    def write(rel: String, bytes: Int): Unit = {
+      Files.createDirectories(dir.resolve(rel).getParent)
+      Files.write(dir.resolve(rel), new Array[Byte](bytes))
+    }
+    write("a.fits", 3 * MiB - 1)
+    write("sub/b.metafits", MiB)
+    write("sub/deeper/c.uvh5", 10)
+    Seq("_SUCCESS", ".a.crc", "_x", ".x", ".dot/d.fits", "_y/e.fits", "sub/_hidden/f.fits",
+      "sub/.x/g.fits").foreach(write(_, 1))
+    val rows = Manifest.fromDirectory(spark, dir.toString)
+      .select("file_path", "size_mb").collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(rows == Seq(s"file:$dir/a.fits" -> 2L, s"file:$dir/sub/b.metafits" -> 1L,
+      s"file:$dir/sub/deeper/c.uvh5" -> 0L))
+    // the same rows the file sources' own listing gives
+    val binaryFile = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
+      .load(dir.toString).select(col("path"), (col("length") / MiB).cast("long"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
+    assert(rows == binaryFile)
+    val missing = dir.resolve("no_such_dir").toString
+    val e = intercept[AnalysisException](Manifest.fromDirectory(spark, missing))
+    assert(e.getCondition == "PATH_NOT_FOUND" && e.getMessage.contains(missing), e.getMessage)
+  }
+
+  test("VisGenerator.channels: literal rows, schema, and the Catalyst arithmetic bit for bit") {
+    val c = VisGenerator.channels(spark)
+    assert(c.schema == StructType(Seq(
+      StructField("obsid", LongType, nullable = false),
+      StructField("gpubox_number", IntegerType, nullable = false),
+      StructField("rec_chan_number", IntegerType, nullable = false),
+      StructField("chan_start_hz", DoubleType, nullable = false),
+      StructField("chan_centre_hz", DoubleType, nullable = false),
+      StructField("chan_end_hz", DoubleType, nullable = false))))
+    assert(c.collect().map(_.toSeq).toSeq == Seq(
+      Seq(1234567890L, 1, 0, 1.3e8, 1.3016e8, 1.3032e8),
+      Seq(1234567890L, 2, 1, 1.3032e8, 1.3048e8, 1.3064e8)))
+    // awkward doubles: the rows equal, bit for bit, the same operations
+    // evaluated by Catalyst over spark.range
+    val spec = VisGenerator.Spec(nCoarse = 24, nFine = 7, freq0Hz = 1.2345678901e8 + 0.1,
+      dfHz = 1e5 / 3)
+    val w = spec.nFine * spec.dfHz
+    val catalyst = spark.range(spec.nCoarse).select(
+      lit(spec.freq0Hz) + col("id") * w,
+      lit(spec.freq0Hz) + col("id") * w + spec.nFine * spec.dfHz / 2,
+      lit(spec.freq0Hz) + (col("id") + 1) * w)
+    def bits(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(_.toSeq.map(v => java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double])))
+        .toSeq
+    assert(bits(VisGenerator.channels(spark, spec)
+      .select("chan_start_hz", "chan_centre_hz", "chan_end_hz").collect()) ==
+      bits(catalyst.collect()))
   }
 }

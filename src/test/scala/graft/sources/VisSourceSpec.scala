@@ -213,6 +213,22 @@ class VisSourceSpec extends SparkSpec {
     // a header that reaches EOF without its END card, where the file ends
     check(corrupted(0, "END ", " " * Fits.CardLen, keep = rec), rec,
       "header runs past end of file without an END card")
+    // a header that loses its END card mid-file no longer merges into what
+    // follows, through the source as well: a BINTABLE header runs into its
+    // data unit, whose first byte outside printable ASCII fails it; the
+    // primary runs into the next header's XTENSION card
+    def checkRead(path: String, offset: Long, reason: String) = {
+      check(path, offset, reason)
+      val e = intercept[Exception](load(Paths.get(path).getParent.toString).count())
+      assert(corruptCause(e).path == path && corruptCause(e).offset == offset)
+    }
+    val tableNoEnd = corrupted(1, "END ", " " * Fits.CardLen)
+    val bytes = Files.readAllBytes(Paths.get(tableNoEnd))
+    val firstBinary =
+      (2 * rec until bytes.length).find(i => bytes(i) < 0x20 || bytes(i) > 0x7e).get
+    checkRead(tableNoEnd, firstBinary, "is not printable ASCII")
+    checkRead(corrupted(0, "END ", " " * Fits.CardLen), rec,
+      "XTENSION card inside the header that starts at byte 0: a lost END card")
   }
 
   /** One observation written in all three formats under `name`. */

@@ -11,8 +11,10 @@
 # query, so a change to any file under mwa/ or to sources/VisSource.scala
 # adds every known query whose name starts with `mwa`. The planner rules
 # (src/main/scala/graft/plans/ and GraftExtensions.scala) run on every
-# plan, and the session settings in Engine.scala reach every plan, so a
-# change to any of them sweeps every known query.
+# plan, the session settings in Engine.scala reach every plan, and the
+# shared kernels (src/main/scala/graft/functions/ and operators/) serve
+# queries that their files never name, so a change to any of them sweeps
+# every known query.
 #
 #   tools/scoped_check.sh            # uncommitted changes vs HEAD
 #   tools/scoped_check.sh HEAD~3     # last three commits
@@ -28,7 +30,7 @@ if [ -z "$NAMES" ]; then
   MWA=0
   echo "$FILES" | grep -qE '^src/main/scala/graft/(mwa/.*|sources/VisSource\.scala)$' && MWA=1
   ALL=0
-  echo "$FILES" | grep -qE '^src/main/scala/graft/(plans/.*|GraftExtensions\.scala|Engine\.scala)$' && ALL=1
+  echo "$FILES" | grep -qE '^src/main/scala/graft/(plans/.*|functions/.*|operators/.*|GraftExtensions\.scala|Engine\.scala)$' && ALL=1
   NAMES=$({ grep -hso '"[a-z0-9_]*"' $FILES || true; } | tr -d '"' | sort -u | python3 -c "
 import json, sys
 known = set(json.load(open('$KNOWN')))

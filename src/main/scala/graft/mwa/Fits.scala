@@ -179,8 +179,9 @@ object Fits {
         throw new CorruptInputException(path, offset + read,
           "header runs past end of file without an END card")
       raf.readFully(rec)
-      val bad = rec.indexWhere(b => b < 0x20 || b > 0x7e)
-      if (bad >= 0)
+      var bad = 0
+      while (bad < RecordLen && rec(bad) >= 0x20 && rec(bad) <= 0x7e) bad += 1
+      if (bad < RecordLen)
         throw new CorruptInputException(path, offset + read + bad,
           f"header byte 0x${rec(bad) & 0xff}%02X is not printable ASCII")
       val text = new String(rec, StandardCharsets.US_ASCII)

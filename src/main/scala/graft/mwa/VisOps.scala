@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * sky-subtraction diff (W1), the incoherent noise spectrum reduction (G6)
   * and the mean-subtracted z-score (W2).
   *
-  * Scale design, as it runs today: the diff window W1 partitions by
+  * Scale design: the diff window W1 partitions by
   * (baseline, freq, pol) and sorts by time. The `graft-vis` source reports
   * no partitioning, so W1 hash-shuffles and sorts every visibility, and the
   * INS groupBy shuffles again. Each gpubox file does hold one (obsid,

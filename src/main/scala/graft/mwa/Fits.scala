@@ -165,7 +165,7 @@ object Fits {
     * printable ASCII (0x20-0x7E), an XTENSION or SIMPLE card after the
     * first (a lost END card, which would otherwise merge two headers), a
     * missing or malformed size card, or a data unit past EOF is a
-    * [[CorruptInputException]] at the offending byte. */
+    * [[CorruptInputException]] that names its byte offset. */
   def readHeader(raf: RandomAccessFile, offset: Long, path: String): Option[Header] = {
     val fileLen = raf.length()
     if (offset >= fileLen) return None

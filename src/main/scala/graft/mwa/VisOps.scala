@@ -8,15 +8,14 @@ import org.apache.spark.sql.functions._
   * sky-subtraction diff (W1), the incoherent noise spectrum reduction (G6)
   * and the mean-subtracted z-score (W2).
   *
-  * Scale design: the diff window W1 partitions by
-  * (baseline, freq, pol) and sorts by time. The `graft-vis` source reports
-  * no partitioning, so W1 hash-shuffles and sorts every visibility, and the
-  * INS groupBy shuffles again. Each gpubox file does hold one (obsid,
-  * coarse_chan) (SURVEY §1.3); only a source that reports that layout as a
-  * key-grouped partitioning would let Spark skip these shuffles. The INS
-  * reduction collapses |baselines| x rows into (time, freq, pol) cells,
-  * and partial aggregation makes its shuffle carry only the reduced
-  * spectrum.
+  * Scale design: the diff window W1 partitions by (baseline, freq, pol)
+  * and sorts by time. The `graft-vis` source reports no partitioning, so
+  * W1 hash-shuffles and sorts every visibility, and the INS groupBy
+  * shuffles again. Each gpubox file does hold one (obsid, coarse_chan)
+  * (SURVEY §1.3); only a source that reports that layout as a key-grouped
+  * partitioning would let Spark skip these shuffles. The INS reduction
+  * collapses |baselines| x rows into (time, freq, pol) cells, and partial
+  * aggregation makes its shuffle carry only the reduced spectrum.
   */
 object VisOps {
 

@@ -92,6 +92,7 @@ import scala.util.Random
   *    at the exact nested-sqrt IEEE doubles.
   *
   * Usage: runMain graft.OpFuzz <sfDir> <nDraws> <seed> <outJson>
+  * (outJson defaults to OPFUZZ.json in the JVM temp dir).
   * Exit 0 iff zero violations; the JSON artifact records every draw.
   */
 object OpFuzz {
@@ -641,7 +642,8 @@ object OpFuzz {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val n = if (args.length > 1) args(1).toInt else 100
     val seed = if (args.length > 2) args(2).toLong else 1601L
-    val outJson = if (args.length > 3) args(3) else "OPFUZZ_r16.json"
+    val outJson = if (args.length > 3) args(3)
+      else s"${System.getProperty("java.io.tmpdir")}/OPFUZZ.json"
     val spark = Engine.session()
     import graft.operators.Dedup
 

@@ -38,7 +38,7 @@ object ProfileQ {
                             var tasks: Int = 0)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    spark.sparkContext.addSparkListener(new SparkListener {
+    val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val desc = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
@@ -62,7 +62,7 @@ object ProfileQ {
           r.tasks += 1
         }
       }
-    })
+    }
 
     def runOnce(label: String): Double = {
       val t0 = System.nanoTime()
@@ -71,32 +71,36 @@ object ProfileQ {
       System.err.println(f"[profile] $name $label: $dt%.2fs")
       dt
     }
-    runOnce("warmup")
-    jobs.clear(); stageToJob.clear()
-    if (ruleDump)
-      org.apache.spark.sql.catalyst.rules.RuleExecutor.resetMetrics()
-    val times = (1 to runs).map { i =>
-      spark.catalog.clearCache()
-      if (i > 1) { jobs.clear(); stageToJob.clear() }
-      runOnce(s"run $i")
-    }
-    if (ruleDump) System.err.println(s"[profile] $name rule times, timed runs only:\n" +
-      org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent())
-    // jobs map now holds the LAST run's jobs
-    Thread.sleep(500)
-    import scala.jdk.CollectionConverters._
-    val recs = jobs.values.asScala.toSeq.sortBy(_.id)
-    System.err.println(f"[profile] ---- last run: ${recs.size} jobs ----")
-    var wall = 0.0
-    recs.foreach { r =>
-      val dt = (r.end - r.start) / 1e3
-      wall += dt
-      System.err.println(f"[profile] job ${r.id}%3d ${dt}%7.3fs " +
-        f"tasks=${r.tasks}%4d in=${r.input / 1e6}%8.1fMB " +
-        f"sr=${r.shuffleRead / 1e6}%8.1fMB sw=${r.shuffleWrite / 1e6}%8.1fMB " +
-        s" ${r.desc.take(90)}")
-    }
-    System.err.println(f"[profile] $name sum-of-jobs ${wall}%.2fs, " +
-      f"best run ${times.min}%.2fs")
+    // removed when this query is done, so it records no later query's jobs
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      runOnce("warmup")
+      jobs.clear(); stageToJob.clear()
+      if (ruleDump)
+        org.apache.spark.sql.catalyst.rules.RuleExecutor.resetMetrics()
+      val times = (1 to runs).map { i =>
+        spark.catalog.clearCache()
+        if (i > 1) { jobs.clear(); stageToJob.clear() }
+        runOnce(s"run $i")
+      }
+      if (ruleDump) System.err.println(s"[profile] $name rule times, timed runs only:\n" +
+        org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent())
+      // jobs map now holds the LAST run's jobs
+      Thread.sleep(500)
+      import scala.jdk.CollectionConverters._
+      val recs = jobs.values.asScala.toSeq.sortBy(_.id)
+      System.err.println(f"[profile] ---- last run: ${recs.size} jobs ----")
+      var wall = 0.0
+      recs.foreach { r =>
+        val dt = (r.end - r.start) / 1e3
+        wall += dt
+        System.err.println(f"[profile] job ${r.id}%3d ${dt}%7.3fs " +
+          f"tasks=${r.tasks}%4d in=${r.input / 1e6}%8.1fMB " +
+          f"sr=${r.shuffleRead / 1e6}%8.1fMB sw=${r.shuffleWrite / 1e6}%8.1fMB " +
+          s" ${r.desc.take(90)}")
+      }
+      System.err.println(f"[profile] $name sum-of-jobs ${wall}%.2fs, " +
+        f"best run ${times.min}%.2fs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -1,11 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
-import graft.operators.{Dedup, RelationalOps, Similarity, TextAnalysis}
-import graft.functions.VectorFns
 
 /** The executable query inventory (SURVEY.md §2.11 + [EXT] operators), each
   * paired with its DuckDB oracle SQL where SQL-expressible.
@@ -45,7 +41,7 @@ object Catalog {
     finally views.foreach { case (n, _) => s.catalog.dropTempView(n) }
   }
 
-  private def dec(c: Column): Column = c.cast("decimal(18,2)")
+  private[queries] def dec(c: Column): Column = c.cast("decimal(18,2)")
 
   /** Half-away-from-zero cents, matching DuckDB's `ROUND(v * 100)` for
     * EVERY sign: plain `floor(v*100 + 0.5)` is half-UP, which diverges
@@ -55,4000 +51,57 @@ object Catalog {
   private[queries] def centi(c: Column): Column =
     (signum(c) * floor(abs(c) * 100 + 0.5)).cast("long")
 
-  // ---------------------------------------------------------------- core
-
-  private val q01 = QueryDef("q01_count",
-    (s, d) => Tables.lineitem(s, d).agg(count(lit(1)).as("n")),
-    Some("SELECT COUNT(*) AS n FROM lineitem"),
-    bench = true)
-
-  private val q02 = QueryDef("q02_filter",
-    (s, d) => Tables.lineitem(s, d)
-      .filter(col("l_quantity") > 45 && col("l_returnflag") === "R")
-      .select("l_orderkey", "l_linenumber")
-      .orderBy("l_orderkey", "l_linenumber"),
-    Some("""SELECT l_orderkey, l_linenumber FROM lineitem
-            WHERE l_quantity > 45 AND l_returnflag = 'R'
-            ORDER BY l_orderkey, l_linenumber"""))
-
-  private val q03 = QueryDef("q03_project",
-    (s, d) => Tables.orders(s, d)
-      .select(col("o_orderkey"),
-        round(dec(col("o_totalprice")) * lit(0.9).cast("decimal(2,1)"), 2)
-          .cast("double").as("disc_price"))
-      .orderBy("o_orderkey"),
-    Some("""SELECT o_orderkey,
-              CAST(ROUND(CAST(o_totalprice AS DECIMAL(18,2)) * CAST(0.9 AS DECIMAL(2,1)), 2)
-                   AS DOUBLE) AS disc_price
-            FROM orders ORDER BY o_orderkey"""))
-
-  private val q04 = QueryDef("q04_join_agg",
-    // no broadcast hint on customer: it scales with SF (not broadcastable
-    // at 100 TB); AQE converts to broadcast at small scale on its own
-    (s, d) => Tables.orders(s, d)
-      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-      .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
-      .orderBy("c_mktsegment"),
-    Some("""SELECT c_mktsegment, COUNT(*) AS n FROM orders
-            JOIN customer ON o_custkey = c_custkey
-            GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
-    bench = true)
-
-  private val q05 = QueryDef("q05_multijoin",
-    (s, d) => Tables.lineitem(s, d)
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
-      .groupBy("n_name")
-      .agg(round(sum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))), 2)
-        .cast("double").as("revenue"))
-      .orderBy("n_name"),
-    Some("""SELECT n_name,
-              CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS revenue
-            FROM region
-            JOIN nation ON n_regionkey = r_regionkey
-            JOIN customer ON c_nationkey = n_nationkey
-            JOIN orders ON o_custkey = c_custkey
-            JOIN lineitem ON l_orderkey = o_orderkey
-            GROUP BY n_name ORDER BY n_name"""),
-    bench = true)
-
-  private val q06 = QueryDef("q06_semijoin",
-    (s, d) => Tables.customer(s, d)
-      .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_semi")
-      .agg(count(lit(1)).as("n")),
-    Some("""SELECT COUNT(*) AS n FROM customer
-            WHERE c_custkey IN (SELECT o_custkey FROM orders)"""))
-
-  private val q07 = QueryDef("q07_antijoin",
-    (s, d) => Tables.customer(s, d)
-      .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_anti")
-      .select("c_custkey").orderBy("c_custkey"),
-    Some("""SELECT c_custkey FROM customer
-            WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-            ORDER BY c_custkey"""))
-
-  private val q08 = QueryDef("q08_leftjoin",
-    (s, d) => Tables.customer(s, d)
-      .join(Tables.orders(s, d), col("o_custkey") === col("c_custkey"), "left")
-      .groupBy("c_custkey").agg(count(col("o_orderkey")).as("n"))
-      .orderBy("c_custkey"),
-    Some("""SELECT c_custkey, COUNT(o_orderkey) AS n FROM customer
-            LEFT JOIN orders ON o_custkey = c_custkey
-            GROUP BY c_custkey ORDER BY c_custkey"""),
-    bench = true)
-
-  private val q09 = QueryDef("q09_rangejoin",
-    (s, d) => {
-      val ev = Tables.events(s, d)
-      val left = ev.select(col("event_id"), col("user_id"), col("ts"))
-      val right = ev.select(col("user_id"), col("ts").as("ts2"))
-      RelationalOps.rangeJoinBucketed(left, right, "user_id", "ts", "ts2", 600L)
-        .groupBy("event_id").agg(count(lit(1)).as("n"))
-        .orderBy("event_id")
-    },
-    Some("""SELECT e1.event_id, COUNT(*) AS n FROM events e1
-            JOIN events e2 ON e1.user_id = e2.user_id
-              AND e2.ts > e1.ts AND e2.ts <= e1.ts + INTERVAL 10 MINUTE
-            GROUP BY e1.event_id ORDER BY e1.event_id"""),
-    bench = true)
-
-  private val q10 = QueryDef("q10_asof",
-    (s, d) => {
-      val ev = Tables.events(s, d)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val signups = ev.filter(col("event_type") === "signup")
-        .select("user_id", "ts")
-      RelationalOps.asOfJoin(purchases, signups, "user_id", "ts", "ts",
-          Seq("ts" -> "last_signup"))
-        .filter(col("last_signup").isNotNull)
-        .select("event_id", "last_signup")
-        .orderBy("event_id")
-    },
-    Some("""SELECT p.event_id, CAST(MAX(s.ts) AS TIMESTAMP) AS last_signup
-            FROM events p JOIN events s ON p.user_id = s.user_id
-              AND s.event_type = 'signup' AND s.ts <= p.ts
-            WHERE p.event_type = 'purchase'
-            GROUP BY p.event_id ORDER BY p.event_id"""),
-    bench = true)
-
-  private val q11 = QueryDef("q11_tpch1",
-    (s, d) => Tables.lineitem(s, d)
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        round(sum(dec(col("l_quantity"))).cast("double"), 2).as("sum_qty"),
-        round(sum(dec(col("l_extendedprice"))).cast("double"), 2).as("sum_price"),
-        round((sum(dec(col("l_discount"))).cast("double") / count(lit(1))), 2).as("avg_disc"),
-        count(lit(1)).as("n"))
-      .orderBy("l_returnflag", "l_linestatus"),
-    Some("""SELECT l_returnflag, l_linestatus,
-              ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty,
-              ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_price,
-              ROUND(CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 2) AS avg_disc,
-              COUNT(*) AS n
-            FROM lineitem GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus"""),
-    bench = true)
-
-  private val q12 = QueryDef("q12_countdistinct",
-    (s, d) => Tables.lineitem(s, d).agg(countDistinct(col("l_partkey")).as("n")),
-    Some("SELECT COUNT(DISTINCT l_partkey) AS n FROM lineitem"),
-    bench = true)
-
-  private val q13 = QueryDef("q13_rollup",
-    (s, d) => Tables.orders(s, d)
-      .rollup("o_orderpriority", "o_orderstatus")
-      .agg(count(lit(1)).as("n"))
-      .select(
-        coalesce(col("o_orderpriority"), lit("ALL")).as("pri"),
-        coalesce(col("o_orderstatus"), lit("ALL")).as("st"),
-        col("n"))
-      .orderBy("pri", "st"),
-    Some("""SELECT COALESCE(o_orderpriority, 'ALL') AS pri,
-              COALESCE(o_orderstatus, 'ALL') AS st, COUNT(*) AS n
-            FROM orders GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
-            ORDER BY pri, st"""))
-
-  private val q14 = QueryDef("q14_topk_group",
-    (s, d) => {
-      val j = Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .select("c_mktsegment", "o_orderkey", "o_totalprice")
-      RelationalOps.topKPerGroup(j, Seq(col("c_mktsegment")),
-          Seq(col("o_totalprice").desc, col("o_orderkey")), 3)
-        .select("c_mktsegment", "o_orderkey")
-        .orderBy("c_mktsegment", "o_orderkey")
-    },
-    Some("""SELECT c_mktsegment, o_orderkey FROM (
-              SELECT c_mktsegment, o_orderkey,
-                ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-                  ORDER BY o_totalprice DESC, o_orderkey) AS rn
-              FROM orders JOIN customer ON o_custkey = c_custkey) t
-            WHERE rn <= 3 ORDER BY c_mktsegment, o_orderkey"""),
-    bench = true)
-
-  private val q15 = QueryDef("q15_runsum",
-    (s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, d)
-        .select(col("event_id"),
-          round(sum(dec(col("value"))).over(w).cast("double"), 2).as("run"))
-        .orderBy("event_id")
-    },
-    Some("""SELECT event_id,
-              ROUND(CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
-                PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 2) AS run
-            FROM events ORDER BY event_id"""))
-
-  private val q16 = QueryDef("q16_diff",
-    (s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, d)
-        .select(col("event_id"),
-          round(col("value") - lag(col("value"), 1).over(w), 2).as("dv"))
-        .orderBy("event_id")
-    },
-    Some("""SELECT event_id, ROUND(value - LAG(value) OVER (
-              PARTITION BY user_id ORDER BY ts, event_id), 2) AS dv
-            FROM events ORDER BY event_id"""),
-    bench = true)
-
-  private val q17 = QueryDef("q17_topk_global",
-    (s, d) => Tables.lineitem(s, d)
-      .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
-      .limit(10)
-      .select("l_orderkey", "l_linenumber"),
-    Some("""SELECT l_orderkey, l_linenumber FROM lineitem
-            ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 10"""),
-    bench = true)
-
-  private val q18i = QueryDef("q18_intersect",
-    (s, d) => Tables.customer(s, d).select(col("c_nationkey").as("k"))
-      .intersect(Tables.supplier(s, d).select(col("s_nationkey").as("k")))
-      .orderBy("k"),
-    Some("""SELECT c_nationkey AS k FROM customer
-            INTERSECT SELECT s_nationkey AS k FROM supplier ORDER BY k"""))
-
-  private val q18e = QueryDef("q18_except",
-    (s, d) => Tables.customer(s, d).select(col("c_nationkey").as("k"))
-      .except(Tables.supplier(s, d).select(col("s_nationkey").as("k")))
-      .orderBy("k"),
-    Some("""SELECT c_nationkey AS k FROM customer
-            EXCEPT SELECT s_nationkey AS k FROM supplier ORDER BY k"""))
-
-  private val q18u = QueryDef("q18_union",
-    (s, d) => Tables.customer(s, d).select(col("c_nationkey").as("k"))
-      .union(Tables.supplier(s, d).select(col("s_nationkey").as("k")))
-      .distinct()
-      .orderBy("k"),
-    Some("""SELECT c_nationkey AS k FROM customer
-            UNION SELECT s_nationkey AS k FROM supplier ORDER BY k"""))
-
-  private val q19 = QueryDef("q19_regex",
-    (s, d) => Tables.documents(s, d)
-      .select(col("doc_id"),
-        regexp_extract(col("source"), "src(\\d+)", 1).cast("int").as("src_no"))
-      .orderBy("doc_id"),
-    Some("""SELECT doc_id, CAST(REGEXP_EXTRACT(source, 'src(\d+)', 1) AS INT) AS src_no
-            FROM documents ORDER BY doc_id"""))
-
-  private val q20 = QueryDef("q20_split",
-    (s, d) => Tables.customer(s, d)
-      .select(col("c_custkey"), split_part(col("c_name"), lit("#"), lit(1)).as("prefix"))
-      .orderBy("c_custkey"),
-    Some("""SELECT c_custkey, SPLIT_PART(c_name, '#', 1) AS prefix
-            FROM customer ORDER BY c_custkey"""))
-
-  private val q21 = QueryDef("q21_datetrunc",
-    (s, d) => Tables.orders(s, d)
-      .groupBy(date_trunc("month", col("o_orderdate")).as("m"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("m"),
-    Some("""SELECT CAST(DATE_TRUNC('month', o_orderdate) AS TIMESTAMP) AS m,
-              COUNT(*) AS n
-            FROM orders GROUP BY m ORDER BY m"""))
-
-  private val q22 = QueryDef("q22_array",
-    (s, d) => Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        size(col("embedding")).cast("int").as("dim"),
-        // + 0.0 zero-sign-normalizes on BOTH sides: a small negative
-        // rounds to -0.0 in DuckDB but +0.0 through Spark's BigDecimal
-        // round — a bit-level hash mismatch (first triggered at sf0.1)
-        (round(element_at(col("embedding"), 1).cast("double"), 4) + lit(0.0))
-          .as("e0"))
-      .orderBy("vec_id"),
-    Some("""SELECT vec_id, CAST(LEN(embedding) AS INT) AS dim,
-              ROUND(CAST(embedding[1] AS DOUBLE), 4) + 0.0 AS e0
-            FROM embeddings ORDER BY vec_id"""))
-
-  private val q23 = QueryDef("q23_json",
-    (s, d) => Tables.events(s, d)
-      .groupBy("event_type")
-      .agg(sum(get_json_object(col("props"), "$.k").cast("long")).as("sk"))
-      .orderBy("event_type"),
-    Some("""SELECT event_type,
-              CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sk
-            FROM events GROUP BY event_type ORDER BY event_type"""))
-
-  private val q24 = QueryDef("q24_hourly",
-    (s, d) => Tables.events(s, d)
-      .groupBy(date_trunc("hour", col("ts")).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(dec(col("value"))).cast("double"), 2).as("sv"))
-      .orderBy("w", "event_type"),
-    Some("""SELECT CAST(DATE_TRUNC('hour', ts) AS TIMESTAMP) AS w, event_type,
-              COUNT(*) AS n,
-              ROUND(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sv
-            FROM events GROUP BY w, event_type ORDER BY w, event_type"""),
-    bench = true)
-
-  private val q25 = QueryDef("q25_dedup_events",
-    (s, d) => RelationalOps.dedupFirst(Tables.events(s, d),
-        Seq(col("user_id"), col("event_type")), Seq(col("ts"), col("event_id")))
-      .select("user_id", "event_type", "event_id")
-      .orderBy("user_id", "event_type"),
-    Some("""SELECT user_id, event_type, event_id FROM (
-              SELECT user_id, event_type, event_id,
-                ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-                  ORDER BY ts, event_id) AS rn
-              FROM events) t WHERE rn = 1
-            ORDER BY user_id, event_type"""))
-
-  private val q26 = QueryDef("q26_sessionize",
-    (s, d) => RelationalOps.sessionize(Tables.events(s, d), "user_id", "ts", 1800L,
-        Seq(col("ts"), col("event_id")))
-      .groupBy("user_id")
-      .agg(countDistinct(col("session_id")).as("n_sessions"))
-      .orderBy("user_id"),
-    Some("""SELECT user_id, COUNT(DISTINCT sess) AS n_sessions FROM (
-              SELECT user_id, SUM(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END)
-                OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess
-              FROM (SELECT user_id, ts, event_id,
-                      DATE_DIFF('second', LAG(ts) OVER (
-                        PARTITION BY user_id ORDER BY ts, event_id), ts) AS gap
-                    FROM events) g) t
-            GROUP BY user_id ORDER BY user_id"""),
-    bench = true)
-
-  private val q27 = QueryDef("q27_wordcount",
-    (s, d) => TextAnalysis.wordFrequency(Tables.documents(s, d), "text", 20),
-    Some("""SELECT word, COUNT(*) AS n FROM (
-              SELECT UNNEST(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS word FROM documents) t
-            WHERE word <> '' GROUP BY word ORDER BY n DESC, word LIMIT 20"""),
-    bench = true)
-
-  // list stringified: the driver's comparator sorts rows via pandas, which
-  // cannot hash/sort raw array cells — and a joined string hash-checks the
-  // same content
-  private val q28 = QueryDef("q28_collect",
-    (s, d) => Tables.documents(s, d)
-      .groupBy("lang")
-      .agg(array_join(transform(sort_array(collect_list(col("doc_id"))),
-        _.cast("string")), ",").as("ids"))
-      .orderBy("lang"),
-    Some("""SELECT lang, array_to_string(LIST(doc_id ORDER BY doc_id), ',') AS ids
-            FROM documents GROUP BY lang ORDER BY lang"""))
-
-  private val duckCosine =
+  /** Cosine over DuckDB `DOUBLE[]` aliases `a.e`/`b.e`, for the oracles of
+    * the embedding kNN and near-dup rows. */
+  private[queries] val duckCosine =
     """list_dot_product(a.e, b.e) /
        (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e)))"""
 
-  private val q29 = QueryDef("q29_knn",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.bruteForceKnn(emb.filter(col("vec_id") < 50), emb, 1)
-        .select("vec_id", "nn_id", "sim")
-        .orderBy("vec_id")
-    },
-    Some(s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-             s AS (SELECT a.vec_id, b.vec_id AS nn_id, ROUND($duckCosine, 4) AS sim
-                   FROM v a JOIN v b ON a.vec_id < 50 AND b.vec_id <> a.vec_id),
-             r AS (SELECT vec_id, nn_id, sim,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, nn_id) AS rn
-                   FROM s)
-             SELECT vec_id, nn_id, sim FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin),
-    bench = true)
-
-  // ------------------------------------------------------------ dedup [EXT]
-
-  private val d01 = QueryDef("d01_dedup_exact",
-    (s, d) => Dedup.exact(Tables.documents(s, d), "doc_id", "text")
-      .orderBy("keep_id"),
-    Some("""SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-            FROM documents GROUP BY text ORDER BY keep_id"""),
-    bench = true)
-
-  /** Normalized-exact dedup (Dedup.normalizedExact) — the "fuzzy-exact"
-    * tier between d01 and MinHash: lowercase + strip-to-letters/digits +
-    * whitespace collapse, then the d01 group shape. The fixture plants
-    * uppercase re-encodes (+70000) and punctuation/whitespace-polluted
-    * copies (+71000) of the first 10 docs; both variant families MUST
-    * collapse into their source's group, and any natural case/punct
-    * near-copies merge identically. The oracle replays the normalization
-    * (unicode classes, global replace) and the grouping. */
-  private val d23 = QueryDef("d23_normalized_dedup",
-    (s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val variants = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 70000).as("doc_id"),
-          upper(col("text")).as("text"))
-        .unionByName(docs.filter(col("doc_id") < 10)
-          .select((col("doc_id") + 71000).as("doc_id"),
-            concat(col("text"), lit("  ... !!!")).as("text")))
-      graft.operators.Dedup.normalizedExact(
-          docs.unionByName(variants), "doc_id", "text")
-        .orderBy("keep_id")
-    },
-    Some("""WITH allx AS (SELECT doc_id, text FROM documents
-              UNION ALL SELECT doc_id + 70000, UPPER(text)
-                FROM documents WHERE doc_id < 10
-              UNION ALL SELECT doc_id + 71000, text || '  ... !!!'
-                FROM documents WHERE doc_id < 10),
-            n AS (SELECT doc_id,
-                TRIM(regexp_replace(regexp_replace(LOWER(text),
-                  '[^\p{L}\p{N} \t\n]', ' ', 'g'), '\s+', ' ', 'g')) AS nt
-              FROM allx)
-            SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-            FROM n GROUP BY nt ORDER BY keep_id"""))
-
-  private val d02 = QueryDef("d02_ngram_topk",
-    (s, d) => Dedup.ngramJaccardPairs(
-        Tables.documents(s, d).filter(col("doc_id") < 100), "doc_id", "text", 3, 0.0)
-      .orderBy(col("jaccard").desc, col("id_a"), col("id_b"))
-      .limit(20),
-    Some("""WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-                       FROM documents WHERE doc_id < 100),
-            g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh FROM w)
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-              FLOOR(len(list_intersect(a.sh, b.sh)) /
-                    len(list_distinct(list_concat(a.sh, b.sh))) * 10000 + 0.5) / 10000 AS jaccard
-            FROM g a JOIN g b ON a.doc_id < b.doc_id
-            ORDER BY jaccard DESC, id_a, id_b LIMIT 20"""))
-
-  private val d03 = QueryDef("d03_minhash_lsh",
-    (s, d) => Dedup.minhashTopPairs(Tables.documents(s, d), "doc_id", "text"),
-    None, bench = true)
-
-  private val d04 = QueryDef("d04_simhash",
-    (s, d) => Tables.documents(s, d)
-      .select(col("doc_id"),
-        graft.functions.TextFns.simhash64(col("text")).as("simhash"))
-      .orderBy("doc_id"),
-    None)
-
-  /** Oracle-checkable twin of d04: the md5-token-hash SimHash, re-derived
-    * bit-for-bit by the DuckDB oracle (the xxhash64 variant d04 stays
-    * rows-only — its hash is engine-native). */
-  private val d08 = QueryDef("d08_simhash_portable",
-    (s, d) => Tables.documents(s, d)
-      .select(col("doc_id"),
-        graft.functions.TextFns.simhashPortable(col("text")).as("simhash"))
-      .orderBy("doc_id"),
-    Some("""WITH t AS (SELECT doc_id,
-                 list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-               FROM documents),
-            tok AS (SELECT doc_id, UNNEST(w) AS word FROM t),
-            h AS (SELECT doc_id,
-                    ('0x' || substring(md5(word), 1, 15))::BIGINT AS h FROM tok),
-            bits AS (SELECT doc_id, j.range AS j,
-                       SUM(CASE WHEN (h >> CAST(j.range AS INT)) & 1 = 1
-                                THEN 1 ELSE -1 END) AS c
-                     FROM h, range(60) j GROUP BY doc_id, j.range),
-            sig AS (SELECT doc_id,
-                      SUM(CASE WHEN c > 0
-                               THEN (1::BIGINT << CAST(j AS INT)) ELSE 0 END)
-                        AS simhash
-                    FROM bits GROUP BY doc_id)
-            SELECT doc_id, CAST(simhash AS BIGINT) AS simhash
-            FROM sig ORDER BY doc_id"""))
-
-  /** Pairs -> duplicate clusters (connected components), the survivor-
-    * selection step after near-dup pair generation. Spark runs LSH +
-    * min-label propagation; the oracle recomputes all >= 0.7 pairs
-    * exactly and closes them with a recursive CTE — a hash match
-    * certifies BOTH the LSH pair recall and the clustering. */
-  private val d09 = QueryDef("d09_dup_clusters",
-    (s, d) => {
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 200)
-      val pairs = Dedup.minhashLsh(docs, "doc_id", "text",
-        shingleN = 3, k = 128, bands = 32, threshold = 0.7)
-      Dedup.duplicateClusters(pairs.select("id_a", "id_b"))
-        .select(col("id").as("doc_id"), col("cluster_id"))
-        .orderBy("doc_id")
-    },
-    Some("""WITH RECURSIVE
-            w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-                  FROM documents WHERE doc_id < 200),
-            g AS (SELECT doc_id, list_distinct(list_transform(
-                    range(1, len(w)-1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh FROM w),
-            p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                  FROM g a JOIN g b ON a.doc_id < b.doc_id
-                  WHERE len(list_intersect(a.sh, b.sh)) /
-                        len(list_distinct(list_concat(a.sh, b.sh))) >= 0.7),
-            e AS (SELECT id_a AS a, id_b AS b FROM p
-                  UNION ALL SELECT id_b, id_a FROM p),
-            reach(a, b) AS (SELECT a, b FROM e
-                            UNION
-                            SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)
-            SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-            FROM reach GROUP BY a ORDER BY doc_id"""))
-
-  /** Same clustering contract as d09 but via the O(log n)-round
-    * large-star/small-star edge rewriting (the extreme-diameter scale
-    * path). The oracle is the independent recursive-CTE closure, so a
-    * hash match certifies the star algorithm end-to-end — including that
-    * it agrees with min-label propagation (d09) on the same contract. */
-  private val d10 = QueryDef("d10_cc_star",
-    (s, d) => {
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 300)
-      val pairs = Dedup.minhashLsh(docs, "doc_id", "text",
-        shingleN = 3, k = 128, bands = 32, threshold = 0.7)
-      Dedup.connectedComponentsStar(pairs.select("id_a", "id_b"))
-        .select(col("id").as("doc_id"), col("cluster_id"))
-        .orderBy("doc_id")
-    },
-    Some("""WITH RECURSIVE
-            w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-                  FROM documents WHERE doc_id < 300),
-            g AS (SELECT doc_id, list_distinct(list_transform(
-                    range(1, len(w)-1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh FROM w),
-            p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                  FROM g a JOIN g b ON a.doc_id < b.doc_id
-                  WHERE len(list_intersect(a.sh, b.sh)) /
-                        len(list_distinct(list_concat(a.sh, b.sh))) >= 0.7),
-            e AS (SELECT id_a AS a, id_b AS b FROM p
-                  UNION ALL SELECT id_b, id_a FROM p),
-            reach(a, b) AS (SELECT a, b FROM e
-                            UNION
-                            SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)
-            SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-            FROM reach GROUP BY a ORDER BY doc_id"""))
-
-  /** FLAGSHIP end-to-end training-data-prep pipeline, the composition a
-    * 100 TB corpus actually runs: exact dedup (one hash agg) -> MinHash-LSH
-    * near-dup pairs over the survivors -> connected-components cluster
-    * labels -> survivor selection (component minimum) -> token counting ->
-    * language ID. The oracle independently re-derives EVERY stage in
-    * DuckDB (min-per-text dedup, complete exact Jaccard via a
-    * shingle-keyed self-join — complete at the 0.7 threshold because any
-    * pair with Jaccard > 0 shares a shingle, see d06 — recursive-CTE
-    * closure, the t05/t06 tokenization and stopword-argmax fragments), so
-    * one hash match certifies the whole chain composes correctly. */
-  private val d11 = QueryDef("d11_pipeline",
-    (s, d) => {
-      val uniq = Dedup.exactRows(Tables.documents(s, d), "doc_id", "text")
-      val pairs = Dedup.minhashLsh(uniq, "doc_id", "text",
-        shingleN = 3, k = 128, bands = 32, threshold = 0.7)
-      val dupes = Dedup.duplicateClusters(pairs.select("id_a", "id_b"))
-        .filter(col("id") =!= col("cluster_id"))
-        .select(col("id").as("doc_id"))
-      val kept = uniq.join(dupes, Seq("doc_id"), "left_anti")
-      // ONE projection for language id + token count (r22): the previous
-      // shape joined languageId(kept) with toks(kept) on doc_id — a
-      // self-join of identical rows that re-derived the whole kept chain
-      // (exact-dedup agg + anti join over the corpus) once per branch
-      // (d11 sf10 profile: ~1.7s of duplicate jobs) and paid a join that
-      // unique doc_ids make a no-op. Same expressions (TextFns.langId is
-      // exactly what TextAnalysis.languageId selects), same rows, same
-      // oracle.
-      kept.select(col("doc_id"),
-          graft.functions.TextFns.langId(col("text")).as("pred_lang"),
-          size(graft.functions.TextFns.words(col("text"))).cast("int").as("n_tokens"))
-        .filter(col("n_tokens") >= 5)
-        .select("doc_id", "pred_lang", "n_tokens")
-        .orderBy("doc_id")
-    },
-    Some("""WITH RECURSIVE
-            uniq AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text),
-            u AS (SELECT dd.doc_id, dd.text FROM documents dd
-                  JOIN uniq ON dd.doc_id = uniq.doc_id),
-            w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w FROM u),
-            g AS (SELECT doc_id, list_distinct(list_transform(
-                    range(1, len(w)-1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh FROM w),
-            ptok AS (SELECT doc_id, UNNEST(sh) AS t, len(sh) AS sz FROM g),
-            p AS (SELECT id_a, id_b FROM (
-                    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                      COUNT(*) AS inter,
-                      ANY_VALUE(a.sz) AS sa, ANY_VALUE(b.sz) AS sb
-                    FROM ptok a JOIN ptok b ON a.t = b.t AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2)
-                  WHERE inter / (sa + sb - inter) >= 0.7),
-            e AS (SELECT id_a AS a, id_b AS b FROM p
-                  UNION ALL SELECT id_b, id_a FROM p),
-            reach(a, b) AS (SELECT a, b FROM e
-                            UNION
-                            SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
-            lbl AS (SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-                    FROM reach GROUP BY a),
-            kept AS (SELECT u.doc_id, u.text FROM u
-                     LEFT JOIN lbl ON u.doc_id = lbl.doc_id
-                     WHERE lbl.doc_id IS NULL OR lbl.doc_id = lbl.cluster_id),
-            lw AS (SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-                   FROM kept),
-            b AS (SELECT doc_id, list_sort([
-                 {'score': len(list_filter(w, x -> list_contains(
-                    ['the','a','of','and','to','in','is','it','that','for'], x))),
-                  'lang': 'en'},
-                 {'score': len(list_filter(w, x -> list_contains(
-                    ['der','die','das','und','ist','nicht','ein','mit','auf','zu'], x))),
-                  'lang': 'de'},
-                 {'score': len(list_filter(w, x -> list_contains(
-                    ['el','la','de','que','y','en','un','es','no','por'], x))),
-                  'lang': 'es'},
-                 {'score': len(list_filter(w, x -> list_contains(
-                    ['le','la','de','et','est','un','une','que','pour','dans'], x))),
-                  'lang': 'fr'}])[4] AS best
-               FROM lw),
-            lang AS (SELECT doc_id,
-                CASE WHEN struct_extract(best, 'score') > 0
-                     THEN struct_extract(best, 'lang') ELSE 'und' END AS pred_lang
-              FROM b),
-            tok AS (SELECT doc_id,
-                CAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS INT) AS n_tokens
-              FROM kept)
-            SELECT lang.doc_id, lang.pred_lang, tok.n_tokens
-            FROM lang JOIN tok ON lang.doc_id = tok.doc_id
-            WHERE tok.n_tokens >= 5
-            ORDER BY lang.doc_id"""),
-    // bench-flagged since round 19: the flagship pipeline's composed plan
-    // is now stage-materialized (duplicateClusters pins its edge set —
-    // D11_AB_sf10_r19.json) and its sf0.1 wall belongs in the headline set
-    bench = true)
-
-  /** Direct cross-engine certificate of the LSH BANDING stage (d03/d06's
-    * candidate generator, previously certified only transitively through
-    * d06's all-pairs oracle): md5-portable MinHash signatures and band
-    * digests run through the production bucket-groupBy + pair-expansion
-    * path, and DuckDB re-derives every signature component, band slice,
-    * bucket key, and pair multiplicity independently. A hash match pins
-    * the banding arithmetic itself — slice boundaries, band indexing,
-    * bucket join semantics — not just the downstream verified pairs. */
-  private val d12 = QueryDef("d12_lsh_portable",
-    (s, d) => Dedup.lshCandidatesPortable(Tables.documents(s, d),
-        "doc_id", "text", shingleN = 3, k = 16, bands = 4)
-      .orderBy("id_a", "id_b"),
-    Some("""WITH w AS (SELECT doc_id,
-                 list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-               FROM documents),
-            g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh FROM w),
-            ne AS (SELECT doc_id, sh FROM g WHERE len(sh) > 0),
-            sig AS (SELECT doc_id, list_transform(range(16), i ->
-                      list_min(list_transform(sh, s ->
-                        ('0x' || substring(md5(CAST(i AS VARCHAR) || ':' || s), 1, 15))::BIGINT)))
-                      AS sig
-                    FROM ne),
-            bd AS (SELECT doc_id, CAST(b.range AS INT) AS band,
-                     md5(array_to_string(
-                       sig[CAST(b.range AS INT)*4+1 : CAST(b.range AS INT)*4+4], ','))
-                       AS digest
-                   FROM sig, range(4) b)
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_bands
-            FROM bd a JOIN bd b
-              ON a.band = b.band AND a.digest = b.digest AND a.doc_id < b.doc_id
-            GROUP BY 1, 2 ORDER BY id_a, id_b"""))
-
-  /** Cross-document duplicate 5-gram occurrence fraction (the Lee et al.
-    * 2021 occurrence-weighted dedup signal — TextAnalysis.crossDocNgramDup).
-    * The oracle re-derives per-doc gram counts, document frequency, and the
-    * occurrence-weighted fraction from scratch; Spark groups on md5
-    * digests, DuckDB on the raw grams — identical counts certify the
-    * digest keying is a pure narrowing, not a semantic change. */
-  private val d13 = QueryDef("d13_crossdoc_ngrams",
-    (s, d) => graft.operators.TextAnalysis.crossDocNgramDup(
-        Tables.documents(s, d), n = 5)
-      .orderBy("doc_id"),
-    Some("""WITH w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-              FROM documents),
-            g AS (SELECT doc_id, UNNEST(list_transform(range(1, len(w)-3),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4])) AS g
-                  FROM w WHERE len(w) >= 5),
-            pd AS (SELECT doc_id, g, COUNT(*) AS cnt FROM g GROUP BY doc_id, g),
-            df AS (SELECT g, COUNT(*) AS ndocs FROM pd GROUP BY g)
-            SELECT pd.doc_id,
-              CAST(SUM(cnt) AS BIGINT) AS n_grams,
-              CAST(SUM(CASE WHEN ndocs > 1 THEN cnt ELSE 0 END) AS BIGINT) AS n_dup,
-              FLOOR(SUM(CASE WHEN ndocs > 1 THEN cnt ELSE 0 END) * 1.0 / SUM(cnt)
-                * 10000 + 0.5) / 10000 AS dup_frac
-            FROM pd JOIN df USING (g)
-            GROUP BY pd.doc_id ORDER BY doc_id"""))
-
-  /** PageRank centrality over the near-duplicate graph (d02's top-20
-    * n-gram-Jaccard pairs as undirected edges), 3 rounds of
-    * Graph.pageRankScaled's EXACT integer-arithmetic iteration. The
-    * oracle re-derives the edge set AND unrolls all three rounds with
-    * BIGINT `//` division — a hash match certifies the distributed
-    * iteration (contribution split, damping arithmetic, truncation
-    * points) bit-for-bit, something float PageRank could never pin. */
-  private val d14 = QueryDef("d14_pagerank",
-    (s, d) => {
-      val edges = Dedup.ngramJaccardPairs(
-          Tables.documents(s, d).filter(col("doc_id") < 100), "doc_id", "text", 3, 0.0)
-        .orderBy(col("jaccard").desc, col("id_a"), col("id_b"))
-        .limit(20)
-      graft.operators.Graph.pageRankScaled(edges, iters = 3)
-        .select(col("id").as("doc_id"), col("pr"))
-        .orderBy("doc_id")
-    },
-    Some("""WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-                       FROM documents WHERE doc_id < 100),
-            g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh FROM w),
-            e AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                    FLOOR(len(list_intersect(a.sh, b.sh)) /
-                          len(list_distinct(list_concat(a.sh, b.sh))) * 10000 + 0.5) / 10000 AS jaccard
-                  FROM g a JOIN g b ON a.doc_id < b.doc_id
-                  ORDER BY jaccard DESC, id_a, id_b LIMIT 20),
-            dir AS (SELECT id_a AS src, id_b AS dst FROM e
-                    UNION ALL SELECT id_b, id_a FROM e),
-            deg AS (SELECT src, COUNT(*) AS deg FROM dir GROUP BY src),
-            n AS (SELECT COUNT(*) AS n FROM deg),
-            r0 AS (SELECT src AS id, CAST(1000000000000 // (SELECT n FROM n) AS BIGINT) AS pr FROM deg),
-            it1 AS (SELECT d.dst AS id,
-                      CAST(((15 * 1000000000000) // 100) // (SELECT n FROM n)
-                        + (85 * SUM(r.pr // dg.deg)) // 100 AS BIGINT) AS pr
-                    FROM r0 r JOIN deg dg ON r.id = dg.src
-                    JOIN dir d ON d.src = r.id GROUP BY d.dst),
-            it2 AS (SELECT d.dst AS id,
-                      CAST(((15 * 1000000000000) // 100) // (SELECT n FROM n)
-                        + (85 * SUM(r.pr // dg.deg)) // 100 AS BIGINT) AS pr
-                    FROM it1 r JOIN deg dg ON r.id = dg.src
-                    JOIN dir d ON d.src = r.id GROUP BY d.dst),
-            it3 AS (SELECT d.dst AS id,
-                      CAST(((15 * 1000000000000) // 100) // (SELECT n FROM n)
-                        + (85 * SUM(r.pr // dg.deg)) // 100 AS BIGINT) AS pr
-                    FROM it2 r JOIN deg dg ON r.id = dg.src
-                    JOIN dir d ON d.src = r.id GROUP BY d.dst)
-            SELECT id AS doc_id, pr FROM it3 ORDER BY doc_id"""))
-
-  /** SemDeDup (Similarity.semanticDedup): sign-grid cells over the first 4
-    * dimensions, within-cell drop of any vector whose lower-id cell-mate
-    * has cosine >= 0.9 (the paper's upper-triangular rule). The corpus has
-    * no semantic near-dups, so the fixture plants them: vec_id < 20 gets a
-    * LOWER-id x2-scaled clone (the original drops), vec_id in [20,40) a
-    * higher-id one (the clone drops) — power-of-two scaling is FP-exact,
-    * so clone cosine is exactly 1.0 on both engines and both drop
-    * directions are exercised. The oracle re-derives cell assignment, the
-    * fixture, and the EXISTS drop rule over all within-cell pairs. */
-  private val d15 = QueryDef("d15_semantic_dedup",
-    (s, d) => {
-      val base = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val clones = base.filter(col("vec_id") < 40).select(
-        when(col("vec_id") < 20, col("vec_id") - 10000)
-          .otherwise(col("vec_id") + 10000).as("vec_id"),
-        transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
-      Similarity.semanticDedup(
-          base.unionByName(clones), cellBits = 4, threshold = 0.9)
-        .select(col("vec_id"), col("cell").cast("int").as("cell"), col("kept"))
-        .orderBy("vec_id")
-    },
-    Some(s"""WITH raw AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-                          FROM embeddings),
-             v AS (SELECT vec_id, e FROM raw
-                   UNION ALL
-                   SELECT CASE WHEN vec_id < 20 THEN vec_id - 10000
-                               ELSE vec_id + 10000 END,
-                          list_transform(e, x -> x * 2)
-                   FROM raw WHERE vec_id < 40),
-             c AS (SELECT vec_id, e,
-                     (CASE WHEN e[1] >= 0 THEN 1 ELSE 0 END) +
-                     (CASE WHEN e[2] >= 0 THEN 2 ELSE 0 END) +
-                     (CASE WHEN e[3] >= 0 THEN 4 ELSE 0 END) +
-                     (CASE WHEN e[4] >= 0 THEN 8 ELSE 0 END) AS cell FROM v)
-             SELECT a.vec_id, CAST(a.cell AS INT) AS cell,
-               NOT EXISTS (SELECT 1 FROM c b
-                 WHERE b.cell = a.cell AND b.vec_id < a.vec_id
-                   AND ROUND($duckCosine, 4) >= 0.9) AS kept
-             FROM c a
-             ORDER BY vec_id"""),
-    bench = true)
-
-  /** Round-6 corpus-hygiene pipeline, composed end-to-end: plant synthetic
-    * PII -> redact (t17's regexes) -> Gopher repetition filter on the
-    * REDACTED text (top_word_frac < 0.15 drops the templated tail) -> RAG
-    * chunking of the survivors. Every stage is re-derived independently by
-    * the oracle, so one hash match certifies the chain composes — stage
-    * outputs feed the next stage's exact semantics (d11 is the dedup-side
-    * flagship; this is its hygiene-side sibling). */
-  private val d16 = QueryDef("d16_curate2",
-    (s, d) => {
-      val planted = Tables.documents(s, d).select(col("doc_id"),
-        concat(col("text"), lit(" contact user"),
-          col("doc_id").cast("string"), lit("@mail.example.com or call "),
-          (col("doc_id") * 7919 + 1000000).cast("string")).as("text"))
-      val red = graft.operators.TextAnalysis.piiRedact(planted)
-        .select(col("doc_id"), col("redacted").as("text"))
-      val rep = graft.operators.TextAnalysis.repetitionScores(red)
-      val kept = red.join(
-        rep.filter(col("top_word_frac") < 0.15).select("doc_id"),
-        Seq("doc_id"))
-      graft.operators.TextAnalysis.chunkDocs(kept, chunkTokens = 32, overlap = 8)
-        .orderBy("doc_id", "chunk_idx")
-    },
-    Some("""WITH f AS (SELECT doc_id,
-                text || ' contact user' || CAST(doc_id AS VARCHAR)
-                  || '@mail.example.com or call '
-                  || CAST(doc_id * 7919 + 1000000 AS VARCHAR) AS text
-              FROM documents),
-            red AS (SELECT doc_id,
-                regexp_replace(regexp_replace(text,
-                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                  '[0-9]{6,}', '<NUM>', 'g') AS text
-              FROM f),
-            w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-              FROM red),
-            rep AS (SELECT doc_id,
-                CASE WHEN len(w) <= 0 THEN 0.0 ELSE
-                  FLOOR(list_max(list_transform(list_distinct(w),
-                      d -> len(list_filter(w, x -> x = d)))) * 1.0 / len(w)
-                    * 10000 + 0.5) / 10000 END AS twf
-              FROM w),
-            kept AS (SELECT w.doc_id, w.w FROM w JOIN rep USING (doc_id)
-                     WHERE twf < CAST(0.15 AS DOUBLE)),
-            c AS (SELECT doc_id, UNNEST(list_transform(
-                    range(0, ((len(w) - 1) // 24) + 1),
-                    k -> {'k': k, 'ch': w[k*24+1 : k*24+32]})) AS u
-                  FROM kept WHERE len(w) > 0)
-            SELECT doc_id, CAST(u.k AS INT) AS chunk_idx,
-              CAST(u.k * 24 AS INT) AS start_tok,
-              CAST(len(u.ch) AS INT) AS n_tokens,
-              array_to_string(u.ch, ' ') AS chunk
-            FROM c ORDER BY doc_id, chunk_idx"""),
-    bench = true)
-
-  /** Exact per-vertex triangle counts (Graph.triangleCounts,
-    * degree-ordered orientation) over the symmetrized 3-NN graph of the
-    * first 100 embeddings. The oracle re-derives the k-NN edge set, the
-    * (degree, id) orientation, wedge generation, and closure — certifying
-    * that the oriented algorithm counts each triangle exactly once. */
-  private val d17 = QueryDef("d17_triangles",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d).filter(col("vec_id") < 100)
-      val knn = Similarity.bruteForceKnn(emb, emb, 3)
-      val edges = knn.select(least(col("vec_id"), col("nn_id")).as("id_a"),
-          greatest(col("vec_id"), col("nn_id")).as("id_b"))
-        .distinct()
-      graft.operators.Graph.triangleCounts(edges).orderBy("id")
-    },
-    Some(s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-                        FROM embeddings WHERE vec_id < 100),
-             s AS (SELECT a.vec_id, b.vec_id AS nn_id, ROUND($duckCosine, 4) AS sim
-                   FROM v a JOIN v b ON b.vec_id <> a.vec_id),
-             r AS (SELECT vec_id, nn_id FROM (
-                     SELECT vec_id, nn_id, ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY sim DESC, nn_id) AS rn
-                     FROM s) t WHERE rn <= 3),
-             e AS (SELECT DISTINCT LEAST(vec_id, nn_id) AS a,
-                     GREATEST(vec_id, nn_id) AS b FROM r),
-             sym AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
-             deg AS (SELECT a, COUNT(*) AS d FROM sym GROUP BY a),
-             ori AS (SELECT s.a AS u, s.b AS v FROM sym s
-                     JOIN deg d1 ON s.a = d1.a JOIN deg d2 ON s.b = d2.a
-                     WHERE d1.d < d2.d OR (d1.d = d2.d AND s.a < s.b)),
-             w AS (SELECT e1.u AS x, e1.v AS y, e2.v AS z FROM ori e1
-                   JOIN ori e2 ON e1.u = e2.u AND e1.v < e2.v),
-             tri AS (SELECT x, y, z FROM w JOIN e ON e.a = w.y AND e.b = w.z)
-             SELECT id, COUNT(*) AS n_tri FROM (
-               SELECT UNNEST([x, y, z]) AS id FROM tri) t
-             GROUP BY id ORDER BY id"""))
-
-  /** Edit-distance near-dup verification (Dedup.editDistanceVerify): ten
-    * suffix-modified copies are planted (ids 10000+), all pairs of the
-    * <60 slice + clones are scored by normalized Levenshtein, top-50 by
-    * (sim desc, ids). The oracle recomputes every distance with its own
-    * Wagner-Fischer — a hash match certifies Spark's levenshtein and the
-    * normalization bit-for-bit (planted pairs land ~0.93, the natural
-    * ceiling is 0.41). */
-  private val d18 = QueryDef("d18_edit_neardup",
-    (s, d) => {
-      val base = Tables.documents(s, d)
-        .select("doc_id", "text").filter(col("doc_id") < 60)
-      val planted = base.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 10000).as("doc_id"),
-          concat(col("text"), lit(" tail edit marker")).as("text"))
-      val docs = base.unionByName(planted)
-      val pairs = docs.as("a").join(docs.as("b"),
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      Dedup.editDistanceVerify(pairs, docs)
-        .orderBy(col("edit_sim").desc, col("id_a"), col("id_b"))
-        .limit(50)
-    },
-    Some("""WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id < 60),
-            pl AS (SELECT doc_id + 10000 AS doc_id,
-                     text || ' tail edit marker' AS text
-                   FROM base WHERE doc_id < 10),
-            d AS (SELECT * FROM base UNION ALL SELECT * FROM pl),
-            p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                    FLOOR((1 - CAST(levenshtein(a.text, b.text) AS DOUBLE) /
-                      GREATEST(LENGTH(a.text), LENGTH(b.text), 1))
-                      * 10000 + 0.5) / 10000 AS edit_sim
-                  FROM d a JOIN d b ON a.doc_id < b.doc_id)
-            SELECT id_a, id_b, edit_sim FROM p
-            ORDER BY edit_sim DESC, id_a, id_b LIMIT 50"""))
-
-  /** Template-collapse near-dup clustering (Dedup.minhashLshClusters):
-    * exact duplicates collapse to their min-id representative BEFORE LSH
-    * banding (planted 3-copy template groups prove it), near-dup pairs
-    * run over distinct texts only, and members rejoin the cluster through
-    * (rep -> member) edges — the linear-in-pileup composition a
-    * template-heavy corpus needs. The oracle re-derives every stage
-    * independently: digest groups via GROUP BY text, near pairs via
-    * all-pairs exact shingle Jaccard over the representatives (recall-1
-    * regime, as certified for d06), the closure via a recursive CTE — so
-    * a hash match certifies collapse, banding, edge union AND clustering
-    * end to end. */
-  private val d19 = QueryDef("d19_collapse_clusters",
-    (s, d) => {
-      val base = Tables.documents(s, d).select("doc_id", "text")
-        .filter(col("doc_id") < 150)
-      val clones = (20000 to 30000 by 10000).map(off =>
-        base.filter(col("doc_id") < 5)
-          .select((col("doc_id") + off).as("doc_id"), col("text")))
-      val docs = clones.foldLeft(base)(_ unionByName _)
-      graft.operators.Dedup.minhashLshClusters(docs, "doc_id", "text",
-          shingleN = 3, k = 128, bands = 32, threshold = 0.7)
-        .select(col("id").as("doc_id"), col("cluster_id"))
-        .orderBy("doc_id")
-    },
-    Some("""WITH RECURSIVE
-            base AS (SELECT doc_id, text FROM documents WHERE doc_id < 150),
-            d AS (SELECT doc_id, text FROM base
-                  UNION ALL SELECT doc_id + 20000, text FROM base WHERE doc_id < 5
-                  UNION ALL SELECT doc_id + 30000, text FROM base WHERE doc_id < 5),
-            r AS (SELECT text, MIN(doc_id) AS rep FROM d GROUP BY text),
-            w AS (SELECT rep AS doc_id, list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-                  FROM r),
-            g AS (SELECT doc_id, list_distinct(list_transform(
-                    range(1, len(w)-1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh FROM w),
-            np AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                   FROM g a JOIN g b ON a.doc_id < b.doc_id
-                   WHERE len(list_intersect(a.sh, b.sh)) /
-                         len(list_distinct(list_concat(a.sh, b.sh))) >= 0.7),
-            ex AS (SELECT r.rep AS id_a, d.doc_id AS id_b
-                   FROM d JOIN r ON d.text = r.text WHERE d.doc_id <> r.rep),
-            p AS (SELECT id_a, id_b FROM np UNION ALL SELECT id_a, id_b FROM ex),
-            e AS (SELECT id_a AS a, id_b AS b FROM p
-                  UNION ALL SELECT id_b, id_a FROM p),
-            reach(a, b) AS (SELECT a, b FROM e
-                            UNION
-                            SELECT r2.a, e2.b FROM reach r2 JOIN e e2 ON r2.b = e2.a)
-            SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-            FROM reach GROUP BY a ORDER BY doc_id"""))
-
-  private val d05 = QueryDef("d05_embed_neardup",
-    (s, d) => Similarity.cosineNearDupPairs(
-        Tables.embeddings(s, d).filter(col("vec_id") < 100), -1.0)
-      .orderBy(col("sim").desc, col("id_a"), col("id_b"))
-      .limit(10),
-    Some(s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-                        FROM embeddings WHERE vec_id < 100)
-             SELECT a.vec_id AS id_a, b.vec_id AS id_b, ROUND($duckCosine, 4) AS sim
-             FROM v a JOIN v b ON a.vec_id < b.vec_id
-             ORDER BY sim DESC, id_a, id_b LIMIT 10"""))
-
-  /** MinHash-LSH candidates verified by exact Jaccard; the oracle computes
-    * the same threshold over EVERY pair with Jaccard > 0, so a hash-match
-    * also certifies LSH recall=1 on this corpus (k=128, b=32, r=4 ->
-    * P(miss | j>=0.7) < 1e-3). Candidate enumeration is a shingle-keyed
-    * self-join (the d27-oracle pattern), which is provably complete at the
-    * threshold: any pair with Jaccard >= 0.7 > 0 shares >= 1 shingle, and
-    * a pair sharing none has Jaccard 0 and can never pass the filter.
-    * inter/(sa+sb-inter) over the distinct-shingle counts is the same
-    * BIGINT-division as len(list_intersect)/len(list_distinct(concat)),
-    * so the emitted values are bit-identical to the former all-pairs form
-    * (verified by an A/B diff at sf0.01 and sf0.1 when this was rewritten
-    * in round 14; the rewrite makes the oracle tractable at sf1 — 50k docs
-    * is 1.25B all-pairs but only ~21M shingle-join rows). */
-  private val d06 = QueryDef("d06_minhash_neardup",
-    (s, d) => Dedup.minhashLsh(Tables.documents(s, d), "doc_id", "text",
-        shingleN = 3, k = 128, bands = 32, threshold = 0.7)
-      .select(col("id_a"), col("id_b"),
-        (floor(col("jaccard") * 10000 + 0.5) / 10000).as("jaccard"))
-      .orderBy("id_a", "id_b"),
-    Some("""WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w FROM documents),
-            g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh FROM w),
-            tok AS (SELECT doc_id, UNNEST(sh) AS t, len(sh) AS sz FROM g),
-            pair AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                COUNT(*) AS inter,
-                ANY_VALUE(a.sz) AS sa, ANY_VALUE(b.sz) AS sb
-              FROM tok a JOIN tok b ON a.t = b.t AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-            SELECT id_a, id_b,
-              FLOOR(inter / (sa + sb - inter) * 10000 + 0.5) / 10000 AS jaccard
-            FROM pair
-            WHERE inter / (sa + sb - inter) >= 0.7
-            ORDER BY id_a, id_b"""),
-    bench = true)
-
-  private val d07 = QueryDef("d07_dedup_rows",
-    (s, d) => Dedup.exactRows(Tables.documents(s, d), "doc_id", "text")
-      .select("doc_id", "lang")
-      .orderBy("doc_id"),
-    Some("""SELECT doc_id, lang FROM (
-              SELECT doc_id, lang,
-                ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-              FROM documents) t WHERE rn = 1 ORDER BY doc_id"""))
-
-  /** Span-level exact-substring dedup (Dedup.spanDedup): every 10-token
-    * window that occurs more than once in the corpus is excised except at
-    * its canonical (smallest doc_id*1e6+pos) occurrence; covered tokens
-    * drop and the text is rebuilt. The oracle replays the window digests,
-    * the canonical pick and the coverage expansion, so the REWRITTEN TEXT
-    * itself is hash-compared — not just the overlap statistics. */
-  private val d20 = QueryDef("d20_span_dedup",
-    (s, d) => graft.operators.Dedup.spanDedup(Tables.documents(s, d), n = 10)
-      .orderBy("doc_id"),
-    Some("""WITH w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
-                  x -> x <> '') AS w
-              FROM documents),
-            g0 AS (SELECT doc_id,
-                UNNEST(list_transform(range(1, len(w) - 8),
-                  i -> {'pos': i,
-                        'dig': md5(array_to_string(list_slice(w, i, i + 9), ' '))}))
-                  AS g
-              FROM w WHERE len(w) >= 10),
-            g AS (SELECT doc_id, g.pos AS pos, g.dig AS dig,
-                doc_id * 4294967296 + g.pos AS packed FROM g0),
-            sc AS (SELECT dig, COUNT(*) AS cnt, MIN(packed) AS canon
-                   FROM g GROUP BY dig),
-            rem AS (SELECT g.doc_id, g.pos FROM g JOIN sc USING (dig)
-                    WHERE sc.cnt > 1 AND g.packed <> sc.canon),
-            ss AS (SELECT doc_id, list_sort(list(pos)) AS s
-                   FROM rem GROUP BY doc_id),
-            k AS (SELECT w.doc_id, CAST(len(w.w) AS BIGINT) AS n_tokens,
-                list_filter(range(1, len(w.w) + 1),
-                  i -> len(list_filter(COALESCE(ss.s, []),
-                         x -> x <= i AND i < x + 10)) = 0) AS keep,
-                w.w AS w
-              FROM w LEFT JOIN ss USING (doc_id))
-            SELECT doc_id, n_tokens,
-              CAST(n_tokens - len(keep) AS BIGINT) AS n_removed,
-              COALESCE(array_to_string(list_transform(keep, i -> w[i]), ' '), '')
-                AS text_dedup
-            FROM k ORDER BY doc_id"""),
-    bench = true)
-
-  /** Incremental dedup of a new batch vs an existing corpus
-    * (Dedup.incrementalDedup): corpus = doc_id < 250, batch = the rest
-    * plus 5 planted exact clones of corpus docs (the fixture's natural
-    * clones sit on one side of the split, so the exact path needs
-    * planting — the 12 natural cross-boundary near-dups exercise the LSH
-    * path). The oracle replays the md5 digest index, the portable
-    * MinHash/banding (d12's certified idioms), the candidate collisions
-    * AND the Jaccard verification, so each batch doc's
-    * exact/near/new status and its matched corpus id are hash-compared. */
-  /** d21's corpus/batch fixture split, shared with the streaming twin
-    * `s16` (which must classify the SAME batch docs and share the oracle). */
-  private def d21Fixture(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val docs = Tables.documents(s, d).select("doc_id", "text")
-    val corpus = docs.filter(col("doc_id") < 250)
-    val batch = docs.filter(col("doc_id") >= 250)
-      .unionByName(corpus.filter(col("doc_id") < 5)
-        .select((col("doc_id") + 90000).as("doc_id"), col("text")))
-    (corpus, batch)
+  /** Run `body` with the given session confs set, then restore each one's
+    * previous value, or unset it, in a `finally`: a raised limit or a
+    * swapped state-store provider never outlives the build that set it. */
+  private[queries] def withConfs[T](s: SparkSession, confs: (String, String)*)(
+      body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(p)) => s.conf.set(k, p)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 
-  private val d21 = QueryDef("d21_incremental_dedup",
-    (s, d) => {
-      val (corpus, batch) = d21Fixture(s, d)
-      graft.operators.Dedup.incrementalDedup(corpus, batch)
-        .orderBy("doc_id")
-    },
-    Some(d21Oracle), bench = true)
-
-  private lazy val d21Oracle =
-       """WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
-            b AS (SELECT doc_id, text FROM documents WHERE doc_id >= 250
-                  UNION ALL
-                  SELECT doc_id + 90000, text FROM documents WHERE doc_id < 5),
-            cdig AS (SELECT md5(text) AS dig, MIN(doc_id) AS eid
-                     FROM c GROUP BY 1),
-            allx AS (SELECT * FROM c UNION ALL SELECT * FROM b),
-            w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
-                  x -> x <> '') AS w
-              FROM allx),
-            g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh FROM w),
-            ne AS (SELECT doc_id, sh FROM g WHERE len(sh) > 0),
-            sig AS (SELECT doc_id, list_transform(range(16), i ->
-                      list_min(list_transform(sh, s ->
-                        ('0x' || substring(md5(CAST(i AS VARCHAR) || ':' || s),
-                           1, 15))::BIGINT)))
-                      AS sig
-                    FROM ne),
-            bd AS (SELECT doc_id, CAST(r.range AS INT) AS band,
-                     md5(array_to_string(
-                       sig[CAST(r.range AS INT)*4+1 : CAST(r.range AS INT)*4+4], ','))
-                       AS digest
-                   FROM sig, range(4) r),
-            cand AS (SELECT DISTINCT bb.doc_id AS id, cb.doc_id AS cid
-                     FROM bd bb JOIN bd cb
-                       ON bb.band = cb.band AND bb.digest = cb.digest
-                     WHERE bb.doc_id >= 250 AND cb.doc_id < 250),
-            ver AS (SELECT cand.id, MIN(cand.cid) AS nid
-                    FROM cand
-                    JOIN ne s1 ON s1.doc_id = cand.id
-                    JOIN ne s2 ON s2.doc_id = cand.cid
-                    WHERE len(list_intersect(s1.sh, s2.sh)) * 1.0 /
-                          len(list_distinct(list_concat(s1.sh, s2.sh)))
-                          >= CAST(0.5 AS DOUBLE)
-                    GROUP BY cand.id),
-            ex AS (SELECT b.doc_id, cdig.eid FROM b
-                   JOIN cdig ON md5(b.text) = cdig.dig)
-            SELECT b.doc_id,
-              CASE WHEN ex.eid IS NOT NULL THEN 'exact'
-                   WHEN ver.nid IS NOT NULL THEN 'near'
-                   ELSE 'new' END AS status,
-              COALESCE(ex.eid, ver.nid) AS match_id
-            FROM b LEFT JOIN ex USING (doc_id)
-                   LEFT JOIN ver ON ver.id = b.doc_id
-            ORDER BY doc_id"""
-
-  /** The d21 classification replay as a reusable oracle CTE block:
-    * classifies `batchCte` against `corpusCte` (digest index + portable
-    * MinHash banding + Jaccard verify), emitting `${p}cls(doc_id, status,
-    * match_id)`. Instantiated once per stage by d22's two-step oracle. */
-  // `raw` interpolator: the \t \n \x0b in the tokenizer regex must reach
-  // DuckDB as literal backslash escapes (same bytes as d21's plain """)
-  private def incrClassifyCtes(p: String, corpusCte: String,
-                               batchCte: String): String = raw""",
-            ${p}cdig AS (SELECT md5(text) AS dig, MIN(doc_id) AS eid
-                         FROM $corpusCte GROUP BY 1),
-            ${p}allx AS (SELECT * FROM $corpusCte
-                         UNION ALL SELECT * FROM $batchCte),
-            ${p}w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
-                  x -> x <> '') AS w
-              FROM ${p}allx),
-            ${p}g AS (SELECT doc_id,
-                list_distinct(list_transform(range(1, len(w)-1),
-                  i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-              FROM ${p}w),
-            ${p}ne AS (SELECT doc_id, sh FROM ${p}g WHERE len(sh) > 0),
-            ${p}sig AS (SELECT doc_id, list_transform(range(16), i ->
-                      list_min(list_transform(sh, s ->
-                        ('0x' || substring(md5(CAST(i AS VARCHAR) || ':' || s),
-                           1, 15))::BIGINT)))
-                      AS sig
-                    FROM ${p}ne),
-            ${p}bd AS (SELECT doc_id, CAST(r.range AS INT) AS band,
-                     md5(array_to_string(
-                       sig[CAST(r.range AS INT)*4+1 : CAST(r.range AS INT)*4+4],
-                       ',')) AS digest
-                   FROM ${p}sig, range(4) r),
-            ${p}cand AS (SELECT DISTINCT bb.doc_id AS id, cb.doc_id AS cid
-                     FROM ${p}bd bb JOIN ${p}bd cb
-                       ON bb.band = cb.band AND bb.digest = cb.digest
-                     WHERE bb.doc_id IN (SELECT doc_id FROM $batchCte)
-                       AND cb.doc_id IN (SELECT doc_id FROM $corpusCte)),
-            ${p}ver AS (SELECT ${p}cand.id, MIN(${p}cand.cid) AS nid
-                    FROM ${p}cand
-                    JOIN ${p}ne s1 ON s1.doc_id = ${p}cand.id
-                    JOIN ${p}ne s2 ON s2.doc_id = ${p}cand.cid
-                    WHERE len(list_intersect(s1.sh, s2.sh)) * 1.0 /
-                          len(list_distinct(list_concat(s1.sh, s2.sh)))
-                          >= CAST(0.5 AS DOUBLE)
-                    GROUP BY ${p}cand.id),
-            ${p}ex AS (SELECT b.doc_id, ${p}cdig.eid FROM $batchCte b
-                   JOIN ${p}cdig ON md5(b.text) = ${p}cdig.dig),
-            ${p}cls AS (SELECT b.doc_id,
-              CASE WHEN e.eid IS NOT NULL THEN 'exact'
-                   WHEN v.nid IS NOT NULL THEN 'near'
-                   ELSE 'new' END AS status,
-              COALESCE(e.eid, v.nid) AS match_id
-            FROM $batchCte b LEFT JOIN ${p}ex e USING (doc_id)
-                   LEFT JOIN ${p}ver v ON v.id = b.doc_id)"""
-
-  /** Two-day crawl loop with INDEX MAINTENANCE (Dedup.updateDigestIndex /
-    * updateBandIndex): batch 1 classifies against the corpus artifacts,
-    * its accepted `new` docs are folded INTO the indexes, and batch 2
-    * classifies against the grown indexes — so a batch-2 clone of a
-    * batch-1 new doc must come back `exact` with the batch-1 id as its
-    * match (planted: ids+95000), while a clone of an original corpus doc
-    * still matches the corpus id (ids+96000). The oracle replays BOTH
-    * stages, including deriving batch 1's new-doc set and rebuilding the
-    * merged indexes, so the maintenance arithmetic itself is certified —
-    * not just one classification. */
-  private val d22 = QueryDef("d22_index_maintenance",
-    (s, d) => {
-      import graft.operators.Dedup._
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val corpus = docs.filter(col("doc_id") < 200)
-      val batch1 = docs.filter(col("doc_id") >= 200 && col("doc_id") < 350)
-      val batch2 = docs.filter(col("doc_id") >= 350)
-        .unionByName(docs.filter(col("doc_id") >= 200 && col("doc_id") < 205)
-          .select((col("doc_id") + 95000).as("doc_id"), col("text")))
-        .unionByName(docs.filter(col("doc_id") < 5)
-          .select((col("doc_id") + 96000).as("doc_id"), col("text")))
-      val dig1 = corpusDigestIndex(corpus)
-      val band1 = corpusBandIndex(corpus)
-      // lazy localCheckpoint: cls1 feeds both the output union and the
-      // new-doc set for the index update — one computation, reclaimed
-      // blocks (the minhashTopPairs pattern)
-      val cls1 = incrementalDedupIndexed(dig1, band1, corpus, batch1)
-        .localCheckpoint(false)
-      val new1 = batch1.join(
-        cls1.filter(col("status") === "new").select("doc_id"), Seq("doc_id"))
-      val cls2 = incrementalDedupIndexed(
-        updateDigestIndex(dig1, new1), updateBandIndex(band1, new1),
-        corpus.unionByName(new1), batch2)
-      cls1.withColumn("batch", lit(1))
-        .unionByName(cls2.withColumn("batch", lit(2)))
-        .select("batch", "doc_id", "status", "match_id")
-        .orderBy("batch", "doc_id")
-    },
-    Some("""WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
-            b1 AS (SELECT doc_id, text FROM documents
-                   WHERE doc_id >= 200 AND doc_id < 350),
-            b2 AS (SELECT doc_id, text FROM documents WHERE doc_id >= 350
-                   UNION ALL
-                   SELECT doc_id + 95000, text FROM documents
-                   WHERE doc_id >= 200 AND doc_id < 205
-                   UNION ALL
-                   SELECT doc_id + 96000, text FROM documents WHERE doc_id < 5)"""
-      + incrClassifyCtes("p1", "c", "b1") + """,
-            n1 AS (SELECT b1.doc_id, b1.text FROM b1
-                   JOIN p1cls USING (doc_id) WHERE status = 'new'),
-            c2 AS (SELECT * FROM c UNION ALL SELECT * FROM n1)"""
-      + incrClassifyCtes("p2", "c2", "b2") + """
-            SELECT 1 AS batch, doc_id, status, match_id FROM p1cls
-            UNION ALL
-            SELECT 2 AS batch, doc_id, status, match_id FROM p2cls
-            ORDER BY batch, doc_id"""))
-
-  // ------------------------------------------------------- similarity [EXT]
-
-  /** Shared by x01 (window form) and x11 (custom GroupTopK exec form) —
-    * the two plans must be row-identical under the same oracle. */
-  private val x01Oracle: String =
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-             s AS (SELECT a.vec_id, b.vec_id AS nn_id, ROUND($duckCosine, 4) AS sim
-                   FROM v a JOIN v b ON a.vec_id < 20 AND b.vec_id <> a.vec_id),
-             r AS (SELECT vec_id, nn_id, sim,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, nn_id) AS rnk
-                   FROM s)
-             SELECT vec_id, nn_id, sim, CAST(rnk AS INT) AS rnk
-             FROM r WHERE rnk <= 5 ORDER BY vec_id, rnk"""
-
-  private val x01 = QueryDef("x01_knn5",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.bruteForceKnn(emb.filter(col("vec_id") < 20), emb, 5)
-        .select(col("vec_id"), col("nn_id"), col("sim"), col("rank").as("rnk"))
-        .orderBy("vec_id", "rnk")
-    },
-    Some(x01Oracle))
-
-  /** x11: the SAME exact brute-force kNN as x01 but executed through the
-    * custom GroupTopK SparkPlan (Similarity.bruteForceKnnExec) — partial
-    * bounded per-group heaps k-bound every map partition BEFORE the
-    * exchange, and nothing ever sorts the full score space. Shares x01's
-    * oracle verbatim: the custom operator must be row-identical to the
-    * window form on the ANN path, certified in the gate. */
-  private val x11 = QueryDef("x11_knn_grouptopk",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.bruteForceKnnExec(emb.filter(col("vec_id") < 20), emb, 5)
-        .select(col("vec_id"), col("nn_id"), col("sim"), col("rank").as("rnk"))
-        .orderBy("vec_id", "rnk")
-    },
-    Some(x01Oracle))
-
-  private val x02 = QueryDef("x02_lsh_knn",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.lshKnn(emb.filter(col("vec_id") < 20), emb, 5)
-        .select(col("vec_id"), col("nn_id"), col("sim"), col("rank").as("rnk"))
-        .orderBy("vec_id", "rnk")
-    },
-    None, bench = true)
-
-  private val x03 = QueryDef("x03_ivf_knn",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      graft.operators.Ivf.ivfKnn(emb.filter(col("vec_id") < 20), emb, 5,
-          nCells = 16, nprobe = 4)
-        .select(col("vec_id"), col("nn_id"), col("sim"), col("rank").as("rnk"))
-        .orderBy("vec_id", "rnk")
-    },
-    None, bench = true)
-
-  /** PQ/ADC kNN (rows-only: k-means codebooks are engine-seeded; exact
-    * twin x01, recall floor in PqSpec). The compression scale path: the
-    * corpus scans as m one-byte codes per vector, distances are m table
-    * lookups (see operators/Pq.scala). */
-  private val x04 = QueryDef("x04_pq_knn",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      graft.operators.Pq.pqKnn(emb.filter(col("vec_id") < 20), emb, 5,
-          m = 16, codes = 32, iters = 3)
-        .select(col("vec_id"), col("nn_id"), col("approx_d2"),
-          col("rank").as("rnk"))
-        .orderBy("vec_id", "rnk")
-    },
-    None) // not benched: full-scan ADC is the compression demo, x02/x03 are the bench ANN
-
-  /** IVFADC (rows-only; recall floor in PqSpec): IVF cells prune the
-    * candidate set, PQ/ADC compresses the scoring — the composed shape a
-    * billion-vector index runs. */
-  private val x05 = QueryDef("x05_ivfadc_knn",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      graft.operators.Pq.ivfAdcKnn(emb.filter(col("vec_id") < 20), emb, 5,
-          nCells = 16, nprobe = 4, m = 16, codes = 32, iters = 3)
-        .select(col("vec_id"), col("nn_id"), col("approx_d2"),
-          col("rank").as("rnk"))
-        .orderBy("vec_id", "rnk")
-    },
-    None)
-
-  /** SQ8 ANN (Sq.sq8Knn): full-precision queries against the 1-byte/dim
-    * scalar-quantized corpus. Rows-only by design — the quantized
-    * similarity has no portable SQL twin; quality is pinned by
-    * SqRecallSpec's recall floor against the exact twin x01 and the
-    * quantizer arithmetic by SqSpec. */
-  private val x06 = QueryDef("x06_sq8_knn",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      graft.operators.Sq.sq8Knn(emb.filter(col("vec_id") < 20), emb, 5)
-        .select(col("vec_id"), col("nn_id"), col("sim"), col("rank").as("rnk"))
-        .orderBy("vec_id", "rnk")
-    },
-    None)
-
-  /** MMR diversity re-ranking (Similarity.mmrRerank, lambda=0.5, k=3) of 50
-    * candidates per query. The oracle unrolls all three greedy rounds in
-    * SQL over the same scaled-BIGINT cosines — a hash match certifies the
-    * greedy argmax, the max-sim-to-selected aggregation, and the tie-breaks
-    * of every round exactly (the d14 exact-integer regime). */
-  private val x07 = QueryDef("x07_mmr_rerank",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.mmrRerank(emb.filter(col("vec_id") < 8),
-          emb.filter(col("vec_id") >= 8 && col("vec_id") < 58),
-          k = 3, lambda = 0.5)
-        .orderBy("qid", "rnk")
-    },
-    Some("""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-            q AS (SELECT vec_id AS qid, e FROM v WHERE vec_id < 8),
-            c AS (SELECT vec_id AS cid, e FROM v WHERE vec_id >= 8 AND vec_id < 58),
-            rel AS (SELECT qid, cid,
-                      CAST(FLOOR(list_dot_product(q.e, c.e) /
-                        (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e)))
-                        * 10000 + 0.5) AS BIGINT) AS rel
-                    FROM q, c),
-            cs AS (SELECT a.cid AS ca, b.cid AS cb,
-                     CAST(FLOOR(list_dot_product(a.e, b.e) /
-                       (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e)))
-                       * 10000 + 0.5) AS BIGINT) AS s
-                   FROM c a JOIN c b ON a.cid <> b.cid),
-            r1 AS (SELECT qid, cid, rel FROM (
-                     SELECT qid, cid, rel, ROW_NUMBER() OVER (
-                       PARTITION BY qid ORDER BY rel DESC, cid) AS rn
-                     FROM rel) t WHERE rn = 1),
-            p2 AS (SELECT rel.qid, rel.cid, rel.rel, cs.s AS ms
-                   FROM rel JOIN r1 ON rel.qid = r1.qid AND rel.cid <> r1.cid
-                   JOIN cs ON cs.ca = rel.cid AND cs.cb = r1.cid),
-            r2 AS (SELECT qid, cid, rel FROM (
-                     SELECT qid, cid, rel, ROW_NUMBER() OVER (PARTITION BY qid
-                       ORDER BY 5000*rel - 5000*ms DESC, cid) AS rn FROM p2) t
-                   WHERE rn = 1),
-            p3 AS (SELECT rel.qid, rel.cid, rel.rel, GREATEST(s1.s, s2.s) AS ms
-                   FROM rel
-                   JOIN r1 ON rel.qid = r1.qid
-                   JOIN r2 ON rel.qid = r2.qid
-                   JOIN cs s1 ON s1.ca = rel.cid AND s1.cb = r1.cid
-                   JOIN cs s2 ON s2.ca = rel.cid AND s2.cb = r2.cid
-                   WHERE rel.cid <> r1.cid AND rel.cid <> r2.cid),
-            r3 AS (SELECT qid, cid, rel FROM (
-                     SELECT qid, cid, rel, ROW_NUMBER() OVER (PARTITION BY qid
-                       ORDER BY 5000*rel - 5000*ms DESC, cid) AS rn FROM p3) t
-                   WHERE rn = 1)
-            SELECT qid, cid, CAST(1 AS INT) AS rnk, rel FROM r1
-            UNION ALL SELECT qid, cid, CAST(2 AS INT), rel FROM r2
-            UNION ALL SELECT qid, cid, CAST(3 AS INT), rel FROM r3
-            ORDER BY qid, rnk"""))
-
-  /** Multi-query BM25 retrieval join (TextAnalysis.bm25Retrieve): three
-    * queries ranked against the corpus in one pass, top-5 each. The
-    * oracle re-derives the shared tf/df tables over the union term set,
-    * the per-(query, doc, term) Lucene-idf scores, and the per-query
-    * ranking — certifying the retrieval JOIN shape, not just one query's
-    * scoring (t19 is the single-query case). */
-  private val x08 = QueryDef("x08_bm25_retrieve",
-    (s, d) => graft.operators.TextAnalysis.bm25Retrieve(
-        Tables.documents(s, d),
-        Seq("q1" -> Seq("spark", "join"), "q2" -> Seq("hash", "table"),
-          "q3" -> Seq("stream", "window", "fast")))
-      .orderBy("query_id", "rnk"),
-    Some("""WITH w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-              FROM documents),
-            st AS (SELECT doc_id, CAST(len(w) AS DOUBLE) AS dl FROM w),
-            c AS (SELECT (SELECT CAST(COUNT(*) AS DOUBLE) FROM documents) AS n,
-                         (SELECT AVG(dl) FROM st) AS avgdl),
-            qt(query_id, word) AS (VALUES
-              ('q1', 'spark'), ('q1', 'join'),
-              ('q2', 'hash'), ('q2', 'table'),
-              ('q3', 'stream'), ('q3', 'window'), ('q3', 'fast')),
-            tok AS (SELECT doc_id, UNNEST(w) AS word FROM w),
-            tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM tok
-                   WHERE word IN (SELECT DISTINCT word FROM qt)
-                   GROUP BY doc_id, word),
-            df AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY word),
-            sc AS (SELECT qt.query_id, tf.doc_id,
-                     ROUND(LN(1 + ((SELECT n FROM c) - df + 0.5) / (df + 0.5)) *
-                       (tf * (1.2 + 1.0)) /
-                       (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / (SELECT avgdl FROM c))), 4) AS s
-                   FROM tf JOIN df USING (word)
-                   JOIN st ON st.doc_id = tf.doc_id
-                   JOIN qt ON qt.word = tf.word),
-            agg AS (SELECT query_id, doc_id, ROUND(SUM(s), 4) AS bm25
-                    FROM sc GROUP BY query_id, doc_id),
-            r AS (SELECT query_id, doc_id, bm25,
-                    ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY bm25 DESC, doc_id) AS rnk
-                  FROM agg)
-            SELECT query_id, doc_id, bm25, CAST(rnk AS INT) AS rnk
-            FROM r WHERE rnk <= 5 ORDER BY query_id, rnk"""))
-
-  /** SemDeDup with the paper's k-means clustering step
-    * (Similarity.semanticDedupKmeans): deterministic-init k-means cells,
-    * same oracled drop rule as d15. Rows-only by design (double k-means);
-    * since round 12 the clustering ITSELF has a bit-exact oracled twin —
-    * x12 ([[graft.operators.KmeansPortable]]): integer-quantized
-    * coordinates, md5 init, floor-average Lloyd rounds, cells + drop rule
-    * hash-certified in DuckDB. The drop semantics here are pinned by
-    * CurationOpsSpec on planted exact duplicates and the rule itself is
-    * bit-exact-oracled through d15's sign-grid cells. */
-  private val x09 = QueryDef("x09_semdedup_kmeans",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val clones = emb.filter(col("vec_id") < 30)
-        .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
-      Similarity.semanticDedupKmeans(emb.unionByName(clones),
-          nCells = 8, iters = 3, threshold = 0.9)
-        .orderBy("vec_id")
-    },
-    None)
-
-  /** Deterministic negative sampling (Similarity.negativeSample): 8
-    * pool-drawn hard-uniform negatives per anchor, excluding the x01
-    * brute-force top-5 positives. The oracle replays the whole chain —
-    * the exact cosine top-5, the salted pool gate, the pair-hash rank
-    * and the exclusions — so each anchor's negative SET and order are
-    * hash-certified, proving the draw is reproducible off-engine (the
-    * property that makes contrastive training data auditable). */
-  private val x10 = QueryDef("x10_negative_sample",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val anchors = emb.filter(col("vec_id") < 20)
-      val pos = Similarity.bruteForceKnn(anchors, emb, 5)
-      Similarity.negativeSample(anchors, emb,
-          pos.select("vec_id", "nn_id"), k = 8)
-        .orderBy("vec_id", "rnk")
-    },
-    Some(s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-                        FROM embeddings),
-             s AS (SELECT a.vec_id, b.vec_id AS nn_id, ROUND($duckCosine, 4) AS sim
-                   FROM v a JOIN v b ON a.vec_id < 20 AND b.vec_id <> a.vec_id),
-             r AS (SELECT vec_id, nn_id,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                       ORDER BY sim DESC, nn_id) AS rnk
-                   FROM s),
-             pos AS (SELECT vec_id, nn_id FROM r WHERE rnk <= 5),
-             pool AS (SELECT vec_id AS neg FROM embeddings
-                      WHERE ('0x' || substring(md5(CAST(vec_id AS VARCHAR)
-                              || '#negpool'), 1, 15))::BIGINT % 1000 < 100),
-             a AS (SELECT vec_id FROM embeddings WHERE vec_id < 20),
-             cand AS (SELECT a.vec_id, p.neg,
-                 ('0x' || substring(md5(CAST(a.vec_id AS VARCHAR) || '|' ||
-                    CAST(p.neg AS VARCHAR)), 1, 15))::BIGINT AS h
-               FROM a, pool p
-               WHERE p.neg <> a.vec_id
-                 AND NOT EXISTS (SELECT 1 FROM pos
-                                 WHERE pos.vec_id = a.vec_id
-                                   AND pos.nn_id = p.neg)),
-             rk AS (SELECT vec_id, neg,
-                      ROW_NUMBER() OVER (PARTITION BY vec_id
-                        ORDER BY h, neg) AS rnk
-                    FROM cand)
-             SELECT vec_id, neg AS neg_id, CAST(rnk AS INT) AS rnk
-             FROM rk WHERE rnk <= 8 ORDER BY vec_id, rnk"""))
-
-  // ------------------------------------------------------------- text [EXT]
-
-  private val t01 = QueryDef("t01_text_stats",
-    (s, d) => TextAnalysis.textStats(Tables.documents(s, d)).orderBy("doc_id"),
-    Some("""SELECT doc_id,
-              CAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS INT) AS n_tokens,
-              CAST(len(list_distinct(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> ''))) AS INT) AS n_distinct,
-              FLOOR(len(list_distinct(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> ''))) /
-                    GREATEST(len(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')), 1) * 10000 + 0.5) / 10000 AS ttr,
-              CAST(LENGTH(text) AS INT) AS n_chars,
-              FLOOR((LENGTH(text) - (len(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) - 1)) /
-                    GREATEST(len(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')), 1) * 10000 + 0.5) / 10000 AS avg_word_len
-            FROM documents ORDER BY doc_id"""),
-    bench = true)
-
-  private val t02 = QueryDef("t02_lang_dist",
-    (s, d) => Tables.documents(s, d)
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n"), round(avg(col("n_chars")), 2).as("avg_chars"))
-      .orderBy("lang"),
-    Some("""SELECT lang, COUNT(*) AS n, ROUND(AVG(n_chars), 2) AS avg_chars
-            FROM documents GROUP BY lang ORDER BY lang"""))
-
-  private val t03 = QueryDef("t03_fingerprint",
-    (s, d) => Tables.documents(s, d)
-      .select(col("doc_id"), md5(lower(col("text")).cast("binary")).as("fp_md5"))
-      .orderBy("doc_id"),
-    Some("""SELECT doc_id, MD5(LOWER(text)) AS fp_md5
-            FROM documents ORDER BY doc_id"""),
-    bench = true)
-
-  private val t04 = QueryDef("t04_quality",
-    (s, d) => TextAnalysis.qualityScore(Tables.documents(s, d)).orderBy("doc_id"),
-    Some("""SELECT doc_id, FLOOR((
-              0.4 * LEAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) / 50.0, 1.0)
-              + 0.3 * (len(list_distinct(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> ''))) /
-                       GREATEST(len(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')), 1))
-              + 0.3 * (LENGTH(regexp_replace(text, '[^a-zA-Z ]', '', 'g')) /
-                       GREATEST(LENGTH(text), 1))) * 10000 + 0.5) / 10000 AS quality
-            FROM documents ORDER BY doc_id"""))
-
-  private val t05 = QueryDef("t05_langid",
-    (s, d) => TextAnalysis.languageId(Tables.documents(s, d)).orderBy("doc_id"),
-    // argmax over per-language stopword hit counts; ties resolve to the
-    // lexicographically greatest lang on BOTH sides (Spark greatest() on
-    // (score, lang) structs == DuckDB list_sort of structs, last element)
-    Some("""WITH w AS (SELECT doc_id,
-                 list_filter(regexp_split_to_array(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-               FROM documents),
-            b AS (SELECT doc_id, list_sort([
-                 {'score': len(list_filter(w, x -> list_contains(
-                    ['the','a','of','and','to','in','is','it','that','for'], x))),
-                  'lang': 'en'},
-                 {'score': len(list_filter(w, x -> list_contains(
-                    ['der','die','das','und','ist','nicht','ein','mit','auf','zu'], x))),
-                  'lang': 'de'},
-                 {'score': len(list_filter(w, x -> list_contains(
-                    ['el','la','de','que','y','en','un','es','no','por'], x))),
-                  'lang': 'es'},
-                 {'score': len(list_filter(w, x -> list_contains(
-                    ['le','la','de','et','est','un','une','que','pour','dans'], x))),
-                  'lang': 'fr'}])[4] AS best
-               FROM w)
-            SELECT doc_id,
-              CASE WHEN struct_extract(best, 'score') > 0
-                   THEN struct_extract(best, 'lang') ELSE 'und' END AS pred_lang
-            FROM b ORDER BY doc_id"""))
-
-  /** Token counting; the unioned doc_id=-1 row contains tabs, a newline,
-    * a VERTICAL TAB and a double space, pinning the tokenization CONTRACT
-    * cross-engine: the engine splits on Java \s+ = [ \t\n\x0B\f\r]+
-    * (dropping empties) and every oracle spells out that exact class —
-    * RE2's \s EXCLUDES \x0B, so a literal '\s+' oracle would silently
-    * count 'newline\x0Bvtab' as one token while the engine sees two. */
-  private val t06 = QueryDef("t06_tokens",
-    (s, d) => {
-      import graft.functions.TextFns
-      val tabRow = s.range(1).select(lit(-1L).as("doc_id"),
-        lit("tab\tsep  and\nnewline\u000Bvtab\t.").as("text"))
-      Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .unionByName(tabRow)
-        .select(col("doc_id"),
-          size(TextFns.words(col("text"))).cast("int").as("n_ws"),
-          TextFns.tokenCount(col("text")).cast("int").as("n_re"))
-        .orderBy("doc_id")
-    },
-    Some("""WITH docs AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT -1, 'tab' || chr(9) || 'sep  and' || chr(10) ||
-                         'newline' || chr(11) || 'vtab' || chr(9) || '.')
-            SELECT doc_id,
-              CAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS INT) AS n_ws,
-              CAST(len(regexp_extract_all(text, '\w+|[^\w \t\n\x0b\f\r]')) AS INT) AS n_re
-            FROM docs ORDER BY doc_id"""))
-
-  private val t07 = QueryDef("t07_tfidf",
-    (s, d) => TextAnalysis.tfIdf(Tables.documents(s, d), 3)
-      .filter(col("doc_id") < 50)
-      .orderBy("doc_id", "rnk"),
-    Some("""WITH w AS (SELECT doc_id, UNNEST(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS word FROM documents),
-            tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM w WHERE word <> '' GROUP BY doc_id, word),
-            df AS (SELECT word, COUNT(DISTINCT doc_id) AS df FROM w WHERE word <> '' GROUP BY word),
-            s AS (SELECT doc_id, word,
-                    ROUND(tf * LN((SELECT COUNT(*) FROM documents) / df), 4) AS tfidf
-                  FROM tf JOIN df USING (word)),
-            r AS (SELECT doc_id, word, tfidf,
-                    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, word) AS rnk
-                  FROM s)
-            SELECT doc_id, word, tfidf, CAST(rnk AS INT) AS rnk
-            FROM r WHERE rnk <= 3 AND doc_id < 50 ORDER BY doc_id, rnk"""),
-    bench = true)
-
-  private val t08 = QueryDef("t08_source_similarity",
-    (s, d) => TextAnalysis.sourceSimilarity(Tables.documents(s, d))
-      .orderBy("src_a", "src_b"),
-    None)
-
-  /** Exact counterpart of t08: the oracle certifies the inverted-index
-    * pairwise Jaccard; t08's MinHash estimate of the SAME quantity is
-    * spec-checked against this within sampling error (OperatorsSpec). */
-  private val t09 = QueryDef("t09_source_sim_exact",
-    (s, d) => TextAnalysis.sourceSimilarityExact(Tables.documents(s, d))
-      .orderBy("src_a", "src_b"),
-    Some("""WITH w AS (SELECT source, list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w FROM documents),
-            g AS (SELECT source, UNNEST(list_distinct(list_transform(
-                    range(1, len(w)-1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS sh FROM w),
-            ds AS (SELECT DISTINCT source, sh FROM g),
-            sz AS (SELECT source, COUNT(*) AS sz FROM ds GROUP BY source),
-            iv AS (SELECT a.source AS src_a, b.source AS src_b, COUNT(*) AS ni
-                   FROM ds a JOIN ds b ON a.sh = b.sh AND a.source < b.source
-                   GROUP BY 1, 2),
-            pr AS (SELECT x.source AS src_a, y.source AS src_b,
-                     x.sz AS sza, y.sz AS szb
-                   FROM sz x JOIN sz y ON x.source < y.source)
-            SELECT pr.src_a, pr.src_b,
-              FLOOR(COALESCE(ni, 0) / (sza + szb - COALESCE(ni, 0)) * 10000 + 0.5)
-                / 10000 AS jaccard
-            FROM pr LEFT JOIN iv ON pr.src_a = iv.src_a AND pr.src_b = iv.src_b
-            ORDER BY pr.src_a, pr.src_b"""))
-
-  /** Deterministic 10% hash-gate sample — bit-stable across engines, so
-    * the oracle re-derives the EXACT membership (rand()-based sampling
-    * could never be cross-checked like this). */
-  private val t10 = QueryDef("t10_hash_sample",
-    (s, d) => graft.operators.Sampling.hashSample(
-        Tables.documents(s, d), col("doc_id"), 100)
-      .select("doc_id", "lang")
-      .orderBy("doc_id"),
-    Some("""SELECT doc_id, lang FROM documents
-            WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-                  % 1000 < 100
-            ORDER BY doc_id"""))
-
-  /** Stratified deterministic sample: exactly 5 docs per lang, chosen by
-    * the stable hash order. */
-  private val t11 = QueryDef("t11_stratified_sample",
-    (s, d) => graft.operators.Sampling.stratifiedSample(
-        Tables.documents(s, d), Seq(col("lang")), col("doc_id"), 5)
-      .select("lang", "doc_id")
-      .orderBy("lang", "doc_id"),
-    Some("""SELECT lang, doc_id FROM (
-              SELECT lang, doc_id, ROW_NUMBER() OVER (
-                PARTITION BY lang
-                ORDER BY ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
-                         doc_id) AS rn
-              FROM documents) t
-            WHERE rn <= 5 ORDER BY lang, doc_id"""))
-
-  /** Sequence packing: documents assigned to ~512-token training bins in
-    * 4 hash shards — exact-arithmetic bin ids, so the oracle re-derives
-    * the packing bit-for-bit. */
-  private val t12 = QueryDef("t12_seq_packing",
-    (s, d) => {
-      val docs = Tables.documents(s, d).withColumn("n_tok",
-        size(graft.functions.TextFns.words(col("text"))).cast("long"))
-      graft.operators.Sampling.packSequences(docs, col("doc_id"),
-          col("n_tok"), budget = 512, shards = 4)
-        .select(col("doc_id"), col("seq_id"), col("seq_offset"))
-        .orderBy("doc_id")
-    },
-    Some("""WITH t AS (SELECT doc_id,
-                 ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
-                 CAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> ''))
-                   AS BIGINT) AS n_tok
-               FROM documents),
-            c AS (SELECT doc_id, h % 4 AS shard, n_tok,
-                    CAST(SUM(n_tok) OVER (PARTITION BY h % 4 ORDER BY h, doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      AS BIGINT) - n_tok AS cum
-                  FROM t)
-            SELECT doc_id, shard * 1099511627776 + cum // 512 AS seq_id,
-              cum % 512 AS seq_offset
-            FROM c ORDER BY doc_id"""))
-
-  /** Approximate top-k words via the Misra-Gries summary, certified in the
-    * GUARANTEED-EXACT regime: the corpus vocabulary (31 words) is far
-    * below k = 256, so no decrement ever fires and every count is exact —
-    * the oracle is the exact group-by. The approximate regime (adversarial
-    * streams, merge error bounds) is property-tested in MisraGriesSpec. */
-  /** Weighted sampling (A-ES) over power-of-two weight classes: the
-    * priorities are nested correctly-rounded sqrts of the md5-derived
-    * uniform, so the oracle re-derives the EXACT ranking bit-for-bit —
-    * the corpus-mixture sampler ("upweight en 8x, de 4x, es 2x") with a
-    * certified sample. */
-  private val t14 = QueryDef("t14_weighted_sample",
-    (s, d) => graft.operators.Sampling.weightedSample(
-        Tables.documents(s, d), col("doc_id"),
-        when(col("lang") === "en", 3).when(col("lang") === "de", 2)
-          .when(col("lang") === "es", 1).otherwise(0), 40)
-      .select("doc_id", "lang")
-      .orderBy("doc_id"),
-    Some("""WITH u AS (SELECT doc_id, lang,
-                (('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT + 0.5)
-                  / 1152921504606846976.0 AS u
-              FROM documents),
-            p AS (SELECT doc_id, lang,
-                CASE WHEN lang = 'en' THEN sqrt(sqrt(sqrt(u)))
-                     WHEN lang = 'de' THEN sqrt(sqrt(u))
-                     WHEN lang = 'es' THEN sqrt(u)
-                     ELSE u END AS p
-              FROM u),
-            top AS (SELECT doc_id, lang FROM p ORDER BY p DESC, doc_id LIMIT 40)
-            SELECT doc_id, lang FROM top ORDER BY doc_id"""))
-
-  private val t13 = QueryDef("t13_approx_topk",
-    (s, d) => {
-      import graft.functions.{MisraGriesAgg, TextFns}
-      Tables.documents(s, d)
-        .select(explode(TextFns.words(col("text"))).as("word"))
-        .agg(MisraGriesAgg.approx_topk(col("word"), 256).as("tk"))
-        .select(posexplode(col("tk")).as(Seq("pos", "e")))
-        .filter(col("pos") < 20)
-        .select(col("pos").cast("int").as("pos"),
-          col("e.item").as("word"), col("e.cnt").as("cnt"))
-        .orderBy("pos")
-    },
-    Some("""WITH w AS (SELECT UNNEST(list_filter(
-                regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
-                x -> x <> '')) AS word FROM documents),
-            c AS (SELECT word, COUNT(*) AS cnt FROM w GROUP BY word),
-            r AS (SELECT word, cnt,
-                    ROW_NUMBER() OVER (ORDER BY cnt DESC, word) - 1 AS pos
-                  FROM c)
-            SELECT CAST(pos AS INT) AS pos, word, CAST(cnt AS BIGINT) AS cnt
-            FROM r WHERE pos < 20 ORDER BY pos"""))
-
-  /** Gopher-family repetition signals, fully re-derived by the oracle:
-    * duplicate bigram/trigram fractions over the NON-distinct n-gram
-    * multiset and the most-frequent-word fraction. Integer-ratio values
-    * with midpoint-safe rounding — bit-deterministic cross-engine. */
-  private val t15 = QueryDef("t15_repetition",
-    (s, d) => graft.operators.TextAnalysis.repetitionScores(
-        Tables.documents(s, d))
-      .orderBy("doc_id"),
-    Some("""WITH w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-              FROM documents),
-            n AS (SELECT doc_id, w,
-                list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]) AS g2,
-                list_transform(range(1, len(w)-1),
-                  i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS g3
-              FROM w)
-            SELECT doc_id,
-              CASE WHEN len(g2) <= 0 THEN 0.0 ELSE
-                FLOOR((len(g2) - len(list_distinct(g2))) * 1.0 / len(g2)
-                  * 10000 + 0.5) / 10000 END AS dup_bigram,
-              CASE WHEN len(g3) <= 0 THEN 0.0 ELSE
-                FLOOR((len(g3) - len(list_distinct(g3))) * 1.0 / len(g3)
-                  * 10000 + 0.5) / 10000 END AS dup_trigram,
-              CASE WHEN len(w) <= 0 THEN 0.0 ELSE
-                FLOOR(list_max(list_transform(list_distinct(w),
-                    d -> len(list_filter(w, x -> x = d)))) * 1.0 / len(w)
-                  * 10000 + 0.5) / 10000 END AS top_word_frac
-            FROM n ORDER BY doc_id"""))
-
-  /** Benchmark decontamination: distinct-shingle overlap of every corpus
-    * document against a (broadcast) benchmark set — the pre-training
-    * eval-contamination check. The oracle recomputes the overlap from
-    * scratch with an independent join. */
-  private val t16 = QueryDef("t16_decontaminate",
-    (s, d) => {
-      val docs = Tables.documents(s, d)
-      graft.operators.TextAnalysis.contamination(
-          docs.filter(col("doc_id") >= 20), docs.filter(col("doc_id") < 20))
-        .orderBy("doc_id")
-    },
-    Some("""WITH w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-              FROM documents),
-            g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh FROM w),
-            bench AS (SELECT DISTINCT UNNEST(sh) AS s FROM g WHERE doc_id < 20),
-            corp AS (SELECT doc_id, UNNEST(sh) AS s FROM g WHERE doc_id >= 20)
-            SELECT c.doc_id, COUNT(*) AS n_shared
-            FROM corp c JOIN bench b ON c.s = b.s
-            GROUP BY c.doc_id ORDER BY doc_id"""))
-
-  /** PII redaction over documents with deterministic synthetic PII
-    * appended (the corpus itself is PII-free): emails and long digit runs
-    * replaced by typed tokens, per-doc match counts reported. Both the
-    * fixture synthesis and both regexes are computed independently by the
-    * oracle — RE2-compatible patterns so java.util.regex and DuckDB's RE2
-    * agree (see TextAnalysis.EmailRe). */
-  private val t17 = QueryDef("t17_pii_redact",
-    (s, d) => graft.operators.TextAnalysis.piiRedact(
-        Tables.documents(s, d).select(col("doc_id"),
-          concat(col("text"), lit(" contact user"),
-            col("doc_id").cast("string"), lit("@mail.example.com or call "),
-            (col("doc_id") * 7919 + 1000000).cast("string")).as("text")))
-      .orderBy("doc_id"),
-    Some("""WITH f AS (SELECT doc_id,
-                text || ' contact user' || CAST(doc_id AS VARCHAR)
-                  || '@mail.example.com or call '
-                  || CAST(doc_id * 7919 + 1000000 AS VARCHAR) AS text
-              FROM documents)
-            SELECT doc_id,
-              regexp_replace(regexp_replace(text,
-                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                '[0-9]{6,}', '<NUM>', 'g') AS redacted,
-              CAST(len(regexp_extract_all(text,
-                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_emails,
-              CAST(len(regexp_extract_all(text, '[0-9]{6,}')) AS INT) AS n_nums
-            FROM f ORDER BY doc_id"""))
-
-  /** C4-style boilerplate removal (TextAnalysis.removeBoilerplateChunks):
-    * 3-word segments appearing in >= 3 distinct documents are dropped and
-    * documents reassembled in order. The oracle re-derives segmentation,
-    * document frequency, the drop set, and the ORDER-PRESERVING
-    * reassembly (string_agg ORDER BY pos vs array_sort on (pos, chunk)
-    * structs) — a hash match certifies the rebuild order, not just the
-    * counts. */
-  private val t18 = QueryDef("t18_boilerplate",
-    (s, d) => graft.operators.TextAnalysis.removeBoilerplateChunks(
-        Tables.documents(s, d), chunkWords = 3, maxDocs = 3)
-      .orderBy("doc_id"),
-    Some("""WITH w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-              FROM documents),
-            c AS (SELECT doc_id, UNNEST(list_transform(
-                    range(0, CAST(CEIL(len(w) / 3.0) AS INT)),
-                    i -> {'pos': i, 'chunk': array_to_string(w[i*3+1:i*3+3], ' ')})) AS u
-                  FROM w WHERE len(w) > 0),
-            cc AS (SELECT doc_id, u.pos AS pos, u.chunk AS chunk FROM c),
-            df AS (SELECT chunk, COUNT(DISTINCT doc_id) AS ndocs FROM cc GROUP BY chunk)
-            SELECT cc.doc_id,
-              CAST(COUNT(*) AS INT) AS n_chunks,
-              CAST(SUM(CASE WHEN ndocs >= 3 THEN 1 ELSE 0 END) AS INT) AS n_removed,
-              COALESCE(string_agg(CASE WHEN ndocs < 3 THEN chunk END,
-                ' ' ORDER BY pos), '') AS cleaned
-            FROM cc JOIN df USING (chunk)
-            GROUP BY cc.doc_id ORDER BY doc_id"""))
-
-  /** BM25 retrieval (TextAnalysis.bm25) for a fixed 3-term query over the
-    * corpus. The oracle recomputes dl/avgdl, tf, df, the Lucene idf, and
-    * the saturation term independently; per-term scores round to 4
-    * decimals before the doc sum so cross-engine summation order cannot
-    * flip the top-20 ranking. */
-  private val t19 = QueryDef("t19_bm25",
-    (s, d) => graft.operators.TextAnalysis.bm25(
-        Tables.documents(s, d), Seq("spark", "table", "join"), topK = 20),
-    Some("""WITH w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-              FROM documents),
-            st AS (SELECT doc_id, CAST(len(w) AS DOUBLE) AS dl FROM w),
-            c AS (SELECT (SELECT CAST(COUNT(*) AS DOUBLE) FROM documents) AS n,
-                         (SELECT AVG(dl) FROM st) AS avgdl),
-            tok AS (SELECT doc_id, UNNEST(w) AS word FROM w),
-            tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM tok
-                   WHERE word IN ('spark','table','join') GROUP BY doc_id, word),
-            df AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY word),
-            sc AS (SELECT tf.doc_id,
-                     ROUND(LN(1 + ((SELECT n FROM c) - df + 0.5) / (df + 0.5)) *
-                       (tf * (1.2 + 1.0)) /
-                       (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / (SELECT avgdl FROM c))), 4) AS s
-                   FROM tf JOIN df USING (word) JOIN st ON st.doc_id = tf.doc_id)
-            SELECT doc_id, ROUND(SUM(s), 4) AS bm25
-            FROM sc GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 20"""))
-
-  /** CCNet-style LM quality scoring (TextAnalysis.ngramLmScore): a
-    * Stupid-Backoff bigram LM trained on the doc_id % 5 = 0 slice scores
-    * every document's cross-entropy. The oracle re-derives tokenization,
-    * both count tables, the backoff arithmetic, and the scaled-BIGINT
-    * log-prob summation — a hash match certifies the LM's probabilities
-    * and the scoring joins bit-for-bit (the d14 exact-integer regime). */
-  private val t20 = QueryDef("t20_lm_perplexity",
-    (s, d) => {
-      val docs = Tables.documents(s, d)
-      graft.operators.TextAnalysis.ngramLmScore(
-          docs, docs.filter(col("doc_id") % 5 === 0))
-        .orderBy("doc_id")
-    },
-    Some("""WITH w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-              FROM documents),
-            rt AS (SELECT UNNEST(w) AS t FROM w WHERE doc_id % 5 = 0),
-            uni AS (SELECT t, COUNT(*) AS c FROM rt GROUP BY t),
-            tot AS (SELECT CAST(SUM(c) AS BIGINT) + CAST(COUNT(*) AS BIGINT) AS tv
-                    FROM uni),
-            rb AS (SELECT UNNEST(list_transform(range(1, len(w)),
-                     i -> {'w1': w[i], 'w2': w[i+1]})) AS bg
-                   FROM w WHERE doc_id % 5 = 0 AND len(w) >= 2),
-            big AS (SELECT bg.w1 AS w1, bg.w2 AS w2, COUNT(*) AS c12
-                    FROM rb GROUP BY 1, 2),
-            db AS (SELECT doc_id, UNNEST(list_transform(range(1, len(w)),
-                     i -> {'w1': w[i], 'w2': w[i+1]})) AS bg
-                   FROM w WHERE len(w) >= 2),
-            dbc AS (SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2, COUNT(*) AS cnt
-                    FROM db GROUP BY 1, 2, 3),
-            sc AS (SELECT doc_id, cnt,
-                     CAST(FLOOR(LN(CASE WHEN c12 IS NOT NULL
-                         THEN c12 * 1.0 / u1.c
-                         ELSE CAST(0.4 AS DOUBLE) * (COALESCE(u2.c, 0) + 1)
-                              / (SELECT tv FROM tot) END) * 10000 + 0.5)
-                       AS BIGINT) AS lp
-                   FROM dbc LEFT JOIN big USING (w1, w2)
-                   LEFT JOIN uni u1 ON dbc.w1 = u1.t
-                   LEFT JOIN uni u2 ON dbc.w2 = u2.t)
-            SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_bigrams,
-              FLOOR(-SUM(lp * cnt) * 1.0 / SUM(cnt) + 0.5) / 10000 AS cross_entropy
-            FROM sc GROUP BY doc_id ORDER BY doc_id"""),
-    bench = true)
-
-  /** Overlapping token-window chunking (TextAnalysis.chunkDocs, the RAG
-    * segmentation step): 32-token windows every 24 tokens. The oracle
-    * re-derives window starts, slicing, clipping, and reassembly; a hash
-    * match certifies offsets and chunk text exactly. */
-  private val t21 = QueryDef("t21_chunking",
-    (s, d) => graft.operators.TextAnalysis.chunkDocs(
-        Tables.documents(s, d), chunkTokens = 32, overlap = 8)
-      .orderBy("doc_id", "chunk_idx"),
-    Some("""WITH w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-              FROM documents),
-            c AS (SELECT doc_id, UNNEST(list_transform(
-                    range(0, ((len(w) - 1) // 24) + 1),
-                    k -> {'k': k, 'ch': w[k*24+1 : k*24+32]})) AS u
-                  FROM w WHERE len(w) > 0)
-            SELECT doc_id, CAST(u.k AS INT) AS chunk_idx,
-              CAST(u.k * 24 AS INT) AS start_tok,
-              CAST(len(u.ch) AS INT) AS n_tokens,
-              array_to_string(u.ch, ' ') AS chunk
-            FROM c ORDER BY doc_id, chunk_idx"""))
-
-  /** BPE tokenization (TextAnalysis.bpeTokenize through the native
-    * BpeEncode expression) with an 8-entry ranked merge table that
-    * exercises rank priority and CHAINED merges (a+r -> ar, ar+k -> ark;
-    * t+h -> th, th+e -> the). The oracle replays the whole merge loop as a
-    * recursive CTE — min-rank pair selection, all-occurrence merging,
-    * termination — per distinct word, then re-derives the per-doc
-    * reassembly; a hash match certifies the BPE loop, the dictionary
-    * join-back, and ordered reassembly exactly. */
-  /** The 8-entry ranked merge table t22/t32 share (rank priority +
-    * CHAINED merges: a+r -> ar, ar+k -> ark; t+h -> th, th+e -> the). */
-  private val t22Merges = Seq("a" -> "r", "t" -> "h", "ar" -> "k",
-    "s" -> "p", "e" -> "r", "o" -> "w", "q" -> "u", "th" -> "e")
-
-  /** t22's oracle CTE chain (recursive BPE merge loop per distinct word,
-    * terminating at `done(word, t)` with `wp(doc_id, pos, word)` as the
-    * occurrence table) — shared verbatim by t32's tokenize-then-pack. */
-  private val t22Ctes = """WITH RECURSIVE
-            w AS (SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS w
-              FROM documents),
-            wp AS (SELECT doc_id, u.pos AS pos, u.word AS word FROM (
-                     SELECT doc_id, UNNEST(list_transform(range(1, len(w)+1),
-                       i -> {'pos': i, 'word': w[i]})) AS u FROM w) t),
-            dict AS (SELECT DISTINCT word FROM wp),
-            bpe AS (
-              SELECT word,
-                list_transform(range(1, length(word)+1), i -> word[i:i]) AS t
-              FROM dict
-              UNION ALL
-              SELECT word,
-                list_transform(list_filter(list_transform(range(1, len(t)+1),
-                  i -> {'v': CASE WHEN i < len(t) AND COALESCE(list_position(
-                           ['a|r','t|h','ar|k','s|p','e|r','o|w','q|u','th|e'],
-                           t[i] || '|' || t[i+1]) = m, FALSE)
-                         THEN t[i] || t[i+1] ELSE t[i] END,
-                       'skip': COALESCE(i > 1 AND list_position(
-                           ['a|r','t|h','ar|k','s|p','e|r','o|w','q|u','th|e'],
-                           t[i-1] || '|' || t[i]) = m, FALSE)}),
-                  s -> NOT s.skip), s -> s.v) AS t
-              FROM (SELECT word, t,
-                      list_min(list_filter(list_transform(range(1, len(t)),
-                        i -> list_position(
-                          ['a|r','t|h','ar|k','s|p','e|r','o|w','q|u','th|e'],
-                          t[i] || '|' || t[i+1])), p -> COALESCE(p, 0) > 0)) AS m
-                    FROM bpe) q
-              WHERE m IS NOT NULL),
-            done AS (SELECT word, t FROM (
-                       SELECT word, t,
-                         list_min(list_filter(list_transform(range(1, len(t)),
-                           i -> list_position(
-                             ['a|r','t|h','ar|k','s|p','e|r','o|w','q|u','th|e'],
-                             t[i] || '|' || t[i+1])), p -> COALESCE(p, 0) > 0)) AS m
-                       FROM bpe) q WHERE m IS NULL)"""
-
-  private val t22 = QueryDef("t22_bpe_tokenize",
-    (s, d) => graft.operators.TextAnalysis.bpeTokenize(
-        Tables.documents(s, d), t22Merges)
-      .orderBy("doc_id"),
-    Some(t22Ctes + """
-            SELECT wp.doc_id,
-              CAST(SUM(len(d.t)) AS BIGINT) AS n_bpe,
-              string_agg(array_to_string(d.t, ' '), ' ' ORDER BY wp.pos) AS toks
-            FROM wp JOIN done d USING (word)
-            GROUP BY wp.doc_id ORDER BY doc_id"""),
-    bench = true)
-
-  /** Tokenize-then-pack CAPSTONE (bpeTokenize -> packSequences): the two
-    * final pre-training steps composed with REAL token counts — each
-    * document's BPE length (t22's certified loop) drives its sequence-bin
-    * assignment (t12's certified packing). The oracle chains both
-    * replays: the recursive merge CTE feeds the per-shard running-sum
-    * packing, so (n_bpe, seq_id, seq_offset) are hash-compared end to
-    * end. One vocabulary-scale BPE pass + one packing shuffle. */
-  private val t32 = QueryDef("t32_tokenize_pack",
-    (s, d) => {
-      val tok = graft.operators.TextAnalysis.bpeTokenize(
-        Tables.documents(s, d), t22Merges)
-      graft.operators.Sampling.packSequences(tok, col("doc_id"),
-          col("n_bpe"), budget = 512, shards = 4)
-        .select(col("doc_id"), col("n_bpe"), col("seq_id"), col("seq_offset"))
-        .orderBy("doc_id")
-    },
-    Some(t22Ctes + """,
-            cnt AS (SELECT wp.doc_id, CAST(SUM(len(d.t)) AS BIGINT) AS n_bpe
-                    FROM wp JOIN done d USING (word) GROUP BY wp.doc_id),
-            th AS (SELECT doc_id, n_bpe,
-                 ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
-               FROM cnt),
-            pc AS (SELECT doc_id, n_bpe, h % 4 AS shard,
-                    CAST(SUM(n_bpe) OVER (PARTITION BY h % 4 ORDER BY h, doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      AS BIGINT) - n_bpe AS cum
-                  FROM th)
-            SELECT doc_id, n_bpe, shard * 1099511627776 + cum // 512 AS seq_id,
-              cum % 512 AS seq_offset
-            FROM pc ORDER BY doc_id"""))
-
-  /** Domain-mixture quota sampling (Sampling.mixtureSample): the largest
-    * subset matching the en:5 de:2 es:2 fr:1 zh:2 mixture over the
-    * naturally skewed lang distribution. The oracle independently derives
-    * the binding domain, the integer-division quotas, and the md5-order
-    * row selection — the full row SET is certified, not just counts. */
-  private val t23 = QueryDef("t23_mixture_sample",
-    (s, d) => graft.operators.Sampling.mixtureSample(
-        Tables.documents(s, d), "lang", col("doc_id"),
-        Map("en" -> 5, "de" -> 2, "es" -> 2, "fr" -> 1, "zh" -> 2))
-      .select("doc_id", "lang")
-      .orderBy("doc_id"),
-    Some("""WITH cnt AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
-            wt(lang, w) AS (VALUES ('en', 5), ('de', 2), ('es', 2),
-                                   ('fr', 1), ('zh', 2)),
-            j AS (SELECT lang, n, w FROM cnt JOIN wt USING (lang)),
-            m AS (SELECT n AS nm, w AS wm FROM j
-                  ORDER BY CAST(n AS DOUBLE)/w, lang LIMIT 1),
-            q AS (SELECT lang, (w * (SELECT nm FROM m)) // (SELECT wm FROM m)
-                    AS quota FROM j),
-            r AS (SELECT doc_id, lang,
-                    ROW_NUMBER() OVER (PARTITION BY lang
-                      ORDER BY substring(md5(CAST(doc_id AS VARCHAR)), 1, 15),
-                               doc_id) AS rk
-                  FROM documents)
-            SELECT doc_id, lang FROM r JOIN q USING (lang)
-            WHERE rk <= quota ORDER BY doc_id"""))
-
-  /** Count-Min sketch estimates (TextAnalysis.countMinEstimates, depth 3,
-    * width 64) for the whole corpus vocabulary. md5-derived bucket hashes
-    * make the sketch — including collision overcounts — portable: the
-    * oracle rebuilds the counters table and min-probe from scratch, so a
-    * hash match certifies the sketch arithmetic exactly, not just its
-    * error bound (est >= cnt by construction). */
-  private val t24 = QueryDef("t24_countmin",
-    (s, d) => graft.operators.TextAnalysis.countMinEstimates(
-        Tables.documents(s, d), depth = 3, width = 64)
-      .orderBy("word"),
-    Some("""WITH tok AS (SELECT UNNEST(list_filter(
-                regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS word
-              FROM documents),
-            truth AS (SELECT word, COUNT(*) AS cnt FROM tok GROUP BY word),
-            h AS (SELECT word, d.range AS i,
-                    ('0x' || substring(md5(CAST(d.range AS VARCHAR) || ':' || word), 1, 15))::BIGINT
-                      % 64 AS b
-                  FROM tok, range(3) d),
-            counters AS (SELECT i, b, COUNT(*) AS c FROM h GROUP BY i, b),
-            probes AS (SELECT DISTINCT word, i, b FROM h)
-            SELECT t.word, MIN(c.c) AS est, t.cnt
-            FROM truth t JOIN probes p ON p.word = t.word
-            JOIN counters c ON c.i = p.i AND c.b = p.b
-            GROUP BY t.word, t.cnt ORDER BY t.word"""))
-
-  /** Linear classifier inference (TextAnalysis.linearClassify): hashed
-    * bag-of-words against a broadcast integer weight table — the
-    * quality-filter pass shape. The demo weight table is a deterministic
-    * formula over buckets so the oracle can rebuild it with range();
-    * scores are integer sums — bit-exact, no float dot product. */
-  private val t25 = QueryDef("t25_quality_classifier",
-    (s, d) => {
-      val dim = 1024
-      val weights = s.range(dim.toLong).select(col("id").as("bucket"),
-        ((col("id") * 37) % 201 - 100).as("weight"))
-      graft.operators.TextAnalysis.linearClassify(
-          Tables.documents(s, d), weights, dim)
-        .orderBy("doc_id")
-    },
-    Some("""WITH w AS (SELECT doc_id, UNNEST(list_filter(
-                regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
-                x -> x <> '')) AS word FROM documents),
-            b AS (SELECT doc_id,
-                ('0x' || substring(md5(word), 1, 15))::BIGINT % 1024 AS bucket
-              FROM w),
-            wt AS (SELECT range AS bucket, (range * 37) % 201 - 100 AS weight
-                   FROM range(1024))
-            SELECT doc_id, CAST(SUM(weight) AS BIGINT) AS score_sum,
-              COUNT(*) AS n_words, (SUM(weight) >= 0) AS keep
-            FROM b JOIN wt USING (bucket)
-            GROUP BY doc_id ORDER BY doc_id"""),
-    bench = true)
-
-  /** Curation-funnel audit (TextAnalysis.curationFunnel): four hygiene
-    * stages — language gate, minimum length, repetition cap (the fused
-    * RepetitionStats expression, t15-certified), alphabetic ratio — as a
-    * single-scan kept/dropped report. The oracle recomputes every stage
-    * flag and the cumulative-reach sums independently; funnel arithmetic
-    * (rows_in of stage i+1 = rows_kept of stage i) is part of the hash. */
-  private val t26 = QueryDef("t26_curation_funnel",
-    (s, d) => {
-      import graft.functions.{ArrayExprs, TextFns}
-      graft.operators.TextAnalysis.curationFunnel(Tables.documents(s, d), Seq(
-        "lang_en" -> (col("lang") === "en"),
-        "min_30_tokens" -> (size(TextFns.words(col("text"))) >= 30),
-        "low_repetition" ->
-          (ArrayExprs.repetition_stats(col("text")).getField("dup_bigram") <= 0.3),
-        "alpha_ratio" ->
-          ((length(regexp_replace(col("text"), "[^a-zA-Z ]", "")).cast("double") /
-            greatest(length(col("text")), lit(1)).cast("double")) >= 0.55)))
-        .orderBy("stage_idx")
-    },
-    Some("""WITH n AS (SELECT lang, text,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
-                  x -> x <> '') AS w
-              FROM documents),
-            g AS (SELECT lang, text, w,
-                list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]) AS g2
-              FROM n),
-            f AS (SELECT
-                (lang = 'en') AS p0,
-                (len(w) >= 30) AS p1,
-                (CASE WHEN len(g2) <= 0 THEN 0.0 ELSE
-                   FLOOR((len(g2) - len(list_distinct(g2))) * 1.0 / len(g2)
-                     * 10000 + 0.5) / 10000 END <= 0.3) AS p2,
-                (LENGTH(regexp_replace(text, '[^a-zA-Z ]', '', 'g')) * 1.0 /
-                   GREATEST(LENGTH(text), 1) >= 0.55) AS p3
-              FROM g),
-            a AS (SELECT
-                COUNT(*) AS in0,
-                CAST(SUM(CASE WHEN p0 THEN 1 ELSE 0 END) AS BIGINT) AS k0,
-                CAST(SUM(CASE WHEN p0 AND p1 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-                CAST(SUM(CASE WHEN p0 AND p1 AND p2 THEN 1 ELSE 0 END) AS BIGINT) AS k2,
-                CAST(SUM(CASE WHEN p0 AND p1 AND p2 AND p3 THEN 1 ELSE 0 END) AS BIGINT) AS k3
-              FROM f)
-            SELECT 0 AS stage_idx, 'lang_en' AS stage, in0 AS rows_in,
-              k0 AS rows_kept, in0 - k0 AS rows_dropped FROM a
-            UNION ALL SELECT 1, 'min_30_tokens', k0, k1, k0 - k1 FROM a
-            UNION ALL SELECT 2, 'low_repetition', k1, k2, k1 - k2 FROM a
-            UNION ALL SELECT 3, 'alpha_ratio', k2, k3, k2 - k3 FROM a
-            ORDER BY stage_idx"""))
-
-  /** DSIR importance weights (TextAnalysis.dsirWeights): hashed-bigram
-    * log-likelihood ratios of an English target slice vs the raw corpus,
-    * 1024 buckets. The oracle re-derives the bigram stream, the md5
-    * bucket hash, both smoothed distributions and the scaled-BIGINT log
-    * terms; the per-document integer sums are hash-compared exactly. */
-  private val t27 = QueryDef("t27_dsir_weights",
-    (s, d) => graft.operators.TextAnalysis.dsirWeights(
-        Tables.documents(s, d), col("lang") === "en", buckets = 1024)
-      .orderBy("doc_id"),
-    Some("""WITH w AS (SELECT doc_id, (lang = 'en') AS tgt,
-                list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
-                  x -> x <> '') AS w
-              FROM documents),
-            g AS (SELECT doc_id, tgt,
-                UNNEST(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS g
-              FROM w WHERE len(w) >= 2),
-            b AS (SELECT doc_id, tgt,
-                ('0x' || substring(md5(g), 1, 15))::BIGINT % 1024 AS b
-              FROM g),
-            bc AS (SELECT b, COUNT(*) AS cr,
-                CAST(SUM(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct
-              FROM b GROUP BY b),
-            tot AS (SELECT CAST(SUM(cr) AS BIGINT) AS r,
-                CAST(SUM(ct) AS BIGINT) AS t FROM bc),
-            lw AS (SELECT b,
-                CAST(FLOOR((LN(CAST(ct + 1 AS DOUBLE) / CAST(t + 1024 AS DOUBLE)) -
-                            LN(CAST(cr + 1 AS DOUBLE) / CAST(r + 1024 AS DOUBLE)))
-                  * 10000 + 0.5) AS BIGINT) AS lw
-              FROM bc, tot),
-            db AS (SELECT doc_id, b, COUNT(*) AS cnt FROM b GROUP BY 1, 2)
-            SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_feats,
-              CAST(SUM(cnt * lw) AS BIGINT) AS log_w
-            FROM db JOIN lw USING (b)
-            GROUP BY doc_id ORDER BY doc_id"""),
-    bench = true)
-
-  /** Fractional-epoch upsampling (Sampling.epochUpsample): per-language
-    * epoch factors spanning >1 (repeat), <1 (hash-gate downsample) and
-    * exactly 1. The oracle replays the integer-permille split and the
-    * md5(key||"#epoch") gate; the row MULTISET (each copy's epoch_idx)
-    * is part of the hash. */
-  private val t28 = QueryDef("t28_epoch_upsample",
-    (s, d) => graft.operators.Sampling.epochUpsample(
-        Tables.documents(s, d), "lang", col("doc_id"),
-        Map("en" -> 1500, "de" -> 2250, "es" -> 700, "fr" -> 3000, "zh" -> 1000))
-      .select("doc_id", "lang", "epoch_idx")
-      .orderBy("doc_id", "epoch_idx"),
-    Some("""WITH ep(lang, pm) AS (VALUES ('en', 1500), ('de', 2250), ('es', 700),
-                                         ('fr', 3000), ('zh', 1000)),
-            c AS (SELECT doc_id, lang, pm // 1000 +
-                (CASE WHEN ('0x' || substring(md5(CAST(doc_id AS VARCHAR) || '#epoch'),
-                     1, 15))::BIGINT % 1000 < pm % 1000 THEN 1 ELSE 0 END) AS copies
-              FROM documents JOIN ep USING (lang))
-            SELECT doc_id, lang, UNNEST(range(1, copies + 1)) AS epoch_idx
-            FROM c WHERE copies >= 1 ORDER BY doc_id, epoch_idx"""))
-
-  /** BPE tokenizer training (TextAnalysis.bpeTrain): 6 merge rounds over
-    * the corpus word-frequency table. The oracle UNROLLS the training
-    * loop — per round the pair counting, the (count desc, pair asc)
-    * argmax and the all-occurrence merge application are re-derived in
-    * SQL — so the learned merge table is certified bit-for-bit, the same
-    * way t22 certifies merge APPLICATION. */
-  private def t29RoundCte(r: Int): String = s""",
-            p${r}0 AS (SELECT freq, UNNEST(list_transform(range(1, len(toks)),
-                        i -> {'a': toks[i], 'b': toks[i+1]})) AS pr FROM s${r - 1}),
-            p$r AS (SELECT pr.a AS a, pr.b AS b,
-                      CAST(SUM(freq) AS BIGINT) AS cnt FROM p${r}0
-                    WHERE pr.a <> pr.b GROUP BY 1, 2),
-            b$r AS (SELECT a, b, cnt FROM p$r ORDER BY cnt DESC, a, b LIMIT 1),
-            s$r AS (SELECT word, freq,
-                list_filter(list_transform(range(1, len(toks) + 1), i ->
-                  CASE WHEN i < len(toks) AND toks[i] = b.a AND toks[i+1] = b.b
-                         THEN toks[i] || toks[i+1]
-                       WHEN i > 1 AND toks[i] = b.b AND toks[i-1] = b.a THEN NULL
-                       ELSE toks[i] END), x -> x IS NOT NULL) AS toks
-                FROM s${r - 1}, b$r b)"""
-
-  private val t29 = QueryDef("t29_bpe_train",
-    (s, d) => graft.operators.TextAnalysis.bpeTrain(
-        Tables.documents(s, d), rounds = 6)
-      .orderBy("merge_rank"),
-    Some("""WITH w AS (SELECT UNNEST(list_filter(
-                regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
-                x -> x <> '')) AS word FROM documents),
-            t0 AS (SELECT word, COUNT(*) AS freq FROM w GROUP BY word),
-            s0 AS (SELECT word, freq,
-                list_transform(range(1, length(word) + 1), i -> word[i]) AS toks
-              FROM t0)""" +
-      (1 to 6).map(t29RoundCte).mkString +
-      "\nSELECT * FROM (" +
-      (1 to 6).map(r =>
-        s"SELECT $r AS merge_rank, a AS lhs, b AS rhs, cnt AS pair_count FROM b$r")
-        .mkString(" UNION ALL ") +
-      ") ORDER BY merge_rank"))
-
-  /** Exact-quota train/val/test split (Sampling.splitAssign): per-language
-    * 80/10/10 with EXACT integer quotas over the md5-rank order. The
-    * oracle replays the hash ranking and the integer-div boundaries, so
-    * every row's split assignment is hash-compared. */
-  private val t30 = QueryDef("t30_split_assign",
-    (s, d) => graft.operators.Sampling.splitAssign(
-        Tables.documents(s, d).select("doc_id", "lang"), "lang", col("doc_id"))
-      .orderBy("doc_id"),
-    Some("""WITH r AS (SELECT doc_id, lang,
-                ROW_NUMBER() OVER (PARTITION BY lang
-                  ORDER BY ('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-                              1, 15))::BIGINT, doc_id) AS rn,
-                COUNT(*) OVER (PARTITION BY lang) AS n
-              FROM documents)
-            SELECT doc_id, lang,
-              CASE WHEN rn <= n * 800 // 1000 THEN 'train'
-                   WHEN rn <= n * 800 // 1000 + n * 100 // 1000 THEN 'val'
-                   ELSE 'test' END AS split
-            FROM r ORDER BY doc_id"""),
-    bench = true)
-
-  /** Per-domain exact quantile gate (Sampling.qualityGate): keep each
-    * language's top-300-permille documents by n_chars — "keep the best
-    * 30% of every language by quality score" with an EXACT integer
-    * quota, ties broken by the md5-hash order. Runs on the t30
-    * distributed-rank machinery (no per-domain window/sort task); the
-    * oracle replays the DESC score order, hash tiebreak and integer-div
-    * quota, so the exact kept set is hash-compared. */
-  private val t35 = QueryDef("t35_quality_gate",
-    (s, d) => graft.operators.Sampling.qualityGate(
-        Tables.documents(s, d).select("doc_id", "lang", "n_chars"),
-        "lang", col("n_chars"), col("doc_id"), 300)
-      .orderBy("doc_id"),
-    Some("""WITH r AS (SELECT doc_id, lang, n_chars,
-                ROW_NUMBER() OVER (PARTITION BY lang
-                  ORDER BY n_chars DESC,
-                    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-                       1, 15))::BIGINT, doc_id) AS rn,
-                COUNT(*) OVER (PARTITION BY lang) AS n
-              FROM documents)
-            SELECT doc_id, lang, n_chars FROM r
-            WHERE rn <= n * 300 // 1000 ORDER BY doc_id"""))
-
-  /** Deterministic corpus shuffle + round-robin shard assignment
-    * (Sampling.shuffleShards): the pipeline's LAST step — a stable
-    * md5-order pseudo-random permutation dealt into 16 shards, each an
-    * unbiased same-size sample. Runs on the t30 distributed-rank
-    * machinery (no window, no global sort task); the oracle replays the
-    * hash order and both modular assignments, so every row's (shard,
-    * shard_pos) is hash-compared. */
-  private val t31 = QueryDef("t31_shuffle_shards",
-    (s, d) => graft.operators.Sampling.shuffleShards(
-        Tables.documents(s, d).select("doc_id", "lang"), col("doc_id"), 16)
-      .orderBy("doc_id"),
-    Some("""WITH r AS (SELECT doc_id, lang,
-                ROW_NUMBER() OVER (ORDER BY
-                  ('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-                     1, 15))::BIGINT, doc_id) - 1 AS rk
-              FROM documents)
-            SELECT doc_id, lang, CAST(rk % 16 AS INT) AS shard,
-              rk // 16 AS shard_pos
-            FROM r ORDER BY doc_id"""))
-
-  /** Per-shard data-card manifest over [[t31]]'s shuffle-shard layout —
-    * the accounting artifact a shipped corpus release carries: per shard
-    * the document count, total characters, and the per-language
-    * breakdown as a SORTED "lang:count" list (deterministic across
-    * engines; a map column would hash differently). Certifies both the
-    * round-robin balance (every shard the same size ±1) and that the
-    * manifest itself is reproducible. Two hash aggregations, no window. */
-  private val t34 = QueryDef("t34_shard_manifest",
-    (s, d) => {
-      val sharded = graft.operators.Sampling.shuffleShards(
-        Tables.documents(s, d).select("doc_id", "lang", "n_chars"),
-        col("doc_id"), 16)
-      sharded.groupBy("shard", "lang")
-        .agg(count(lit(1)).as("__n"), sum("n_chars").as("__ch"))
-        .groupBy("shard")
-        .agg(sum("__n").cast("long").as("n_docs"),
-          sum("__ch").cast("long").as("total_chars"),
-          array_join(sort_array(collect_list(
-            concat(col("lang"), lit(":"), col("__n")))), ",").as("lang_counts"))
-        .orderBy("shard")
-    },
-    Some("""WITH r AS (SELECT doc_id, lang, n_chars,
-                ROW_NUMBER() OVER (ORDER BY
-                  ('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-                     1, 15))::BIGINT, doc_id) - 1 AS rk
-              FROM documents),
-            sh AS (SELECT CAST(rk % 16 AS INT) AS shard, lang, n_chars FROM r),
-            bl AS (SELECT shard, lang, COUNT(*) AS n,
-                     CAST(SUM(n_chars) AS BIGINT) AS ch
-                   FROM sh GROUP BY 1, 2)
-            SELECT shard, CAST(SUM(n) AS BIGINT) AS n_docs,
-              CAST(SUM(ch) AS BIGINT) AS total_chars,
-              array_to_string(list_sort(list(lang || ':' || CAST(n AS VARCHAR))),
-                ',') AS lang_counts
-            FROM bl GROUP BY shard ORDER BY shard"""))
-
-  /** Temperature (alpha=0.5) mixture resampling
-    * (Sampling.temperatureResample): languages rebalanced toward
-    * q ∝ p^0.5 by keeping each at rate sqrt(n_min/n_d) through the
-    * deterministic epoch gate. The oracle re-derives the domain counts,
-    * the floor(1000·sqrt(n_min)/sqrt(n_d)) permille rates (a fixed tree
-    * of correctly-rounded IEEE ops — bit-identical cross-engine) and the
-    * md5 gate, so the exact surviving row set is certified. */
-  private val t33 = QueryDef("t33_temperature_resample",
-    (s, d) => graft.operators.Sampling.temperatureResample(
-        Tables.documents(s, d).select("doc_id", "lang"), "lang",
-        col("doc_id"))
-      .select("doc_id", "lang")
-      .orderBy("doc_id"),
-    Some("""WITH c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
-            mn AS (SELECT MIN(n) AS n0 FROM c),
-            r AS (SELECT lang, GREATEST(1, CAST(FLOOR(1000.0 *
-                    SQRT(CAST(n0 AS DOUBLE)) / SQRT(CAST(n AS DOUBLE)))
-                    AS INT)) AS pm
-                  FROM c, mn)
-            SELECT doc_id, lang FROM documents JOIN r USING (lang)
-            WHERE pm >= 1000
-               OR ('0x' || substring(md5(CAST(doc_id AS VARCHAR) || '#epoch'),
-                     1, 15))::BIGINT % 1000 < pm
-            ORDER BY doc_id"""))
-
-  private val q50 = QueryDef("q50_centroids",
-    (s, d) => Tables.embeddings(s, d)
-      .groupBy("label")
-      .agg(count(lit(1)).as("n"),
-        // + 0.0: zero-sign-normal (q22's rationale — a near-zero negative
-        // mean rounds to -0.0 in DuckDB, +0.0 in Spark)
-        (round(avg(element_at(col("embedding"), 1).cast("double")), 4)
-          + lit(0.0)).as("c0"),
-        (round(avg(element_at(col("embedding"), 32).cast("double")), 4)
-          + lit(0.0)).as("c31"),
-        (round(avg(element_at(col("embedding"), 64).cast("double")), 4)
-          + lit(0.0)).as("c63"))
-      .orderBy("label"),
-    Some("""SELECT label, COUNT(*) AS n,
-              ROUND(AVG(CAST(embedding[1] AS DOUBLE)), 4) + 0.0 AS c0,
-              ROUND(AVG(CAST(embedding[32] AS DOUBLE)), 4) + 0.0 AS c31,
-              ROUND(AVG(CAST(embedding[64] AS DOUBLE)), 4) + 0.0 AS c63
-            FROM embeddings GROUP BY label ORDER BY label"""))
-
-  // ------------------------------------------------------------- mwa domain
-
-  private val mwaPaths = Seq(
-    "/data/1234567890_20230101000000_gpubox01_00.fits",
-    "/data/1234567890_20230101000000_gpubox02_00.fits",
-    "/data/1234567890.metafits",
-    "/data/1234567891_20230101000100_ch133_00.fits",
-    "/data/1234567891.metafits")
-
-  private val mwaPathValues = mwaPaths.map(p => s"('$p')").mkString(", ")
-
-  private val mwa01 = QueryDef("mwa01_manifest",
-    (s, d) => graft.mwa.Manifest.groupByExtension(
-      graft.mwa.Manifest.fromPaths(s, mwaPaths))
-      .select(col("ext"), array_join(col("files"), "|").as("files"))
-      .orderBy("ext"),
-    // independent re-derivation of the grouping over the same literal paths
-    Some(s"""WITH f(file_path) AS (VALUES $mwaPathValues),
-             m AS (SELECT file_path,
-                     regexp_extract(file_path, '([^/]+)$$', 1) AS name FROM f),
-             e AS (SELECT file_path,
-                     regexp_extract(name, '\\.([^./]+)$$', 1) AS ext FROM m)
-             SELECT ext,
-               array_to_string(LIST(file_path ORDER BY file_path), '|') AS files
-             FROM e GROUP BY ext ORDER BY ext"""))
-
-  private val mwa02 = QueryDef("mwa02_validation",
-    (s, d) => graft.mwa.Validation.validateFileSet(s,
-      graft.mwa.Manifest.fromPaths(s, Seq(
-        "/d/111_gpubox01.fits", "/d/222_gpubox01.fits", "/d/222.metafits",
-        "/d/x.unknownext", "/d/a.uvfits", "/d/b.uvh5")),
-      graft.mwa.GraftConfig(selAnts = Seq(1), skipAnts = Seq(2)))
-      .orderBy("code"),
-    // expected violations for this fixed input, derived by hand from the
-    // reference's rules (configurators.py:136-185): obsids {111,x,a,b} lack
-    // metafits; sel+skip both set; 'unknownext' unsupported; uvfits+uvh5
-    Some("""SELECT * FROM (VALUES
-              ('metafits_missing_for_obsid', 'Metafits files are missing for some obsids.'),
-              ('sel_skip_conflict', 'Cannot specify both sel_ants and skip_ants.'),
-              ('unsupported_types', 'Unsupported file types found: unknownext'),
-              ('uvfits_uvh5_conflict', 'Cannot use both uvfits and uvh5 files.'))
-            AS t(code, message) ORDER BY code"""))
-
-  private val mwa03 = QueryDef("mwa03_ins_spectrum",
-    (s, d) => {
-      import graft.mwa._
-      val cfg = GraftConfig(removeFlaggedAnts = false)
-      VisOps.spectrum(VisGenerator.vis(s), cfg)
-        .select(col("time_idx"), col("freq_hz"), col("pol"),
-          round(col("metric"), 4).as("metric"), col("nsamples"),
-          round(col("z"), 4).as("z"))
-        .orderBy("pol", "time_idx", "freq_hz")
-    },
-    None, bench = true)
-
-  /** SSINS match filter on the portable fixture — BIT-EXACT oracle for the
-    * greedy iterate-to-fixpoint (the reference's signature algorithm,
-    * configurators.py:89-92). Exactness argument: metrics are dyadic
-    * rationals (sums exact, order-free), sqrt(nsamples)=sqrt(4)=2 exact,
-    * per-cell z is a single correctly-rounded division (identical bits in
-    * any IEEE engine), and the streak Stouffer sum — the only
-    * order-sensitive accumulation — is mirrored with a DuckDB
-    * `list_reduce` left fold over f-ascending terms, exactly the Scala
-    * accumulator order. The fixpoint itself is a recursive CTE carrying
-    * the full mask state; each step flags the single best event per
-    * (obsid,pol) group with the Scala scan-order tie-break
-    * (sig DESC, t, narrow-before-streak, f). tb_aggro=1/32 (dyadic) so the
-    * post-loop time broadcast fires on the narrow-flagged times, covering
-    * all three event kinds in one certified query. */
-  /** The mwa04 recursive-CTE oracle, shared verbatim with s06_stream_mf
-    * (the streaming execution of the same fixpoint must match the same SQL
-    * bit-for-bit). */
-  private val mwa04OracleBody: String = """WITH RECURSIVE
-            g AS (
-              SELECT CAST(t.range AS INT) AS time_idx, CAST(a.range AS INT) AS ant,
-                     CAST(f.range AS INT) AS freq_idx, p.pol AS pol, p.pi AS pi
-              FROM range(17) t, range(4) a, range(16) f,
-                   (VALUES ('XX', 0), ('YY', 1)) p(pol, pi)),
-            c AS (
-              SELECT time_idx, ant, freq_idx, pol,
-                ((ant*18 + freq_idx*3 + pi*17) % 64)
-                + CASE WHEN freq_idx = 5 AND time_idx BETWEEN 6 AND 9
-                       THEN 40.0 ELSE 0.0 END
-                + CASE WHEN time_idx = 12 THEN 60.0 ELSE 0.0 END
-                + ((time_idx*37 + ant*42 + freq_idx*53 + pi*71) % 128 - 64) / 64.0
-                  AS re
-              FROM g),
-            d AS (
-              SELECT time_idx, ant, freq_idx, pol,
-                LEAD(re) OVER (PARTITION BY ant, freq_idx, pol ORDER BY time_idx)
-                  - re AS dre
-              FROM c QUALIFY dre IS NOT NULL),
-            m AS (
-              SELECT time_idx AS t, freq_idx AS f, pol, AVG(ABS(dre)) AS metric
-              FROM d GROUP BY 1, 2, 3),
-            rec(iter, pol, t, f, flagged, event) AS (
-              SELECT 0, pol, t, f, false, '' FROM m
-              UNION ALL
-              (
-                WITH cur AS (SELECT * FROM rec),
-                mz AS (SELECT c.*, m.metric FROM cur c JOIN m USING (pol, t, f)),
-                st AS (SELECT pol, f,
-                         SUM(metric) FILTER (WHERE NOT flagged) /
-                         COUNT(*) FILTER (WHERE NOT flagged) AS mean
-                       FROM mz GROUP BY pol, f),
-                z AS (SELECT mz.pol, mz.t, mz.f, mz.flagged, mz.event,
-                        CASE WHEN NOT mz.flagged AND st.mean IS NOT NULL
-                                  AND st.mean <> 0
-                             THEN (mz.metric / st.mean - 1) * 2.0 END AS z
-                      FROM mz JOIN st USING (pol, f)),
-                cand AS (
-                  SELECT pol, z AS sig, 0 AS kind, t, f
-                  FROM z WHERE z IS NOT NULL AND z > 7.0
-                  UNION ALL
-                  SELECT * FROM (
-                    SELECT pol,
-                      list_reduce(list(z * 2.0 ORDER BY f), (a, b) -> a + b)
-                        / SQRT(4.0 * COUNT(z)) AS sig,
-                      1 AS kind, t, NULL::INT AS f
-                    FROM z WHERE z IS NOT NULL GROUP BY pol, t) s
-                  WHERE s.sig > 8.0),
-                best AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY pol
-                           ORDER BY sig DESC, t, kind, f NULLS LAST) AS rn
-                         FROM cand)
-                SELECT c.iter + 1, c.pol, c.t, c.f,
-                  c.flagged OR (b.kind = 0 AND c.t = b.t AND c.f = b.f)
-                            OR (b.kind = 1 AND c.t = b.t),
-                  CASE WHEN NOT c.flagged AND b.kind = 0 AND c.t = b.t
-                            AND c.f = b.f THEN 'narrow'
-                       WHEN NOT c.flagged AND b.kind = 1 AND c.t = b.t
-                            THEN 'streak'
-                       ELSE c.event END
-                FROM cur c JOIN best b ON b.pol = c.pol AND b.rn = 1
-              )
-            ),
-            fin AS (SELECT * FROM rec
-                    QUALIFY iter = MAX(iter) OVER (PARTITION BY pol)),
-            tb AS (SELECT pol, t, COUNT(*) FILTER (WHERE flagged) AS nf
-                   FROM fin GROUP BY pol, t),
-            outp AS (
-              SELECT fin.pol, fin.t, fin.f,
-                fin.flagged OR (tb.nf / 16.0 > 0.03125 AND tb.nf < 16) AS flagged,
-                CASE WHEN NOT fin.flagged AND tb.nf / 16.0 > 0.03125
-                          AND tb.nf < 16
-                     THEN 'time_broadcast' ELSE fin.event END AS event
-              FROM fin JOIN tb USING (pol, t))"""
-
-  private val mwa04Oracle: String = mwa04OracleBody + """
-            SELECT t AS time_idx, 130000000.0 + f * 40000.0 AS freq_hz, pol, event
-            FROM outp WHERE flagged ORDER BY pol, time_idx, freq_hz"""
-
-  private val mwa04 = QueryDef("mwa04_mf_flags",
-    (s, d) => {
-      import graft.mwa._
-      val spec = VisGenerator.Spec(nTimes = 17, nAnts = 4)
-      val cfg = GraftConfig(removeFlaggedAnts = false,
-        spectrumType = SpectrumType.Auto, tbAggro = 1.0 / 32)
-      // the SQL oracle hardcodes these fixture/config constants; a change
-      // to either side must fail HERE, not as an unexplained hash mismatch
-      require(spec.nTimes == 17 && spec.nAnts == 4 &&
-        spec.nCoarse * spec.nFine == 16 &&
-        spec.freq0Hz == 130000000.0 && spec.dfHz == 40000.0 &&
-        spec.rfiFreqIdx == 5 && spec.rfiTimes == (6, 9) &&
-        spec.rfiAmp == 40.0 && spec.streakTime == 12 && spec.streakAmp == 60.0 &&
-        cfg.narrow == 7.0 && cfg.streak == 8.0 && cfg.tbAggro == 0.03125,
-        "mwa04: Spec/GraftConfig constants drifted from the SQL oracle")
-      val insDf = VisOps.ins(VisOps.diff(
-        VisOps.selectSurface(VisGenerator.portable(s, spec), cfg)))
-      MatchFilter(insDf, cfg).filter(col("flagged"))
-        .select("time_idx", "freq_hz", "pol", "event")
-        .orderBy("pol", "time_idx", "freq_hz")
-    },
-    Some(mwa04Oracle))
-
-  /** Scale demonstration: the full SSINS chain on a ~5M-row generated
-    * observation (24 times x 16 ants (136 baselines) x 12 chans x 32 fine
-    * x 4 pols). Exercises generation parallelism, the channel-partitioned
-    * diff window and the early INS reduction at bench scale. */
-  private val mwa06 = QueryDef("mwa06_spectrum_big",
-    (s, d) => {
-      import graft.mwa._
-      val spec = VisGenerator.Spec(nTimes = 24, nAnts = 16, nCoarse = 12,
-        nFine = 32, pols = Seq("XX", "YY", "XY", "YX"))
-      val cfg = GraftConfig(removeFlaggedAnts = false)
-      VisOps.spectrum(VisGenerator.vis(s, spec), cfg)
-        .select(col("time_idx"), col("freq_hz"), col("pol"),
-          round(col("metric"), 4).as("metric"), col("nsamples"),
-          round(col("z"), 4).as("z"))
-        .orderBy("pol", "time_idx", "freq_hz")
-    },
-    None, bench = true)
-
-  /** Full read chain with the DATA-ESTIMATED coarse-band removal, certified
-    * bit-for-bit: flag_choice -> remove_coarse_band (template = mean
-    * unflagged amplitude per fine position, normalized to unit mean,
-    * divided out) -> Auto select -> diff -> INS -> z, on the portable
-    * bandpass fixture where every one of those steps is IEEE-exact (see
-    * VisGenerator.portableBandpass). The oracle re-runs the whole chain in
-    * SQL: same template estimation, same two divisions, same window diff
-    * and exact-sum reductions — no rounding anywhere. */
-  private val mwa07 = QueryDef("mwa07_readchain",
-    (s, d) => {
-      import graft.mwa._
-      val spec = VisGenerator.Spec(nTimes = 16, nAnts = 4)
-      val layout = ReadOps.FreqLayout(spec.freq0Hz, spec.dfHz, spec.nFine)
-      val cfg = GraftConfig(removeFlaggedAnts = false, removeCoarseBand = true,
-        flagInit = false, spectrumType = SpectrumType.Auto)
-      val read = ReadOps.readChain(VisGenerator.portableBandpass(s, spec), cfg, layout)
-      VisOps.spectrum(read, cfg)
-        .select(col("time_idx"), col("freq_hz"), col("pol"),
-          col("metric"), col("nsamples"), col("z"))
-        .orderBy("pol", "time_idx", "freq_hz")
-    },
-    Some("""WITH g AS (
-              SELECT CAST(t.range AS INT) AS t, CAST(a1.range AS INT) AS a1,
-                     CAST(a2.range AS INT) AS a2, CAST(f.range AS INT) AS f,
-                     p.pol AS pol, p.pi AS pi
-              FROM range(16) t, range(4) a1, range(4) a2, range(16) f,
-                   (VALUES ('XX', 0), ('YY', 1)) p(pol, pi)
-              WHERE a1.range <= a2.range),
-            vis AS (
-              SELECT t, a1, a2, f, pol,
-                (1 + ((f % 8) % 2) * 2) *
-                (2.0 + (CASE WHEN t % 2 = 0 THEN 1.0 ELSE -1.0 END)
-                         * (((a1*13 + a2*29 + pi*71) % 64) / 64.0)
-                     + CASE WHEN t = 12 THEN 60.0 ELSE 0.0 END) AS re
-              FROM g),
-            tmpl AS (SELECT f % 8 AS pos, AVG(ABS(re)) AS gain
-                     FROM vis GROUP BY 1),
-            mg AS (SELECT AVG(gain) AS m FROM tmpl),
-            corr AS (SELECT t, a1, a2, f, pol, re / (gain / m) AS re
-                     FROM vis JOIN tmpl ON tmpl.pos = vis.f % 8 CROSS JOIN mg),
-            autos AS (SELECT t, a1 AS ant, f, pol, re FROM corr WHERE a1 = a2),
-            d AS (SELECT t, ant, f, pol,
-                    LEAD(re) OVER (PARTITION BY ant, f, pol ORDER BY t) - re AS dre
-                  FROM autos QUALIFY dre IS NOT NULL),
-            i AS (SELECT t, f, pol, AVG(ABS(dre)) AS metric,
-                    CAST(COUNT(*) AS DOUBLE) AS nsamples
-                  FROM d GROUP BY 1, 2, 3)
-            SELECT t AS time_idx, 130000000.0 + f * 40000.0 AS freq_hz, pol,
-              metric, nsamples,
-              (metric / AVG(metric) OVER (PARTITION BY f, pol) - 1)
-                * SQRT(nsamples) AS z
-            FROM i ORDER BY pol, time_idx, freq_hz"""))
-
-  private val mwa05 = QueryDef("mwa05_observations",
-    (s, d) => graft.mwa.Manifest.observations(
-      graft.mwa.Manifest.fromPaths(s, mwaPaths))
-      .select(col("obsid"), array_join(col("fits_files"), "|").as("fits_files"),
-        col("metafits_stem"))
-      .orderBy("obsid"),
-    Some(s"""WITH f(file_path) AS (VALUES $mwaPathValues),
-             m AS (SELECT file_path,
-                     regexp_extract(file_path, '([^/]+)$$', 1) AS name FROM f),
-             e AS (SELECT file_path,
-                     regexp_extract(name, '\\.([^./]+)$$', 1) AS ext,
-                     regexp_replace(name, '\\.[^.]*$$', '') AS stem FROM m),
-             o AS (SELECT file_path, ext, stem,
-                     split_part(stem, '_', 1) AS obsid FROM e),
-             fits AS (SELECT obsid,
-                        array_to_string(LIST(file_path ORDER BY file_path), '|')
-                          AS fits_files
-                      FROM o WHERE ext = 'fits' GROUP BY obsid),
-             meta AS (SELECT obsid, arg_min(stem, file_path) AS metafits_stem
-                      FROM o WHERE ext = 'metafits' GROUP BY obsid)
-             SELECT fits.obsid, fits_files, metafits_stem
-             FROM fits LEFT JOIN meta USING (obsid) ORDER BY obsid"""))
-
-  /** Portable-arithmetic full chain (select Auto -> diff -> INS -> z) whose
-    * values are dyadic rationals — every downstream sum is IEEE-exact and
-    * order-independent, so the DuckDB oracle reproduces the spectrum
-    * BIT-FOR-BIT with no rounding anywhere (see VisGenerator.portable). */
-  /** The mwa08 oracle, shared verbatim with mwa13_spectrum_tsv (the TSV
-    * export of the same view must round-trip bit-exactly). */
-  private val mwa08Oracle: String = """WITH g AS (
-              SELECT CAST(t.range AS INT) AS time_idx, CAST(a.range AS INT) AS ant,
-                     CAST(f.range AS INT) AS freq_idx, p.pol AS pol, p.pi AS pi
-              FROM range(17) t, range(16) a, range(16) f,
-                   (VALUES ('XX', 0), ('YY', 1)) p(pol, pi)),
-            c AS (
-              SELECT time_idx, ant, freq_idx, pol,
-                ((ant*18 + freq_idx*3 + pi*17) % 64)
-                + CASE WHEN freq_idx = 5 AND time_idx BETWEEN 6 AND 9
-                       THEN 40.0 ELSE 0.0 END
-                + CASE WHEN time_idx = 12 THEN 60.0 ELSE 0.0 END
-                + ((time_idx*37 + ant*42 + freq_idx*53 + pi*71) % 128 - 64) / 64.0
-                  AS re
-              FROM g),
-            d AS (
-              SELECT time_idx, ant, freq_idx, pol,
-                LEAD(re) OVER (PARTITION BY ant, freq_idx, pol ORDER BY time_idx)
-                  - re AS dre
-              FROM c QUALIFY dre IS NOT NULL),
-            i AS (
-              SELECT time_idx, freq_idx, pol, AVG(ABS(dre)) AS metric,
-                     CAST(COUNT(*) AS DOUBLE) AS nsamples
-              FROM d GROUP BY time_idx, freq_idx, pol)
-            SELECT time_idx, 130000000.0 + freq_idx * 40000.0 AS freq_hz, pol,
-              metric, nsamples,
-              (metric / AVG(metric) OVER (PARTITION BY freq_idx, pol) - 1)
-                * SQRT(nsamples) AS z
-            FROM i ORDER BY pol, time_idx, freq_hz"""
-
-  private val mwa08 = QueryDef("mwa08_portable_spectrum",
-    (s, d) => {
-      import graft.mwa._
-      val cfg = GraftConfig(removeFlaggedAnts = false,
-        spectrumType = SpectrumType.Auto)
-      VisOps.spectrum(VisGenerator.portable(s), cfg)
-        .select(col("time_idx"), col("freq_hz"), col("pol"),
-          col("metric"), col("nsamples"), col("z"))
-        .orderBy("pol", "time_idx", "freq_hz")
-    },
-    Some(mwa08Oracle))
-
-  /** Same portable chain with flag_init in front (coarse-band edge/center
-    * channels + first integration flagged): certifies flag propagation
-    * through diff (OR), the INS unflagged-only aggregation and the
-    * zscore's null handling — still bit-exact, flags only remove terms
-    * from exact sums. */
-  private val mwa09 = QueryDef("mwa09_portable_flaginit",
-    (s, d) => {
-      import graft.mwa._
-      val spec = VisGenerator.Spec(nTimes = 17, nAnts = 16)
-      val layout = ReadOps.FreqLayout(spec.freq0Hz, spec.dfHz, spec.nFine)
-      val cfg = GraftConfig(removeFlaggedAnts = false,
-        spectrumType = SpectrumType.Auto)
-      VisOps.spectrum(ReadOps.flagInit(VisGenerator.portable(s, spec), layout), cfg)
-        .select(col("time_idx"), col("freq_hz"), col("pol"),
-          col("metric"), col("nsamples"), col("z"))
-        .orderBy("pol", "time_idx", "freq_hz")
-    },
-    Some("""WITH g AS (
-              SELECT CAST(t.range AS INT) AS time_idx, CAST(a.range AS INT) AS ant,
-                     CAST(f.range AS INT) AS freq_idx, p.pol AS pol, p.pi AS pi
-              FROM range(17) t, range(16) a, range(16) f,
-                   (VALUES ('XX', 0), ('YY', 1)) p(pol, pi)),
-            c AS (
-              SELECT time_idx, ant, freq_idx, pol,
-                ((ant*18 + freq_idx*3 + pi*17) % 64)
-                + CASE WHEN freq_idx = 5 AND time_idx BETWEEN 6 AND 9
-                       THEN 40.0 ELSE 0.0 END
-                + CASE WHEN time_idx = 12 THEN 60.0 ELSE 0.0 END
-                + ((time_idx*37 + ant*42 + freq_idx*53 + pi*71) % 128 - 64) / 64.0
-                  AS re,
-                ((freq_idx % 8) IN (0, 4, 7)) OR time_idx < 1 AS fl
-              FROM g),
-            d AS (
-              SELECT time_idx, ant, freq_idx, pol,
-                LEAD(re) OVER w - re AS dre,
-                fl OR LEAD(fl) OVER w AS dfl
-              FROM c WINDOW w AS (PARTITION BY ant, freq_idx, pol ORDER BY time_idx)
-              QUALIFY dre IS NOT NULL),
-            i AS (
-              SELECT time_idx, freq_idx, pol,
-                AVG(CASE WHEN NOT dfl THEN ABS(dre) END) AS metric,
-                SUM(CASE WHEN NOT dfl THEN 1.0 ELSE 0.0 END) AS nsamples
-              FROM d GROUP BY time_idx, freq_idx, pol)
-            SELECT time_idx, 130000000.0 + freq_idx * 40000.0 AS freq_hz, pol,
-              metric, nsamples,
-              (metric / AVG(metric) OVER (PARTITION BY freq_idx, pol) - 1)
-                * SQRT(nsamples) AS z
-            FROM i ORDER BY pol, time_idx, freq_hz"""))
-
-  /** Real FITS binary decode, certified row-by-row: the fixture is written
-    * as standard gpubox-shaped FITS (2880-byte records, one BINTABLE HDU
-    * per integration, big-endian doubles — Fits.writeVis) carrying the
-    * portable fixture's dyadic values, read back through the DSv2 source's
-    * (file, time-slice) partition planning, and every decoded cell is
-    * matched against the oracle's independent re-derivation of the same
-    * arithmetic. IEEE doubles round-trip big-endian encoding bit-exactly,
-    * so any header-walk, offset, or endianness defect breaks the hash. */
-  private val mwa10 = QueryDef("mwa10_fits_read",
-    (s, d) => {
-      val dir = graft.mwa.Fits.ensureFixture()
-      s.read.format("graft-vis").option("path", dir).load()
-        .select(col("time_idx"), col("ant1"), col("ant2"), col("freq_hz"),
-          col("pol"), col("vis_re"), col("vis_im"), col("flag"), col("nsample"))
-        .orderBy("pol", "time_idx", "ant1", "ant2", "freq_hz")
-    },
-    Some("""WITH g AS (
-              SELECT CAST(t.range AS INT) AS time_idx, CAST(a1.range AS INT) AS ant1,
-                     CAST(a2.range AS INT) AS ant2, CAST(f.range AS INT) AS f,
-                     p.pol AS pol, p.pi AS pi
-              FROM range(17) t, range(4) a1, range(4) a2, range(16) f,
-                   (VALUES ('XX', 0), ('YY', 1)) p(pol, pi)
-              WHERE a1.range <= a2.range)
-            SELECT time_idx, ant1, ant2,
-              130000000.0 + f * 40000.0 AS freq_hz, pol,
-              ((ant1*7 + ant2*11 + f*3 + pi*17) % 64)
-              + CASE WHEN f = 5 AND time_idx BETWEEN 6 AND 9
-                     THEN 40.0 ELSE 0.0 END
-              + CASE WHEN time_idx = 12 THEN 60.0 ELSE 0.0 END
-              + ((time_idx*37 + ant1*13 + ant2*29 + f*53 + pi*71) % 128 - 64)
-                / 64.0 AS vis_re,
-              0.0 AS vis_im, false AS flag, 1.0 AS nsample
-            FROM g ORDER BY pol, time_idx, ant1, ant2, freq_hz"""))
-
-  /** Van Vleck arcsine-law correction certified row-by-row: every corrected
-    * cross is sin(pi/2 * clamp(c/sqrt(p1*p2))) * sqrt(p1*p2) with the autos
-    * looked up by (time, freq, pol, ant). The oracle mirrors the exact
-    * operation order — products/sqrt/divisions are single correctly-rounded
-    * ops, and the sine is the engine's portable Horner kernel
-    * (ArrayExprs.sinKernel) written out verbatim in SQL, so the comparison
-    * is bit-exact BY CONSTRUCTION (libm sin differs between glibc and
-    * fdlibm by 1 ulp on this very fixture; a SIN() call could never
-    * certify). Autos and non-positive-power rows pass through raw. */
-  private val mwa11 = QueryDef("mwa11_vanvleck",
-    (s, d) => {
-      import graft.mwa._
-      val spec = VisGenerator.Spec(nTimes = 17, nAnts = 4)
-      ReadOps.correctVanVleck(VisGenerator.portable(s, spec))
-        .select(col("time_idx"), col("ant1"), col("ant2"), col("freq_hz"),
-          col("pol"), col("vis_re"), col("vis_im"))
-        .orderBy("pol", "time_idx", "ant1", "ant2", "freq_hz")
-    },
-    Some("""WITH g AS (
-              SELECT CAST(t.range AS INT) AS time_idx, CAST(a1.range AS INT) AS ant1,
-                     CAST(a2.range AS INT) AS ant2, CAST(f.range AS INT) AS f,
-                     p.pol AS pol, p.pi AS pi
-              FROM range(17) t, range(4) a1, range(4) a2, range(16) f,
-                   (VALUES ('XX', 0), ('YY', 1)) p(pol, pi)
-              WHERE a1.range <= a2.range),
-            c AS (
-              SELECT time_idx, ant1, ant2, f, pol,
-                ((ant1*7 + ant2*11 + f*3 + pi*17) % 64)
-                + CASE WHEN f = 5 AND time_idx BETWEEN 6 AND 9
-                       THEN 40.0 ELSE 0.0 END
-                + CASE WHEN time_idx = 12 THEN 60.0 ELSE 0.0 END
-                + ((time_idx*37 + ant1*13 + ant2*29 + f*53 + pi*71) % 128 - 64)
-                  / 64.0 AS re
-              FROM g),
-            p AS (SELECT time_idx, ant1 AS ant, f, pol, re AS p
-                  FROM c WHERE ant1 = ant2),
-            j AS (SELECT c.time_idx, c.ant1, c.ant2, c.f, c.pol, c.re,
-                    CASE WHEN p1.p > 0 AND p2.p > 0
-                         THEN SQRT(p1.p * p2.p) END AS norm,
-                    c.ant1 <> c.ant2 AND p1.p > 0 AND p2.p > 0 AS ok
-                  FROM c
-                  LEFT JOIN p p1 ON p1.time_idx = c.time_idx AND p1.f = c.f
-                    AND p1.pol = c.pol AND p1.ant = c.ant1
-                  LEFT JOIN p p2 ON p2.time_idx = c.time_idx AND p2.f = c.f
-                    AND p2.pol = c.pol AND p2.ant = c.ant2),
-            xx AS (SELECT *,
-                     PI()/2 * GREATEST(-1.0, LEAST(1.0, re / norm)) AS x
-                   FROM j),
-            yy AS (SELECT *, x*x AS y FROM xx)
-            SELECT time_idx, ant1, ant2,
-              130000000.0 + f * 40000.0 AS freq_hz, pol,
-              CASE WHEN ok THEN
-                (x * (1.0 + y*(-1.0/6.0 + y*(1.0/120.0 + y*(-1.0/5040.0 +
-                 y*(1.0/362880.0 + y*(-1.0/39916800.0 + y*(1.0/6227020800.0 +
-                 y*(-1.0/1307674368000.0 + y*(1.0/355687428096000.0 +
-                 y*(-1.0/121645100408832000.0 +
-                 y*(1.0/51090942171709440000.0)))))))))))) * norm
-              ELSE re END AS vis_re,
-              0.0 AS vis_im
-            FROM yy
-            ORDER BY pol, time_idx, ant1, ant2, freq_hz"""))
-
-  /** uvfits (FITS random-groups) decode, certified row-by-row: the fixture
-    * is a single standard random-groups file (GROUPS=T, PCOUNT=5 UU/VV/WW/
-    * BASELINE/DATE params, float32 (re,im,wt)×pol×freq group arrays, AIPS
-    * 256*a1+a2 baseline code — the reference's second input family,
-    * `configurators.py:43-48` via pyuvdata) carrying the same dyadic values
-    * as the mwa10 gpubox fixture, so it shares mwa10's oracle verbatim.
-    * Every value is exactly representable in float32, so any group-offset,
-    * parameter-unpack, or axis-order defect breaks the hash. */
-  private val mwa12 = QueryDef("mwa12_uvfits_read",
-    (s, d) => {
-      val dir = graft.mwa.Fits.Uvfits.ensureFixture()
-      s.read.format("graft-vis").option("path", dir).load()
-        .select(col("time_idx"), col("ant1"), col("ant2"), col("freq_hz"),
-          col("pol"), col("vis_re"), col("vis_im"), col("flag"), col("nsample"))
-        .orderBy("pol", "time_idx", "ant1", "ant2", "freq_hz")
-    },
-    Some("""WITH g AS (
-              SELECT CAST(t.range AS INT) AS time_idx, CAST(a1.range AS INT) AS ant1,
-                     CAST(a2.range AS INT) AS ant2, CAST(f.range AS INT) AS f,
-                     p.pol AS pol, p.pi AS pi
-              FROM range(17) t, range(4) a1, range(4) a2, range(16) f,
-                   (VALUES ('XX', 0), ('YY', 1)) p(pol, pi)
-              WHERE a1.range <= a2.range)
-            SELECT time_idx, ant1, ant2,
-              130000000.0 + f * 40000.0 AS freq_hz, pol,
-              ((ant1*7 + ant2*11 + f*3 + pi*17) % 64)
-              + CASE WHEN f = 5 AND time_idx BETWEEN 6 AND 9
-                     THEN 40.0 ELSE 0.0 END
-              + CASE WHEN time_idx = 12 THEN 60.0 ELSE 0.0 END
-              + ((time_idx*37 + ant1*13 + ant2*29 + f*53 + pi*71) % 128 - 64)
-                / 64.0 AS vis_re,
-              0.0 AS vis_im, false AS flag, 1.0 AS nsample
-            FROM g ORDER BY pol, time_idx, ant1, ant2, freq_hz"""))
-
-  /** uvh5 (HDF5) decode, certified row-by-row: the fixture is a minimal
-    * standard HDF5 file (v0 superblock, symbol-table groups, contiguous
-    * layout — `mwa/Hdf5.scala`) with the uvh5 /Header + /Data shape
-    * (blt-major complex64 visdata, AIPS pol codes — the reference's third
-    * input family via pyuvdata's UVH5 reader, `configurators.py:43-48`),
-    * carrying the same dyadic values as the gpubox/uvfits fixtures, so it
-    * shares mwa10's oracle verbatim. Any defect in the B-tree walk, heap
-    * name resolution, datatype parse, or blt/freq/pol axis order breaks
-    * the hash. */
-  private val mwa16 = QueryDef("mwa16_uvh5_read",
-    (s, d) => {
-      val dir = graft.mwa.Uvh5.ensureFixture()
-      s.read.format("graft-vis").option("path", dir).load()
-        .select(col("time_idx"), col("ant1"), col("ant2"), col("freq_hz"),
-          col("pol"), col("vis_re"), col("vis_im"), col("flag"), col("nsample"))
-        .orderBy("pol", "time_idx", "ant1", "ant2", "freq_hz")
-    },
-    Some("""WITH g AS (
-              SELECT CAST(t.range AS INT) AS time_idx, CAST(a1.range AS INT) AS ant1,
-                     CAST(a2.range AS INT) AS ant2, CAST(f.range AS INT) AS f,
-                     p.pol AS pol, p.pi AS pi
-              FROM range(17) t, range(4) a1, range(4) a2, range(16) f,
-                   (VALUES ('XX', 0), ('YY', 1)) p(pol, pi)
-              WHERE a1.range <= a2.range)
-            SELECT time_idx, ant1, ant2,
-              130000000.0 + f * 40000.0 AS freq_hz, pol,
-              ((ant1*7 + ant2*11 + f*3 + pi*17) % 64)
-              + CASE WHEN f = 5 AND time_idx BETWEEN 6 AND 9
-                     THEN 40.0 ELSE 0.0 END
-              + CASE WHEN time_idx = 12 THEN 60.0 ELSE 0.0 END
-              + ((time_idx*37 + ant1*13 + ant2*29 + f*53 + pi*71) % 128 - 64)
-                / 64.0 AS vis_re,
-              0.0 AS vis_im, false AS flag, 1.0 AS nsample
-            FROM g ORDER BY pol, time_idx, ant1, ant2, freq_hz"""))
-
-  /** The reference's `export_tsv` path (`configurators.py:97`): write the
-    * plot-shaped view as TSV, read it back with an explicit schema — so
-    * the oracle certifies the serialization round-trip (including double
-    * shortest-repr round-tripping), not just the computation. */
-  private def tsvRoundTrip(s: SparkSession, df: DataFrame,
-                           schema: String, tag: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_").toString
-    df.write.mode("overwrite").option("sep", "\t").csv(dir)
-    // pin the read-back, then remove the staging dir: repeated
-    // verify/bench runs leave /tmp flat
-    val back = s.read.schema(schema).option("sep", "\t").csv(dir)
-      .localCheckpoint(true)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    back
+  /** A partition count derived from `df`'s plan-time size estimate: one
+    * per ~8 MB, at least 4, capped by the session's
+    * `spark.sql.shuffle.partitions` so the cluster conf governs at scale. */
+  private[queries] def sizedPartitions(s: SparkSession, df: DataFrame): Int = {
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val cap = s.conf.get("spark.sql.shuffle.partitions").toLong
+    math.min(cap, math.max(4L, (bytes / (8L << 20)).toLong + 1L)).toInt
   }
 
-  /** `plot_type="spectrum"` export view (`configurators.py:94-97`): the
-    * tidy (time, freq, pol, metric, nsamples, z) INS z-score spectrum —
-    * exactly what the reference plots/exports after the SSINS chain —
-    * through the TSV sink and back. Shares mwa08's oracle verbatim, so a
-    * hash match certifies the chain AND the TSV round-trip. */
-  private val mwa13 = QueryDef("mwa13_spectrum_tsv",
-    (s, d) => {
-      import graft.mwa._
-      val cfg = GraftConfig(removeFlaggedAnts = false,
-        spectrumType = SpectrumType.Auto)
-      val view = VisOps.spectrum(VisGenerator.portable(s), cfg)
-        .select(col("time_idx"), col("freq_hz"), col("pol"),
-          col("metric"), col("nsamples"), col("z"))
-      tsvRoundTrip(s, view,
-        "time_idx INT, freq_hz DOUBLE, pol STRING, metric DOUBLE, nsamples DOUBLE, z DOUBLE",
-        "mwa13")
-        .orderBy("pol", "time_idx", "freq_hz")
-    },
-    Some(mwa08Oracle))
-
-  /** `plot_type="sigchain"` export view: per-signal-chain (antenna) mean
-    * amplitude spectrum over the diffed data — each visibility attributed
-    * to both its antennas, reduced per (ant, freq, pol) — through the TSV
-    * sink. The oracle re-derives the per-antenna reduction independently. */
-  private val mwa14 = QueryDef("mwa14_sigchain_tsv",
-    (s, d) => {
-      import graft.mwa._
-      val cfg = GraftConfig(removeFlaggedAnts = false,
-        spectrumType = SpectrumType.Auto)
-      val view = VisOps.sigchainSpectrum(
-          VisOps.diff(VisOps.selectSurface(VisGenerator.portable(s), cfg)))
-        .select(col("ant"), col("freq_hz"), col("pol"),
-          col("metric"), col("nsamples"))
-      tsvRoundTrip(s, view,
-        "ant INT, freq_hz DOUBLE, pol STRING, metric DOUBLE, nsamples DOUBLE",
-        "mwa14")
-        .orderBy("pol", "ant", "freq_hz")
-    },
-    Some("""WITH g AS (
-              SELECT CAST(t.range AS INT) AS time_idx, CAST(a.range AS INT) AS ant,
-                     CAST(f.range AS INT) AS freq_idx, p.pol AS pol, p.pi AS pi
-              FROM range(17) t, range(16) a, range(16) f,
-                   (VALUES ('XX', 0), ('YY', 1)) p(pol, pi)),
-            c AS (
-              SELECT time_idx, ant, freq_idx, pol,
-                ((ant*18 + freq_idx*3 + pi*17) % 64)
-                + CASE WHEN freq_idx = 5 AND time_idx BETWEEN 6 AND 9
-                       THEN 40.0 ELSE 0.0 END
-                + CASE WHEN time_idx = 12 THEN 60.0 ELSE 0.0 END
-                + ((time_idx*37 + ant*42 + freq_idx*53 + pi*71) % 128 - 64) / 64.0
-                  AS re
-              FROM g)
-            SELECT ant, 130000000.0 + freq_idx * 40000.0 AS freq_hz, pol,
-              AVG(ABS(dre)) AS metric, CAST(COUNT(*) AS DOUBLE) AS nsamples
-            FROM (
-              SELECT time_idx, ant, freq_idx, pol,
-                LEAD(re) OVER (PARTITION BY ant, freq_idx, pol ORDER BY time_idx)
-                  - re AS dre
-              FROM c QUALIFY dre IS NOT NULL)
-            GROUP BY ant, freq_idx, pol
-            ORDER BY pol, ant, freq_hz"""))
-
-  /** `plot_type="flags"` export view: the FULL match-filter mask (every
-    * cell, flagged or not, with its event kind) in tidy form through the
-    * TSV sink — the boolean occupancy grid the reference's flags plot
-    * renders. Shares mwa04's recursive-CTE oracle body; only the final
-    * projection differs (no WHERE flagged, `none` for unflagged cells so
-    * the empty string survives the CSV round-trip unambiguously). */
-  private val mwa15 = QueryDef("mwa15_flags_tsv",
-    (s, d) => {
-      import graft.mwa._
-      val spec = VisGenerator.Spec(nTimes = 17, nAnts = 4)
-      val cfg = GraftConfig(removeFlaggedAnts = false,
-        spectrumType = SpectrumType.Auto, tbAggro = 1.0 / 32)
-      val insDf = VisOps.ins(VisOps.diff(
-        VisOps.selectSurface(VisGenerator.portable(s, spec), cfg)))
-      val view = MatchFilter(insDf, cfg)
-        .select(col("time_idx"), col("freq_hz"), col("pol"), col("flagged"),
-          when(col("event") === "", "none").otherwise(col("event")).as("event"))
-      tsvRoundTrip(s, view,
-        "time_idx INT, freq_hz DOUBLE, pol STRING, flagged BOOLEAN, event STRING",
-        "mwa15")
-        .orderBy("pol", "time_idx", "freq_hz")
-    },
-    Some(mwa04OracleBody + """
-            SELECT t AS time_idx, 130000000.0 + f * 40000.0 AS freq_hz, pol,
-              flagged, CASE WHEN event = '' THEN 'none' ELSE event END AS event
-            FROM outp ORDER BY pol, time_idx, freq_hz"""))
-
-  // --------------------------------------------------------- multimodal [EXT]
-
-  private val m01 = QueryDef("m01_multimodal_stats",
-    (s, d) => graft.multimodal.Multimodal.modalityStats(
-      graft.multimodal.Multimodal.generate(s, 200)).orderBy("modality"),
-    // metadata-only stats never touch the payload, so the oracle re-derives
-    // them from the generator's arithmetic: modality = id%3, payload length
-    // = 64 + id%64, width = 32 + (id%4)*16, frames = 8 for video else 1
-    Some("""WITH m AS (
-              SELECT r.range AS id,
-                CASE CAST(r.range % 3 AS INT) WHEN 0 THEN 'image'
-                     WHEN 1 THEN 'audio' ELSE 'video' END AS modality
-              FROM range(200) r)
-            SELECT modality, COUNT(*) AS n,
-              CAST(SUM(64 + id % 64) AS BIGINT) AS total_bytes,
-              CAST(MAX(32 + (id % 4) * 16) AS INT) AS max_width,
-              CAST(SUM(CASE WHEN modality = 'video' THEN 8 ELSE 1 END) AS BIGINT)
-                AS total_frames
-            FROM m GROUP BY modality ORDER BY modality"""))
-
-  private val m02 = QueryDef("m02_media_features",
-    (s, d) => {
-      import graft.multimodal.Multimodal._
-      extractFeatures(generate(s, 100), dim = 8).toDF()
-        .select(col("media_id"), col("modality"),
-          round(element_at(col("feature"), 1).cast("double"), 4).as("f0"),
-          round(element_at(col("feature"), 8).cast("double"), 4).as("f7"))
-        .orderBy("media_id")
-    },
-    // the stub codec is portable arithmetic (see Multimodal.StubCodec):
-    // byte j = (id*131 + j*31) % 256 - 128, S = sum of unsigned bytes
-    // (= raw+128 mod 256), K = S + id*997, feature i =
-    // float((K*(2i+3) + (K div 1000)*(7i+1)) % 1000 / 1000.0)
-    Some("""WITH m AS (
-              SELECT r.range AS id,
-                CASE CAST(r.range % 3 AS INT) WHEN 0 THEN 'image'
-                     WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
-                list_sum(list_transform(range(64 + r.range % 64),
-                  j -> (r.range*131 + j*31 + 128) % 256)) + r.range*997 AS k
-              FROM range(100) r)
-            SELECT id AS media_id, modality,
-              ROUND(CAST(CAST((k * 3 + (k // 1000) * 1) % 1000 / 1000.0 AS REAL)
-                AS DOUBLE), 4) AS f0,
-              ROUND(CAST(CAST((k * 17 + (k // 1000) * 50) % 1000 / 1000.0 AS REAL)
-                AS DOUBLE), 4) AS f7
-            FROM m ORDER BY media_id"""))
-
-  /** Perceptual-hash media near-dup (Multimodal.perceptualDupPairs):
-    * aHash over the stub-decoded payload, multi-index pigeonhole
-    * candidates over maxHamming+1 = 9 near-equal chunks (one 8-bit +
-    * eight 7-bit — COMPLETE for hamming <= 8, unlike round 7's 4x16
-    * chunking which only guaranteed <= 3), exact Hamming verify. The
-    * fixture is the md5-payload generator plus planted exact re-uploads
-    * (ids+10000) and one-byte-perturbed re-encodes (ids+20000) — the
-    * oracle re-derives every payload byte, the mean-threshold bits, the
-    * 9-chunk collisions and the Hamming distances, so the pair set
-    * (clones at 0, re-encodes at 0-3 bits, plus any true <=8 background
-    * pair) is certified end to end. */
-  private val m03 = QueryDef("m03_media_neardup",
-    (s, d) => {
-      import graft.multimodal.Multimodal._
-      import s.implicits._
-      val base = generateHashed(s, 200)
-      val clones = base.filter(_.media_id < 8)
-        .map(r => r.copy(media_id = r.media_id + 10000))
-      val reenc = base.filter(_.media_id < 8).map { r =>
-        val b = r.bytes.clone()
-        b(0) = (((b(0) & 0xFF) + 200) % 256).toByte
-        r.copy(media_id = r.media_id + 20000, bytes = b)
-      }
-      perceptualDupPairs(base.union(clones).union(reenc))
-        .orderBy("id_a", "id_b")
-    },
-    Some("""WITH ids AS (SELECT r.range AS id, r.range AS bid, 0 AS pert
-                         FROM range(200) r
-                         UNION ALL SELECT r.range + 10000, r.range, 0 FROM range(8) r
-                         UNION ALL SELECT r.range + 20000, r.range, 1 FROM range(8) r),
-            px AS (SELECT id, list_transform(range(64), j ->
-                     CASE WHEN pert = 1 AND j = 0
-                       THEN (('0x' || substring(md5(CAST(bid AS VARCHAR) || ':0'),
-                               1, 2))::INT + 200) % 256
-                       ELSE ('0x' || substring(md5(CAST(bid AS VARCHAR) || ':' ||
-                               CAST(j AS VARCHAR)), 1, 2))::INT
-                     END) AS p FROM ids),
-            hb AS (SELECT id, p, list_sum(p) AS s FROM px),
-            bits AS (SELECT id, list_transform(range(64),
-                       j -> CASE WHEN p[j+1]*64 > s THEN 1 ELSE 0 END) AS b
-                     FROM hb),
-            h AS (SELECT id, CAST(list_sum(list_transform(range(64),
-                    j -> CASE WHEN j = 63
-                           THEN b[64]::BIGINT * (-9223372036854775808)
-                         ELSE b[j+1]::BIGINT << CAST(j AS INT) END)) AS BIGINT)
-                    AS ah FROM bits),
-            ch AS (SELECT id, ah, c.range AS c,
-                    (ah >> CAST(c.range * 7 + LEAST(c.range, 1) AS INT)) &
-                      (CASE WHEN c.range = 0 THEN 255 ELSE 127 END) AS v
-                   FROM h, range(9) c),
-            cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-                     FROM ch a JOIN ch b
-                       ON a.c = b.c AND a.v = b.v AND a.id < b.id)
-            SELECT cand.id_a, cand.id_b,
-              CAST(bit_count(xor(x.ah, y.ah)) AS INTEGER) AS hamming
-            FROM cand JOIN h x ON x.id = cand.id_a
-                      JOIN h y ON y.id = cand.id_b
-            WHERE bit_count(xor(x.ah, y.ah)) <= 8
-            ORDER BY id_a, id_b"""))
-
-  // ------------------------------------------------- time display (C10/GPS)
-
-  private val e01 = QueryDef("e01_time_display",
-    (s, d) => Tables.events(s, d).select(
-      col("event_id"),
-      date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSS").as("iso"),
-      // no ROUND on these: both engines evaluate the identical IEEE-double
-      // expression in the same operation order, so raw bits match exactly —
-      // while ROUND(x, 6) on 16-significant-digit values actually
-      // INTRODUCES engine-dependent ulp-boundary differences
-      col("ts").cast("timestamp").cast("double").as("unix"),
-      (col("ts").cast("timestamp").cast("double") / lit(86400.0) +
-        lit(2440587.5)).as("jd"),
-      graft.functions.GpsTime.gps_seconds(col("ts")).as("gps"))
-      .orderBy("event_id"),
-    Some("""SELECT event_id,
-              strftime(ts, '%Y-%m-%dT%H:%M:%S.%g') AS iso,
-              epoch_us(ts)/1000000.0 AS unix,
-              epoch_us(ts)/1000000.0/86400.0 + 2440587.5 AS jd,
-              epoch_us(ts)/1000000.0 - 315964800 + 18 AS gps
-            FROM events ORDER BY event_id"""))
-
-  /** Time-series resampling to a 6-hour grid with LOCF. Values are
-    * carried verbatim (no arithmetic), so the oracle's correlated
-    * latest-at-or-before lookup matches exactly; the equal-timestamp
-    * tie-break (max event_id) is pinned on both sides. */
-  private val e02 = QueryDef("e02_resample_locf",
-    (s, d) => RelationalOps.resampleLocf(Tables.events(s, d),
-        "user_id", "ts", "value", stepHours = 6, tieBreak = "event_id")
-      .select(col("user_id"), col("grid_ts"), col("locf"))
-      .orderBy("user_id", "grid_ts"),
-    Some("""WITH b AS (SELECT user_id,
-                 CAST(DATE_TRUNC('hour', MIN(ts)) AS TIMESTAMP) AS t0,
-                 CAST(MAX(ts) AS TIMESTAMP) AS t1
-               FROM events GROUP BY user_id),
-            grid AS (SELECT user_id,
-                 UNNEST(generate_series(t0, t1, INTERVAL 6 HOUR)) AS grid_ts
-               FROM b)
-            SELECT g.user_id, g.grid_ts,
-              (SELECT e.value FROM events e
-               WHERE e.user_id = g.user_id AND e.ts <= g.grid_ts
-               ORDER BY e.ts DESC, e.event_id DESC LIMIT 1) AS locf
-            FROM grid g ORDER BY g.user_id, g.grid_ts"""))
-
-  /** Linear-interpolation resampling (RelationalOps.resampleLerp): e02's
-    * grid valued on the line between the bracketing events, in EXACT
-    * integer centi-unit/epoch-microsecond arithmetic with floor division
-    * (the portable contract — Spark `div` truncates, other engines'
-    * `//` floors, and they disagree on negative slopes). The oracle
-    * re-derives both bracketing picks (same tie-breaks as the operator's
-    * dedup) and the integer lerp, so every interpolated value is
-    * hash-compared — including the NULL head and the carry-forward
-    * tail. */
-  private val e03 = QueryDef("e03_resample_lerp",
-    (s, d) => RelationalOps.resampleLerp(Tables.events(s, d),
-        "user_id", "ts", "value", stepHours = 6, tieBreak = "event_id")
-      .orderBy("user_id", "grid_ts"),
-    Some("""WITH b AS (SELECT user_id,
-                 CAST(DATE_TRUNC('hour', MIN(ts)) AS TIMESTAMP) AS t0,
-                 CAST(MAX(ts) AS TIMESTAMP) AS t1
-               FROM events GROUP BY user_id),
-            grid AS (SELECT user_id,
-                 UNNEST(generate_series(t0, t1, INTERVAL 6 HOUR)) AS grid_ts
-               FROM b),
-            pv AS (SELECT g.user_id, g.grid_ts,
-                (SELECT e.ts FROM events e
-                 WHERE e.user_id = g.user_id AND e.ts <= g.grid_ts
-                 ORDER BY e.ts DESC, e.event_id DESC LIMIT 1) AS ta,
-                (SELECT CAST(ROUND(e.value * 100) AS BIGINT) FROM events e
-                 WHERE e.user_id = g.user_id AND e.ts <= g.grid_ts
-                 ORDER BY e.ts DESC, e.event_id DESC LIMIT 1) AS va,
-                (SELECT e.ts FROM events e
-                 WHERE e.user_id = g.user_id AND e.ts > g.grid_ts
-                 ORDER BY e.ts ASC, e.event_id DESC LIMIT 1) AS tb,
-                (SELECT CAST(ROUND(e.value * 100) AS BIGINT) FROM events e
-                 WHERE e.user_id = g.user_id AND e.ts > g.grid_ts
-                 ORDER BY e.ts ASC, e.event_id DESC LIMIT 1) AS vb
-              FROM grid g)
-            SELECT user_id, grid_ts,
-              CASE WHEN ta IS NULL THEN NULL
-                   WHEN tb IS NULL THEN va
-                   ELSE va + ((vb - va) *
-                       (epoch_us(grid_ts) - epoch_us(ta)))
-                     // (epoch_us(tb) - epoch_us(ta))
-              END AS lerp_centi
-            FROM pv ORDER BY user_id, grid_ts"""))
-
-  // ---------------------------------------------------------- streaming [EXT]
-
-  /** REAL Structured Streaming executions (memory sink, run to completion
-    * over the finite file source) whose results the batch oracle certifies
-    * — batch/stream parity as the correctness contract. */
-  private val s01 = QueryDef("s01_stream_hourly",
-    (s, d) => {
-      import graft.streaming.EventStreams._
-      runToBatch(s, hourlyCounts(eventsStream(s, d)))
-        .select(col("w").cast("timestamp_ntz").as("w"), col("event_type"),
-          col("n"), col("sv"))
-        .orderBy("w", "event_type")
-    },
-    Some("""SELECT CAST(DATE_TRUNC('hour', ts) AS TIMESTAMP) AS w, event_type,
-              COUNT(*) AS n,
-              ROUND(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sv
-            FROM events GROUP BY w, event_type ORDER BY w, event_type"""))
-
-  private val s02 = QueryDef("s02_stream_sessions",
-    (s, d) => {
-      import graft.streaming.EventStreams._
-      runToBatch(s, userSessions(eventsStream(s, d)))
-        .groupBy("user_id").agg(count(lit(1)).as("n_sessions"))
-        .orderBy("user_id")
-    },
-    Some("""SELECT user_id, COUNT(DISTINCT sess) AS n_sessions FROM (
-              SELECT user_id, SUM(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END)
-                OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess
-              FROM (SELECT user_id, ts, event_id,
-                      DATE_DIFF('second', LAG(ts) OVER (
-                        PARTITION BY user_id ORDER BY ts, event_id), ts) AS gap
-                    FROM events) g) t
-            GROUP BY user_id ORDER BY user_id"""))
-
-  /** REAL stream-stream interval join (append mode, watermarked both
-    * sides), certified by the equivalent batch join in DuckDB. */
-  private val s03 = QueryDef("s03_stream_join",
-    (s, d) => {
-      import graft.streaming.EventStreams._
-      runToBatch(s, purchaseSignupJoin(eventsStream(s, d)), outputMode = "append")
-        .orderBy("purchase_id", "signup_id")
-    },
-    Some("""SELECT p.event_id AS purchase_id, s.event_id AS signup_id
-            FROM events p JOIN events s ON p.user_id = s.user_id
-              AND p.event_type = 'purchase' AND s.event_type = 'signup'
-              AND s.ts <= p.ts AND s.ts >= p.ts - INTERVAL 7 DAY
-            ORDER BY purchase_id, signup_id"""))
-
-  /** REAL sliding-window streaming aggregation (1h window, 15m slide — the
-    * §2.10 variant tumbling/session didn't cover). The oracle enumerates
-    * each event's 4 containing windows explicitly: window starts are the
-    * 15-minute-aligned instants in (ts - 1h, ts]. */
-  private val s04 = QueryDef("s04_stream_sliding",
-    (s, d) => {
-      import graft.streaming.EventStreams._
-      runToBatch(s, slidingCounts(eventsStream(s, d)))
-        .select(col("w").cast("timestamp_ntz").as("w"), col("event_type"),
-          col("n"), col("sv"))
-        .orderBy("w", "event_type")
-    },
-    Some("""SELECT make_timestamp((epoch_us(ts) // 1000000 // 900 - j.range) * 900
-                     * 1000000) AS w,
-              event_type, COUNT(*) AS n,
-              ROUND(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sv
-            FROM events, range(4) j
-            GROUP BY w, event_type ORDER BY w, event_type"""))
-
-  /** REAL watermarked streaming dedup (append mode, RocksDB-backed dedup
-    * state), certified by key-set parity: the deduped stream must emit
-    * EXACTLY ONE row per distinct (user_id, event_type) — projecting to
-    * the key columns makes the output deterministic even though which
-    * physical row survives is not, and any duplicate or dropped key breaks
-    * the row/hash compare against the batch DISTINCT. */
-  private val s05 = QueryDef("s05_stream_dedup",
-    (s, d) => {
-      import graft.streaming.EventStreams._
-      runToBatch(s, dedupedStream(eventsStream(s, d)), outputMode = "append")
-        .select(col("user_id"), col("event_type"))
-        .orderBy("user_id", "event_type")
-    },
-    Some("""SELECT DISTINCT user_id, event_type FROM events
-            ORDER BY user_id, event_type"""))
-
-  /** STREAMING execution of the SSINS match filter on the mwa04 portable
-    * fixture: INS cells are re-played as a 4-file parquet stream
-    * (maxFilesPerTrigger=1 -> 4 micro-batches), accumulated per
-    * (obsid, pol) in RocksDB ListState, and the greedy fixpoint runs
-    * exactly once per observation when its known spectrum shape completes
-    * (StatefulOps.MatchFilterProcessor). Shares mwa04's bit-exact
-    * recursive-CTE oracle — streaming and batch must agree to the hash. */
-  private val s06 = QueryDef("s06_stream_mf",
-    (s, d) => {
-      import graft.mwa._
-      val t0 = System.nanoTime()
-      val spec = VisGenerator.Spec(nTimes = 17, nAnts = 4)
-      val cfg = GraftConfig(removeFlaggedAnts = false,
-        spectrumType = SpectrumType.Auto, tbAggro = 1.0 / 32)
-      require(spec.nTimes == 17 && spec.nCoarse * spec.nFine == 16,
-        "s06: fixture shape drifted from the shared mwa04 oracle")
-      val insDf = VisOps.ins(VisOps.diff(
-          VisOps.selectSurface(VisGenerator.portable(s, spec), cfg)))
-        .select(col("obsid"), col("time_idx"), col("freq_hz"), col("pol"),
-          col("metric").cast("double"), col("nsamples").cast("double"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_s06_").toString
-      insDf.repartition(4).write.mode("overwrite").parquet(dir)
-      // diff drops one time: (nTimes-1) x nFreqs cells per (obsid, pol)
-      val expected = (spec.nTimes - 1) * spec.nCoarse * spec.nFine
-      val conf = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(conf)
-      s.conf.set(conf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        import s.implicits._
-        val stream = s.readStream.schema(insDf.schema)
-          .option("maxFilesPerTrigger", 1).parquet(dir)
-          .as[MatchFilter.InsCell]
-        val flags = graft.streaming.StatefulOps
-          .matchFilterStream(stream, cfg, expected).toDF()
-        val s0 = System.nanoTime()
-        val ran = graft.streaming.EventStreams
-          .runToBatch(s, flags, outputMode = "append")
-        // bench interpretability (round-17 verdict task 7): split the
-        // stream's processAllAvailable wall from the fixture/staging
-        // scaffold, same fields as s22's aux
-        val streamSec = (System.nanoTime() - s0) / 1e9
-        val nIn = s.read.parquet(dir).count()
-        BenchAux.put("s06_stream_mf",
-          "stream_sec" -> streamSec,
-          "scaffold_sec" -> ((System.nanoTime() - t0) / 1e9 - streamSec),
-          "input_records" -> nIn.toDouble,
-          "records_per_sec" -> (if (streamSec > 0) nIn / streamSec else 0.0))
-        val out = ran
-          .filter(col("flagged"))
-          .select("time_idx", "freq_hz", "pol", "event")
-          .orderBy("pol", "time_idx", "freq_hz")
-        // the memory sink holds the rows; the staging parquet can go now
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-        out
-      } finally prev match {
-        case Some(p) => s.conf.set(conf, p)
-        case None => s.conf.unset(conf)
-      }
-    },
-    Some(mwa04Oracle))
-
-  /** WATERMARK-TIMER streaming execution of the SSINS match filter on the
-    * same mwa04 portable fixture: where s06 closes an observation by its
-    * KNOWN spectrum shape, this variant closes by event-time SILENCE — an
-    * event-time timer re-registered at (max seen ts + closeOut) fires when
-    * the watermark passes it (StatefulOps.MatchFilterTimerProcessor), the
-    * production shape when observation length is not known a priori. INS
-    * cells are stamped ts = base + time_idx seconds and fed through a
-    * MemoryStream in two lopsided batches; a far-future sentinel key then
-    * advances the watermark past every real deadline (two rounds: the
-    * watermark computed at batch N gates the timers of batch N+1). Shares
-    * mwa04's bit-exact recursive-CTE oracle — close-out by silence must
-    * produce the identical fixpoint. */
-  private val s07 = QueryDef("s07_stream_mf_timer",
-    (s, d) => {
-      import graft.mwa._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val spec = VisGenerator.Spec(nTimes = 17, nAnts = 4)
-      val cfg = GraftConfig(removeFlaggedAnts = false,
-        spectrumType = SpectrumType.Auto, tbAggro = 1.0 / 32)
-      require(spec.nTimes == 17 && spec.nCoarse * spec.nFine == 16,
-        "s07: fixture shape drifted from the shared mwa04 oracle")
-      val insDf = VisOps.ins(VisOps.diff(
-          VisOps.selectSurface(VisGenerator.portable(s, spec), cfg)))
-        .select(col("obsid"), col("time_idx"), col("freq_hz"), col("pol"),
-          col("metric").cast("double"), col("nsamples").cast("double"))
-      import s.implicits._
-      val base = 1700000000000L
-      val cells = insDf.collect().map { r =>
-        graft.streaming.StatefulOps.InsCellTs(r.getLong(0), r.getInt(1),
-          r.getDouble(2), r.getString(3), r.getDouble(4), r.getDouble(5),
-          new java.sql.Timestamp(base + r.getInt(1) * 1000L))
-      }
-      val conf = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(conf)
-      s.conf.set(conf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val mem = MemoryStream[graft.streaming.StatefulOps.InsCellTs]
-        // watermark delay must cover the lopsided-batch arrival disorder
-        // (event-time mode drops rows older than the watermark); close-out
-        // must exceed the 1 s in-observation event-time stride
-        val withWm = mem.toDS().withWatermark("ts", "1 hour")
-        val q = graft.streaming.StatefulOps
-          .matchFilterStreamEventTime(withWm, cfg, closeOutMs = 30000L)
-          .toDF().writeStream.format("memory").queryName("s07_out")
-          .outputMode("append").start()
-        try {
-          mem.addData(cells.take(150).toSeq)
-          q.processAllAvailable()
-          mem.addData(cells.drop(150).toSeq)
-          q.processAllAvailable()
-          val sentinel = graft.streaming.StatefulOps.InsCellTs(9999L, 0, 0.0,
-            "XX", 0.0, 4.0, new java.sql.Timestamp(base + 10 * 3600 * 1000L))
-          mem.addData(Seq(sentinel))
-          q.processAllAvailable()
-          mem.addData(Seq(sentinel.copy(time_idx = 1)))
-          q.processAllAvailable()
-          graft.streaming.EventStreams.assertDrained(q, "s07")
-        } finally q.stop()
-        s.table("s07_out").filter(col("obsid") =!= 9999L)
-          .filter(col("flagged"))
-          .select("time_idx", "freq_hz", "pol", "event")
-          .orderBy("pol", "time_idx", "freq_hz")
-      } finally prev match {
-        case Some(p) => s.conf.set(conf, p)
-        case None => s.conf.unset(conf)
-      }
-    },
-    Some(mwa04Oracle))
-
-  /** Exactly-once recovery across a query RESTART, oracled: half the
-    * events flow through a checkpointed dropDuplicates stream, the query
-    * stops (a controlled kill), the other half lands, and a NEW query
-    * restarts from the same checkpoint. The sink must hold exactly the
-    * batch-distinct answer — state recovered, no duplicates, no gaps.
-    * Shares s05's oracle; only the execution path (kill + recovery)
-    * differs. StreamingSpec pins the same contract; this puts it under
-    * the DuckDB gate. */
-  private val s08 = QueryDef("s08_stream_restart",
-    (s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_s08_")
-      val (src, ck, sink) = (s"$base/src", s"$base/ck", s"$base/sink")
-      val events = Tables.events(s, d).select("event_id", "user_id", "event_type")
-      events.filter(col("event_id") % 2 === 0)
-        .write.mode("overwrite").parquet(s"$src/batchA")
-      def run(): Unit = {
-        val q = s.readStream.schema(s.read.parquet(s"$src/batchA").schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$src/*")
-          // plain dropDuplicates (no watermark): the strict
-          // exactly-once-per-key contract — state never expires
-          .dropDuplicates("user_id", "event_type")
-          .select("user_id", "event_type")
-          .writeStream.format("parquet")
-          .option("path", sink).option("checkpointLocation", ck)
-          .outputMode("append").start()
-        try { q.processAllAvailable()
-          graft.streaming.EventStreams.assertDrained(q, "s08_restart")
-        } finally q.stop()
-      }
-      run() // half A, then the controlled kill
-      events.filter(col("event_id") % 2 === 1)
-        .write.mode("overwrite").parquet(s"$src/batchB")
-      run() // restart from the checkpoint over both halves
-      val out = s.read.parquet(sink).localCheckpoint(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-      out.orderBy("user_id", "event_type")
-    },
-    Some("""SELECT DISTINCT user_id, event_type FROM events
-            ORDER BY user_id, event_type"""))
-
-  /** Mid-observation RESTART of the stateful match filter — s08's
-    * kill-and-recover technique over s06's transformWithState pipeline:
-    * the first run ingests only HALF the observation's INS cells, so the
-    * fixpoint cannot run, nothing is emitted, and the accumulated
-    * ListState + running counter survive ONLY in the RocksDB checkpoint
-    * at the controlled kill (a require pins that the sink is still
-    * empty). The remaining cells then land and a NEW query resumes from
-    * the checkpoint: recovered state + new cells complete the
-    * observation and the fixpoint runs on a mix of pre- and post-restart
-    * state. mwa04's bit-exact recursive-CTE oracle certifies that
-    * recovery changed NOTHING — same flags, same events, bit-for-bit. */
-  private val s20 = QueryDef("s20_stream_mf_restart",
-    (s, d) => {
-      import graft.mwa._
-      val t0 = System.nanoTime()
-      var streamNanos = 0L
-      val spec = VisGenerator.Spec(nTimes = 17, nAnts = 4)
-      val cfg = GraftConfig(removeFlaggedAnts = false,
-        spectrumType = SpectrumType.Auto, tbAggro = 1.0 / 32)
-      require(spec.nTimes == 17 && spec.nCoarse * spec.nFine == 16,
-        "s20: fixture shape drifted from the shared mwa04 oracle")
-      val insDf = VisOps.ins(VisOps.diff(
-          VisOps.selectSurface(VisGenerator.portable(s, spec), cfg)))
-        .select(col("obsid"), col("time_idx"), col("freq_hz"), col("pol"),
-          col("metric").cast("double"), col("nsamples").cast("double"))
-      val base = java.nio.file.Files.createTempDirectory("graft_s20_")
-      val (src, ck, sink) = (s"$base/src", s"$base/ck", s"$base/sink")
-      val expected = (spec.nTimes - 1) * spec.nCoarse * spec.nFine
-      val conf = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(conf)
-      s.conf.set(conf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        import s.implicits._
-        def run(): Unit = {
-          val stream = s.readStream.schema(insDf.schema)
-            .option("maxFilesPerTrigger", 1).parquet(src)
-            .as[MatchFilter.InsCell]
-          val q = graft.streaming.StatefulOps
-            .matchFilterStream(stream, cfg, expected).toDF()
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ck)
-            .outputMode("append").start()
-          val s0 = System.nanoTime()
-          try { q.processAllAvailable()
-            graft.streaming.EventStreams.assertDrained(q, "s20_restart")
-          } finally { streamNanos += System.nanoTime() - s0; q.stop() }
-        }
-        // half the observation (8 of 16 diffed times), then the kill
-        insDf.filter(col("time_idx") <= 8).repartition(2)
-          .write.mode("overwrite").parquet(src)
-        run()
-        // the sink writes (empty) part files per micro-batch; ROWS are
-        // what must not have been emitted before the kill
-        require(s.read.parquet(sink).isEmpty,
-          "s20: observation completed before the kill — restart not exercised")
-        // the rest of the observation; restart recovers mid-observation
-        insDf.filter(col("time_idx") > 8).repartition(2)
-          .write.mode("append").parquet(src)
-        run()
-        val out = s.read.parquet(sink).localCheckpoint(true)
-        // bench interpretability (round-17 verdict task 7): both
-        // processAllAvailable phases (pre-kill + post-restart recovery)
-        // count as stream_sec; staging writes, checkpoint dirs and the
-        // controlled kill are scaffold
-        val nIn = s.read.parquet(src).count()
-        val streamSec = streamNanos / 1e9
-        BenchAux.put("s20_stream_mf_restart",
-          "stream_sec" -> streamSec,
-          "scaffold_sec" -> ((System.nanoTime() - t0) / 1e9 - streamSec),
-          "input_records" -> nIn.toDouble,
-          "records_per_sec" -> (if (streamSec > 0) nIn / streamSec else 0.0))
-        org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-        out.filter(col("flagged"))
-          .select("time_idx", "freq_hz", "pol", "event")
-          .orderBy("pol", "time_idx", "freq_hz")
-      } finally prev match {
-        case Some(p) => s.conf.set(conf, p)
-        case None => s.conf.unset(conf)
-      }
-    },
-    Some(mwa04Oracle))
-
-  /** The full composition certificate: the STATEFUL match filter fed by
-    * the MESSAGE-BUS connector, killed mid-observation, restarted from
-    * both checkpoints at once — the bus's per-partition offsets AND the
-    * RocksDB operator state must agree after recovery. INS cells are
-    * produced into a 2-partition segment log as CSV payloads (doubles
-    * round-trip exactly through Java's shortest representation); the
-    * stream is format("graft-bus") → parse → transformWithState. Half
-    * the observation lands, the query dies with zero rows emitted
-    * (require-pinned), the rest is appended to the SAME partitions, and
-    * the restarted query resumes MID-LOG while recovering the
-    * accumulated ListState. mwa04's recursive-CTE oracle certifies the
-    * flag set bit-for-bit — source offsets, operator state and fixpoint
-    * all survived the kill. Source-agnosticism is the point: s06 (file),
-    * s07 (memory+timers), s20 (file+restart) and this (bus+restart) run
-    * the SAME processor against the SAME oracle. */
-  private val s21 = QueryDef("s21_bus_mf_restart",
-    (s, d) => {
-      import graft.mwa._
-      val spec = VisGenerator.Spec(nTimes = 17, nAnts = 4)
-      val cfg = GraftConfig(removeFlaggedAnts = false,
-        spectrumType = SpectrumType.Auto, tbAggro = 1.0 / 32)
-      require(spec.nTimes == 17 && spec.nCoarse * spec.nFine == 16,
-        "s21: fixture shape drifted from the shared mwa04 oracle")
-      val insDf = VisOps.ins(VisOps.diff(
-          VisOps.selectSurface(VisGenerator.portable(s, spec), cfg)))
-        .select(col("obsid"), col("time_idx"), col("freq_hz"), col("pol"),
-          col("metric").cast("double"), col("nsamples").cast("double"))
-        .localCheckpoint(true)
-      val base = java.nio.file.Files.createTempDirectory("graft_s21_")
-      val (root, ck, sink) = (s"$base/log", s"$base/ck", s"$base/sink")
-      val expected = (spec.nTimes - 1) * spec.nCoarse * spec.nFine
-      val payload = concat_ws(",", col("obsid"), col("time_idx"),
-        col("freq_hz"), col("pol"), col("metric"), col("nsamples"))
-      def produce(wave: org.apache.spark.sql.DataFrame): Unit =
-        graft.sources.Bus.produce(wave, root, "ins", 2,
-          xxhash64(col("pol")), payload,
-          struct(col("pol"), col("time_idx"), col("freq_hz")))
-      val conf = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(conf)
-      s.conf.set(conf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        import s.implicits._
-        def run(): Unit = {
-          val cells = s.readStream.format("graft-bus")
-            .option("path", root).load()
-            .select(split(col("value").cast("string"), ",").as("f"))
-            .select(element_at(col("f"), 1).cast("long").as("obsid"),
-              element_at(col("f"), 2).cast("int").as("time_idx"),
-              element_at(col("f"), 3).cast("double").as("freq_hz"),
-              element_at(col("f"), 4).as("pol"),
-              element_at(col("f"), 5).cast("double").as("metric"),
-              element_at(col("f"), 6).cast("double").as("nsamples"))
-            .as[MatchFilter.InsCell]
-          val q = graft.streaming.StatefulOps
-            .matchFilterStream(cells, cfg, expected).toDF()
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ck)
-            .outputMode("append").start()
-          try { q.processAllAvailable()
-            graft.streaming.EventStreams.assertDrained(q, "s21_restart")
-          } finally q.stop()
-        }
-        produce(insDf.filter(col("time_idx") <= 8))
-        run()
-        require(s.read.parquet(sink).isEmpty,
-          "s21: observation completed before the kill — restart not exercised")
-        produce(insDf.filter(col("time_idx") > 8))
-        run()
-        val out = s.read.parquet(sink).localCheckpoint(true)
-        org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-        out.filter(col("flagged"))
-          .select("time_idx", "freq_hz", "pol", "event")
-          .orderBy("pol", "time_idx", "freq_hz")
-      } finally prev match {
-        case Some(p) => s.conf.set(conf, p)
-        case None => s.conf.unset(conf)
-      }
-    },
-    Some(mwa04Oracle))
-
-  /** STREAMING deterministic hash-gate sampling: the t10 sample (md5 keyed,
-    * 100 permille) applied to a documents STREAM. The gate is a stateless
-    * per-row filter, so it composes with any streaming pipeline at zero
-    * state cost — the property that makes deterministic sampling the right
-    * down-sampling primitive for continuous ingestion. Shares t10's oracle:
-    * stream and batch must select the identical rows. */
-  private val s09 = QueryDef("s09_stream_sample",
-    (s, d) => {
-      import graft.streaming.EventStreams.runToBatch
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
-      // layout-adaptive: bare-file AND directory table layouts both work
-      val docs = graft.streaming.EventStreams.streamTable(
-        s, d, "documents.parquet", schema)
-      runToBatch(s,
-        graft.operators.Sampling.hashSample(docs, col("doc_id"), 100),
-        outputMode = "append")
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    },
-    Some("""SELECT doc_id, lang FROM documents
-            WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-                  % 1000 < 100
-            ORDER BY doc_id"""))
-
-  /** STREAMING Misra-Gries heavy hitters (StatefulOps.MgTopKProcessor):
-    * the corpus token stream replayed as 4 micro-batches, one bounded MG
-    * sketch per hash bucket in RocksDB state running the BATCH aggregate's
-    * exact counter arithmetic (shared MisraGriesAgg core), emitted at
-    * per-bucket completeness. Buckets are hash-disjoint so their
-    * summaries union to the global answer; with capacity >= per-bucket
-    * vocabulary the sketch is exact — s10 shares t13's oracle, so stream
-    * micro-batching must not change a single count. */
-  private val s10 = QueryDef("s10_stream_topk",
-    (s, d) => {
-      import graft.functions.TextFns
-      val nBuckets = 4
-      val words = Tables.documents(s, d)
-        .select(explode(TextFns.words(col("text"))).as("item"))
-        .select(pmod(xxhash64(col("item")), lit(nBuckets.toLong)).as("bucket"),
-          col("item"))
-      // close-out signal: per-bucket expected occurrence counts (the s06
-      // known-shape pattern; metadata-scale driver state, not data-scale)
-      val expected = words.groupBy("bucket").count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // exact-regime guard (t13's documented <=k-vocabulary assumption,
-      // asserted): Misra-Gries at k=256 counts exactly only while each
-      // bucket's vocabulary fits the sketch — a fixture change that
-      // outgrows it must fail HERE, not surface as an oracle hash
-      // mismatch from a silently-approximate sketch
-      val maxVocab = words.groupBy("bucket")
-        .agg(countDistinct(col("item")).as("__v"))
-        .agg(max(col("__v"))).head().getLong(0)
-      require(maxVocab <= 256,
-        s"s10 exact-MG regime violated: $maxVocab distinct words in one " +
-          "bucket > k=256; raise k or re-bucket the fixture")
-      val dir = java.nio.file.Files.createTempDirectory("graft_s10_").toString
-      words.repartition(4).write.mode("overwrite").parquet(dir)
-      val conf = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(conf)
-      s.conf.set(conf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        import s.implicits._
-        val stream = s.readStream.schema("bucket BIGINT, item STRING")
-          .option("maxFilesPerTrigger", 1).parquet(dir)
-          .as[graft.streaming.StatefulOps.BucketItem]
-        val sketches = graft.streaming.StatefulOps
-          .mgTopKStream(stream, k = 256, expected).toDF()
-        val out = graft.streaming.EventStreams
-          .runToBatch(s, sketches, outputMode = "append")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy(col("cnt").desc, col("item"))
-        out.withColumn("pos", row_number().over(w) - 1)
-          .filter(col("pos") < 20)
-          .select(col("pos").cast("int").as("pos"), col("item").as("word"),
-            col("cnt"))
-          .orderBy("pos")
-      } finally prev match {
-        case Some(p) => s.conf.set(conf, p)
-        case None => s.conf.unset(conf)
-      }
-    },
-    Some("""WITH w AS (SELECT UNNEST(list_filter(
-                regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
-                x -> x <> '')) AS word FROM documents),
-            c AS (SELECT word, COUNT(*) AS cnt FROM w GROUP BY word),
-            r AS (SELECT word, cnt,
-                    ROW_NUMBER() OVER (ORDER BY cnt DESC, word) - 1 AS pos
-                  FROM c)
-            SELECT CAST(pos AS INT) AS pos, word, CAST(cnt AS BIGINT) AS cnt
-            FROM r WHERE pos < 20 ORDER BY pos"""))
-
-  /** STREAMING incremental CDC upsert through foreachBatch: the event
-    * stream (4 unordered micro-batches) folds into a keyed current-state
-    * table via RelationalOps.mergeLatest — the order-independent merge,
-    * so the fold converges to per-user-latest no matter how files batch.
-    * The state table lives as parquet swapped per batch (the no-lakehouse
-    * upsert sink); the oracle derives the final state in one window. */
-  private val s11 = QueryDef("s11_stream_upsert",
-    (s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_s11_")
-      val (src, state) = (s"$base/src", s"$base/state")
-      val ev = Tables.events(s, d).select("user_id", "ts", "value", "event_id")
-      ev.repartition(4).write.mode("overwrite").parquet(src)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val ord = Seq(col("ts").desc, col("event_id").desc)
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$base/ck")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val cur =
-            if (new java.io.File(state).exists)
-              batch.sparkSession.read.parquet(state)
-            else batch.sparkSession.emptyDataFrame
-              .select(batch.columns.map(c => lit(null).cast(
-                batch.schema(c).dataType).as(c)).toIndexedSeq: _*).limit(0)
-          val merged = graft.operators.RelationalOps
-            .mergeLatest(cur, batch, "user_id", ord)
-          // swap, don't overwrite-in-place: the read above is lazy and
-          // would race its own output
-          val tmp = s"$state.next"
-          merged.write.mode("overwrite").parquet(tmp)
-          val st = new java.io.File(state)
-          if (st.exists) org.apache.commons.io.FileUtils.deleteDirectory(st)
-          // Files.move, not File.renameTo: renameTo reports failure only
-          // via its boolean, and a swallowed failed swap would silently
-          // drop this batch's state update — the batch must fail loudly
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(tmp), st.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          ()
-        }
-        .start()
-      try { q.processAllAvailable()
-        graft.streaming.EventStreams.assertDrained(q, "s11_upsert")
-      } finally q.stop()
-      val fin = s.read.parquet(state).localCheckpoint(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-      fin.orderBy("user_id")
-    },
-    Some("""SELECT user_id, ts, value, event_id FROM (
-              SELECT user_id, ts, value, event_id,
-                ROW_NUMBER() OVER (PARTITION BY user_id
-                  ORDER BY ts DESC, event_id DESC) AS rn
-              FROM events) t
-            WHERE rn = 1 ORDER BY user_id"""))
-
-  /** REAL stream-stream LEFT OUTER interval join (append mode). The
-    * streaming semantics differ from a batch left join in exactly one
-    * documented way: a NULL-extended row is emitted only once the final
-    * watermark proves no matching signup can arrive. The oracle replays
-    * that horizon — min of the two sides' max event time (watermark
-    * stats are millisecond-truncated) minus the 1-hour delay — so the
-    * boundary behavior itself is certified, not just the matched rows. */
-  private val s12 = QueryDef("s12_stream_leftjoin",
-    (s, d) => {
-      import graft.streaming.EventStreams._
-      runToBatch(s, purchaseSignupLeftJoin(eventsStream(s, d)), outputMode = "append")
-        .orderBy("purchase_id", "signup_id")
-    },
-    Some("""WITH p AS (SELECT event_id, user_id, ts FROM events
-                        WHERE event_type = 'purchase'),
-                 s AS (SELECT event_id, user_id, ts FROM events
-                        WHERE event_type = 'signup'),
-                 wm AS (SELECT LEAST((SELECT epoch_us(MAX(ts)) // 1000 FROM p),
-                                     (SELECT epoch_us(MAX(ts)) // 1000 FROM s))
-                          - 3600000 AS w),
-                 m AS (SELECT p.event_id AS purchase_id, s.event_id AS signup_id
-                         FROM p JOIN s ON p.user_id = s.user_id
-                          AND s.ts <= p.ts AND s.ts >= p.ts - INTERVAL 7 DAY)
-            SELECT purchase_id, signup_id FROM m
-            UNION ALL
-            SELECT p.event_id, CAST(NULL AS BIGINT) FROM p, wm
-             WHERE epoch_us(p.ts) // 1000 < wm.w
-               AND NOT EXISTS (SELECT 1 FROM m WHERE m.purchase_id = p.event_id)
-            ORDER BY purchase_id, signup_id NULLS FIRST"""))
-
-  /** REAL stream-static join (append mode): the streaming events enriched
-    * against the BATCH customer table — the standard dimension-enrichment
-    * pattern. Stream-static joins are stateless (the static side is
-    * simply available to every micro-batch), so unlike s03/s12 there is
-    * no watermark subtlety and the batch join is the exact oracle. The
-    * static side scales with SF, so no broadcast hint — AQE decides, as
-    * in q04. */
-  private val s13 = QueryDef("s13_stream_static",
-    (s, d) => {
-      import graft.streaming.EventStreams._
-      runToBatch(s,
-        eventsStream(s, d)
-          .join(Tables.customer(s, d).select("c_custkey", "c_mktsegment"),
-            col("user_id") === col("c_custkey"))
-          .select("event_id", "user_id", "c_mktsegment"),
-        outputMode = "append")
-        .orderBy("event_id")
-    },
-    Some("""SELECT event_id, user_id, c_mktsegment FROM events
-            JOIN customer ON user_id = c_custkey ORDER BY event_id"""))
-
-  /** REAL append-mode session windows (s02's complete-mode twin, run the
-    * way production would): only sessions the watermark has CLOSED are
-    * emitted. The oracle replays q26's gaps-and-islands sessionization
-    * plus the final watermark horizon (max event time, ms-truncated,
-    * minus the 1-hour delay) — a session row appears iff its end
-    * (last event + 30 min) is strictly below the horizon, certifying
-    * the emission rule itself, not just the session arithmetic. */
-  private val s14 = QueryDef("s14_stream_sessions_append",
-    (s, d) => {
-      import graft.streaming.EventStreams._
-      runToBatch(s, userSessionsAppend(eventsStream(s, d)), outputMode = "append")
-        .orderBy("user_id", "s_start")
-    },
-    Some("""WITH wm AS (SELECT epoch_us(MAX(ts)) // 1000 - 3600000 AS w
-                        FROM events),
-            g AS (SELECT user_id, ts, event_id,
-                DATE_DIFF('second', LAG(ts) OVER (
-                  PARTITION BY user_id ORDER BY ts, event_id), ts) AS gap
-              FROM events),
-            se AS (SELECT user_id, ts,
-                SUM(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END)
-                  OVER (PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS UNBOUNDED PRECEDING) AS sess
-              FROM g),
-            s AS (SELECT user_id, sess,
-                CAST(MIN(ts) AS TIMESTAMP) AS s_start,
-                CAST(MAX(ts) AS TIMESTAMP) + INTERVAL 30 MINUTE AS s_end,
-                COUNT(*) AS n_events
-              FROM se GROUP BY user_id, sess)
-            SELECT s_start, s_end, user_id, n_events FROM s, wm
-            WHERE epoch_us(s_end) // 1000 < wm.w
-            ORDER BY user_id, s_start"""))
-
-  /** REAL stream-stream FULL OUTER interval join — the last join mode
-    * without a streaming twin. The emission semantics are ASYMMETRIC and
-    * both sides are oracled: an unmatched purchase null-extends once the
-    * watermark passes its own event time (as in s12), but an unmatched
-    * signup can be matched by purchases up to 7 days LATER, so its
-    * null-extended row is emitted only once the watermark passes
-    * signup_ts + 7 days — the oracle replays both horizons from the same
-    * min-of-max-event-times watermark, certifying each side's proof
-    * obligation, not just the matched rows. */
-  private val s15 = QueryDef("s15_stream_fulljoin",
-    (s, d) => {
-      import graft.streaming.EventStreams._
-      runToBatch(s, purchaseSignupFullJoin(eventsStream(s, d)),
-        outputMode = "append")
-        .orderBy("purchase_id", "signup_id")
-    },
-    Some("""WITH p AS (SELECT event_id, user_id, ts FROM events
-                        WHERE event_type = 'purchase'),
-                 s AS (SELECT event_id, user_id, ts FROM events
-                        WHERE event_type = 'signup'),
-                 wm AS (SELECT LEAST((SELECT epoch_us(MAX(ts)) // 1000 FROM p),
-                                     (SELECT epoch_us(MAX(ts)) // 1000 FROM s))
-                          - 3600000 AS w),
-                 m AS (SELECT p.event_id AS purchase_id, s.event_id AS signup_id
-                         FROM p JOIN s ON p.user_id = s.user_id
-                          AND s.ts <= p.ts AND s.ts >= p.ts - INTERVAL 7 DAY)
-            SELECT purchase_id, signup_id FROM m
-            UNION ALL
-            SELECT p.event_id, CAST(NULL AS BIGINT) FROM p, wm
-             WHERE epoch_us(p.ts) // 1000 < wm.w
-               AND NOT EXISTS (SELECT 1 FROM m WHERE m.purchase_id = p.event_id)
-            UNION ALL
-            SELECT CAST(NULL AS BIGINT), s.event_id FROM s, wm
-             WHERE epoch_us(s.ts) // 1000 + 604800000 < wm.w
-               AND NOT EXISTS (SELECT 1 FROM m WHERE m.signup_id = s.event_id)
-            ORDER BY purchase_id NULLS FIRST, signup_id NULLS FIRST"""))
-
-  /** REAL stream-stream RIGHT OUTER interval join — with s12 (left) and
-    * s15 (full) this closes all four join modes. Only the LONG horizon
-    * appears here: an unmatched signup null-extends once the watermark
-    * passes signup_ts + 7 days (purchases up to a week later could still
-    * match); matched rows are the inner join. Same
-    * min-of-max-event-times watermark replay as s12/s15. */
-  private val s17 = QueryDef("s17_stream_rightjoin",
-    (s, d) => {
-      import graft.streaming.EventStreams._
-      runToBatch(s, purchaseSignupRightJoin(eventsStream(s, d)),
-        outputMode = "append")
-        .orderBy("purchase_id", "signup_id")
-    },
-    Some("""WITH p AS (SELECT event_id, user_id, ts FROM events
-                        WHERE event_type = 'purchase'),
-                 s AS (SELECT event_id, user_id, ts FROM events
-                        WHERE event_type = 'signup'),
-                 wm AS (SELECT LEAST((SELECT epoch_us(MAX(ts)) // 1000 FROM p),
-                                     (SELECT epoch_us(MAX(ts)) // 1000 FROM s))
-                          - 3600000 AS w),
-                 m AS (SELECT p.event_id AS purchase_id, s.event_id AS signup_id
-                         FROM p JOIN s ON p.user_id = s.user_id
-                          AND s.ts <= p.ts AND s.ts >= p.ts - INTERVAL 7 DAY)
-            SELECT purchase_id, signup_id FROM m
-            UNION ALL
-            SELECT CAST(NULL AS BIGINT), s.event_id FROM s, wm
-             WHERE epoch_us(s.ts) // 1000 + 604800000 < wm.w
-               AND NOT EXISTS (SELECT 1 FROM m WHERE m.signup_id = s.event_id)
-            ORDER BY purchase_id NULLS FIRST, signup_id NULLS FIRST"""))
-
-  /** STREAMING incremental dedup — d21's batch-vs-corpus classification
-    * run as the production "daily crawl" loop: the corpus artifacts
-    * (digest index, LSH band index, texts) are written ONCE as tables,
-    * then each micro-batch of new documents classifies against them via
-    * foreachBatch (the s11 sink pattern) with cost proportional to the
-    * batch. Classification is per-document against the fixed corpus, so
-    * micro-batch boundaries cannot change any row — the final appended
-    * state shares d21's oracle verbatim. */
-  private val s16 = QueryDef("s16_stream_incr_dedup",
-    (s, d) => {
-      val (corpus, batch) = d21Fixture(s, d)
-      val base = java.nio.file.Files.createTempDirectory("graft_s16_")
-      val (src, idx, out) = (s"$base/src", s"$base/idx", s"$base/out")
-      graft.operators.Dedup.corpusDigestIndex(corpus)
-        .write.mode("overwrite").parquet(s"$idx/dig")
-      graft.operators.Dedup.corpusBandIndex(corpus)
-        .write.mode("overwrite").parquet(s"$idx/band")
-      corpus.write.mode("overwrite").parquet(s"$idx/texts")
-      batch.repartition(4).write.mode("overwrite").parquet(src)
-      val stream = s.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$base/ck")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val ss = b.sparkSession
-          graft.operators.Dedup.incrementalDedupIndexed(
-              ss.read.parquet(s"$idx/dig"), ss.read.parquet(s"$idx/band"),
-              ss.read.parquet(s"$idx/texts"), b)
-            .write.mode("append").parquet(out)
-          ()
-        }
-        .start()
-      try { q.processAllAvailable()
-        graft.streaming.EventStreams.assertDrained(q, "s16_incr_dedup")
-      } finally q.stop()
-      val fin = s.read.parquet(out).localCheckpoint(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-      fin.orderBy("doc_id")
-    },
-    Some(d21Oracle))
-
-  // ---------------------------------------------------------------- wiring
-
-  val all: Seq[QueryDef] = Seq(
-    q01, q02, q03, q04, q05, q06, q07, q08, q09, q10,
-    q11, q12, q13, q14, q15, q16, q17, q18i, q18e, q18u,
-    q19, q20, q21, q22, q23, q24, q25, q26, q27, q28, q29,
-    d01, d02, d03, d04, d05, d06, d07, d08, d09, d10, d11, d12, d13, d14,
-    d15, d16, d17, d18, d19, d20, d21, d22, d23,
-    x01, x02, x03, x04, x05, x06, x07, x08, x09, x10, x11,
-    t01, t02, t03, t04, t05, t06, t07, t08, t09, t10, t11, t12, t13, t14, t15, t16,
-    t17, t18, t19, t20, t21, t22, t23, t24, t25, t26, t27, t28, t29, t30,
-    t31, t32, t33, t34, t35, q50,
-    mwa01, mwa02, mwa03, mwa04, mwa05, mwa06, mwa07, mwa08, mwa09, mwa10, mwa11, mwa12,
-    mwa13, mwa14, mwa15, mwa16,
-    m01, m02, m03, e01, e02, e03, s01, s02, s03, s04, s05, s06, s07, s08, s09,
-    s10, s11, s12, s13, s14, s15, s16, s17, s20, s21) ++
-    MoreQueries.all ++ FunctionSuites.all ++ R9.all ++ R11.all ++ R11b.all ++
-    R12.all ++ R13.all ++ R18.all ++ R19.all ++ R20.all
+  /** Every row, in the order the driver and the artifacts list them. */
+  val all: Seq[QueryDef] = {
+    import RelationalQueries._, DedupQueries._, GraphQueries._, VectorQueries._,
+      TextQueries._, MwaQueries._, MultimodalQueries._, StreamingQueries._
+    Seq(
+      q01, q02, q03, q04, q05, q06, q07, q08, q09, q10, q11, q12, q13, q14, q15,
+      q16, q17, q18i, q18e, q18u, q19, q20, q21, q22, q23, q24, q25, q26, q27,
+      q28, q29, d01, d02, d03, d04, d05, d06, d07, d08, d09, d10, d11, d12, d13,
+      d14, d15, d16, d17, d18, d19, d20, d21, d22, d23, x01, x02, x03, x04, x05,
+      x06, x07, x08, x09, x10, x11, t01, t02, t03, t04, t05, t06, t07, t08, t09,
+      t10, t11, t12, t13, t14, t15, t16, t17, t18, t19, t20, t21, t22, t23, t24,
+      t25, t26, t27, t28, t29, t30, t31, t32, t33, t34, t35, q50, mwa01, mwa02,
+      mwa03, mwa04, mwa05, mwa06, mwa07, mwa08, mwa09, mwa10, mwa11, mwa12,
+      mwa13, mwa14, mwa15, mwa16, m01, m02, m03, e01, e02, e03, s01, s02, s03,
+      s04, s05, s06, s07, s08, s09, s10, s11, s12, s13, s14, s15, s16, s17, s20,
+      s21, q30, q31, q32, q33, q34, q35, q36, q37, q38, q39, q40, q54, q55, q56,
+      q57, q58, q59, q60, q61, q62, q63, q64, q65, q66, q67, q41, q42, q43, q44,
+      q45, q46, q47, q48, q49, q51, q52, q53, d24, d25, e04, q68, t37, s18, q69,
+      q70, d26, q71, s19, d27, m04, mwa17, mwa18, mwa19, mwa20, mwa21, mwa22,
+      mwa23, mwa24, mwa25, s22, d28, q72, q73, x12, x13, x14, x15, x16, x17,
+      q74, t38, q75, q76, q77, e05, e06, e07)
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.build).toMap

@@ -1,11 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Streaming form of the INS analytic (SURVEY §7.7): visibility rows
-  * arriving as a stream are reduced to the incoherent noise spectrum with
-  * the SAME aggregation expression as the batch operator (VisOps.ins), in
+  * arriving as a stream are reduced to the incoherent noise spectrum by
+  * the batch operator itself (`VisOps.ins` over [[visStream]]), in
   * complete output mode — per-cell means update as baselines stream in.
   *
   * The sky-subtraction diff is a time-window operation and runs at the
@@ -19,13 +18,4 @@ object VisStreams {
     spark.readStream
       .schema(spark.read.parquet(path).schema)
       .parquet(path)
-
-  /** Streaming INS: identical semantics to VisOps.ins. */
-  def streamingIns(vis: DataFrame): DataFrame =
-    vis.groupBy(col("obsid"), col("time_idx"), col("freq_hz"), col("pol"))
-      .agg(
-        avg(when(!col("flag"),
-          sqrt(col("vis_re") * col("vis_re") + col("vis_im") * col("vis_im"))))
-          .as("metric"),
-        sum(when(!col("flag"), col("nsample")).otherwise(0.0)).as("nsamples"))
 }

@@ -420,7 +420,7 @@ class StreamingSpec extends SparkSpec {
     diffed.write.mode("overwrite").parquet(tmp)
 
     val streamed = EventStreams.runToBatch(spark,
-      VisStreams.streamingIns(VisStreams.visStream(spark, tmp)))
+      VisOps.ins(VisStreams.visStream(spark, tmp)))
     val batch = VisOps.ins(spark.read.parquet(tmp))
     assert(streamed.count() == batch.count())
     val key = Seq("time_idx", "freq_hz", "pol")

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Build BENCH_sf1_lowmem.json (round-15 verdict task 2: demonstrate the
+"""Build artifacts/BENCH_sf1_lowmem.json (round-15 verdict task 2: demonstrate the
 reference's bounded-peak-memory north star as a MEASUREMENT) from two
 same-epoch FULL sf1 Bench sessions: one at the standard 8 GiB heap, one
 at a deliberately HALVED 4 GiB heap (off-heap 4 GiB and

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Build BENCH_sf1.json (the 10x scale-trend artifact) from one full Bench
+"""Build artifacts/BENCH_sf1.json (the 10x scale-trend artifact) from one full Bench
 session at /tmp/sf1 plus the round's BENCH_MEDIANS best_of_both at sf0.1.
 Usage: bench_sf1.py sf1_session.json BENCH_MEDIANS_rN.json out.json [notes.json]
 notes.json may carry protocol/conclusion/annotations and any carried-over

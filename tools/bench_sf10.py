@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Build BENCH_sf10.json (the 100x-gate-scale slope artifact, round-15
+"""Build artifacts/BENCH_sf10.json (the 100x-gate-scale slope artifact, round-15
 verdict task 1) from two SAME-SESSION-EPOCH filtered Bench runs of the
 worst-slope family: one at /tmp/sf1, one at /tmp/sf10 (ScaleUp-derived,
 10x of sf1). Slopes are computed within this pair — same binary, same

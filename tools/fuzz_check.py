@@ -26,6 +26,7 @@ engine-semantics finding, not a dialect gap:
     row sets are totally determined.
 
 Usage: fuzz_check.py [--sf DIR] [--n N] [--seed S] [--out FUZZ.json]
+(--out defaults to FUZZ.json in the system temp dir.)
 Exit 0 iff zero value mismatches (one-sided errors are reported in
 the artifact for triage but are dialect-or-bug candidates, not
 automatic failures)."""
@@ -35,6 +36,7 @@ import os
 import random
 import subprocess
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from selfcheck import floats_differ  # noqa: E402  (shared bit-compare)
@@ -1391,7 +1393,7 @@ def main():
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     ap.add_argument("--n", type=int, default=250)
     ap.add_argument("--seed", type=int, default=1501)
-    ap.add_argument("--out", default=os.path.join(REPO, "FUZZ_r15.json"))
+    ap.add_argument("--out", default=os.path.join(tempfile.gettempdir(), "FUZZ.json"))
     ap.add_argument("--workdir", default="/tmp/graft_fuzz")
     ap.add_argument("--skip-run", action="store_true",
                     help="reuse an existing FuzzRunner output dir")

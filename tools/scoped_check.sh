@@ -13,8 +13,10 @@
 # (src/main/scala/graft/plans/ and GraftExtensions.scala) run on every
 # plan, the session settings in Engine.scala reach every plan, and the
 # shared kernels (src/main/scala/graft/functions/ and operators/) serve
-# queries that their files never name, so a change to any of them sweeps
-# every known query.
+# queries that their files never name, and queries/Catalog.scala holds the
+# helpers every query family shares and the registry, which lists rows by
+# val, not by quoted name, so a change to any of them sweeps every known
+# query.
 #
 #   tools/scoped_check.sh            # uncommitted changes vs HEAD
 #   tools/scoped_check.sh HEAD~3     # last three commits
@@ -30,7 +32,7 @@ if [ -z "$NAMES" ]; then
   MWA=0
   echo "$FILES" | grep -qE '^src/main/scala/graft/(mwa/.*|sources/VisSource\.scala)$' && MWA=1
   ALL=0
-  echo "$FILES" | grep -qE '^src/main/scala/graft/(plans/.*|functions/.*|operators/.*|GraftExtensions\.scala|Engine\.scala)$' && ALL=1
+  echo "$FILES" | grep -qE '^src/main/scala/graft/(plans/.*|functions/.*|operators/.*|queries/Catalog\.scala|GraftExtensions\.scala|Engine\.scala)$' && ALL=1
   NAMES=$({ grep -hso '"[a-z0-9_]*"' $FILES || true; } | tr -d '"' | sort -u | python3 -c "
 import json, sys
 known = set(json.load(open('$KNOWN')))

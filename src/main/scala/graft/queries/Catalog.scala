@@ -4,7 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The executable query inventory (SURVEY.md §2.11 + [EXT] operators), each
-  * paired with its DuckDB oracle SQL where SQL-expressible.
+  * paired with its DuckDB oracle SQL where SQL-expressible. The rows live
+  * in one object per family (`RelationalQueries`, `DedupQueries`,
+  * `GraphQueries`, `VectorQueries`, `TextQueries`, `MwaQueries`,
+  * `MultimodalQueries`, `StreamingQueries`); this object holds
+  * [[QueryDef]], the helpers the families share, and the registry.
   *
   * Determinism contract with the oracle:
   *  - every query ends with ORDER BY on a unique key prefix;

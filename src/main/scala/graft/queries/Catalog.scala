@@ -84,7 +84,7 @@ object Catalog {
     math.min(cap, math.max(4L, (bytes / (8L << 20)).toLong + 1L)).toInt
   }
 
-  /** Every row, in the order the driver and the artifacts list them. */
+  /** Every row; `benchNames`, and so the bench artifacts, follow this order. */
   val all: Seq[QueryDef] = {
     import RelationalQueries._, DedupQueries._, GraphQueries._, VectorQueries._,
       TextQueries._, MwaQueries._, MultimodalQueries._, StreamingQueries._

@@ -8,9 +8,8 @@ import graft.queries.Catalog.{QueryDef, sizedPartitions, withConfs}
 import graft.queries.DedupQueries.{d21Fixture, d21Oracle}
 import graft.queries.MwaQueries.mwa04Oracle
 
-/** Streaming rows: real Structured Streaming executions (memory or
-  * parquet sinks, run to completion), each oracled against the batch
-  * answer it must reproduce. */
+/** Streaming rows: real Structured Streaming executions, run to
+  * completion, each oracled against the batch answer it must reproduce. */
 object StreamingQueries {
 
   /** The state store every stateful row runs on, set only for its build. */

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline query set on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}} for the harness. */
 object Bench {
@@ -28,47 +26,16 @@ object Bench {
     f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"medians":$meds,"maxs":$maxs,"median_total":$medTotal%.3f,"probe_start_sec":$probeStart%.3f,"probe_end_sec":$probeEnd%.3f,"probe_points":$probePts%s,"env_segments":$envSegs%s,"sf":"$sfDir"$filtered%s$aux%s$mem%s$partsField%s}"""
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE_PARTS (default = cpus, the pinned round
-    // protocol): partition-sizing experiments — at a fixed SF, per-task
-    // state is working-set/partitions, so a spill-bound query's penalty
-    // can be re-priced without touching memory (the 100 TB sizing lever
-    // the brief names). Off-protocol values mark the artifact via the
-    // extra "shuffle_partitions" field; the medians protocol stays 32.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    // SPARK_GRAFT_INIT_PARTS: sets AQE's coalescePartitions
-    // initialPartitionNum — shuffles START at this count and AQE
-    // coalesces per-stage by advisory size, which is the canonical
-    // cluster answer to the per-operator-family sizing split the sf10
-    // experiment measured (BENCH_sf10.json): iterative graph state wants
-    // many small tasks, in-memory hash verifies want few large ones.
-    val initParts = sys.env.get("SPARK_GRAFT_INIT_PARTS")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", parts)
-    initParts.foreach(n => builder.config(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum", n))
     // SPARK_GRAFT_SQL_CONFS: semicolon-separated key=value runtime SQL
-    // confs for A/B arms (e.g. spark.graft.sizing.enabled=false);
-    // stamped into the artifact whenever present so an off-protocol arm
-    // can never masquerade as a protocol session
+    // confs for A/B arms (e.g. spark.graft.sizing.enabled=false or
+    // spark.sql.shuffle.partitions=64); stamped into the artifact whenever
+    // present so an off-protocol arm can never masquerade as a protocol
+    // session
     val extraConfs: Seq[(String, String)] =
       sys.env.get("SPARK_GRAFT_SQL_CONFS").map(_.split(";").toSeq.map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }).getOrElse(Nil)
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // off-heap Tungsten buffers: see Engine.session — removes the GC
-      // variance (2-9s) on the multi-million-row window sorts
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "4g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     extraConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     // dev iteration: SPARK_GRAFT_BENCH_ONLY=q01_count,d24_reachability
     // restricts the run; the artifact then carries "filtered":true so a
@@ -76,7 +43,7 @@ object Bench {
     // shipped silently-wrong bench numbers once; never again by forensics)
     // SPARK_GRAFT_BENCH_RUNS (default 5 = the protocol): experiment arms
     // on multi-minute sf10 queries use 2 — stamped into the artifact via
-    // "timed_runs" whenever off-protocol, same rule as shuffle_partitions
+    // "timed_runs" whenever off-protocol, same rule as sql_confs
     val timedRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
     // SPARK_GRAFT_BENCH_ORDER_SEED (round-18 verdict task 3, the ABBA
@@ -319,11 +286,9 @@ object Bench {
     val heapMaxMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     val mem = s""","mem":{"heap_max_mb":$heapMaxMb,"peak_rss_mb":$peakRssMb,""" +
       s""""spill_window":"warmup+${timedRuns}_timed_runs (~${timedRuns + 1}x one execution)","spill":$spillObj}"""
-    // off-protocol partition counts must be visible in the artifact so a
-    // sizing experiment can never masquerade as a protocol session
-    val partsField = (if (parts != cpus) s""","shuffle_partitions":$parts""" else "") +
-      initParts.map(n => s""","aqe_initial_partitions":$n""").getOrElse("") +
-      (if (timedRuns != 5) s""","timed_runs":$timedRuns""" else "") +
+    // off-protocol settings must be visible in the artifact so an
+    // experiment arm can never masquerade as a protocol session
+    val partsField = (if (timedRuns != 5) s""","timed_runs":$timedRuns""" else "") +
       orderSeed.map(s => s""","query_order_seed":$s""").getOrElse("") +
       (if (extraConfs.nonEmpty)
         extraConfs.map { case (k, v) => s""""$k":"$v"""" }

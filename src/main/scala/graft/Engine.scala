@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Central SparkSession factory so every entry point (Verify, Bench, tests,
-  * user code) runs with the same scale-aware defaults.
+/** The one SparkSession factory: every main (Verify, Bench, FuzzRunner,
+  * ScaleUp, ProfileQ, Explain, KernelBench, Smoke, OpFuzz) and the
+  * benchmark runner start the engine here, so every run's numbers describe
+  * the same engine.
   *
   * Settings rationale (tuned for correctness parity with the DuckDB oracle
   * and for behavior that transfers to a real multi-executor cluster):
@@ -11,15 +13,16 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on: runtime join-strategy switching, skew-join splitting and
   *    post-shuffle partition coalescing are the main levers that keep the
   *    same plans healthy at 1000x the data.
-  *  - shuffle.partitions defaults to the local core count (the harness runs
-  *    local[32]); on a real cluster this would be sized to ~128MB
-  *    post-shuffle partitions instead.
+  *  - cores default to `SPARK_GRAFT_CPUS`, or the machine's processor count
+  *    when it is unset; shuffle.partitions follows the core count. On a real
+  *    cluster it would be sized to ~128MB post-shuffle partitions instead.
   *  - nanosAsLong: the `events` table is written with parquet
   *    TIMESTAMP(NANOS) which Spark does not read natively; Tables.events
   *    rebuilds a proper microsecond timestamp column from the raw longs.
   */
 object Engine {
-  def session(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  def session(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
@@ -29,6 +32,9 @@ object Engine {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // EventStreams.assertDrained reads recentProgress, a ring buffer of
+      // this many updates (Spark's default is 100)
+      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
       // Tungsten sort/shuffle/agg buffers off-heap: the multi-million-row
       // window sorts otherwise churn the GC (observed 2-9s run-to-run
       // variance on the same query); off-heap pages take allocation out of

@@ -10,7 +10,7 @@ object Explain {
     val sfDir = args.drop(1).find(a => !a.startsWith("out=") && a != "run")
       .getOrElse("/root/testdata/sf0.1")
     val outDir = args.find(_.startsWith("out=")).map(_.stripPrefix("out="))
-    val spark = Engine.session(32)
+    val spark = Engine.session()
     for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)
       outDir match {

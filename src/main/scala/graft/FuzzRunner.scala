@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Differential-fuzzing executor (round-15 verdict task 3): runs every
@@ -11,29 +10,16 @@ import java.nio.file.{Files, Paths}
   * `<name>.err` instead — the checker classifies one-sided failures
   * (possible dialect gap or engine bug) separately from both-sided ones.
   *
-  * The session config matches Verify exactly (same extensions, ANSI
-  * dialect, timezone, shuffle width) so a fuzz divergence is a real
-  * engine-semantics divergence, not a harness-config artifact.
+  * The session comes from Engine.session, as Verify's does, so a fuzz
+  * divergence is a real engine-semantics divergence, not a harness-config
+  * artifact.
   *
   * Usage: runMain graft.FuzzRunner <sfDir> <sqlDir> <outDir>
   */
 object FuzzRunner {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, sqlDir, outDir) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "4g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "documents", "embeddings"))
       Tables.load(spark, sfDir, t).createOrReplaceTempView(t)

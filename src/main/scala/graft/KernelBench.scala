@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only kernel microbench (guide §1.4): times text-kernel columns with
@@ -16,7 +16,7 @@ object KernelBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val runs = if (args.length > 1) args(1).toInt else 5
-    val spark = Engine.session(32)
+    val spark = Engine.session()
     import graft.functions.TextFns
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).localCheckpoint(true)

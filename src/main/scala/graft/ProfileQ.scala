@@ -16,7 +16,7 @@ object ProfileQ {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = Engine.session(32)
+    val spark = Engine.session()
     // SPARK_GRAFT_RULE_DUMP=1: reset Catalyst's rule-time meters after each
     // query's warmup, then print that query's per-rule time after its
     // timed runs — attributes the wall-minus-jobs planning gap

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-trend data derivation: writes an N-times-larger copy of a
@@ -97,15 +97,7 @@ object ScaleUp {
     val hot = args.drop(3).headOption
       .map { a => require(a.startsWith("hot="), s"bad arg $a"); a.drop(4).toInt }
       .getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
     // Per-copy key offset. ROUND-16 FIX (found by the first sf10
     // CORRECTNESS run — the r15 sweep was bench-only and never checked):

@@ -244,9 +244,8 @@ object EventStreams {
     // spark.sql.streaming.numRecentProgressUpdates (default 100): a
     // healthy run with maxFilesPerTrigger=1 and >cap micro-batches could
     // evict every non-empty entry behind trailing zero-row updates and
-    // fail here spuriously (round-14 ADVICE). The harness sessions raise
-    // the cap well above any finite drain's batch count
-    // (Tables.session / the Verify+Bench builders); if a caller's
+    // fail here spuriously (round-14 ADVICE). Engine.session raises the
+    // cap well above any finite drain's batch count; if a caller's
     // session didn't, the error below names the knob instead of
     // mis-blaming the source layout.
     val cap =

@@ -450,18 +450,8 @@ object Fits {
 
     /** The shared uvfits fixture (same geometry/values as the mwa10 gpubox
       * fixture, single random-groups file). */
-    @volatile private var dir: String = _
-    def ensureFixture(): String = synchronized {
-      if (dir == null) {
-        val d = Paths.get(sys.props("java.io.tmpdir"), "graft_uvfits_fixture_v1")
-        if (!Files.exists(d.resolve("_SUCCESS"))) {
-          write(d, fixtureSpec)
-          Files.write(d.resolve("_SUCCESS"), Array.emptyByteArray)
-        }
-        dir = d.toString
-      }
-      dir
-    }
+    def ensureFixture(): String = fixtureDir
+    private lazy val fixtureDir = fixture("graft_uvfits_fixture_v1")(write(_, fixtureSpec))
   }
 
   /** The shared FITS fixture for mwa10 (written once per JVM under the
@@ -469,17 +459,19 @@ object Fits {
     * fixture, 2 coarse channels, 5440 rows total). */
   lazy val fixtureSpec: VisGenerator.Spec = VisGenerator.Spec(nTimes = 17, nAnts = 4)
 
-  @volatile private var fixtureDir: String = _
-  def ensureFixture(): String = synchronized {
-    if (fixtureDir == null) {
-      val dir = Paths.get(sys.props("java.io.tmpdir"), "graft_fits_fixture_v1")
-      if (!Files.exists(dir.resolve("_SUCCESS"))) {
-        writeVis(dir, fixtureSpec)
-        Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
-      }
-      fixtureDir = dir.toString
+  def ensureFixture(): String = fixtureDir
+  private lazy val fixtureDir = fixture("graft_fits_fixture_v1")(writeVis(_, fixtureSpec))
+
+  /** Directory `name` under the system temp dir, filled by `write` unless
+    * an earlier write completed (its `_SUCCESS` marker exists). Each
+    * fixture keeps the result in a lazy val, so one JVM writes it once. */
+  private[mwa] def fixture(name: String)(write: Path => Any): String = {
+    val dir = Paths.get(sys.props("java.io.tmpdir"), name)
+    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+      write(dir)
+      Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
     }
-    fixtureDir
+    dir.toString
   }
 }
 

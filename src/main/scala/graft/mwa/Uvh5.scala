@@ -1,6 +1,6 @@
 package graft.mwa
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 /** uvh5 (UVData-in-HDF5, the public pyuvdata on-disk memo format — the
   * reference's third input serialization, `configurators.py:43-48`):
@@ -74,16 +74,7 @@ object Uvh5 {
 
   /** The shared uvh5 fixture (same geometry/values as the gpubox and
     * uvfits fixtures). */
-  @volatile private var dir: String = _
-  def ensureFixture(): String = synchronized {
-    if (dir == null) {
-      val d = Paths.get(sys.props("java.io.tmpdir"), "graft_uvh5_fixture_v1")
-      if (!Files.exists(d.resolve("_SUCCESS"))) {
-        write(d, Fits.fixtureSpec)
-        Files.write(d.resolve("_SUCCESS"), Array.emptyByteArray)
-      }
-      dir = d.toString
-    }
-    dir
-  }
+  def ensureFixture(): String = fixtureDir
+  private lazy val fixtureDir =
+    Fits.fixture("graft_uvh5_fixture_v1")(write(_, Fits.fixtureSpec))
 }

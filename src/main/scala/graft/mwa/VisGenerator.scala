@@ -51,10 +51,11 @@ object VisGenerator {
     sqrt(lit(-2.0) * log(uniform(seed, salt * 2 + 1, keys: _*))) *
       cos(lit(2.0 * math.Pi) * uniform(seed, salt * 2 + 2, keys: _*))
 
-  /** The visibility fact table, one row per (time, baseline, freq, pol).
-    * Partition-friendly: derived from range cross-joins, so Spark
-    * parallelizes generation over the time axis. */
-  def vis(spark: SparkSession, spec: Spec = Spec()): DataFrame = {
+  /** The visibility table with values `re`/`im`: one row per (time,
+    * baseline, freq, pol), built from range cross-joins so Spark
+    * parallelizes generation over the time axis. `re`/`im` may read the
+    * grid's coordinates and `pol_idx`, the pol's position in `spec.pols`. */
+  private def table(spark: SparkSession, spec: Spec)(re: Column, im: Column): DataFrame = {
     val times = spark.range(spec.nTimes).select(
       col("id").cast("int").as("time_idx"),
       (lit(spec.jd0) + col("id") * spec.dtDays).as("time_jd"))
@@ -66,9 +67,19 @@ object VisGenerator {
       col("id").cast("int").as("freq_idx"),
       (col("id") / spec.nFine).cast("int").as("coarse_chan"),
       (lit(spec.freq0Hz) + col("id") * spec.dfHz).as("freq_hz"))
-    val pols = spark.createDataFrame(spec.pols.map(Tuple1(_))).toDF("pol")
+    val pols = spark.createDataFrame(spec.pols.zipWithIndex).toDF("pol", "pol_idx")
+    times.crossJoin(baselines).crossJoin(freqs).crossJoin(pols).select(
+      lit(spec.obsid).as("obsid"),
+      col("time_idx"), col("time_jd"), col("ant1"), col("ant2"), col("baseline"),
+      col("coarse_chan"), col("freq_hz"), col("pol"),
+      re.as("vis_re"),
+      im.as("vis_im"),
+      lit(false).as("flag"),
+      lit(1.0).as("nsample"))
+  }
 
-    val grid = times.crossJoin(baselines).crossJoin(freqs).crossJoin(pols)
+  /** The visibility fact table, one row per (time, baseline, freq, pol). */
+  def vis(spark: SparkSession, spec: Spec = Spec()): DataFrame = {
     val k = Seq(col("baseline"), col("freq_idx"), col("pol"))
     val kt = col("time_idx") +: k
     val sky = uniform(spec.seed, 1, k: _*) * spec.skyAmp
@@ -78,14 +89,9 @@ object VisGenerator {
     val streak = when(col("time_idx") === spec.streakTime, spec.streakAmp).otherwise(0.0)
     val gain = lit(1.0) + lit(spec.bandRipple) *
       sin(lit(math.Pi) * (col("freq_idx") % spec.nFine) / (spec.nFine - 1))
-    grid.select(
-      lit(spec.obsid).as("obsid"),
-      col("time_idx"), col("time_jd"), col("ant1"), col("ant2"), col("baseline"),
-      col("coarse_chan"), col("freq_hz"), col("pol"),
-      (gain * (sky + narrow + streak + gaussian(spec.seed, 3, kt: _*) * spec.noiseSigma)).as("vis_re"),
-      (gain * (sky + narrow + streak + gaussian(spec.seed, 5, kt: _*) * spec.noiseSigma)).as("vis_im"),
-      lit(false).as("flag"),
-      lit(1.0).as("nsample"))
+    table(spark, spec)(
+      gain * (sky + narrow + streak + gaussian(spec.seed, 3, kt: _*) * spec.noiseSigma),
+      gain * (sky + narrow + streak + gaussian(spec.seed, 5, kt: _*) * spec.noiseSigma))
   }
 
   /** Portable deterministic variant for cross-engine oracle checking
@@ -99,20 +105,6 @@ object VisGenerator {
     * DuckDB SQL oracle certify the full spectrum chain with NO rounding.
     * Planted structure (narrow tone, broadband streak) matches vis(). */
   def portable(spark: SparkSession, spec: Spec = Spec(nTimes = 17, nAnts = 16)): DataFrame = {
-    val times = spark.range(spec.nTimes).select(
-      col("id").cast("int").as("time_idx"),
-      (lit(spec.jd0) + col("id") * spec.dtDays).as("time_jd"))
-    val ants = spark.range(spec.nAnts).select(col("id").cast("int").as("ant1"))
-    val ants2 = spark.range(spec.nAnts).select(col("id").cast("int").as("ant2"))
-    val baselines = ants.crossJoin(ants2).filter(col("ant1") <= col("ant2"))
-      .withColumn("baseline", col("ant1").cast("long") * 2048 + col("ant2"))
-    val freqs = spark.range(spec.nCoarse.toLong * spec.nFine).select(
-      col("id").cast("int").as("freq_idx"),
-      (col("id") / spec.nFine).cast("int").as("coarse_chan"),
-      (lit(spec.freq0Hz) + col("id") * spec.dfHz).as("freq_hz"))
-    val pols = spark.createDataFrame(spec.pols.zipWithIndex).toDF("pol", "pol_idx")
-
-    val grid = times.crossJoin(baselines).crossJoin(freqs).crossJoin(pols)
     val sky = pmod(col("ant1") * 7 + col("ant2") * 11 + col("freq_idx") * 3 +
       col("pol_idx") * 17, lit(64)).cast("double")
     val noise = (pmod(col("time_idx") * 37 + col("ant1") * 13 + col("ant2") * 29 +
@@ -121,14 +113,7 @@ object VisGenerator {
       col("time_idx").between(spec.rfiTimes._1, spec.rfiTimes._2), spec.rfiAmp)
       .otherwise(0.0)
     val streak = when(col("time_idx") === spec.streakTime, spec.streakAmp).otherwise(0.0)
-    grid.select(
-      lit(spec.obsid).as("obsid"),
-      col("time_idx"), col("time_jd"), col("ant1"), col("ant2"), col("baseline"),
-      col("coarse_chan"), col("freq_hz"), col("pol"),
-      (sky + narrow + streak + noise).as("vis_re"),
-      lit(0.0).as("vis_im"),
-      lit(false).as("flag"),
-      lit(1.0).as("nsample"))
+    table(spark, spec)(sky + narrow + streak + noise, lit(0.0))
   }
 
   /** Baselines in the on-disk writers' order: ant1-major, ant1 <= ant2. */
@@ -175,33 +160,12 @@ object VisGenerator {
                        spec: Spec = Spec(nTimes = 16, nAnts = 4)): DataFrame = {
     require(spec.nTimes % 2 == 0, "sign-pairing needs an even nTimes")
     require(spec.nFine % 2 == 0, "gain alternation needs an even nFine")
-    val times = spark.range(spec.nTimes).select(
-      col("id").cast("int").as("time_idx"),
-      (lit(spec.jd0) + col("id") * spec.dtDays).as("time_jd"))
-    val ants = spark.range(spec.nAnts).select(col("id").cast("int").as("ant1"))
-    val ants2 = spark.range(spec.nAnts).select(col("id").cast("int").as("ant2"))
-    val baselines = ants.crossJoin(ants2).filter(col("ant1") <= col("ant2"))
-      .withColumn("baseline", col("ant1").cast("long") * 2048 + col("ant2"))
-    val freqs = spark.range(spec.nCoarse.toLong * spec.nFine).select(
-      col("id").cast("int").as("freq_idx"),
-      (col("id") / spec.nFine).cast("int").as("coarse_chan"),
-      (lit(spec.freq0Hz) + col("id") * spec.dfHz).as("freq_hz"))
-    val pols = spark.createDataFrame(spec.pols.zipWithIndex).toDF("pol", "pol_idx")
-
-    val grid = times.crossJoin(baselines).crossJoin(freqs).crossJoin(pols)
     val gain = (lit(1) + (col("freq_idx") % spec.nFine) % 2 * 2).cast("double")
     val sign = when(col("time_idx") % 2 === 0, 1.0).otherwise(-1.0)
     val d = pmod(col("ant1") * 13 + col("ant2") * 29 + col("pol_idx") * 71,
       lit(64)).cast("double") / 64.0
     val streak = when(col("time_idx") === spec.streakTime, spec.streakAmp).otherwise(0.0)
-    grid.select(
-      lit(spec.obsid).as("obsid"),
-      col("time_idx"), col("time_jd"), col("ant1"), col("ant2"), col("baseline"),
-      col("coarse_chan"), col("freq_hz"), col("pol"),
-      (gain * (lit(2.0) + sign * d + streak)).as("vis_re"),
-      lit(0.0).as("vis_im"),
-      lit(false).as("flag"),
-      lit(1.0).as("nsample"))
+    table(spark, spec)(gain * (lit(2.0) + sign * d + streak), lit(0.0))
   }
 
   /** Coarse-channel dimension matching the generated freq axis

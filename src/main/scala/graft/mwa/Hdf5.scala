@@ -27,6 +27,7 @@ import java.nio.file.{Files, Path}
 object Hdf5 {
 
   val Undef: Long = -1L // 0xFFFF_FFFF_FFFF_FFFF
+  private val Signature = Array(0x89, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n').map(_.toByte)
 
   sealed trait Dtype { def size: Int }
   case object I8 extends Dtype { val size = 1 }
@@ -207,7 +208,7 @@ object Hdf5 {
     val eof = buf.pos.toLong
     // superblock v0
     val sb = new Buf
-    sb.putBytes(Array(0x89, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n').map(_.toByte))
+    sb.putBytes(Signature)
     sb.put1(0); sb.put1(0); sb.put1(0); sb.put1(0) // versions
     sb.put1(0)                                     // shared msg version
     sb.put1(8); sb.put1(8); sb.put1(0)             // offset/length sizes
@@ -230,19 +231,15 @@ object Hdf5 {
 
   /** Parse the full dataset map ("group/name" -> Ds) of the subset file
     * open in `raf` (`path` names it in errors). Metadata only — no data
-    * bytes are touched (the scan's planning pass). */
+    * bytes are touched (the scan's planning pass). A structure that is
+    * truncated, lacks its signature or is not of the subset is a
+    * [[CorruptInputException]] at its offset. */
   def datasets(raf: RandomAccessFile, path: String): Map[String, Ds] = {
-    raf.seek(0)
-    val sigBuf = new Array[Byte](8)
-    raf.readFully(sigBuf)
-    require(sigBuf.sameElements(
-      Array(0x89, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n').map(_.toByte)),
-      s"$path: not an HDF5 file")
-    raf.seek(13)
-    require(raf.read() == 8 && raf.read() == 8,
-      s"$path: only 8-byte offsets/lengths supported")
-    raf.seek(64)
-    val rootOh = readLong(raf)
+    val sb = bytesAt(raf, path, 0, 72, "superblock")
+    expect(path, 0, sb, Signature, "HDF5")
+    if (sb.get(13) != 8 || sb.get(14) != 8)
+      throw new CorruptInputException(path, 13, "only 8-byte offsets/lengths supported")
+    val rootOh = sb.getLong(64)
     groupMembers(raf, path, rootOh).flatMap { case (gName, gOh) =>
       groupMembers(raf, path, gOh).flatMap { case (dName, dOh) =>
         parseDataset(raf, path, dOh).map(ds => s"$gName/$dName" -> ds)
@@ -250,20 +247,32 @@ object Hdf5 {
     }.toMap
   }
 
-  private def readLong(raf: RandomAccessFile): Long = {
-    val b = new Array[Byte](8); raf.readFully(b)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getLong
+  /** `len` bytes at `addr` of the file open in `raf`, checked against the
+    * file's length before anything is allocated: a structure that runs
+    * past the end is a [[CorruptInputException]] at `addr`. */
+  private def bytesAt(raf: RandomAccessFile, path: String, addr: Long, len: Long,
+                      what: String): ByteBuffer = {
+    if (len < 0 || addr < 0 || len > raf.length() - addr)
+      throw new CorruptInputException(path, addr, s"$what of $len bytes " +
+        s"runs past end of file (${raf.length()} bytes)")
+    if (len > Int.MaxValue - 8)
+      throw new CorruptInputException(path, addr, s"$what of $len bytes exceeds one read")
+    val b = new Array[Byte](len.toInt)
+    raf.seek(addr); raf.readFully(b)
+    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
   }
 
+  /** A [[CorruptInputException]] at `addr` unless `bb` starts with `magic`. */
+  private def expect(path: String, addr: Long, bb: ByteBuffer, magic: Array[Byte],
+                     what: String): Unit =
+    if (!java.util.Arrays.equals(bb.array(), 0, magic.length, magic, 0, magic.length))
+      throw new CorruptInputException(path, addr, s"no $what signature")
+
   /** All (type, body) messages of a v1 object header, following
-    * continuation (0x0010) blocks. A block that runs past the end of the
-    * file is a [[CorruptInputException]] at the block's offset, raised
-    * before the block is allocated. */
+    * continuation (0x0010) blocks. */
   private def messages(raf: RandomAccessFile, path: String,
                        ohAddr: Long): Seq[(Int, Array[Byte])] = {
-    raf.seek(ohAddr)
-    val head = new Array[Byte](16); raf.readFully(head)
-    val hb = ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
+    val hb = bytesAt(raf, path, ohAddr, 16, "object header")
     require(hb.get() == 1, s"object header at $ohAddr is not version 1")
     hb.get()
     val nMsgs = hb.getShort() & 0xffff
@@ -276,15 +285,7 @@ object Hdf5 {
     while (remaining > 0 && blocks.nonEmpty) {
       val (addr, len) = blocks.head
       blocks = blocks.tail
-      if (len < 0 || addr < 0 || len > raf.length() - addr)
-        throw new CorruptInputException(path, addr, s"object header block of " +
-          s"$len bytes runs past end of file (${raf.length()} bytes)")
-      if (len > Int.MaxValue - 8)
-        throw new CorruptInputException(path, addr, s"object header block of " +
-          s"$len bytes exceeds one read")
-      val raw = new Array[Byte](len.toInt)
-      raf.seek(addr); raf.readFully(raw)
-      val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
+      val bb = bytesAt(raf, path, addr, len, "object header block")
       while (remaining > 0 && bb.remaining() >= 8) {
         val tpe = bb.getShort() & 0xffff
         val sz = bb.getShort() & 0xffff
@@ -312,12 +313,9 @@ object Hdf5 {
     val sb = ByteBuffer.wrap(stab).order(ByteOrder.LITTLE_ENDIAN)
     val (btree, heap) = (sb.getLong, sb.getLong)
     // heap header -> data segment address
-    raf.seek(heap)
-    val hh = new Array[Byte](32); raf.readFully(hh)
-    val hb = ByteBuffer.wrap(hh).order(ByteOrder.LITTLE_ENDIAN)
-    require(hh.take(4).sameElements("HEAP".getBytes), s"bad heap at $heap")
-    hb.position(8); hb.getLong; hb.getLong
-    val heapData = hb.getLong
+    val hh = bytesAt(raf, path, heap, 32, "local heap")
+    expect(path, heap, hh, "HEAP".getBytes, "HEAP")
+    val heapData = hh.getLong(24)
 
     def name(offset: Long): String = {
       raf.seek(heapData + offset)
@@ -328,30 +326,20 @@ object Hdf5 {
     }
 
     def walkBtree(addr: Long): Seq[Long] = { // SNOD addresses
-      raf.seek(addr)
-      val fixed = new Array[Byte](24); raf.readFully(fixed)
-      val fb = ByteBuffer.wrap(fixed).order(ByteOrder.LITTLE_ENDIAN)
-      require(fixed.take(4).sameElements("TREE".getBytes), s"bad btree at $addr")
-      fb.position(4)
-      fb.get() // node type 0
-      val level = fb.get()
-      fb.position(6)
-      val used = fb.getShort() & 0xffff
-      val body = new Array[Byte]((2 * used + 1) * 8)
-      raf.seek(addr + 24); raf.readFully(body)
-      val bb = ByteBuffer.wrap(body).order(ByteOrder.LITTLE_ENDIAN)
+      val fb = bytesAt(raf, path, addr, 24, "B-tree node")
+      expect(path, addr, fb, "TREE".getBytes, "TREE")
+      val level = fb.get(5) // after the node type (0) at 4
+      val used = fb.getShort(6) & 0xffff
+      val bb = bytesAt(raf, path, addr + 24, (2L * used + 1) * 8, "B-tree node keys")
       val children = (0 until used).map { _ => bb.getLong; bb.getLong }
       if (level == 0) children else children.flatMap(walkBtree)
     }
 
     walkBtree(btree).flatMap { snod =>
-      raf.seek(snod)
-      val sh = new Array[Byte](8); raf.readFully(sh)
-      require(sh.take(4).sameElements("SNOD".getBytes), s"bad SNOD at $snod")
-      val n = ByteBuffer.wrap(sh).order(ByteOrder.LITTLE_ENDIAN).getShort(6) & 0xffff
-      val entries = new Array[Byte](40 * n)
-      raf.readFully(entries)
-      val eb = ByteBuffer.wrap(entries).order(ByteOrder.LITTLE_ENDIAN)
+      val sh = bytesAt(raf, path, snod, 8, "symbol table node")
+      expect(path, snod, sh, "SNOD".getBytes, "SNOD")
+      val n = sh.getShort(6) & 0xffff
+      val eb = bytesAt(raf, path, snod + 8, 40L * n, "symbol table entries")
       (0 until n).map { i =>
         eb.position(40 * i)
         val nameOff = eb.getLong

@@ -309,13 +309,15 @@ class VisSourceSpec extends SparkSpec {
     try Hdf5.datasets(raf, path) finally raf.close()
   }
 
-  /** A copy of the uvh5 fixture with `patch` applied to its bytes. */
-  private def patchedUvh5(patch: (Array[Byte], Map[String, Hdf5.Ds]) => Unit): String = {
+  /** A copy of the uvh5 fixture with `patch` applied to its bytes, cut to
+    * its first `keep` bytes. */
+  private def patchedUvh5(patch: (Array[Byte], Map[String, Hdf5.Ds]) => Unit,
+                          keep: Int = Int.MaxValue): String = {
     val src = VisSource.inputs(Uvh5.ensureFixture())(".uvh5").head
     val bytes = Files.readAllBytes(Paths.get(src))
     patch(bytes, datasetsOf(src))
     val dir = Paths.get(tmpDir("graft_uvh5_corrupt_"))
-    Files.write(dir.resolve(Paths.get(src).getFileName), bytes).toString
+    Files.write(dir.resolve(Paths.get(src).getFileName), bytes.take(keep)).toString
   }
 
   private def le(bytes: Array[Byte]) = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -363,5 +365,40 @@ class VisSourceSpec extends SparkSpec {
     val reason = "object header block of 2147483648 bytes runs past end of file"
     checkTyped(path, rootOh + 16, reason)(datasetsOf(path))
     checkTyped(path, rootOh + 16, reason)(load(Paths.get(path).getParent.toString).count())
+  }
+
+  test("a uvh5 whose metadata walk meets a bad signature or a short file fails typed") {
+    val src = VisSource.inputs(Uvh5.ensureFixture())(".uvh5").head
+    val bytes = Files.readAllBytes(Paths.get(src))
+    def at(magic: String): Int = bytes.indexOfSlice(magic.getBytes.toSeq)
+    def check(path: String, offset: Long, reason: String): Unit = {
+      checkTyped(path, offset, reason)(datasetsOf(path))
+      checkTyped(path, offset, reason)(load(Paths.get(path).getParent.toString).count())
+    }
+    check(patchedUvh5((b, _) => b(1) = 'X'), 0, "no HDF5 signature")
+    check(patchedUvh5((b, _) => b(13) = 4), 13, "only 8-byte offsets/lengths supported")
+    for (magic <- Seq("HEAP", "TREE", "SNOD")) withClue(magic) {
+      check(patchedUvh5((b, _) => b(at(magic)) = 'X'), at(magic), s"no $magic signature")
+    }
+    // entry counts of 65535: sized against the file before the keys or
+    // entries are allocated
+    val tree = at("TREE")
+    check(patchedUvh5((b, _) => le(b).putShort(tree + 6, (-1).toShort)), tree + 24,
+      s"B-tree node keys of ${(2 * 65535 + 1) * 8} bytes runs past end of file")
+    val snod = at("SNOD")
+    check(patchedUvh5((b, _) => le(b).putShort(snod + 6, (-1).toShort)), snod + 8,
+      s"symbol table entries of ${40 * 65535} bytes runs past end of file")
+    // the root group's structures and object header close the file, after
+    // every dataset; a cut anywhere before the object header's 16-byte
+    // prefix ends loses it, and a cut inside the superblock loses that
+    val rootOh = le(bytes).getLong(64)
+    val ns = datasetsOf(src)("Data/nsamples")
+    val dataEnd = (ns.dataAddr + ns.dataLen).toInt
+    for (keep <- Seq(dataEnd, (dataEnd + rootOh.toInt) / 2, rootOh.toInt, rootOh.toInt + 15))
+      withClue(s"cut at $keep") {
+        check(patchedUvh5((_, _) => (), keep), rootOh,
+          "object header of 16 bytes runs past end of file")
+      }
+    check(patchedUvh5((_, _) => (), 40), 0, "superblock of 72 bytes runs past end of file")
   }
 }

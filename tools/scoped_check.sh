@@ -15,7 +15,9 @@
 # shared kernels (src/main/scala/graft/functions/ and operators/) serve
 # queries that their files never name, and queries/Catalog.scala holds the
 # helpers every query family shares and the registry, which lists rows by
-# val, not by quoted name, so a change to any of them sweeps every known
+# val, not by quoted name. Verify.scala runs every query and
+# SparkEntry.scala serves them all through its `queries` map, though
+# neither names them. So a change to any of these files sweeps every known
 # query.
 #
 #   tools/scoped_check.sh            # uncommitted changes vs HEAD
@@ -32,7 +34,7 @@ if [ -z "$NAMES" ]; then
   MWA=0
   echo "$FILES" | grep -qE '^src/main/scala/graft/(mwa/.*|sources/VisSource\.scala)$' && MWA=1
   ALL=0
-  echo "$FILES" | grep -qE '^src/main/scala/graft/(plans/.*|functions/.*|operators/.*|queries/Catalog\.scala|GraftExtensions\.scala|Engine\.scala)$' && ALL=1
+  echo "$FILES" | grep -qE '^src/main/scala/graft/(plans/.*|functions/.*|operators/.*|queries/Catalog\.scala|GraftExtensions\.scala|Engine\.scala|Verify\.scala|SparkEntry\.scala)$' && ALL=1
   NAMES=$({ grep -hso '"[a-z0-9_]*"' $FILES || true; } | tr -d '"' | sort -u | python3 -c "
 import json, sys
 known = set(json.load(open('$KNOWN')))

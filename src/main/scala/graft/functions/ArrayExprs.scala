@@ -337,7 +337,9 @@ object ArrayExprs {
     * division in TextFns.minhashEstimate: agreements counted over the
     * common prefix (zip_with pads the longer side with nulls, and
     * null==x folds to the otherwise-0 branch), denominator = size of the
-    * LEFT signature, both cast to double before the one division. */
+    * LEFT signature, both cast to double before the one division. An
+    * empty left signature is NaN here; [[MinHashEstimate]] returns NULL
+    * for it before calling in. */
   def sigAgreeFracCompute(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var c = 0
@@ -1103,7 +1105,10 @@ case class SimHashText(child: Expression, bits: Int, portable: Boolean)
   * compiled expression. Output element type stays nullable: empty (or
   * all-null) shingle input yields k NULL components, the exact
   * transform+array_min behavior callers may rely on (every production
-  * caller filters size(shingles) > 0 first). */
+  * caller filters size(shingles) > 0 first). NEVER NULL: a NULL shingle
+  * array also yields k NULL components, the shape of the bind+transform
+  * formulation it replaces, so eval/codegen pass the null child through
+  * instead of the null-intolerant default. */
 case class MinHashPortableSig(child: Expression, k: Int) extends UnaryExpression {
   require(k >= 1, s"minhash_portable_sig: k must be >= 1, got $k")
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -1112,17 +1117,28 @@ case class MinHashPortableSig(child: Expression, k: Int) extends UnaryExpression
       s"minhash_portable_sig requires array<string>, got ${t.sql}")
   }
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullSafeEval(v: Any): Any =
-    ArrayExprs.minhashPortableCompute(v.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ArrayExprs.minhashPortableCompute($c, $k)")
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any =
+    ArrayExprs.minhashPortableCompute(child.eval(input).asInstanceOf[ArrayData], k)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val c = child.genCode(ctx)
+    ev.copy(
+      code = code"""
+        ${c.code}
+        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+          graft.functions.ArrayExprs.minhashPortableCompute(
+            ${c.isNull} ? null : ${c.value}, $k);""",
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
   override protected def withNewChildInternal(newChild: Expression): MinHashPortableSig =
     copy(child = newChild)
 }
 
 /** MinHash agreement fraction (ArrayExprs.sigAgreeFracCompute) as one
-  * compiled expression — the estimated-Jaccard verify kernel. */
+  * compiled expression — the estimated-Jaccard verify kernel. An empty
+  * LEFT signature estimates NULL (no denominator), as the declarative
+  * zip_with/aggregate division does with ANSI off. */
 case class MinHashEstimate(left: Expression, right: Expression)
     extends BinaryExpression {
   private def isLongArray(e: Expression): Boolean = e.dataType match {
@@ -1135,11 +1151,17 @@ case class MinHashEstimate(left: Expression, right: Expression)
       s"minhash_estimate requires array<bigint> inputs, got " +
         s"${left.dataType.sql} and ${right.dataType.sql}")
   override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ArrayExprs.sigAgreeFracCompute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullable: Boolean = true
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val sigA = a.asInstanceOf[ArrayData]
+    if (sigA.numElements() == 0) null
+    else ArrayExprs.sigAgreeFracCompute(sigA, b.asInstanceOf[ArrayData])
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.ArrayExprs.sigAgreeFracCompute($a, $b)")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""if ($a.numElements() == 0) ${ev.isNull} = true;
+         |else ${ev.value} = graft.functions.ArrayExprs.sigAgreeFracCompute($a, $b);"""
+        .stripMargin)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): MinHashEstimate =
     copy(left = l, right = r)
 }

@@ -135,16 +135,9 @@ object TextFns {
     // native compiled loop (ArrayExprs.MinHashPortableSig) — bit-identical
     // to the transform(sequence) + array_min(transform(md5_prefix_long))
     // nest it replaces (same "i:shingle" digest bytes, same array_min
-    // null semantics; see the compute scaladoc). The when() keeps the old
-    // formulation's null-input shape: bind+transform turned a NULL
-    // shingle array into k NULL components, not a NULL array. The caller
-    // contract (pass a cheap column — `shingles` is referenced twice, by
-    // the null guard and the signature build) is self-enforcing as in
-    // [[lshBands]]: computed inputs are let-bound, never evaluated twice.
-    def build(s: Column): Column =
-      when(s.isNotNull, ArrayExprs.minhash_portable_sig(s, k))
-        .otherwise(array((0 until k).map(_ => lit(null).cast("long")): _*))
-    if (cheapRef(shingles)) build(shingles) else bind(shingles)(build)
+    // null semantics, and a NULL shingle array signs to k NULL
+    // components; see the compute scaladoc)
+    ArrayExprs.minhash_portable_sig(shingles, k)
   }
 
   /** Portable LSH band digests: identical banding logic to [[lshBands]]

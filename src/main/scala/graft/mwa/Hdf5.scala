@@ -273,7 +273,9 @@ object Hdf5 {
   private def messages(raf: RandomAccessFile, path: String,
                        ohAddr: Long): Seq[(Int, Array[Byte])] = {
     val hb = bytesAt(raf, path, ohAddr, 16, "object header")
-    require(hb.get() == 1, s"object header at $ohAddr is not version 1")
+    val version = hb.get()
+    if (version != 1)
+      throw new CorruptInputException(path, ohAddr, s"object header version $version is not 1")
     hb.get()
     val nMsgs = hb.getShort() & 0xffff
     hb.getInt()
@@ -377,13 +379,14 @@ object Hdf5 {
     } yield {
       val sp = ByteBuffer.wrap(space).order(ByteOrder.LITTLE_ENDIAN)
       val ver = sp.get() & 0xff
-      require(ver == 1, s"dataspace version $ver unsupported")
+      if (ver != 1)
+        throw new CorruptInputException(path, ohAddr, s"dataspace version $ver unsupported")
       val rank = sp.get() & 0xff
       sp.position(8)
       val dims = (0 until rank).map(_ => sp.getLong)
       val lb = ByteBuffer.wrap(layout).order(ByteOrder.LITTLE_ENDIAN)
-      require(lb.get() == 3 && lb.get() == 1,
-        s"only v3 contiguous layout supported (dataset at $ohAddr)")
+      if (lb.get() != 3 || lb.get() != 1)
+        throw new CorruptInputException(path, ohAddr, "only v3 contiguous layout supported")
       val (addr, len) = (lb.getLong, lb.getLong)
       if (addr < 0 || len < 0 || len > raf.length() - addr)
         throw new CorruptInputException(path, addr, s"data of the dataset at $ohAddr " +

@@ -239,41 +239,7 @@ object RelationalOps {
   def resampleLerp(events: DataFrame, key: String, tsCol: String,
                    valueCol: String, stepHours: Int,
                    tieBreak: String): DataFrame = {
-    val ev = dedupFirst(events.select(col(key), col(tsCol), col(valueCol),
-        col(tieBreak)),
-      Seq(col(key), col(tsCol)), Seq(col(tieBreak).desc))
-      .drop(tieBreak)
-      .withColumn("__evc", round(col(valueCol) * 100, 0).cast("long"))
-    val bounds = ev.groupBy(key)
-      .agg(date_trunc("hour", min(col(tsCol))).as("__t0"),
-        max(col(tsCol)).as("__t1"))
-    val grid = bounds.select(col(key),
-      explode(sequence(col("__t0"), col("__t1"),
-        expr(s"INTERVAL $stepHours HOURS"))).as("grid_ts"))
-    val tsType = events.schema(tsCol).dataType
-    val g = grid.withColumn("__side", lit(1))
-      .withColumn("__ats", col("grid_ts"))
-      .withColumn("__ets", lit(null).cast(tsType))
-      .withColumn("__ec", lit(null).cast("long"))
-    val e = ev.select(col(key), col(tsCol).as("__ats"),
-        col(tsCol).as("__ets"), col("__evc").as("__ec"))
-      .withColumn("__side", lit(0))
-      .withColumn("grid_ts", lit(null).cast(tsType))
-    val cols = Seq(key, "grid_ts", "__side", "__ats", "__ets", "__ec")
-    val u = g.select(cols.map(col): _*).unionByName(e.select(cols.map(col): _*))
-    // prev pass: events sort BEFORE grid rows at equal ts (at-or-before
-    // includes the tie); next pass: grid rows first in DESC order, so an
-    // equal-ts event is NOT its own "next"
-    val wPrev = Window.partitionBy(col(key)).orderBy(col("__ats"), col("__side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = Window.partitionBy(col(key))
-      .orderBy(col("__ats").desc, col("__side").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    u.withColumn("__ta", last(col("__ets"), ignoreNulls = true).over(wPrev))
-      .withColumn("__va", last(col("__ec"), ignoreNulls = true).over(wPrev))
-      .withColumn("__tb", last(col("__ets"), ignoreNulls = true).over(wNext))
-      .withColumn("__vb", last(col("__ec"), ignoreNulls = true).over(wNext))
-      .filter(col("__side") === 1)
+    resampleBracket(events, key, tsCol, valueCol, stepHours, tieBreak)
       .withColumn("lerp_centi",
         when(col("__ta").isNull, lit(null).cast("long"))
           .when(col("__tb").isNull, col("__va"))
@@ -312,6 +278,28 @@ object RelationalOps {
   def resampleNearest(events: DataFrame, key: String, tsCol: String,
                       valueCol: String, stepHours: Int,
                       tieBreak: String): DataFrame = {
+    resampleBracket(events, key, tsCol, valueCol, stepHours, tieBreak)
+      .withColumn("nearest_centi",
+        when(col("__ta").isNull, col("__vb"))
+          .when(col("__tb").isNull, col("__va"))
+          .otherwise(expr(
+            """CASE WHEN unix_micros(cast(grid_ts as timestamp))
+                       - unix_micros(cast(__ta as timestamp))
+                    <= unix_micros(cast(__tb as timestamp))
+                       - unix_micros(cast(grid_ts as timestamp))
+                    THEN __va ELSE __vb END""")))
+      .select(col(key), col("grid_ts"), col("nearest_centi"))
+  }
+
+  /** The bracket [[resampleLerp]] and [[resampleNearest]] share: one row
+    * per grid instant of each key, with its latest at-or-before event
+    * (`__ta`, `__va`) and earliest strictly-after event (`__tb`, `__vb`),
+    * values in exact centi-units. Events are deduped per (key, ts) on
+    * `tieBreak` desc; the grid runs from the hour of each key's first
+    * event to its last, every `stepHours`. */
+  private def resampleBracket(events: DataFrame, key: String, tsCol: String,
+                              valueCol: String, stepHours: Int,
+                              tieBreak: String): DataFrame = {
     val ev = dedupFirst(events.select(col(key), col(tsCol), col(valueCol),
         col(tieBreak)),
       Seq(col(key), col(tsCol)), Seq(col(tieBreak).desc))
@@ -334,6 +322,9 @@ object RelationalOps {
       .withColumn("grid_ts", lit(null).cast(tsType))
     val cols = Seq(key, "grid_ts", "__side", "__ats", "__ets", "__ec")
     val u = g.select(cols.map(col): _*).unionByName(e.select(cols.map(col): _*))
+    // prev pass: events sort BEFORE grid rows at equal ts (at-or-before
+    // includes the tie); next pass: grid rows first in DESC order, so an
+    // equal-ts event is NOT its own "next"
     val wPrev = Window.partitionBy(col(key)).orderBy(col("__ats"), col("__side"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wNext = Window.partitionBy(col(key))
@@ -344,16 +335,6 @@ object RelationalOps {
       .withColumn("__tb", last(col("__ets"), ignoreNulls = true).over(wNext))
       .withColumn("__vb", last(col("__ec"), ignoreNulls = true).over(wNext))
       .filter(col("__side") === 1)
-      .withColumn("nearest_centi",
-        when(col("__ta").isNull, col("__vb"))
-          .when(col("__tb").isNull, col("__va"))
-          .otherwise(expr(
-            """CASE WHEN unix_micros(cast(grid_ts as timestamp))
-                       - unix_micros(cast(__ta as timestamp))
-                    <= unix_micros(cast(__tb as timestamp))
-                       - unix_micros(cast(grid_ts as timestamp))
-                    THEN __va ELSE __vb END""")))
-      .select(col(key), col("grid_ts"), col("nearest_centi"))
   }
 
   /** OHLC bucket downsampling — the financial-style summary of an event

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.internal.SQLConf
 
 /** Standard-SQL semantics for grouping-set aggregates over EMPTY input
   * (round-15 differential-fuzzer finding, FUZZ_r15_sf01 f0068/f0137).
@@ -50,8 +49,7 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * Guards: streaming aggregates are skipped (a Union of a streaming agg
   * with a filtered global agg is not a supported streaming plan);
-  * `spark.graft.standardEmptyGroupingSets=false` restores Spark's native
-  * behavior; idempotency is PER-AGGREGATE via a TreeNodeTag on the
+  * idempotency is PER-AGGREGATE via a TreeNodeTag on the
   * rewritten node (round-15 ADVICE, medium: the previous plan-global
   * marker scan made the whole rule bail when ANY subtree had been
   * rewritten — a second rollup layered over an already-rewritten view
@@ -69,9 +67,7 @@ object EmptyGroupingSetsRewrite extends Rule[LogicalPlan] {
   private val PosName = "_gen_grouping_pos"
   private val RewrittenTag = TreeNodeTag[Boolean]("graft.emptyGroupingSets.rewritten")
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (SQLConf.get.getConfString(
-        "spark.graft.standardEmptyGroupingSets", "true") != "true") return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case agg @ Aggregate(gExprs, _, expand: Expand, _)
           if gExprs.nonEmpty && !agg.isStreaming &&
@@ -81,7 +77,6 @@ object EmptyGroupingSetsRewrite extends Rule[LogicalPlan] {
           u
         }.getOrElse(agg)
     }
-  }
 
   private def rewrite(agg: Aggregate, expand: Expand): Option[LogicalPlan] = {
     // only the analyzer-lowered grouping-sets shape: every grouping

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.internal.SQLConf
 
 /** Whole-operator top-k-per-group as a first-class plan node
   * (SURVEY.md §2 row O6 scale path; the (c) tier of the custom-operator
@@ -27,8 +26,8 @@ import org.apache.spark.sql.internal.SQLConf
   * same caveat as any top-k.
   *
   * Memory contract (both phases bounded): the partial phase caps its
-  * group map at `spark.graft.topk.maxPartialGroups` entries (default
-  * 262144); once at capacity, rows of unseen groups PASS THROUGH to the
+  * group map at [[GroupTopKStrategy.MaxPartialGroups]] entries; once at
+  * capacity, rows of unseen groups PASS THROUGH to the
   * exchange unmodified — correct by construction, since the final phase
   * re-selects, and exactly Spark's partial-hash-agg fallback shape. The
   * final phase holds O(1) state: it demands child ordering on
@@ -56,12 +55,13 @@ case class GroupTopK(
   * the hash exchange demanded by the final node's required distribution
   * and the spillable sort demanded by its required ordering. */
 object GroupTopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
+  /** Groups the partial phase keeps per task before passing rows through. */
+  val MaxPartialGroups = 262144
+
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case g: GroupTopK =>
-      val maxGroups = SQLConf.get
-        .getConfString("spark.graft.topk.maxPartialGroups", "262144").toInt
-      GroupTopKExec(g.groupExprs, g.sortOrder, g.k, partial = false, maxGroups,
-        GroupTopKExec(g.groupExprs, g.sortOrder, g.k, partial = true, maxGroups,
+      GroupTopKExec(g.groupExprs, g.sortOrder, g.k, partial = false, MaxPartialGroups,
+        GroupTopKExec(g.groupExprs, g.sortOrder, g.k, partial = true, MaxPartialGroups,
           planLater(g.child))) :: Nil
     case _ => Nil
   }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.analysis.{TempResolvedColumn, UnresolvedHav
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.ByteType
 
 /** Standard-SQL resolution for `grouping()` / `grouping_id()` in HAVING
@@ -44,16 +43,12 @@ import org.apache.spark.sql.types.ByteType
   * aggregate like any other non-output reference. Anything the rule
   * cannot FULLY map (expression arguments, partial grouping_id lists) is
   * left untouched for native resolution (and its native error).
-  *
-  * Opt out: `spark.graft.standardGroupingInHaving=false`.
   */
 object GroupingInHavingRewrite extends Rule[LogicalPlan] {
 
   private val GidName = "spark_grouping_id"
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (SQLConf.get.getConfString(
-        "spark.graft.standardGroupingInHaving", "true") != "true") return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsUp {
       case h @ UnresolvedHaving(cond,
           agg @ Aggregate(gExprs, _, expand: Expand, _))
@@ -61,7 +56,6 @@ object GroupingInHavingRewrite extends Rule[LogicalPlan] {
         rewrite(cond, agg, expand).map(c => h.copy(havingCondition = c))
           .getOrElse(h)
     }
-  }
 
   /** Unwrap the stuck form: a grouping-function argument Spark resolved
     * to `TempResolvedColumn(<original input attribute>)`. */

@@ -15,19 +15,19 @@ import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableCo
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-import graft.mwa.{Fits, Hdf5, Uvh5}
+import graft.mwa.{CorruptInputException, Fits, Hdf5, Uvh5}
 
 /** DataSource V2 over raw visibility files: `format("graft-vis")`.
-  * Options: `path`, a directory holding ONE input family (gpubox `.fits`,
-  * `.uvfits` or `.uvh5`), and `timeslice`, integrations per partition
-  * (default 4).
+  * One option: `path`, a directory holding ONE input family (gpubox
+  * `.fits`, `.uvfits` or `.uvh5`).
   *
   * This is the SURVEY §2.1 S2 Phase-2 shape with the reference's one
   * processor interface and a per-format strategy behind it
   * (`processors.py:23-38`): a single [[VisScan]] plans ONE InputPartition
-  * PER (file, time-slice) — the two axes the reference's batched reader
-  * splits work by (`processors.py:166-172`, gpubox files × time batches;
-  * a gpubox file is one coarse channel). Only two things differ per
+  * PER (file, time-slice) of [[VisScan.Slice]] integrations — the two
+  * axes the reference's batched reader splits work by
+  * (`processors.py:166-172`, gpubox files × time batches; a gpubox file
+  * is one coarse channel). Only two things differ per
   * format, both behind [[VisFile]]: the planning-time metadata parse and
   * the fill of one time slice, a chunk at a time, into the 13-column
   * layout. Listing, pruning, projection, the file handle and the reused
@@ -60,8 +60,6 @@ object VisSource {
     StructField("vis_im", DoubleType, nullable = false),
     StructField("flag", BooleanType, nullable = false),
     StructField("nsample", DoubleType, nullable = false)))
-
-  def timeSlice(o: CaseInsensitiveStringMap): Int = o.getInt("timeslice", 4)
 
   /** Rows per columnar batch: a reader's column vectors and raw read
     * buffers are sized by this, never by a data unit. */
@@ -98,10 +96,10 @@ class VisTable(path: String) extends Table with SupportsRead {
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new VisScanBuilder(path, VisSource.timeSlice(options))
+    new VisScanBuilder(path)
 }
 
-class VisScanBuilder(path: String, slice: Int)
+class VisScanBuilder(path: String)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   private var required: StructType = VisSource.schema
@@ -132,7 +130,7 @@ class VisScanBuilder(path: String, slice: Int)
     found.headOption match {
       case Some((MsFormat.Ext, ms)) => throw MsFormat.unsupported(ms)
       case Some((ext, files)) =>
-        new VisScan(path, ext, files, slice, required, pushed)
+        new VisScan(path, ext, files, required, pushed)
       case None => throw new IllegalArgumentException(
         s"No gpubox .fits, .uvfits or .uvh5 files under $path")
     }
@@ -174,6 +172,11 @@ class MsNotSupportedException(msg: String)
     extends UnsupportedOperationException(msg)
 
 object VisScan {
+  /** Integrations per partition. On `gpubox_flags`, whole-file partitions
+    * (16 integrations) read no faster than 4 within run-to-run spread, and
+    * a short slice lets time filters prune. */
+  val Slice = 4
+
   private val axes = Set("time_idx", "coarse_chan")
   def supported(f: sources.Filter): Boolean = f match {
     case sources.EqualTo(a, _) => axes(a)
@@ -210,7 +213,7 @@ object VisScan {
   * file's metadata once, at planning time (no payload bytes)
   * and plans one partition per (file, time-slice) that the pushed
   * time_idx/coarse_chan filters keep. */
-class VisScan(path: String, ext: String, files: Seq[String], slice: Int,
+class VisScan(path: String, ext: String, files: Seq[String],
               required: StructType, pushed: Array[sources.Filter])
     extends Scan with Batch {
   override def readSchema(): StructType = required
@@ -223,8 +226,8 @@ class VisScan(path: String, ext: String, files: Seq[String], slice: Int,
   override def planInputPartitions(): Array[InputPartition] =
     (for {
       f <- parsed
-      t0 <- 0 until f.nTimes by slice
-      t1 = math.min(t0 + slice, f.nTimes)
+      t0 <- 0 until f.nTimes by VisScan.Slice
+      t1 = math.min(t0 + VisScan.Slice, f.nTimes)
       if VisScan.keep(f.coarseChan, t0, t1, pushed)
     } yield VisPartition(f, t0, t1): InputPartition).toArray
 
@@ -356,7 +359,9 @@ case class FitsFile(path: String, obsid: Long, chan: Int, nTimes: Int,
 
   /** Walks the HDU headers sequentially (cheap: 2880-byte records), lays
     * out and checks the tables whose TIMEIDX falls in the slice, and reads
-    * their rows a chunk at a time. */
+    * their rows a chunk at a time. A file that ends before every
+    * integration of the slice has its HDU fails typed at its end, rather
+    * than yielding fewer rows. */
   override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
     val hdus = IndexedSeq.newBuilder[FitsFile.Hdu]
     var next = Fits.readHeader(raf, 0L, path)
@@ -366,7 +371,11 @@ case class FitsFile(path: String, obsid: Long, chan: Int, nTimes: Int,
         hdus += new FitsFile.Hdu(new Fits.Table(raf, hd))
       next = Fits.readHeader(raf, hd.nextHduOffset, path)
     }
-    new FitsFile.Chunks(this, hdus.result(), out)
+    val found = hdus.result()
+    if (found.length != t1 - t0)
+      throw new CorruptInputException(path, raf.length(),
+        s"integrations [$t0, $t1) have ${found.length} HDUs, not ${t1 - t0}")
+    new FitsFile.Chunks(this, found, out)
   }
 }
 

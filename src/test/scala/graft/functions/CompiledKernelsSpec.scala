@@ -157,9 +157,8 @@ class CompiledKernelsSpec extends SparkSpec {
     val rows: Seq[(Option[Seq[Long]], Option[Seq[Long]])] =
       // NOTE an empty LEFT signature is excluded: under ANSI (Spark 4
       // default) the old HOF's double division throws DIVIDE_BY_ZERO
-      // there, while the compiled kernel returns NaN — unreachable either
-      // way, since every caller feeds fixed-length k>=1 signatures (the
-      // minhashSignature/minhashPortable output contract).
+      // there; the compiled kernel's NULL is pinned against the HOF with
+      // ANSI off below.
       Seq((None, Some(Seq(1L))), (Some(Seq(1L)), None),
         (Some(Seq(1L)), Some(Nil)), (Some(Seq(1L, 2L)), Some(Seq(1L)))) ++
         (1 to 150).map { _ =>
@@ -185,6 +184,35 @@ class CompiledKernelsSpec extends SparkSpec {
         assert(java.lang.Double.doubleToRawLongBits(f) ==
           java.lang.Double.doubleToRawLongBits(g), s"bits diverged: $f vs $g")
       }
+    }
+  }
+
+  // each kernel runs on a local relation (folded on the driver through
+  // eval) and across an exchange (whole-stage codegen)
+  private def bothPaths(df: org.apache.spark.sql.DataFrame) =
+    Seq("eval" -> df, "codegen" -> df.repartition(1))
+
+  test("minhashEstimate of an empty left signature is NULL, as the HOF with ANSI off") {
+    import spark.implicits._
+    val df = Seq((Seq.empty[Long], Seq(1L)), (Seq.empty[Long], Seq.empty[Long]))
+      .toDF("a", "b")
+    for ((path, d) <- bothPaths(df)) withClue(path) {
+      val out = d.select(TextFns.minhashEstimate(col("a"), col("b"))).collect()
+      assert(out.length == 2 && out.forall(_.isNullAt(0)), out.toSeq)
+    }
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try assert(df.select(minhashEstimateHof(col("a"), col("b"))).collect()
+      .forall(_.isNullAt(0)))
+    finally spark.conf.unset("spark.sql.ansi.enabled")
+  }
+
+  test("a NULL shingle array signs to k NULL components, not a NULL array") {
+    import spark.implicits._
+    val df = Seq(Option.empty[Seq[String]]).toDF("sh")
+    for ((path, d) <- bothPaths(df); k <- Seq(1, 16)) withClue(s"$path k=$k") {
+      val r = d.select(ArrayExprs.minhash_portable_sig(col("sh"), k)).head()
+      assert(!r.isNullAt(0))
+      assert(r.getSeq[Any](0) == Seq.fill(k)(null))
     }
   }
 }

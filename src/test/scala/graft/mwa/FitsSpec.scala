@@ -16,8 +16,8 @@ class FitsSpec extends SparkSpec {
     d
   }
 
-  private def load(slice: Int = 4) = spark.read.format("graft-vis")
-    .option("path", dir.toString).option("timeslice", slice.toString).load()
+  private def load() = spark.read.format("graft-vis")
+    .option("path", dir.toString).load()
 
   test("writer emits standard FITS: 2880-byte records, parseable headers") {
     val files = dir.toFile.listFiles().filter(_.getName.endsWith(".fits")).sorted
@@ -51,9 +51,9 @@ class FitsSpec extends SparkSpec {
   }
 
   test("time/channel pushdown prunes (file, HDU-slice) partitions") {
-    // 2 files x ceil(6/2)=3 slices -> 6 partitions unfiltered
-    assert(load(2).rdd.getNumPartitions == 6)
-    val q = load(2).filter(col("time_idx") < 2 && col("coarse_chan") === 1)
+    // 2 files x ceil(6/4)=2 slices -> 4 partitions unfiltered
+    assert(load().rdd.getNumPartitions == 4)
+    val q = load().filter(col("time_idx") < 2 && col("coarse_chan") === 1)
     assert(q.rdd.getNumPartitions == 1)
     assert(q.count() ==
       2L * (spec.nAnts * (spec.nAnts + 1) / 2) * spec.nFine * spec.pols.length)

@@ -96,15 +96,6 @@ class EmptyGroupingSetsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.toSeq == Seq(Row(null, 0L)))
   }
 
-  test("conf off restores native Spark behavior") {
-    spark.conf.set("spark.graft.standardEmptyGroupingSets", "false")
-    try {
-      val out = src.filter(col("v") > 1000)
-        .rollup(col("k1")).agg(count(lit(1)).as("c")).collect()
-      assert(out.isEmpty)
-    } finally spark.conf.set("spark.graft.standardEmptyGroupingSets", "true")
-  }
-
   test("statically-empty input (WHERE false) also yields the total row") {
     src.createOrReplaceTempView("egs_t3")
     val out = spark.sql(

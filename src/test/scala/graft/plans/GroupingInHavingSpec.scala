@@ -112,18 +112,6 @@ class GroupingInHavingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.toSeq == Seq(Row(null, 3L)))
   }
 
-  test("conf off restores the native error") {
-    spark.conf.set("spark.graft.standardGroupingInHaving", "false")
-    try {
-      val e = intercept[Exception] {
-        spark.sql(
-          """SELECT k AS c0, count(*) AS c1 FROM gih_t
-             GROUP BY CUBE(k) HAVING grouping(k) = 1""").collect()
-      }
-      assert(e.getMessage.contains("UNRESOLVED_COLUMN"))
-    } finally spark.conf.set("spark.graft.standardGroupingInHaving", "true")
-  }
-
   test("works together with the empty-input grand-total rewrite") {
     // empty input + rollup + HAVING on grouping(): the fallback row has
     // grouping(k)=1 and must survive the HAVING, per DuckDB/PostgreSQL

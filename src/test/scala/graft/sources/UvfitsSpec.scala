@@ -9,9 +9,8 @@ import graft.mwa.{Fits, VisGenerator}
   * baseline-code range on both sides. */
 class UvfitsSpec extends SparkSpec {
 
-  private def loadUvfits(path: String = Fits.Uvfits.ensureFixture(), slice: Int = 4) =
-    spark.read.format("graft-vis").option("path", path)
-      .option("timeslice", slice.toString).load()
+  private def loadUvfits(path: String = Fits.Uvfits.ensureFixture()) =
+    spark.read.format("graft-vis").option("path", path).load()
 
   private def loadGpubox = spark.read.format("graft-vis")
     .option("path", Fits.ensureFixture()).load()
@@ -42,13 +41,13 @@ class UvfitsSpec extends SparkSpec {
 
   test("time filters prune group-slices at the source (seek, no decode)") {
     // 17 times, slice 4 -> 5 slices; one file covers all channels
-    assert(loadUvfits(slice = 4).rdd.getNumPartitions == 5)
-    val pruned = loadUvfits(slice = 4).filter("time_idx < 4")
+    assert(loadUvfits().rdd.getNumPartitions == 5)
+    val pruned = loadUvfits().filter("time_idx < 4")
     assert(pruned.rdd.getNumPartitions == 1)
     assert(pruned.count() == 4 * 10 * 16 * 2)
     // coarse_chan filters stay residual (groups span the freq axis) but
     // still evaluate correctly row-level
-    val chan = loadUvfits(slice = 4).filter("coarse_chan = 1")
+    val chan = loadUvfits().filter("coarse_chan = 1")
     assert(chan.count() == 17 * 10 * 8 * 2)
   }
 

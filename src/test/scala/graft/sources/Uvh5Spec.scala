@@ -7,9 +7,8 @@ import graft.mwa.{Fits, Hdf5, Uvh5}
   * decode parity with the gpubox path, and seek-based time pruning. */
 class Uvh5Spec extends SparkSpec {
 
-  private def loadUvh5(slice: Int = 4) = spark.read.format("graft-vis")
-    .option("path", Uvh5.ensureFixture())
-    .option("timeslice", slice.toString).load()
+  private def loadUvh5() = spark.read.format("graft-vis")
+    .option("path", Uvh5.ensureFixture()).load()
 
   test("HDF5 writer/reader round-trips groups, dtypes, dims and data") {
     val dir = java.nio.file.Paths.get(tmpDir("graft_h5_"))
@@ -49,8 +48,8 @@ class Uvh5Spec extends SparkSpec {
   }
 
   test("time filters prune blt-slices at the source (contiguous seek)") {
-    assert(loadUvh5(4).rdd.getNumPartitions == 5) // ceil(17/4)
-    val pruned = loadUvh5(4).filter("time_idx < 4")
+    assert(loadUvh5().rdd.getNumPartitions == 5) // ceil(17/4)
+    val pruned = loadUvh5().filter("time_idx < 4")
     assert(pruned.rdd.getNumPartitions == 1)
     assert(pruned.count() == 4 * 10 * 16 * 2)
   }

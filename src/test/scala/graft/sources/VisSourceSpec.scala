@@ -27,8 +27,8 @@ class VisSourceSpec extends SparkSpec {
     Input("uvfits", ".uvfits", () => Fits.Uvfits.ensureFixture(), 1, perChan = false),
     Input("uvh5", ".uvh5", () => Uvh5.ensureFixture(), 1, perChan = false))
 
-  private def load(dir: String, slice: Int = 4) = spark.read.format("graft-vis")
-    .option("path", dir).option("timeslice", slice.toString).load()
+  private def load(dir: String) = spark.read.format("graft-vis")
+    .option("path", dir).load()
 
   private def scanOutput(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     val scans = df.queryExecution.optimizedPlan.collect {
@@ -39,10 +39,9 @@ class VisSourceSpec extends SparkSpec {
   }
 
   test("plans one partition per (coarse_chan, time-slice)") {
-    // per file: ceil(17/4) = 5 and ceil(17/2) = 9 slices
+    // per file: ceil(17/4) = 5 slices
     for (in <- inputs) withClue(in.name) {
-      assert(load(in.dir(), 4).rdd.getNumPartitions == in.files * 5)
-      assert(load(in.dir(), 2).rdd.getNumPartitions == in.files * 9)
+      assert(load(in.dir()).rdd.getNumPartitions == in.files * 5)
     }
   }
 
@@ -55,20 +54,20 @@ class VisSourceSpec extends SparkSpec {
   }
 
   test("filter pushdown prunes (time, chan) partitions at the source") {
-    // pushFilters -> planInputPartitions, gpubox slice 2: 2 files x 9 slices; time_idx < 4 keeps
-    // slices [0,2) and [2,4) per file; coarse_chan = 1 keeps one file
+    // pushFilters -> planInputPartitions, gpubox: 2 files x 5 slices; time_idx < 4 keeps
+    // slice [0,4) per file; coarse_chan = 1 keeps one file
     val dir = Fits.ensureFixture()
     def partsWith(fs: Filter*) = {
-      val b = new VisScanBuilder(dir, 2)
+      val b = new VisScanBuilder(dir)
       b.pushFilters(fs.toArray)
       b.build().toBatch.planInputPartitions().length
     }
-    assert(partsWith() == 18)
-    assert(partsWith(LessThan("time_idx", 4)) == 4)
-    assert(partsWith(LessThan("time_idx", 4), EqualTo("coarse_chan", 1)) == 2)
+    assert(partsWith() == 10)
+    assert(partsWith(LessThan("time_idx", 4)) == 2)
+    assert(partsWith(LessThan("time_idx", 4), EqualTo("coarse_chan", 1)) == 1)
     assert(partsWith(EqualTo("time_idx", 0)) == 2)
 
-    // end-to-end, slice 4: every format prunes time slices by seek; only
+    // end-to-end: every format prunes time slices by seek; only
     // gpubox prunes coarse channels (uvfits groups and uvh5 blt rows span
     // the band, so there coarse_chan stays a row-level residual)
     val perChanRows = 10L * 8 * 2 // baselines x fine x pols
@@ -83,7 +82,8 @@ class VisSourceSpec extends SparkSpec {
         17 * perChanRows)
       check(col("time_idx") < 4 && col("coarse_chan") === 1, 1, 4 * perChanRows)
     }
-    val fine = load(dir, 2).filter(col("time_idx") < 2 && col("coarse_chan") === 1)
+    // a filter inside one slice keeps that slice; Spark drops its other rows
+    val fine = load(dir).filter(col("time_idx") < 2 && col("coarse_chan") === 1)
     assert(fine.rdd.getNumPartitions == 1)
     assert(fine.count() == 2 * perChanRows)
   }
@@ -154,15 +154,15 @@ class VisSourceSpec extends SparkSpec {
           .toOption.contains(file))
       finally fds.close()
     }
-    for (in <- inputs) withClue(in.name) {
-      val dir = Paths.get(tmpDir("graft_vis_trunc_"))
-      val files = VisSource.inputs(in.dir())(in.ext).map(Paths.get(_))
-      files.foreach(f => Files.copy(f, dir.resolve(f.getFileName)))
-      val victim = dir.resolve(files.head.getFileName).toRealPath()
-      // plan on the intact copy (uvh5 keeps its metadata after /Data), then
-      // truncate inside the data; one partition per file, so one task
-      // touches the victim
-      val rdd = load(dir.toString, slice = 17).queryExecution.toRdd
+    // the fixture's geometry cut to one time slice: one partition per
+    // file, so one task reads the whole victim and meets the cut mid-read
+    val spec = Fits.fixtureSpec.copy(nTimes = VisScan.Slice)
+    for ((in, dir) <- writeAll("trunc", spec)) withClue(in.name) {
+      val files = VisSource.inputs(dir)(in.ext).map(Paths.get(_))
+      val victim = files.head.toRealPath()
+      // plan on the intact files (uvh5 keeps its metadata after /Data),
+      // then truncate inside the data
+      val rdd = load(dir).queryExecution.toRdd
       val ch = java.nio.channels.FileChannel.open(victim,
         java.nio.file.StandardOpenOption.WRITE)
       try ch.truncate(Files.size(victim) / 2) finally ch.close()
@@ -244,7 +244,7 @@ class VisSourceSpec extends SparkSpec {
   /** Row counts of every batch the source's columnar readers return for
     * `dir` with `required` columns. */
   private def batchRows(dir: String, required: StructType): Seq[Int] = {
-    val b = new VisScanBuilder(dir, 4)
+    val b = new VisScanBuilder(dir)
     b.pruneColumns(required)
     val batch = b.build().toBatch
     val factory = batch.createReaderFactory()
@@ -400,5 +400,7 @@ class VisSourceSpec extends SparkSpec {
           "object header of 16 bytes runs past end of file")
       }
     check(patchedUvh5((_, _) => (), 40), 0, "superblock of 72 bytes runs past end of file")
+    check(patchedUvh5((b, _) => b(rootOh.toInt) = 2), rootOh,
+      "object header version 2 is not 1")
   }
 }

@@ -15,10 +15,14 @@
 # shared kernels (src/main/scala/graft/functions/ and operators/) serve
 # queries that their files never name, and queries/Catalog.scala holds the
 # helpers every query family shares and the registry, which lists rows by
-# val, not by quoted name. Verify.scala runs every query and
-# SparkEntry.scala serves them all through its `queries` map, though
-# neither names them. So a change to any of these files sweeps every known
-# query.
+# val, not by quoted name. Verify.scala runs every query,
+# SparkEntry.scala serves them all through its `queries` map and
+# Tables.scala loads the tables every query reads, though none of them
+# names a query. So a change to any of these files sweeps every known
+# query. The streaming sources (sources/BusSource.scala, streaming/) and
+# multimodal/ name no query either: a change there sweeps every query
+# named in queries/StreamingQueries.scala or
+# queries/MultimodalQueries.scala respectively.
 #
 #   tools/scoped_check.sh            # uncommitted changes vs HEAD
 #   tools/scoped_check.sh HEAD~3     # last three commits
@@ -34,8 +38,14 @@ if [ -z "$NAMES" ]; then
   MWA=0
   echo "$FILES" | grep -qE '^src/main/scala/graft/(mwa/.*|sources/VisSource\.scala)$' && MWA=1
   ALL=0
-  echo "$FILES" | grep -qE '^src/main/scala/graft/(plans/.*|functions/.*|operators/.*|queries/Catalog\.scala|GraftExtensions\.scala|Engine\.scala|Verify\.scala|SparkEntry\.scala)$' && ALL=1
-  NAMES=$({ grep -hso '"[a-z0-9_]*"' $FILES || true; } | tr -d '"' | sort -u | python3 -c "
+  echo "$FILES" | grep -qE '^src/main/scala/graft/(plans/.*|functions/.*|operators/.*|queries/Catalog\.scala|GraftExtensions\.scala|Engine\.scala|Verify\.scala|SparkEntry\.scala|Tables\.scala)$' && ALL=1
+  # files that name no query stand in for the family file that does
+  FAMILIES=""
+  echo "$FILES" | grep -qE '^src/main/scala/graft/(sources/BusSource\.scala|streaming/.*)$' \
+    && FAMILIES="$FAMILIES src/main/scala/graft/queries/StreamingQueries.scala"
+  echo "$FILES" | grep -qE '^src/main/scala/graft/multimodal/.*$' \
+    && FAMILIES="$FAMILIES src/main/scala/graft/queries/MultimodalQueries.scala"
+  NAMES=$({ grep -hso '"[a-z0-9_]*"' $FILES $FAMILIES || true; } | tr -d '"' | sort -u | python3 -c "
 import json, sys
 known = set(json.load(open('$KNOWN')))
 hits = {l.strip() for l in sys.stdin if l.strip() in known}

@@ -8,14 +8,19 @@ import org.apache.spark.sql.functions._
   * sky-subtraction diff (W1), the incoherent noise spectrum reduction (G6)
   * and the mean-subtracted z-score (W2).
   *
-  * Scale design: the diff window W1 partitions by (baseline, freq, pol)
-  * and sorts by time. The `graft-vis` source reports no partitioning, so
-  * W1 hash-shuffles and sorts every visibility, and the INS groupBy
-  * shuffles again. Each gpubox file does hold one (obsid, coarse_chan)
-  * (SURVEY §1.3); only a source that reports that layout as a key-grouped
-  * partitioning would let Spark skip these shuffles. The INS reduction
-  * collapses |baselines| x rows into (time, freq, pol) cells, and partial
-  * aggregation makes its shuffle carry only the reduced spectrum.
+  * Scale design: the diff window W1 partitions by (obsid, coarse_chan,
+  * baseline, freq, pol) and sorts by time; the INS groupBy keys on
+  * (obsid, coarse_chan, time, freq, pol). coarse_chan is a function of
+  * freq_hz, so neither extra key changes a result, but both let Spark use
+  * the layout a source reports. Each gpubox file holds one (obsid,
+  * coarse_chan) (SURVEY §1.3) and the `graft-vis` scan reports its splits
+  * key-grouped on those two columns, so on gpubox input W1 and the INS run
+  * in the scan's tasks with no exchange: one sort per key group, then the
+  * aggregate. Over uvfits, uvh5, the Parquet `VisStore` or a generated
+  * frame, nothing reports a layout: W1 hash-shuffles and sorts every
+  * visibility, and the INS shuffles again, carrying only partial
+  * aggregates. The INS reduction collapses |baselines| x rows into (time,
+  * freq, pol) cells; the z-score (W2) shuffles that reduced spectrum.
   */
 object VisOps {
 
@@ -60,8 +65,8 @@ object VisOps {
     * is dropped. Cancels the static sky; noise + transient RFI remain.
     * (`diff` read option, `configurators.py:66`; executed in SSINS.) */
   def diff(vis: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("obsid"), col("ant1"), col("ant2"),
-      col("freq_hz"), col("pol")).orderBy(col("time_idx"))
+    val w = Window.partitionBy(col("obsid"), col("coarse_chan"), col("ant1"),
+      col("ant2"), col("freq_hz"), col("pol")).orderBy(col("time_idx"))
     vis
       .withColumn("__re2", lead(col("vis_re"), 1).over(w))
       .withColumn("__im2", lead(col("vis_im"), 1).over(w))
@@ -76,15 +81,19 @@ object VisOps {
   }
 
   /** G6 — Incoherent Noise Spectrum: mean over unflagged baselines of |V|
-    * per (time, freq, pol), plus the contributing sample count.
+    * per (time, freq, pol), plus the contributing sample count. The
+    * grouping also keys on coarse_chan, then drops it, so the output is
+    * (obsid, time_idx, freq_hz, pol, metric, nsamples).
     * (SSINS public semantics, Wilensky et al. 2019, PASP 131:114507.) */
   def ins(vis: DataFrame): DataFrame =
-    vis.groupBy(col("obsid"), col("time_idx"), col("freq_hz"), col("pol"))
+    vis.groupBy(col("obsid"), col("coarse_chan"), col("time_idx"), col("freq_hz"),
+        col("pol"))
       .agg(
         avg(when(!col("flag"),
           sqrt(col("vis_re") * col("vis_re") + col("vis_im") * col("vis_im"))))
           .as("metric"),
         sum(when(!col("flag"), col("nsample")).otherwise(0.0)).as("nsamples"))
+      .drop("coarse_chan")
 
   /** W2 — mean-subtracted z-score: z = (metric / mean_t(metric) - 1) *
     * sqrt(nsamples), the SSINS `mean_subtract` shape the match filter

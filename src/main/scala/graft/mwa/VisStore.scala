@@ -10,9 +10,11 @@ import org.apache.spark.sql.functions._
   * Why this layout at 100 TB:
   *  - observation- and channel-scoped queries prune whole directories
   *    (PartitionFilters, zero I/O for untouched channels);
-  *  - the diff window W1 partitions by (baseline, freq, pol) WITHIN a
-  *    coarse channel, so its shuffle never crosses channel boundaries and
-  *    stays bounded by a channel's row count;
+  *  - the diff window W1 partitions by (obsid, coarse_chan, baseline,
+  *    freq, pol). A Parquet scan reports no layout, so here W1 still
+  *    hash-shuffles every visibility, and the INS shuffles its partial
+  *    aggregates; only the raw gpubox scan (`graft-vis`) reports its
+  *    (obsid, coarse_chan) key groups and runs both without an exchange;
   *  - time-slice predicates (F7) ride Parquet row-group stats on time_idx
   *    within each partition file.
   */

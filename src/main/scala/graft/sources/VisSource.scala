@@ -7,8 +7,9 @@ import java.util
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, Transform}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
@@ -34,7 +35,10 @@ import graft.mwa.{CorruptInputException, Fits, Hdf5, Uvh5}
   * column vectors exist once. The scan is columnar and implements
   * SupportsPushDownRequiredColumns, so narrow projections (e.g. the
   * metadata-only time scan, S3) fill, and read, only the columns they
-  * need.
+  * need. Over gpubox files it also reports its layout, (obsid,
+  * coarse_chan) key groups (see [[VisScan.outputPartitioning]]), so an
+  * operator keyed on both, such as the SSINS diff window and INS
+  * aggregate, runs with no shuffle.
   */
 class VisSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-vis"
@@ -215,21 +219,33 @@ object VisScan {
   * time_idx/coarse_chan filters keep. */
 class VisScan(path: String, ext: String, files: Seq[String],
               required: StructType, pushed: Array[sources.Filter])
-    extends Scan with Batch {
+    extends Scan with Batch with SupportsReportPartitioning {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-vis $ext path=$path PushedFilters: [${pushed.mkString(", ")}]"
 
   private lazy val parsed: Seq[VisFile] = files.map(VisSource.formats(ext))
+  private lazy val kept: Seq[VisPartition] = for {
+    f <- parsed
+    t0 <- 0 until f.nTimes by VisScan.Slice
+    t1 = math.min(t0 + VisScan.Slice, f.nTimes)
+    if VisScan.keep(f.coarseChan, t0, t1, pushed)
+  } yield VisPartition(f, t0, t1)
 
-  override def planInputPartitions(): Array[InputPartition] =
-    (for {
-      f <- parsed
-      t0 <- 0 until f.nTimes by VisScan.Slice
-      t1 = math.min(t0 + VisScan.Slice, f.nTimes)
-      if VisScan.keep(f.coarseChan, t0, t1, pushed)
-    } yield VisPartition(f, t0, t1): InputPartition).toArray
+  override def planInputPartitions(): Array[InputPartition] = kept.toArray
+
+  /** A gpubox file holds one (obsid, coarse_chan), so gpubox splits are
+    * key-grouped on `identity(obsid), identity(coarse_chan)`: Spark runs
+    * each key's time slices as one task, and an operator clustered on
+    * both keys (and possibly more) needs no exchange. Spark drops the
+    * report when the scan's output lacks either column. uvfits and uvh5
+    * files span the band, so they report no layout. */
+  override def outputPartitioning(): Partitioning =
+    if (parsed.forall(_.coarseChan.isDefined))
+      new KeyGroupedPartitioning(Array[Expression](Expressions.identity("obsid"),
+        Expressions.identity("coarse_chan")), kept.map(_.key).distinct.length)
+    else new UnknownPartitioning(kept.length)
 
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
     Scan.ColumnarSupportMode.SUPPORTED
@@ -237,8 +253,14 @@ class VisScan(path: String, ext: String, files: Seq[String],
     new VisReaderFactory(required)
 }
 
+/** One (file, time-slice) split. Its partition key is (obsid,
+  * coarse_chan), which Spark asks for only when the scan reports a
+  * key-grouped layout, that is for one-channel (gpubox) files. */
 case class VisPartition(file: VisFile, timeStart: Int, timeEnd: Int)
-    extends InputPartition
+    extends HasPartitionKey {
+  def key: (Long, Int) = (file.obsid, file.coarseChan.get)
+  override def partitionKey(): InternalRow = InternalRow(key._1, key._2)
+}
 
 class VisReaderFactory(required: StructType) extends PartitionReaderFactory {
   override def supportColumnarReads(partition: InputPartition): Boolean = true
@@ -340,6 +362,7 @@ final class CellAxis(nFine: Int, hz: Array[Double], pols: Seq[String]) {
   * is planned and carried in every partition of the file. */
 sealed trait VisFile extends Serializable {
   def path: String
+  def obsid: Long
   def nTimes: Int
   /** The file's one coarse channel, if it holds only one (gpubox). */
   def coarseChan: Option[Int]
@@ -357,17 +380,18 @@ case class FitsFile(path: String, obsid: Long, chan: Int, nTimes: Int,
                     nFine: Int, freq0Hz: Double, dfHz: Double) extends VisFile {
   override def coarseChan: Option[Int] = Some(chan)
 
-  /** Walks the HDU headers sequentially (cheap: 2880-byte records), lays
-    * out and checks the tables whose TIMEIDX falls in the slice, and reads
-    * their rows a chunk at a time. A file that ends before every
-    * integration of the slice has its HDU fails typed at its end, rather
-    * than yielding fewer rows. */
+  /** Walks the HDU headers sequentially (cheap: 2880-byte records) up to
+    * the first one whose TIMEIDX is past the slice, lays out and checks
+    * the tables whose TIMEIDX falls in the slice, and reads their rows a
+    * chunk at a time. No header after that first one is read. A file that
+    * ends before every integration of the slice has its HDU, or holds one
+    * twice, fails typed rather than yielding fewer or extra rows. */
   override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
     val hdus = IndexedSeq.newBuilder[FitsFile.Hdu]
     var next = Fits.readHeader(raf, 0L, path)
-    while (next.isDefined) {
+    while (next.exists(hd => !hd.has("TIMEIDX") || hd.int("TIMEIDX") < t1)) {
       val hd = next.get
-      if (hd.has("TIMEIDX") && hd.int("TIMEIDX") >= t0 && hd.int("TIMEIDX") < t1)
+      if (hd.has("TIMEIDX") && hd.int("TIMEIDX") >= t0)
         hdus += new FitsFile.Hdu(new Fits.Table(raf, hd))
       next = Fits.readHeader(raf, hd.nextHduOffset, path)
     }

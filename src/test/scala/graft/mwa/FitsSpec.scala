@@ -2,7 +2,9 @@ package graft.mwa
 
 import java.nio.file.Files
 import graft.SparkSpec
+import graft.sources.VisScanBuilder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, Filter, LessThan}
 
 /** FITS binary I/O: standard conformance of the writer, generic BINTABLE
   * decode, bit-exact round trip against the portable generator, and
@@ -50,9 +52,19 @@ class FitsSpec extends SparkSpec {
     assert(fromExpr.join(fromFits, cols).count() == fromExpr.count())
   }
 
+  /** The source's own (file, HDU-slice) partitions under `filters`. */
+  private def splits(filters: Filter*): Int = {
+    val b = new VisScanBuilder(dir.toString)
+    b.pushFilters(filters.toArray)
+    b.build().toBatch.planInputPartitions().length
+  }
+
   test("time/channel pushdown prunes (file, HDU-slice) partitions") {
-    // 2 files x ceil(6/4)=2 slices -> 4 partitions unfiltered
-    assert(load().rdd.getNumPartitions == 4)
+    // 2 files x ceil(6/4)=2 slices -> 4 partitions unfiltered; Spark runs
+    // each gpubox file's slices as one (obsid, coarse_chan) key group
+    assert(splits() == 4)
+    assert(load().rdd.getNumPartitions == 2)
+    assert(splits(LessThan("time_idx", 2), EqualTo("coarse_chan", 1)) == 1)
     val q = load().filter(col("time_idx") < 2 && col("coarse_chan") === 1)
     assert(q.rdd.getNumPartitions == 1)
     assert(q.count() ==

@@ -2,9 +2,6 @@ package graft.mwa
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,36 +19,6 @@ class ManifestValidationSpec extends SparkSpec {
 
   private def codes(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.select("code").collect().map(_.getString(0)).toSet
-
-  /** `f`'s result and the Spark jobs it started, counted by a listener. A
-    * listener sees events in posting order, so once it sees the start of a
-    * marker job submitted after `f` returns, every job of `f` is counted. */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"job-budget-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val marked = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-end" => marked.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "job budget")
-      val result = f
-      sc.setJobGroup(s"$group-end", "job budget marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marked.await(60, TimeUnit.SECONDS))
-      (result, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("manifest derivations: ext, stem, obsid, channel token (C1-C4)") {
     val m = Manifest.fromPaths(spark, goodPaths)

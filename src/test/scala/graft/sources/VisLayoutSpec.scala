@@ -1,0 +1,119 @@
+package graft.sources
+
+import graft.SparkSpec
+import graft.mwa.{Fits, GraftConfig, MatchFilter, Uvh5, VisGenerator, VisOps, VisStore}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.{KeyGroupedPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
+
+/** The layout the `graft-vis` scan reports, and the plans Spark builds
+  * from it: gpubox splits are key-grouped on (obsid, coarse_chan), so the
+  * SSINS diff window and INS aggregate run with no exchange; uvfits, uvh5
+  * and the Parquet `VisStore` report nothing, and keep theirs. Fixtures as
+  * in [[VisSourceSpec]]: 17 integrations, 4 antennas, 2 coarse x 8 fine
+  * channels, 2 pols. */
+class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private val cfg = GraftConfig(removeFlaggedAnts = false)
+
+  private def load(dir: String) = spark.read.format("graft-vis")
+    .option("path", dir).load()
+
+  private def insOf(vis: DataFrame): DataFrame =
+    VisOps.ins(VisOps.diff(VisOps.selectSurface(vis, cfg)))
+
+  private def plan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan
+
+  private def scanOf(df: DataFrame): BatchScanExec = {
+    val scans = collect(plan(df)) { case b: BatchScanExec => b }
+    assert(scans.length == 1)
+    scans.head
+  }
+
+  /** Shuffle exchanges under the INS aggregates, the ones grouping on
+    * coarse_chan (the final one holds the partial one). */
+  private def shufflesUnderIns(df: DataFrame): Int = {
+    val aggs = collect(plan(df)) {
+      case a: HashAggregateExec
+          if a.groupingExpressions.exists(_.references.exists(_.name == "coarse_chan")) => a
+    }
+    assert(aggs.nonEmpty)
+    aggs.map(a => collect(a.child) { case e: ShuffleExchangeExec => e }.length).max
+  }
+
+  test("a gpubox SSINS chain runs from the scan to the INS with no shuffle") {
+    val vis = load(Fits.ensureFixture())
+    assert(scanOf(vis).outputPartitioning.isInstanceOf[KeyGroupedPartitioning])
+    val ins = insOf(vis)
+    assert(shufflesUnderIns(ins) == 0)
+    assert(collect(plan(ins)) { case e: ShuffleExchangeExec => e }.isEmpty)
+    // the match filter's own grouping is the chain's one exchange, above the INS
+    val flags = MatchFilter(ins, cfg)
+    assert(shufflesUnderIns(flags) == 0)
+    assert(collect(plan(flags)) { case e: ShuffleExchangeExec => e }.length == 1)
+    // the same cells as the INS of the same rows with no layout reported
+    val generated = insOf(VisGenerator.portable(spark, Fits.fixtureSpec))
+    assert(ins.columns.toSeq == generated.columns.toSeq)
+    assert(ins.count() == 16L * 16 * 2) // (nTimes-1) x freqs x pols
+    assert(ins.exceptAll(generated).isEmpty && generated.exceptAll(ins).isEmpty)
+  }
+
+  test("uvfits, uvh5 and the Parquet VisStore report no layout and keep the exchange") {
+    val store = tmpDir("graft_vis_layout_store")
+    VisStore.write(load(Fits.ensureFixture()), store)
+    val inputs = Seq(
+      "uvfits" -> load(Fits.Uvfits.ensureFixture()),
+      "uvh5" -> load(Uvh5.ensureFixture()),
+      "parquet" -> VisStore.read(spark, store))
+    for ((name, vis) <- inputs) withClue(name) {
+      assert(shufflesUnderIns(insOf(vis)) > 0)
+      assert(insOf(vis).count() == 16L * 16 * 2)
+    }
+    for ((name, vis) <- inputs.take(2)) withClue(name) {
+      assert(!scanOf(vis).outputPartitioning.isInstanceOf[KeyGroupedPartitioning])
+    }
+  }
+
+  test("a projection without obsid or coarse_chan falls back to an unknown layout") {
+    val dir = Fits.ensureFixture()
+    // 2 files x 5 slices: key groups only while both key columns are read
+    assert(load(dir).queryExecution.toRdd.getNumPartitions == 2)
+    for (cols <- Seq(Seq("coarse_chan", "vis_re"), Seq("obsid", "vis_re"))) withClue(cols) {
+      val df = load(dir).select(cols.map(col): _*)
+      assert(!scanOf(df).outputPartitioning.isInstanceOf[KeyGroupedPartitioning])
+      assert(df.queryExecution.toRdd.getNumPartitions == 10)
+    }
+    // a pruned read as the benchmark sends it: one channel x 2
+    // integrations, count + sum; the partial and final aggregates keep
+    // their SinglePartition exchange, so the read takes 2 jobs
+    val read = load(dir).filter(col("coarse_chan") === 1 &&
+        col("time_idx") >= 5 && col("time_idx") < 7)
+      .agg(count(lit(1)), sum("vis_re"))
+    assert(!scanOf(read).outputPartitioning.isInstanceOf[KeyGroupedPartitioning])
+    assert(collect(plan(read)) {
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
+    }.length == 1)
+    val (row, jobs) = jobsOf(read.head())
+    assert(row.getLong(0) == 2L * 10 * 8 * 2)
+    assert(jobs == 2)
+  }
+
+  test("a filter that prunes every partition yields an empty result with the schema") {
+    val dir = Fits.ensureFixture()
+    val flagColumns = MatchFilter(insOf(load(dir)), cfg).columns.toSeq
+    for (f <- Seq(col("time_idx") >= 100, col("coarse_chan") === 99)) withClue(f) {
+      val none = load(dir).filter(f)
+      assert(scanOf(none).batch.planInputPartitions().isEmpty)
+      assert(none.schema == VisSource.schema)
+      assert(none.collect().isEmpty)
+      val flags = MatchFilter(insOf(none), cfg)
+      assert(flags.columns.toSeq == flagColumns)
+      assert(flags.collect().isEmpty)
+    }
+  }
+}

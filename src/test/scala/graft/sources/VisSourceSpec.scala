@@ -38,10 +38,21 @@ class VisSourceSpec extends SparkSpec {
     scans.head.output.map(_.name)
   }
 
+  /** The source's own (file, time-slice) partitions for `df`'s one scan,
+    * as planned with the filters pushed into it. */
+  private def splits(df: org.apache.spark.sql.DataFrame): Int = {
+    val scans = df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }
+    assert(scans.length == 1)
+    scans.head.batch.planInputPartitions().length
+  }
+
   test("plans one partition per (coarse_chan, time-slice)") {
-    // per file: ceil(17/4) = 5 slices
+    // per file: ceil(17/4) = 5 slices; Spark runs a gpubox file's slices,
+    // one (obsid, coarse_chan) key group, as one RDD partition
     for (in <- inputs) withClue(in.name) {
-      assert(load(in.dir()).rdd.getNumPartitions == in.files * 5)
+      val df = load(in.dir())
+      assert(splits(df) == in.files * 5)
+      assert(df.rdd.getNumPartitions == (if (in.perChan) in.files else in.files * 5))
     }
   }
 
@@ -71,19 +82,22 @@ class VisSourceSpec extends SparkSpec {
     // gpubox prunes coarse channels (uvfits groups and uvh5 blt rows span
     // the band, so there coarse_chan stays a row-level residual)
     val perChanRows = 10L * 8 * 2 // baselines x fine x pols
+    // gpubox runs as one RDD partition per surviving file
     for (in <- inputs) withClue(in.name) {
-      def check(f: org.apache.spark.sql.Column, parts: Int, rows: Long) = {
+      def check(f: org.apache.spark.sql.Column, parts: Int, files: Int, rows: Long) = {
         val q = load(in.dir()).filter(f)
-        assert(q.rdd.getNumPartitions == parts)
+        assert(splits(q) == parts)
+        assert(q.rdd.getNumPartitions == (if (in.perChan) files else parts))
         assert(q.count() == rows)
       }
-      check(col("time_idx") < 4, in.files, 4 * 2 * perChanRows)
-      check(col("coarse_chan") === 1, (if (in.perChan) 1 else in.files) * 5,
+      check(col("time_idx") < 4, in.files, in.files, 4 * 2 * perChanRows)
+      check(col("coarse_chan") === 1, (if (in.perChan) 1 else in.files) * 5, 1,
         17 * perChanRows)
-      check(col("time_idx") < 4 && col("coarse_chan") === 1, 1, 4 * perChanRows)
+      check(col("time_idx") < 4 && col("coarse_chan") === 1, 1, 1, 4 * perChanRows)
     }
     // a filter inside one slice keeps that slice; Spark drops its other rows
     val fine = load(dir).filter(col("time_idx") < 2 && col("coarse_chan") === 1)
+    assert(splits(fine) == 1)
     assert(fine.rdd.getNumPartitions == 1)
     assert(fine.count() == 2 * perChanRows)
   }
@@ -229,6 +243,35 @@ class VisSourceSpec extends SparkSpec {
     checkRead(tableNoEnd, firstBinary, "is not printable ASCII")
     checkRead(corrupted(0, "END ", " " * Fits.CardLen), rec,
       "XTENSION card inside the header that starts at byte 0: a lost END card")
+  }
+
+  test("a gpubox slice's header walk stops past the slice: a corrupt later header fails only its slice") {
+    // the fixture's first gpubox file with the NAXIS2 card of TIMEIDX 5's
+    // header made malformed: the walk of slice [0, 4) stops at TIMEIDX 4,
+    // the walk of slice [4, 8) reads it
+    val src = Paths.get(VisSource.inputs(Fits.ensureFixture())(".fits").head)
+    val hd = Fits.readHeaders(src.toString).find(h => h.has("TIMEIDX") && h.int("TIMEIDX") == 5).get
+    val bytes = Files.readAllBytes(src)
+    val text = new String(bytes, hd.offset.toInt, Fits.RecordLen, "US-ASCII")
+    val at = hd.offset.toInt + (0 until Fits.RecordLen by Fits.CardLen)
+      .find(i => text.startsWith("NAXIS2", i)).get
+    Fits.card("NAXIS2", "12x").getBytes("US-ASCII").copyToArray(bytes, at)
+    val dir = Paths.get(tmpDir("graft_fits_later_"))
+    val path = dir.resolve(src.getFileName)
+    Files.write(path, bytes)
+    // the earlier slice reads every row, equal to the intact file's
+    val chan = Fits.readPrimary(src.toString).int("COARSE")
+    val early = load(dir.toString).filter(col("time_idx") < 4)
+    val intact = load(Fits.ensureFixture())
+      .filter(col("time_idx") < 4 && col("coarse_chan") === chan)
+    assert(early.count() == 4L * 10 * 8 * 2)
+    assert(early.exceptAll(intact).isEmpty && intact.exceptAll(early).isEmpty)
+    // the later slice meets the bad card and fails typed at its header
+    val e = intercept[Exception](
+      load(dir.toString).filter(col("time_idx").between(4, 7)).count())
+    val c = corruptCause(e)
+    assert(c.path == path.toString && c.offset == hd.offset)
+    assert(c.getMessage.contains("NAXIS2 = '12x' is not a number"), c.getMessage)
   }
 
   /** One observation written in all three formats under `name`. */

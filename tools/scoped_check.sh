@@ -9,7 +9,10 @@
 # in the artifact yet — pass them explicitly as the second argument.
 # Most MWA sources (decoders, manifest, validation, match filter) name no
 # query, so a change to any file under mwa/ or to sources/VisSource.scala
-# adds every known query whose name starts with `mwa`. The planner rules
+# adds every known query whose name starts with `mwa`, plus the streaming
+# match-filter rows s06_stream_mf, s07_stream_mf_timer,
+# s20_stream_mf_restart and s21_bus_mf_restart, which build their INS
+# through VisOps.diff/ins and run MatchFilter.run. The planner rules
 # (src/main/scala/graft/plans/ and GraftExtensions.scala) run on every
 # plan, the session settings in Engine.scala reach every plan, and the
 # shared kernels (src/main/scala/graft/functions/ and operators/) serve
@@ -53,6 +56,8 @@ if $ALL:
     hits |= known
 if $MWA:
     hits |= {k for k in known if k.startswith('mwa')}
+    hits |= known & {'s06_stream_mf', 's07_stream_mf_timer',
+                     's20_stream_mf_restart', 's21_bus_mf_restart'}
 print(','.join(sorted(hits)))")
   [ -z "$NAMES" ] && { echo "no known query names found in: $FILES"; exit 0; }
 fi

@@ -191,22 +191,28 @@ class VisSourceSpec extends SparkSpec {
     }
   }
 
-  test("a FITS header with a size past EOF and 2 GiB, or a bad size card, fails typed") {
-    // a gpubox file with one card of one header record rewritten (record 1
-    // is the first BINTABLE header, right after the primary's), keeping
-    // the first `keep` bytes
-    val src = Paths.get(VisSource.inputs(Fits.ensureFixture())(".fits").head)
+  /** The fixture's first gpubox file. */
+  private lazy val gpubox = Paths.get(VisSource.inputs(Fits.ensureFixture())(".fits").head)
+
+  /** A copy of [[gpubox]], alone in a new directory, with the card that
+    * starts with `find` in header record `record` rewritten to `card`,
+    * keeping the first `keep` bytes. */
+  private def corrupted(record: Int, find: String, card: String,
+                        keep: Int = Int.MaxValue): String = {
     val rec = Fits.RecordLen
-    def corrupted(record: Int, find: String, card: String, keep: Int = Int.MaxValue) = {
-      val bytes = Files.readAllBytes(src).take(keep)
-      val text = new String(bytes, record * rec, rec, "US-ASCII")
-      val at = record * rec + (0 until rec by Fits.CardLen)
-        .find(i => text.startsWith(find, i)).get
-      card.getBytes("US-ASCII").copyToArray(bytes, at)
-      val dir = Paths.get(tmpDir("graft_fits_corrupt_"))
-      Files.write(dir.resolve(src.getFileName), bytes)
-      dir.resolve(src.getFileName).toString
-    }
+    val bytes = Files.readAllBytes(gpubox).take(keep)
+    val text = new String(bytes, record * rec, rec, "US-ASCII")
+    val at = record * rec + (0 until rec by Fits.CardLen)
+      .find(i => text.startsWith(find, i)).get
+    card.getBytes("US-ASCII").copyToArray(bytes, at)
+    val dir = Paths.get(tmpDir("graft_fits_corrupt_"))
+    Files.write(dir.resolve(gpubox.getFileName), bytes)
+    dir.resolve(gpubox.getFileName).toString
+  }
+
+  test("a FITS header with a size past EOF and 2 GiB, or a bad size card, fails typed") {
+    // record 1 is the first BINTABLE header, right after the primary's
+    val rec = Fits.RecordLen
     def check(path: String, offset: Long, reason: String) = {
       val c = intercept[CorruptInputException](Fits.readHeaders(path))
       assert(c.path == path && c.offset == offset)
@@ -246,31 +252,23 @@ class VisSourceSpec extends SparkSpec {
   }
 
   test("a gpubox slice's header walk stops past the slice: a corrupt later header fails only its slice") {
-    // the fixture's first gpubox file with the NAXIS2 card of TIMEIDX 5's
-    // header made malformed: the walk of slice [0, 4) stops at TIMEIDX 4,
-    // the walk of slice [4, 8) reads it
-    val src = Paths.get(VisSource.inputs(Fits.ensureFixture())(".fits").head)
-    val hd = Fits.readHeaders(src.toString).find(h => h.has("TIMEIDX") && h.int("TIMEIDX") == 5).get
-    val bytes = Files.readAllBytes(src)
-    val text = new String(bytes, hd.offset.toInt, Fits.RecordLen, "US-ASCII")
-    val at = hd.offset.toInt + (0 until Fits.RecordLen by Fits.CardLen)
-      .find(i => text.startsWith("NAXIS2", i)).get
-    Fits.card("NAXIS2", "12x").getBytes("US-ASCII").copyToArray(bytes, at)
-    val dir = Paths.get(tmpDir("graft_fits_later_"))
-    val path = dir.resolve(src.getFileName)
-    Files.write(path, bytes)
+    // the NAXIS2 card of TIMEIDX 5's header made malformed: the walk of
+    // slice [0, 4) stops at TIMEIDX 4, the walk of slice [4, 8) reads it
+    val hd = Fits.readHeaders(gpubox.toString)
+      .find(h => h.has("TIMEIDX") && h.int("TIMEIDX") == 5).get
+    val path = corrupted((hd.offset / Fits.RecordLen).toInt, "NAXIS2", Fits.card("NAXIS2", "12x"))
+    val dir = Paths.get(path).getParent.toString
     // the earlier slice reads every row, equal to the intact file's
-    val chan = Fits.readPrimary(src.toString).int("COARSE")
-    val early = load(dir.toString).filter(col("time_idx") < 4)
+    val chan = Fits.readPrimary(gpubox.toString).int("COARSE")
+    val early = load(dir).filter(col("time_idx") < 4)
     val intact = load(Fits.ensureFixture())
       .filter(col("time_idx") < 4 && col("coarse_chan") === chan)
     assert(early.count() == 4L * 10 * 8 * 2)
     assert(early.exceptAll(intact).isEmpty && intact.exceptAll(early).isEmpty)
     // the later slice meets the bad card and fails typed at its header
-    val e = intercept[Exception](
-      load(dir.toString).filter(col("time_idx").between(4, 7)).count())
+    val e = intercept[Exception](load(dir).filter(col("time_idx").between(4, 7)).count())
     val c = corruptCause(e)
-    assert(c.path == path.toString && c.offset == hd.offset)
+    assert(c.path == path && c.offset == hd.offset)
     assert(c.getMessage.contains("NAXIS2 = '12x' is not a number"), c.getMessage)
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory: every main (Verify, Bench, FuzzRunner,
-  * ScaleUp, ProfileQ, Explain, KernelBench, Smoke, OpFuzz) and the
+  * ScaleUp, ProfileQ, Explain, Smoke, OpFuzz) and the
   * benchmark runner start the engine here, so every run's numbers describe
   * the same engine.
   *

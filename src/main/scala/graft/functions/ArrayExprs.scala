@@ -514,7 +514,7 @@ object ArrayExprs {
     * digits nor separator), same lowercase-hex md5 of the UTF-8 bytes; a
     * NULL signature array digests like the empty string per band, exactly
     * as concat_ws treats a null array argument. The HOF form evaluated an
-    * interpreted transform lambda per band per row (KernelBench r22:
+    * interpreted transform lambda per band per row (an r22 measurement:
     * 0.13s vs 0.05s for the native-digest banding over the sf0.1 corpus). */
   def lshBandsPortableCompute(sig: ArrayData, k: Int, bands: Int): ArrayData = {
     val rows = k / bands

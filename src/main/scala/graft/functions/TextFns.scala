@@ -149,7 +149,7 @@ object TextFns {
     // native compiled pass (ArrayExprs.LshBandsPortableDigests, r22) —
     // bit-identical digests to the CreateArray-of-md5(concat_ws(
     // transform(slice))) form it replaces (the transform lambda ran
-    // interpreted once per band per row; KernelBench: 0.13s -> native
+    // interpreted once per band per row; r22 measurement: 0.13s -> native
     // band build 0.05s over the sf0.1 corpus). Single reference to
     // `sig`, so the lshBands caller contract is moot here.
     ArrayExprs.lsh_bands_portable(sig, k, bands)

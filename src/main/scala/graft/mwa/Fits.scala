@@ -6,24 +6,23 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
 /** Real FITS binary I/O (NASA FITS 4.0 standard: 2880-byte logical records,
-  * 80-character header cards, big-endian BINTABLE extensions) — the actual
-  * on-disk input family of the reference pipeline (gpubox FITS files read
-  * via mwalib/pyuvdata, `processors.py:163-172`).
+  * 80-character header cards, big-endian data units) — the actual on-disk
+  * input family of the reference pipeline (gpubox FITS files read via
+  * mwalib/pyuvdata, `processors.py:163-172`).
   *
-  * Layout written/read here (gpubox-shaped): one file per coarse channel,
-  * named `<obsid>_gpubox<NN>_00.fits`; a primary HDU carrying the
-  * observation geometry as keywords; then ONE BINTABLE HDU PER INTEGRATION
-  * (the gpubox convention of an HDU per timestep), each row a
-  * (ant1, ant2, fine_chan, pol) visibility sample. The DSv2 source plans
-  * one Spark partition per (file, time-slice) and the reader decodes only
-  * the HDUs inside its slice — so time/channel pushdown prunes real bytes,
-  * exactly like the reference's gpubox-file x time-batch read planning.
-  *
-  * The reader is a generic BINTABLE layout ([[Fits.Table]]): it finds each
-  * column by its TTYPEn and its byte offset from the TFORMn widths, not
-  * from a struct hardcoded to this writer, so any standard-conforming
-  * table with these column names decodes, whatever its column order or
-  * extra columns.
+  * gpubox layout written and read here, MWAX-shaped: one file per coarse
+  * channel, named `<obsid>_gpubox<NN>_00.fits`; a primary HDU carrying the
+  * observation geometry as keywords; then, per integration, one float32
+  * IMAGE HDU of (re, im) per pol per fine channel, one row per baseline,
+  * followed by a float32 weights IMAGE HDU of one weight per (baseline,
+  * pol) — the correlator layout mwalib documents for MWAX files. Only the
+  * data is stored; a reader derives ant1/ant2, frequency and pol from the
+  * position in the array and the primary's keywords. No real MWAX file is
+  * in the repository, so this is the shape, not certified compatibility:
+  * the writer defines the fixture. The DSv2 source plans one Spark
+  * partition per (file, time-slice) and the reader decodes only the HDUs
+  * inside its slice — so time/channel pushdown prunes real bytes, exactly
+  * like the reference's gpubox-file x time-batch read planning.
   */
 object Fits {
 
@@ -69,57 +68,16 @@ object Fits {
 
   // ------------------------------------------------------------------ writing
 
-  final case class Field(name: String, tform: String)
-
-  /** Bytes per element for a TFORM type code. */
-  private def elemSize(c: Char): Int = c match {
-    case 'J' => 4; case 'D' => 8; case 'E' => 4; case 'K' => 8
-    case 'L' => 1; case 'A' => 1; case 'I' => 2; case 'B' => 1
-    case other => throw new IllegalArgumentException(s"Unsupported TFORM type $other")
-  }
-
-  private def tformCount(tform: String): Int = {
-    val digits = tform.takeWhile(_.isDigit)
-    if (digits.isEmpty) 1 else digits.toInt
-  }
-  private def tformType(tform: String): Char = tform.dropWhile(_.isDigit).head
-
-  private def fieldBytes(f: Field): Int = tformCount(f.tform) * elemSize(tformType(f.tform))
-
-  def rowBytes(fields: Seq[Field]): Int = fields.map(fieldBytes).sum
-
-  /** Serialize one BINTABLE HDU (header + big-endian data, both padded to
-    * the 2880-byte record boundary). `rows` supplies one Seq[Any] per row,
-    * aligned with `fields` (Int/Double/Boolean/String). */
-  def binTable(fields: Seq[Field], rows: Iterator[Seq[Any]], nRows: Int,
-               extra: Seq[String] = Nil): Array[Byte] = {
-    val nax1 = rowBytes(fields)
-    val header = endPad(
-      Seq(
-        card("XTENSION", "BINTABLE", quoted = true),
-        cardInt("BITPIX", 8), cardInt("NAXIS", 2),
-        cardInt("NAXIS1", nax1), cardInt("NAXIS2", nRows),
-        cardInt("PCOUNT", 0), cardInt("GCOUNT", 1),
-        cardInt("TFIELDS", fields.length)) ++
-      fields.zipWithIndex.flatMap { case (f, i) =>
-        Seq(card(s"TTYPE${i + 1}", f.name, quoted = true),
-          card(s"TFORM${i + 1}", f.tform, quoted = true))
-      } ++ extra)
-    val data = ByteBuffer.allocate(nax1 * nRows + dataPad(nax1.toLong * nRows))
-    rows.foreach { r =>
-      fields.zip(r).foreach { case (f, v) =>
-        (tformType(f.tform), v) match {
-          case ('J', x: Int) => data.putInt(x)
-          case ('D', x: Double) => data.putDouble(x)
-          case ('L', x: Boolean) => data.put(if (x) 'T'.toByte else 'F'.toByte)
-          case ('A', x: String) =>
-            data.put(pad(x, tformCount(f.tform)).getBytes(StandardCharsets.US_ASCII))
-          case (t, x) => throw new IllegalArgumentException(
-            s"Field ${f.name}: cannot encode $x as TFORM $t")
-        }
-      }
-    }
-    header ++ data.array()
+  /** One float32 IMAGE extension of `naxis1` x `naxis2` values: header
+    * and big-endian data, each padded to the 2880-byte record. */
+  private def image(naxis1: Int, naxis2: Int, values: Iterator[Float],
+            extra: Seq[String]): Array[Byte] = {
+    val len = 4L * naxis1 * naxis2
+    val data = ByteBuffer.allocate((len + dataPad(len)).toInt)
+    values.foreach(data.putFloat)
+    endPad(Seq(card("XTENSION", "IMAGE", quoted = true), cardInt("BITPIX", -32),
+      cardInt("NAXIS", 2), cardInt("NAXIS1", naxis1), cardInt("NAXIS2", naxis2),
+      cardInt("PCOUNT", 0), cardInt("GCOUNT", 1)) ++ extra) ++ data.array()
   }
 
   def primary(extra: Seq[String]): Array[Byte] = endPad(
@@ -129,7 +87,7 @@ object Fits {
   // ------------------------------------------------------------------ parsing
 
   /** The largest single read: the JVM's largest byte array. Reads are
-    * chunked, so only one table row or one uvfits group part must fit. */
+    * chunked, so only one uvfits group's parameter block must fit. */
   private val MaxReadBytes: Long = Int.MaxValue - 8L
 
   /** One HDU header of the file at `path`, starting at byte `offset`.
@@ -229,19 +187,15 @@ object Fits {
     Some(h.copy(dataLen = dataLen))
   }
 
-  /** All HDU headers of a file, in order. */
+  /** All HDU headers of a file, in order. A primary header with a COARSE
+    * card declares a gpubox file, whose integrations are checked as
+    * [[integrations]] checks them. */
   def readHeaders(path: String): Seq[Header] = {
     val raf = new RandomAccessFile(path, "r")
-    try {
-      val out = Seq.newBuilder[Header]
-      var off = 0L
-      var h = readHeader(raf, off, path)
-      while (h.isDefined) {
-        out += h.get
-        off = h.get.nextHduOffset
-        h = readHeader(raf, off, path)
-      }
-      out.result()
+    try readHeader(raf, 0L, path) match {
+      case Some(p) if p.has("COARSE") => p +: integrations(raf, p).flatMap(i => Seq(i._1, i._2))
+      case first => Iterator.iterate(first)(_.flatMap(h => readHeader(raf, h.nextHduOffset, path)))
+        .takeWhile(_.isDefined).map(_.get).toList
     } finally raf.close()
   }
 
@@ -267,80 +221,75 @@ object Fits {
     if (bytes > MaxReadBytes)
       throw h.corrupt(s"$what of $bytes bytes exceeds the $MaxReadBytes-byte single read")
 
-  /** The row layout of a BINTABLE HDU of the file open in `raf`, from its
-    * TTYPEn/TFORMn cards: each named column's byte offset in a row. NAXIS1
-    * is checked against the TFORMs and the whole data unit against the
-    * file before anything is allocated; rows are then read a chunk at a
-    * time into the caller's buffer. */
-  final class Table(raf: RandomAccessFile, val header: Header) {
-    private val fields = (1 to header.int("TFIELDS"))
-      .map(i => Field(header.str(s"TTYPE$i"), header.str(s"TFORM$i")))
-    val rowBytes: Long = header.long("NAXIS1")
-    val nRows: Long = header.long("NAXIS2")
-    if (Fits.rowBytes(fields) != rowBytes)
-      throw header.corrupt(s"NAXIS1=$rowBytes does not match TFORMs ${fields.map(_.tform)}")
-    checkRead(raf, header.path, header.dataOffset, rowBytes * nRows, "table data unit")
-    checkChunk(header, rowBytes, "table row")
-    private val offsets: Map[String, (Int, Field)] = fields.map(_.name)
-      .zip(fields.scanLeft(0)(_ + fieldBytes(_)).zip(fields)).toMap
+  // ------------------------------------------------ MWAX-shaped gpubox files
 
-    /** Byte offset in a row of column `name`, whose TFORM type must be
-      * `code`: one element, or a string of [[width]] bytes for 'A'. */
-    def column(name: String, code: Char): Int = {
-      val (off, f) = offsets.getOrElse(name, throw header.corrupt(s"no $name column"))
-      if (tformType(f.tform) != code || (code != 'A' && tformCount(f.tform) != 1))
-        throw header.corrupt(s"column $name has TFORM ${f.tform}, expected type $code")
-      off
+  /** The integrations of the gpubox file open in `raf` whose primary
+    * header is `primary`, as (data, weights) header pairs in file order.
+    * The walk ends at the end of the file or at the first data HDU whose
+    * TIMEIDX is `t1` or more; no header after that one is read. Each HDU
+    * is checked against the shape the primary's NFINE, POLS and NANTS
+    * give: a float32 data IMAGE of NFINE x pols x 2 by baselines, then a
+    * float32 weights IMAGE of pols by baselines with the same TIMEIDX. A
+    * wrong BITPIX or shape is a [[CorruptInputException]] at the
+    * offending header's offset, and a data HDU with no weights HDU after
+    * it one at the offset where the weights header should start. */
+  def integrations(raf: RandomAccessFile, primary: Header,
+                   t1: Int = Int.MaxValue): IndexedSeq[(Header, Header)] = {
+    val path = primary.path
+    val nPol = primary.str("POLS").split(',').length.toLong
+    val nBl = Uvfits.nBaselines(primary.int("NANTS")).toLong
+    def shaped(h: Header, naxis1: Long, what: String): Header = {
+      if (h.int("BITPIX") != -32)
+        throw h.corrupt(s"$what HDU has BITPIX = ${h.int("BITPIX")}, not -32")
+      if (h.long("NAXIS1") != naxis1 || h.long("NAXIS2") != nBl)
+        throw h.corrupt(s"$what HDU is ${h.long("NAXIS1")} x ${h.long("NAXIS2")}, " +
+          s"not $naxis1 x $nBl (NAXIS1 x NAXIS2 from NFINE, POLS and NANTS)")
+      h
     }
-    /** Elements of column `name`: the bytes of an 'A' string. */
-    def width(name: String): Int = tformCount(offsets(name)._2.tform)
-
-    /** Rows per chunk: at most `maxRows`, and at most `maxBytes` unless one
-      * row is larger. */
-    def chunkRows(maxRows: Int, maxBytes: Int): Int =
-      math.max(1L, math.min(maxRows.toLong, maxBytes / math.max(1L, rowBytes))).toInt
-
-    /** Rows [row0, row0 + n) into `buf` from index 0. */
-    def read(row0: Long, n: Int, buf: Array[Byte]): Unit = {
-      raf.seek(header.dataOffset + row0 * rowBytes)
-      raf.readFully(buf, 0, n * rowBytes.toInt)
+    val out = IndexedSeq.newBuilder[(Header, Header)]
+    var next = readHeader(raf, primary.nextHduOffset, path)
+    while (next.exists(_.int("TIMEIDX") < t1)) {
+      val data = shaped(next.get, 2 * nPol * primary.int("NFINE"), "data")
+      val t = data.int("TIMEIDX")
+      val weights = readHeader(raf, data.nextHduOffset, path)
+        .filter(w => w.has("TIMEIDX") && w.int("TIMEIDX") == t)
+        .getOrElse(throw new CorruptInputException(path, data.nextHduOffset,
+          s"integration $t has no weights HDU"))
+      out += data -> shaped(weights, nPol, "weights")
+      next = readHeader(raf, weights.nextHduOffset, path)
     }
+    out.result()
   }
 
-  // -------------------------------------------------- gpubox-shaped vis files
-
-  val VisFields: Seq[Field] = Seq(
-    Field("ANT1", "1J"), Field("ANT2", "1J"), Field("FINECH", "1J"),
-    Field("POL", "2A"), Field("VISRE", "1D"), Field("VISIM", "1D"),
-    Field("FLAG", "1L"), Field("NSAMP", "1D"))
-
-  /** Write one observation as per-coarse-channel gpubox FITS files whose
-    * values are the portable fixture's dyadic arithmetic
-    * (VisGenerator.portable, bit-for-bit): re = sky + narrow + streak +
-    * noise with sky/noise pure integer residues over 64ths. Returns the
+  /** Write one observation as per-coarse-channel gpubox FITS files in the
+    * MWAX shape (see [[integrations]]) whose values are the portable
+    * fixture's dyadic arithmetic (VisGenerator.portable, bit-for-bit):
+    * re = sky + narrow + streak + noise with sky/noise pure integer
+    * residues over 64ths, exact in float32. Rows follow
+    * `VisGenerator.baselinePairs`; each row holds (re, im) per pol per fine
+    * channel. Every weight is 1 (unflagged, one sample). Returns the
     * written file paths. */
   def writeVis(dir: Path, spec: VisGenerator.Spec): Seq[Path] = {
     Files.createDirectories(dir)
+    val nBl = Uvfits.nBaselines(spec.nAnts)
+    val nPol = spec.pols.length
     (0 until spec.nCoarse).map { chan =>
       val path = dir.resolve(f"${spec.obsid}%d_gpubox${chan + 1}%02d_00.fits")
-      val out = new DataOutputStream(new BufferedOutputStream(
-        new FileOutputStream(path.toFile)))
+      val out = new BufferedOutputStream(new FileOutputStream(path.toFile))
       try {
         out.write(primary(Seq(
           cardInt("OBSID", spec.obsid), cardInt("COARSE", chan),
           cardInt("NTIMES", spec.nTimes), cardInt("NFINE", spec.nFine),
-          cardInt("NANTS", spec.nAnts),
+          cardInt("NANTS", spec.nAnts), card("POLS", spec.pols.mkString(","), quoted = true),
           cardDouble("FREQ0", spec.freq0Hz), cardDouble("DFHZ", spec.dfHz),
           cardDouble("JD0", spec.jd0), cardDouble("DTDAYS", spec.dtDays))))
         val f0 = chan * spec.nFine
         for (t <- 0 until spec.nTimes) {
-          val rows = VisGenerator.portableCells(spec, t, f0 until f0 + spec.nFine)
-            .map(c => Seq(c.ant1, c.ant2, c.freqIdx - f0, spec.pols(c.polIdx), c.re,
-              0.0, false, 1.0))
-          out.write(binTable(VisFields, rows,
-            Uvfits.nBaselines(spec.nAnts) * spec.nFine * spec.pols.length,
-            extra = Seq(cardInt("TIMEIDX", t),
-              cardDouble("TIMEJD", spec.jd0 + t * spec.dtDays))))
+          val time = Seq(cardInt("TIMEIDX", t), cardDouble("TIMEJD", spec.jd0 + t * spec.dtDays))
+          val vis = VisGenerator.portableCells(spec, t, f0 until f0 + spec.nFine)
+            .flatMap(c => Iterator(c.re.toFloat, 0.0f))
+          out.write(image(2 * nPol * spec.nFine, nBl, vis, time))
+          out.write(image(nPol, nBl, Iterator.fill(nBl * nPol)(1.0f), time))
         }
       } finally out.close()
       path
@@ -460,7 +409,7 @@ object Fits {
   lazy val fixtureSpec: VisGenerator.Spec = VisGenerator.Spec(nTimes = 17, nAnts = 4)
 
   def ensureFixture(): String = fixtureDir
-  private lazy val fixtureDir = fixture("graft_fits_fixture_v1")(writeVis(_, fixtureSpec))
+  private lazy val fixtureDir = fixture("graft_fits_fixture_v2")(writeVis(_, fixtureSpec))
 
   /** Directory `name` under the system temp dir, filled by `write` unless
     * an earlier write completed (its `_SUCCESS` marker exists). Each

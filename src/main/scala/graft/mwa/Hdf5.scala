@@ -39,7 +39,7 @@ object Hdf5 {
 
   final case class Dataset(name: String, dtype: Dtype, dims: Seq[Long],
                            data: Array[Byte]) {
-    require(data.length == dtype.size * dims.product.max(1L),
+    require(data.length == dtype.size * dims.product,
       s"$name: ${data.length} bytes != ${dims.mkString("x")} x ${dtype.size}")
   }
   final case class Group(name: String, datasets: Seq[Dataset])

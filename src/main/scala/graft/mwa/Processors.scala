@@ -36,8 +36,10 @@ object FitsProcessor extends UVDataFileProcessor {
     Validation.enforce(
       Validation.validateProcessor(spark, manifest, channelTables), onError)
 
-  /** Phase-1 mediation: raw FITS payloads are assumed mediated into the
-    * partitioned vis Parquet layout (VisStore); the read is a pruned scan. */
+  /** The read of the mediated, (obsid, coarse_chan)-partitioned vis
+    * Parquet layout (VisStore): a pruned scan. Raw gpubox files are
+    * decoded by the `graft-vis` source instead; `VisStore.write` of that
+    * scan is the mediation. */
   override def read(spark: SparkSession, manifest: DataFrame,
                     visPath: String): DataFrame =
     VisStore.read(spark, visPath)

@@ -372,13 +372,14 @@ object MwaQueries {
             FROM i ORDER BY pol, time_idx, freq_hz"""))
 
   /** Real FITS binary decode, certified row-by-row: the fixture is written
-    * as standard gpubox-shaped FITS (2880-byte records, one BINTABLE HDU
-    * per integration, big-endian doubles — Fits.writeVis) carrying the
-    * portable fixture's dyadic values, read back through the DSv2 source's
-    * (file, time-slice) partition planning, and every decoded cell is
-    * matched against the oracle's independent re-derivation of the same
-    * arithmetic. IEEE doubles round-trip big-endian encoding bit-exactly,
-    * so any header-walk, offset, or endianness defect breaks the hash. */
+    * as standard MWAX-shaped gpubox FITS (2880-byte records, a float32
+    * data IMAGE and a weights IMAGE per integration, big-endian —
+    * Fits.writeVis) carrying the portable fixture's dyadic values, read
+    * back through the DSv2 source's (file, time-slice) partition planning,
+    * and every decoded cell is matched against the oracle's independent
+    * re-derivation of the same arithmetic. The values are exact in float32
+    * and round-trip big-endian encoding bit-exactly, so any header-walk,
+    * offset, coordinate or endianness defect breaks the hash. */
   private[queries] val mwa10 = QueryDef("mwa10_fits_read",
     (s, d) => {
       val dir = graft.mwa.Fits.ensureFixture()

@@ -16,7 +16,7 @@ import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableCo
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-import graft.mwa.{CorruptInputException, Fits, Hdf5, Uvh5}
+import graft.mwa.{CorruptInputException, Fits, Hdf5, Uvh5, VisGenerator}
 
 /** DataSource V2 over raw visibility files: `format("graft-vis")`.
   * One option: `path`, a directory holding ONE input family (gpubox
@@ -68,9 +68,6 @@ object VisSource {
   /** Rows per columnar batch: a reader's column vectors and raw read
     * buffers are sized by this, never by a data unit. */
   val Chunk = 4096
-  /** Bytes of one chunk's raw FITS table read at most (unless one row is
-    * larger): under G1's humongous-object threshold, half a 1 MB region. */
-  val ChunkBytes: Int = 256 * 1024
 
   def path(o: CaseInsensitiveStringMap): String =
     Option(o.get("path")).filter(_.nonEmpty).getOrElse(
@@ -337,10 +334,11 @@ final class VisColumns(required: StructType) {
   }
 }
 
-/** The (frequency, polarisation) cells of one uvfits group or uvh5 blt
-  * row, pol fastest: `hz` per frequency, `nFine` fine channels per coarse
-  * channel. */
-final class CellAxis(nFine: Int, hz: Array[Double], pols: Seq[String]) {
+/** The (frequency, polarisation) cells of one gpubox baseline row, uvfits
+  * group or uvh5 blt row, pol fastest: `hz` per frequency, `nFine` fine
+  * channels per coarse channel, the first of them in coarse channel
+  * `chan0`. */
+final class CellAxis(nFine: Int, hz: Array[Double], pols: Seq[String], chan0: Int = 0) {
   private val polBytes = pols.map(_.getBytes(StandardCharsets.UTF_8)).toArray
   val size: Int = hz.length * polBytes.length
 
@@ -350,7 +348,7 @@ final class CellAxis(nFine: Int, hz: Array[Double], pols: Seq[String]) {
     var c = 0
     while (c < n) {
       val f = (a + c) / nPol
-      if (out.coarseChan != null) out.coarseChan.putInt(from + c, f / nFine)
+      if (out.coarseChan != null) out.coarseChan.putInt(from + c, chan0 + f / nFine)
       if (out.freqHz != null) out.freqHz.putDouble(from + c, hz(f))
       if (out.pol != null) out.pol.putByteArray(from + c, polBytes((a + c) % nPol))
       c += 1
@@ -374,120 +372,84 @@ sealed trait VisFile extends Serializable {
   def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int
 }
 
-/** A gpubox FITS file: one coarse channel, one BINTABLE HDU per
-  * integration; planning reads its primary header only. */
-case class FitsFile(path: String, obsid: Long, chan: Int, nTimes: Int,
-                    nFine: Int, freq0Hz: Double, dfHz: Double) extends VisFile {
+/** A gpubox FITS file in the MWAX shape ([[Fits.integrations]]): one
+  * coarse channel; per integration a float32 data IMAGE HDU, one row of
+  * (fine channel, pol) cells per baseline, and a weights HDU. Planning
+  * reads its primary header only. */
+case class FitsFile(path: String, head: Fits.Header, obsid: Long, chan: Int,
+                    nTimes: Int, nAnts: Int, nFine: Int, pols: Seq[String],
+                    freq0Hz: Double, dfHz: Double) extends VisFile {
   override def coarseChan: Option[Int] = Some(chan)
 
-  /** Walks the HDU headers sequentially (cheap: 2880-byte records) up to
-    * the first one whose TIMEIDX is past the slice, lays out and checks
-    * the tables whose TIMEIDX falls in the slice, and reads their rows a
-    * chunk at a time. No header after that first one is read. A file that
-    * ends before every integration of the slice has its HDU, or holds one
-    * twice, fails typed rather than yielding fewer or extra rows. */
+  /** Walks the (data, weights) header pairs from the primary up to the
+    * first integration past the slice, checking each HDU's shape; no
+    * later header is read. A file that ends before every integration of
+    * the slice has its HDUs, or holds one twice, fails typed rather than
+    * yielding fewer or extra rows. Rows are filled a chunk at a time, one
+    * baseline row being a group of cells: ant1/ant2 from the row index,
+    * freq_hz from COARSE and the fine index, pol from POLS, flag from
+    * weight <= 0 and nsample from |weight|, as uvfits does. Only vis_re and
+    * vis_im read the data HDU and only flag and nsample the weights HDU. */
   override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
-    val hdus = IndexedSeq.newBuilder[FitsFile.Hdu]
-    var next = Fits.readHeader(raf, 0L, path)
-    while (next.exists(hd => !hd.has("TIMEIDX") || hd.int("TIMEIDX") < t1)) {
-      val hd = next.get
-      if (hd.has("TIMEIDX") && hd.int("TIMEIDX") >= t0)
-        hdus += new FitsFile.Hdu(new Fits.Table(raf, hd))
-      next = Fits.readHeader(raf, hd.nextHduOffset, path)
-    }
-    val found = hdus.result()
-    if (found.length != t1 - t0)
+    val hdus = Fits.integrations(raf, head, t1).filter(_._1.int("TIMEIDX") >= t0)
+    if (hdus.length != t1 - t0)
       throw new CorruptInputException(path, raf.length(),
-        s"integrations [$t0, $t1) have ${found.length} HDUs, not ${t1 - t0}")
-    new FitsFile.Chunks(this, found, out)
+        s"integrations [$t0, $t1) have ${hdus.length} HDU pairs, not ${t1 - t0}")
+    val ts = hdus.map(_._1.int("TIMEIDX"))
+    val jds = hdus.map(_._1.double("TIMEJD"))
+    val bls = VisGenerator.baselinePairs(nAnts)
+    val nPol = pols.length
+    val axis = new CellAxis(nFine,
+      Array.tabulate(nFine)(k => freq0Hz + (chan * nFine + k) * dfHz), pols, chan)
+    val cur = new GroupCursor(hdus.length.toLong * bls.length, axis.size)
+    val needVis = out.any(out.visRe, out.visIm)
+    val needWts = out.any(out.flag, out.nsample)
+    val vis = ByteBuffer.wrap(new Array[Byte](8 * cur.perChunk * cur.cellsPerChunk))
+    val wts = ByteBuffer.wrap(new Array[Byte](4 * cur.perChunk * nPol))
+    def read(h: Fits.Header, at: Long, into: ByteBuffer, from: Int, len: Int): Unit = {
+      raf.seek(h.dataOffset + at)
+      raf.readFully(into.array(), from, len)
+    }
+    () => if (!cur.advance()) 0 else {
+      // the chunk's groups, a run of baselines of one integration at a time
+      var j = 0
+      while (j < cur.n) {
+        val i = ((cur.g + j) / bls.length).toInt
+        val b = ((cur.g + j) % bls.length).toInt
+        val k = math.min(cur.n - j, bls.length - b)
+        if (needVis) read(hdus(i)._1, 8L * (b.toLong * axis.size + cur.a), vis,
+          8 * j * cur.m, 8 * k * cur.m)
+        if (needWts) read(hdus(i)._2, 4L * b * nPol, wts, 4 * j * nPol, 4 * k * nPol)
+        for (g <- j until j + k) {
+          val (a1, a2) = bls(b + g - j)
+          out.putTime(g * cur.m, cur.m, obsid, ts(i), jds(i))
+          out.putBaseline(g * cur.m, cur.m, a1, a2)
+          axis.put(out, g * cur.m, cur.a, cur.m)
+        }
+        j += k
+      }
+      val rows = cur.n * cur.m
+      var r = 0
+      while (r < rows) {
+        if (out.visRe != null) out.visRe.putDouble(r, vis.getFloat(8 * r).toDouble)
+        if (out.visIm != null) out.visIm.putDouble(r, vis.getFloat(8 * r + 4).toDouble)
+        if (needWts) {
+          val w = wts.getFloat(4 * (r / cur.m * nPol + (cur.a + r % cur.m) % nPol))
+          if (out.flag != null) out.flag.putBoolean(r, w <= 0f)
+          if (out.nsample != null) out.nsample.putDouble(r, math.abs(w).toDouble)
+        }
+        r += 1
+      }
+      rows
+    }
   }
 }
 
 object FitsFile {
   def open(path: String): FitsFile = {
     val h = Fits.readPrimary(path)
-    FitsFile(path, h.long("OBSID"), h.int("COARSE"), h.int("NTIMES"),
-      h.int("NFINE"), h.double("FREQ0"), h.double("DFHZ"))
-  }
-
-  /** Row `r`'s pol from `len` ASCII bytes at `buf(off)`, trimmed as
-    * `String.trim` trims: bytes up to 0x20 off both ends. A non-ASCII
-    * byte decodes to U+FFFD, as the US-ASCII charset decodes it. */
-  private def putPol(pol: WritableColumnVector, r: Int, buf: Array[Byte],
-                     off: Int, len: Int): Unit = {
-    var s = off
-    var e = off + len
-    while (s < e && (buf(s) & 0xff) <= 0x20) s += 1
-    while (e > s && (buf(e - 1) & 0xff) <= 0x20) e -= 1
-    var ascii = true
-    var k = s
-    while (k < e) { ascii &&= buf(k) >= 0; k += 1 }
-    if (ascii) pol.putByteArray(r, buf, s, e - s)
-    else pol.putByteArray(r,
-      new String(buf, s, e - s, StandardCharsets.US_ASCII).getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** One in-slice HDU: its time, rows per chunk and the byte offset in a
-    * row of each gpubox column, resolved and type-checked at setup. */
-  final class Hdu(val table: Fits.Table) {
-    val ant1: Int = table.column("ANT1", 'J')
-    val ant2: Int = table.column("ANT2", 'J')
-    val fine: Int = table.column("FINECH", 'J')
-    val pol: Int = table.column("POL", 'A')
-    val polLen: Int = table.width("POL")
-    val re: Int = table.column("VISRE", 'D')
-    val im: Int = table.column("VISIM", 'D')
-    val flag: Int = table.column("FLAG", 'L')
-    val nsamp: Int = table.column("NSAMP", 'D')
-    val t: Int = table.header.int("TIMEIDX")
-    val jd: Double = table.header.double("TIMEJD")
-    val rows: Int = table.chunkRows(VisSource.Chunk, VisSource.ChunkBytes)
-  }
-
-  /** Fills chunks of one HDU at a time from one reused row buffer. Only
-    * the time/channel constants need no row bytes: a projection of those
-    * alone (or none, a count) reads no data unit at all. */
-  final class Chunks(f: FitsFile, hdus: IndexedSeq[Hdu], out: VisColumns)
-      extends (() => Int) {
-    private val needsRows = out.any(out.ant1, out.ant2, out.baseline, out.freqHz,
-      out.pol, out.visRe, out.visIm, out.flag, out.nsample)
-    private val buf = new Array[Byte](if (!needsRows) 0
-      else hdus.map(h => h.rows * h.table.rowBytes.toInt).maxOption.getOrElse(0))
-    private val bb = ByteBuffer.wrap(buf)
-    private var i = 0
-    private var row = 0L
-
-    override def apply(): Int = {
-      while (i < hdus.length && row == hdus(i).table.nRows) { i += 1; row = 0 }
-      if (i == hdus.length) return 0
-      val h = hdus(i)
-      val n = math.min(h.rows.toLong, h.table.nRows - row).toInt
-      out.putTime(0, n, f.obsid, h.t, h.jd)
-      if (out.coarseChan != null) out.coarseChan.putInts(0, n, f.chan)
-      if (needsRows) {
-        h.table.read(row, n, buf)
-        val rb = h.table.rowBytes.toInt
-        var r = 0
-        while (r < n) {
-          val p = r * rb
-          val a1 = bb.getInt(p + h.ant1)
-          val a2 = bb.getInt(p + h.ant2)
-          if (out.ant1 != null) out.ant1.putInt(r, a1)
-          if (out.ant2 != null) out.ant2.putInt(r, a2)
-          if (out.baseline != null) out.baseline.putLong(r, a1.toLong * 2048 + a2)
-          if (out.freqHz != null) out.freqHz.putDouble(r,
-            f.freq0Hz + (f.chan * f.nFine + bb.getInt(p + h.fine)) * f.dfHz)
-          if (out.pol != null) putPol(out.pol, r, buf, p + h.pol, h.polLen)
-          if (out.visRe != null) out.visRe.putDouble(r, bb.getDouble(p + h.re))
-          if (out.visIm != null) out.visIm.putDouble(r, bb.getDouble(p + h.im))
-          if (out.flag != null) out.flag.putBoolean(r, buf(p + h.flag) == 'T')
-          if (out.nsample != null) out.nsample.putDouble(r, bb.getDouble(p + h.nsamp))
-          r += 1
-        }
-      }
-      row += n
-      n
-    }
+    FitsFile(path, h, h.long("OBSID"), h.int("COARSE"), h.int("NTIMES"), h.int("NANTS"),
+      h.int("NFINE"), h.str("POLS").split(',').toSeq, h.double("FREQ0"), h.double("DFHZ"))
   }
 }
 

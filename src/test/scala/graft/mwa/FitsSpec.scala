@@ -6,8 +6,8 @@ import graft.sources.VisScanBuilder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, Filter, LessThan}
 
-/** FITS binary I/O: standard conformance of the writer, generic BINTABLE
-  * decode, bit-exact round trip against the portable generator, and
+/** FITS binary I/O: standard conformance of the MWAX-shaped writer,
+  * bit-exact round trip against the portable generator, and
   * time/channel pushdown pruning real (file, HDU-slice) partitions. */
 class FitsSpec extends SparkSpec {
 
@@ -27,16 +27,24 @@ class FitsSpec extends SparkSpec {
     files.foreach { f =>
       assert(f.length() % Fits.RecordLen == 0)
       val hdus = Fits.readHeaders(f.getPath)
-      // primary + one BINTABLE per integration
-      assert(hdus.length == 1 + spec.nTimes)
+      // primary + a data and a weights IMAGE per integration (MWAX shape)
+      assert(hdus.length == 1 + 2 * spec.nTimes)
       assert(hdus.head.str("SIMPLE") == "T" || hdus.head.cards("SIMPLE").trim == "T")
-      hdus.tail.foreach { h =>
-        assert(h.str("XTENSION") == "BINTABLE")
-        assert(h.int("NAXIS") == 2)
-        assert(h.int("TFIELDS") == Fits.VisFields.length)
+      assert(hdus.head.str("POLS") == spec.pols.mkString(","))
+      val nBl = spec.nAnts * (spec.nAnts + 1) / 2
+      hdus.tail.grouped(2).foreach { case Seq(data, weights) =>
+        for ((h, naxis1) <- Seq(data -> 2 * spec.nFine * spec.pols.length,
+            weights -> spec.pols.length)) {
+          assert(h.str("XTENSION") == "IMAGE")
+          assert(h.int("BITPIX") == -32)
+          assert(h.int("NAXIS") == 2)
+          assert(h.int("NAXIS1") == naxis1 && h.int("NAXIS2") == nBl)
+          assert(h.dataLen == 4L * naxis1 * nBl)
+        }
+        assert(weights.int("TIMEIDX") == data.int("TIMEIDX"))
       }
       // TIMEIDX sequence is dense and ordered
-      assert(hdus.tail.map(_.int("TIMEIDX")) == (0 until spec.nTimes))
+      assert(hdus.tail.map(_.int("TIMEIDX")) == (0 until spec.nTimes).flatMap(t => Seq(t, t)))
     }
   }
 

@@ -211,7 +211,7 @@ class VisSourceSpec extends SparkSpec {
   }
 
   test("a FITS header with a size past EOF and 2 GiB, or a bad size card, fails typed") {
-    // record 1 is the first BINTABLE header, right after the primary's
+    // record 1 is the first data IMAGE header, right after the primary's
     val rec = Fits.RecordLen
     def check(path: String, offset: Long, reason: String) = {
       val c = intercept[CorruptInputException](Fits.readHeaders(path))
@@ -219,11 +219,11 @@ class VisSourceSpec extends SparkSpec {
       assert(c.getMessage.contains(path) && c.getMessage.contains(s"byte $offset") &&
         c.getMessage.contains(reason), c.getMessage)
     }
-    // 10^8 rows x 39 B = 3.9 GB: past EOF and past 2 GiB, refused at the
-    // data unit's offset before anything is allocated, through the source
-    // as well
+    // 10^8 baselines x 32 float32 = 12.8 GB: past EOF and past 2 GiB,
+    // refused at the data unit's offset before anything is allocated,
+    // through the source as well
     val huge = corrupted(1, "NAXIS2", Fits.cardInt("NAXIS2", 100000000L))
-    check(huge, 2L * rec, "data unit of 3900000000 bytes runs past end of file")
+    check(huge, 2L * rec, "data unit of 12800000000 bytes runs past end of file")
     val e = intercept[Exception](load(Paths.get(huge).getParent.toString).count())
     assert(corruptCause(e).offset == 2L * rec)
     // a malformed or missing size card, at the header's own offset
@@ -234,7 +234,7 @@ class VisSourceSpec extends SparkSpec {
     check(corrupted(0, "END ", " " * Fits.CardLen, keep = rec), rec,
       "header runs past end of file without an END card")
     // a header that loses its END card mid-file no longer merges into what
-    // follows, through the source as well: a BINTABLE header runs into its
+    // follows, through the source as well: an IMAGE header runs into its
     // data unit, whose first byte outside printable ASCII fails it; the
     // primary runs into the next header's XTENSION card
     def checkRead(path: String, offset: Long, reason: String) = {
@@ -251,9 +251,35 @@ class VisSourceSpec extends SparkSpec {
       "XTENSION card inside the header that starts at byte 0: a lost END card")
   }
 
+  test("a gpubox HDU of the wrong BITPIX or shape, or with no weights HDU, fails typed") {
+    // the fixture's first integration: its data header in record 1, its
+    // 10 x 32 floats in record 2, its weights header in record 3
+    val rec = Fits.RecordLen
+    def check(path: String, offset: Long, reason: String): Unit = {
+      checkTyped(path, offset, reason)(Fits.readHeaders(path))
+      checkTyped(path, offset, reason)(load(Paths.get(path).getParent.toString).count())
+    }
+    check(corrupted(1, "BITPIX", Fits.cardInt("BITPIX", 32)), rec,
+      "data HDU has BITPIX = 32, not -32")
+    check(corrupted(1, "NAXIS1", Fits.cardInt("NAXIS1", 16)), rec,
+      "data HDU is 16 x 10, not 32 x 10")
+    check(corrupted(1, "NAXIS2", Fits.cardInt("NAXIS2", 9)), rec,
+      "data HDU is 32 x 9, not 32 x 10")
+    check(corrupted(3, "NAXIS1", Fits.cardInt("NAXIS1", 1)), 3L * rec,
+      "weights HDU is 1 x 10, not 2 x 10")
+    // the first weights HDU cut out: integration 1's data HDU follows
+    // integration 0's
+    val Seq(_, data0, weights0, _*) = Fits.readHeaders(gpubox.toString)
+    val bytes = Files.readAllBytes(gpubox)
+    val dir = Paths.get(tmpDir("graft_fits_noweights_"))
+    val cut = Files.write(dir.resolve(gpubox.getFileName),
+      bytes.take(weights0.offset.toInt) ++ bytes.drop(weights0.nextHduOffset.toInt)).toString
+    check(cut, data0.nextHduOffset, "integration 0 has no weights HDU")
+  }
+
   test("a gpubox slice's header walk stops past the slice: a corrupt later header fails only its slice") {
-    // the NAXIS2 card of TIMEIDX 5's header made malformed: the walk of
-    // slice [0, 4) stops at TIMEIDX 4, the walk of slice [4, 8) reads it
+    // the NAXIS2 card of TIMEIDX 5's data header made malformed: the walk
+    // of slice [0, 4) stops at TIMEIDX 4, the walk of slice [4, 8) reads it
     val hd = Fits.readHeaders(gpubox.toString)
       .find(h => h.has("TIMEIDX") && h.int("TIMEIDX") == 5).get
     val path = corrupted((hd.offset / Fits.RecordLen).toInt, "NAXIS2", Fits.card("NAXIS2", "12x"))
@@ -280,6 +306,31 @@ class VisSourceSpec extends SparkSpec {
       inputs(1) -> Fits.Uvfits.write(root.resolve("uvfits"), spec).getParent,
       inputs(2) -> Uvh5.write(root.resolve("uvh5"), spec).getParent)
       .map { case (in, dir) => in -> dir.toString }
+  }
+
+  test("an empty input yields an empty result with the schema, or fails naming the path") {
+    import graft.mwa.{GraftConfig, MatchFilter, ReadOps, VisOps}
+    val empty = Fits.fixtureSpec.copy(nTimes = 0)
+    // NTIMES = 0 (gpubox), GCOUNT = 0 (uvfits) and Nblts = 0 (uvh5): empty
+    val files = writeAll("empty", empty).map { case (in, dir) => in.name -> dir }
+    // a directory holding only a metafits: no visibility file to read
+    val metaOnly = Paths.get(tmpDir("graft_vis_metaonly_"))
+    Files.write(metaOnly.resolve(s"${empty.obsid}.metafits"), Fits.primary(Seq(
+      Fits.cardInt("OBSID", empty.obsid), Fits.cardInt("NCOARSE", empty.nCoarse))))
+    val cfg = GraftConfig()
+    val layout = ReadOps.FreqLayout(empty.freq0Hz, empty.dfHz, empty.nFine)
+    def chain(dir: String) = MatchFilter(VisOps.ins(VisOps.diff(VisOps.selectSurface(
+      ReadOps.readChain(load(dir), cfg, layout), cfg))), cfg)
+    for ((name, dir) <- files) withClue(name) {
+      val scan = load(dir)
+      assert(scan.schema == VisSource.schema)
+      assert(scan.collect().isEmpty && scan.count() == 0)
+      assert(chain(dir).collect().isEmpty)
+    }
+    for (read <- Seq[String => Any](load(_).collect(), chain(_).collect())) {
+      val e = intercept[IllegalArgumentException](read(metaOnly.toString))
+      assert(e.getMessage.contains(metaOnly.toString), e.getMessage)
+    }
   }
 
   /** Row counts of every batch the source's columnar readers return for

@@ -4,6 +4,7 @@ import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream, Random
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
+import scala.util.Try
 
 /** Real FITS binary I/O (NASA FITS 4.0 standard: 2880-byte logical records,
   * 80-character header cards, big-endian data units) — the actual on-disk
@@ -20,9 +21,10 @@ import java.nio.file.{Files, Path, Paths}
   * position in the array and the primary's keywords. No real MWAX file is
   * in the repository, so this is the shape, not certified compatibility:
   * the writer defines the fixture. The DSv2 source plans one Spark
-  * partition per (file, time-slice) and the reader decodes only the HDUs
-  * inside its slice — so time/channel pushdown prunes real bytes, exactly
-  * like the reference's gpubox-file x time-batch read planning.
+  * partition per file, over the integrations its time filters keep, and
+  * the reader seeks to the first of them and decodes only the HDUs in
+  * that range — so time/channel pushdown prunes real bytes, like the
+  * reference's gpubox-file x time-batch read planning.
   */
 object Fits {
 
@@ -224,20 +226,30 @@ object Fits {
   // ------------------------------------------------ MWAX-shaped gpubox files
 
   /** The integrations of the gpubox file open in `raf` whose primary
-    * header is `primary`, as (data, weights) header pairs in file order.
-    * The walk ends at the end of the file or at the first data HDU whose
-    * TIMEIDX is `t1` or more; no header after that one is read. Each HDU
-    * is checked against the shape the primary's NFINE, POLS and NANTS
-    * give: a float32 data IMAGE of NFINE x pols x 2 by baselines, then a
-    * float32 weights IMAGE of pols by baselines with the same TIMEIDX. A
-    * wrong BITPIX or shape is a [[CorruptInputException]] at the
-    * offending header's offset, and a data HDU with no weights HDU after
-    * it one at the offset where the weights header should start. */
-  def integrations(raf: RandomAccessFile, primary: Header,
+    * header is `primary`, as (data, weights) header pairs in file order,
+    * from integration `t0` on. The walk ends at the end of the file or at
+    * the first data HDU whose TIMEIDX is `t1` or more; no header after
+    * that one is read. Each HDU is checked against the shape the
+    * primary's NFINE, POLS and NANTS give: a float32 data IMAGE of NFINE x
+    * pols x 2 by baselines, then a float32 weights IMAGE of pols by
+    * baselines with the same TIMEIDX. A wrong BITPIX or shape is a
+    * [[CorruptInputException]] at the offending header's offset, a data
+    * HDU with no weights HDU after it one at the offset where the weights
+    * header should start, and a data HDU whose TIMEIDX is not greater than
+    * the previous one's one at its own offset: a reader relies on the
+    * file's time order.
+    *
+    * Every integration of an MWAX file has one size, so for `t0` > 0 the
+    * walk starts at the header integration 0's stride puts `t0` at, when
+    * that header is a data HDU of the right shape with TIMEIDX = `t0`;
+    * only a file where it is not walks from the primary, and then the
+    * pairs before `t0` are dropped. */
+  def integrations(raf: RandomAccessFile, primary: Header, t0: Int = 0,
                    t1: Int = Int.MaxValue): IndexedSeq[(Header, Header)] = {
     val path = primary.path
     val nPol = primary.str("POLS").split(',').length.toLong
     val nBl = Uvfits.nBaselines(primary.int("NANTS")).toLong
+    val dataAxis = 2 * nPol * primary.int("NFINE")
     def shaped(h: Header, naxis1: Long, what: String): Header = {
       if (h.int("BITPIX") != -32)
         throw h.corrupt(s"$what HDU has BITPIX = ${h.int("BITPIX")}, not -32")
@@ -246,19 +258,37 @@ object Fits {
           s"not $naxis1 x $nBl (NAXIS1 x NAXIS2 from NFINE, POLS and NANTS)")
       h
     }
-    val out = IndexedSeq.newBuilder[(Header, Header)]
-    var next = readHeader(raf, primary.nextHduOffset, path)
-    while (next.exists(_.int("TIMEIDX") < t1)) {
-      val data = shaped(next.get, 2 * nPol * primary.int("NFINE"), "data")
+    def pair(h: Header): (Header, Header) = {
+      val data = shaped(h, dataAxis, "data")
       val t = data.int("TIMEIDX")
       val weights = readHeader(raf, data.nextHduOffset, path)
         .filter(w => w.has("TIMEIDX") && w.int("TIMEIDX") == t)
         .getOrElse(throw new CorruptInputException(path, data.nextHduOffset,
           s"integration $t has no weights HDU"))
-      out += data -> shaped(weights, nPol, "weights")
-      next = readHeader(raf, weights.nextHduOffset, path)
+      data -> shaped(weights, nPol, "weights")
     }
-    out.result()
+    def walk(from: Option[Header]): IndexedSeq[(Header, Header)] = {
+      val out = IndexedSeq.newBuilder[(Header, Header)]
+      var last = Int.MinValue
+      var next = from
+      while (next.exists(_.int("TIMEIDX") < t1)) {
+        val (data, weights) = pair(next.get)
+        val t = data.int("TIMEIDX")
+        if (t <= last)
+          throw data.corrupt(s"TIMEIDX $t follows TIMEIDX $last: integrations out of order")
+        last = t
+        if (t >= t0) out += data -> weights
+        next = readHeader(raf, weights.nextHduOffset, path)
+      }
+      out.result()
+    }
+    val first = readHeader(raf, primary.nextHduOffset, path)
+    val seeked = if (t0 <= 0) None else first.flatMap { d0 =>
+      val at = d0.offset + t0 * (pair(d0)._2.nextHduOffset - d0.offset)
+      Try(readHeader(raf, at, path).map(shaped(_, dataAxis, "data"))
+        .filter(_.int("TIMEIDX") == t0)).toOption.flatten
+    }
+    walk(seeked.orElse(first))
   }
 
   /** Write one observation as per-coarse-channel gpubox FITS files in the

@@ -9,18 +9,22 @@ import org.apache.spark.sql.functions._
   * and the mean-subtracted z-score (W2).
   *
   * Scale design: the diff window W1 partitions by (obsid, coarse_chan,
-  * baseline, freq, pol) and sorts by time; the INS groupBy keys on
-  * (obsid, coarse_chan, time, freq, pol). coarse_chan is a function of
+  * ant1, ant2, pol) and orders by (freq_hz, time_idx); the INS groupBy keys
+  * on (obsid, coarse_chan, time, freq, pol). coarse_chan is a function of
   * freq_hz, so neither extra key changes a result, but both let Spark use
   * the layout a source reports. Each gpubox file holds one (obsid,
-  * coarse_chan) (SURVEY §1.3) and the `graft-vis` scan reports its splits
-  * key-grouped on those two columns, so on gpubox input W1 and the INS run
-  * in the scan's tasks with no exchange: one sort per key group, then the
-  * aggregate. Over uvfits, uvh5, the Parquet `VisStore` or a generated
-  * frame, nothing reports a layout: W1 hash-shuffles and sorts every
-  * visibility, and the INS shuffles again, carrying only partial
-  * aggregates. The INS reduction collapses |baselines| x rows into (time,
-  * freq, pol) cells; the z-score (W2) shuffles that reduced spectrum.
+  * coarse_chan) (SURVEY §1.3); the `graft-vis` scan reports its splits
+  * key-grouped on those two columns, one split per file, and each split's
+  * rows in W1's order. So on gpubox input W1 and the INS run in the scan's
+  * tasks with no exchange and no sort: scan, filter, window, then the
+  * partial and final aggregates. Two gpubox files of one (obsid,
+  * coarse_chan) bring the sort back (Spark drops a reported order when a
+  * key group holds more than one split). Over uvfits, uvh5, the Parquet
+  * `VisStore` or a generated frame, nothing reports a layout: W1
+  * hash-shuffles and sorts every visibility, and the INS shuffles again,
+  * carrying only partial aggregates. The INS reduction collapses
+  * |baselines| x rows into (time, freq, pol) cells; the z-score (W2)
+  * shuffles that reduced spectrum.
   */
 object VisOps {
 
@@ -63,21 +67,29 @@ object VisOps {
     * pol): V'(t_i) = V(t_{i+1}) - V(t_i); diffed flag = flag(t) OR
     * flag(t+1); nsample averaged. The last time per series (no successor)
     * is dropped. Cancels the static sky; noise + transient RFI remain.
-    * (`diff` read option, `configurators.py:66`; executed in SSINS.) */
+    * (`diff` read option, `configurators.py:66`; executed in SSINS.)
+    *
+    * The window holds one (baseline, pol)'s rows, ordered by (freq_hz,
+    * time_idx): a row's successor there is the next time of its own series
+    * unless it is the series' last, where the successor's freq_hz differs
+    * (or there is none). freq_hz is an order key, not a partition key,
+    * because Spark normalizes a floating-point partition key and no order a
+    * source reports can then satisfy the window's sort. */
   def diff(vis: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("obsid"), col("coarse_chan"), col("ant1"),
-      col("ant2"), col("freq_hz"), col("pol")).orderBy(col("time_idx"))
+      col("ant2"), col("pol")).orderBy(col("freq_hz"), col("time_idx"))
     vis
+      .withColumn("__f2", lead(col("freq_hz"), 1).over(w))
       .withColumn("__re2", lead(col("vis_re"), 1).over(w))
       .withColumn("__im2", lead(col("vis_im"), 1).over(w))
       .withColumn("__fl2", lead(col("flag"), 1).over(w))
       .withColumn("__ns2", lead(col("nsample"), 1).over(w))
-      .filter(col("__re2").isNotNull)
+      .filter(col("__f2") === col("freq_hz"))
       .withColumn("vis_re", col("__re2") - col("vis_re"))
       .withColumn("vis_im", col("__im2") - col("vis_im"))
       .withColumn("flag", col("flag") || col("__fl2"))
       .withColumn("nsample", (col("nsample") + col("__ns2")) / 2)
-      .drop("__re2", "__im2", "__fl2", "__ns2")
+      .drop("__f2", "__re2", "__im2", "__fl2", "__ns2")
   }
 
   /** G6 — Incoherent Noise Spectrum: mean over unflagged baselines of |V|

@@ -7,7 +7,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expression, Expressions, Transform}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.sources
@@ -24,21 +24,23 @@ import graft.mwa.{CorruptInputException, Fits, Hdf5, Uvh5, VisGenerator}
   *
   * This is the SURVEY §2.1 S2 Phase-2 shape with the reference's one
   * processor interface and a per-format strategy behind it
-  * (`processors.py:23-38`): a single [[VisScan]] plans ONE InputPartition
-  * PER (file, time-slice) of [[VisScan.Slice]] integrations — the two
-  * axes the reference's batched reader splits work by
+  * (`processors.py:23-38`): a single [[VisScan]] plans the work along
+  * the two axes the reference's batched reader splits it by
   * (`processors.py:166-172`, gpubox files × time batches; a gpubox file
-  * is one coarse channel). Only two things differ per
-  * format, both behind [[VisFile]]: the planning-time metadata parse and
-  * the fill of one time slice, a chunk at a time, into the 13-column
+  * is one coarse channel): ONE InputPartition per gpubox file, over the
+  * integrations the time filters keep, and one per (file, time-slice) of
+  * [[VisScan.Slice]] integrations for uvfits and uvh5. Only two things
+  * differ per format, both behind [[VisFile]]: the planning-time metadata
+  * parse and the fill of one time range, a chunk at a time, into the 13-column
   * layout. Listing, pruning, projection, the file handle and the reused
   * column vectors exist once. The scan is columnar and implements
   * SupportsPushDownRequiredColumns, so narrow projections (e.g. the
   * metadata-only time scan, S3) fill, and read, only the columns they
   * need. Over gpubox files it also reports its layout, (obsid,
-  * coarse_chan) key groups (see [[VisScan.outputPartitioning]]), so an
-  * operator keyed on both, such as the SSINS diff window and INS
-  * aggregate, runs with no shuffle.
+  * coarse_chan) key groups (see [[VisScan.outputPartitioning]]), and each
+  * split's row order, the SSINS diff window's (see
+  * [[VisScan.outputOrdering]]), so the diff window and INS aggregate run
+  * with no shuffle and no sort.
   */
 class VisSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-vis"
@@ -173,10 +175,15 @@ class MsNotSupportedException(msg: String)
     extends UnsupportedOperationException(msg)
 
 object VisScan {
-  /** Integrations per partition. On `gpubox_flags`, whole-file partitions
-    * (16 integrations) read no faster than 4 within run-to-run spread, and
-    * a short slice lets time filters prune. */
+  /** Integrations per uvfits or uvh5 partition: a short slice lets time
+    * filters prune. A gpubox partition is a whole file instead (see
+    * [[VisScan.planInputPartitions]]). */
   val Slice = 4
+
+  /** The order of a gpubox split's rows: the diff window's partition keys,
+    * then its order keys (`VisOps.diff`). */
+  val Order: Seq[String] =
+    Seq("obsid", "coarse_chan", "ant1", "ant2", "pol", "freq_hz", "time_idx")
 
   private val axes = Set("time_idx", "coarse_chan")
   def supported(f: sources.Filter): Boolean = f match {
@@ -211,38 +218,57 @@ object VisScan {
 }
 
 /** The scan over one directory's files of family `ext`: parses each
-  * file's metadata once, at planning time (no payload bytes)
-  * and plans one partition per (file, time-slice) that the pushed
-  * time_idx/coarse_chan filters keep. */
+  * file's metadata once, at planning time (no payload bytes), and plans
+  * the partitions the pushed time_idx/coarse_chan filters keep: one per
+  * gpubox file, covering the integrations from the first to the last one
+  * the filters keep, and one per (file, time-slice of [[VisScan.Slice]])
+  * for uvfits and uvh5. Over gpubox files it reports both its layout and
+  * each split's row order. */
 class VisScan(path: String, ext: String, files: Seq[String],
               required: StructType, pushed: Array[sources.Filter])
-    extends Scan with Batch with SupportsReportPartitioning {
+    extends Scan with Batch with SupportsReportPartitioning with SupportsReportOrdering {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-vis $ext path=$path PushedFilters: [${pushed.mkString(", ")}]"
 
   private lazy val parsed: Seq[VisFile] = files.map(VisSource.formats(ext))
-  private lazy val kept: Seq[VisPartition] = for {
-    f <- parsed
-    t0 <- 0 until f.nTimes by VisScan.Slice
-    t1 = math.min(t0 + VisScan.Slice, f.nTimes)
-    if VisScan.keep(f.coarseChan, t0, t1, pushed)
-  } yield VisPartition(f, t0, t1)
+  private lazy val gpubox = parsed.forall(_.coarseChan.isDefined)
+  private lazy val kept: Seq[VisPartition] = parsed.flatMap { f =>
+    if (f.coarseChan.isDefined) {
+      val ts = (0 until f.nTimes).filter(t => VisScan.keep(f.coarseChan, t, t + 1, pushed))
+      ts.headOption.map(t0 => VisPartition(f, t0, ts.last + 1))
+    } else for {
+      t0 <- 0 until f.nTimes by VisScan.Slice
+      t1 = math.min(t0 + VisScan.Slice, f.nTimes)
+      if VisScan.keep(None, t0, t1, pushed)
+    } yield VisPartition(f, t0, t1)
+  }
 
   override def planInputPartitions(): Array[InputPartition] = kept.toArray
 
   /** A gpubox file holds one (obsid, coarse_chan), so gpubox splits are
     * key-grouped on `identity(obsid), identity(coarse_chan)`: Spark runs
-    * each key's time slices as one task, and an operator clustered on
-    * both keys (and possibly more) needs no exchange. Spark drops the
-    * report when the scan's output lacks either column. uvfits and uvh5
-    * files span the band, so they report no layout. */
+    * each key's files as one task, and an operator clustered on both keys
+    * (and possibly more) needs no exchange. Spark drops the report when
+    * the scan's output lacks either column. uvfits and uvh5 files span the
+    * band, so they report no layout. */
   override def outputPartitioning(): Partitioning =
-    if (parsed.forall(_.coarseChan.isDefined))
+    if (gpubox)
       new KeyGroupedPartitioning(Array[Expression](Expressions.identity("obsid"),
         Expressions.identity("coarse_chan")), kept.map(_.key).distinct.length)
     else new UnknownPartitioning(kept.length)
+
+  /** A gpubox split's rows come in [[VisScan.Order]], all ascending, so the
+    * diff window over one key group needs no sort. Reported only when the
+    * output holds every column of that order; Spark keeps it only for key
+    * groups of one split, so two files of one (obsid, coarse_chan) bring
+    * the sort back. */
+  override def outputOrdering(): Array[SortOrder] =
+    if (gpubox && VisScan.Order.forall(required.fieldNames.contains))
+      VisScan.Order.map(c => Expressions.sort(Expressions.column(c),
+        SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)).toArray
+    else Array.empty
 
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
     Scan.ColumnarSupportMode.SUPPORTED
@@ -250,7 +276,8 @@ class VisScan(path: String, ext: String, files: Seq[String],
     new VisReaderFactory(required)
 }
 
-/** One (file, time-slice) split. Its partition key is (obsid,
+/** One split: integrations [timeStart, timeEnd) of one file, a whole
+  * gpubox file or a uvfits/uvh5 time slice. Its partition key is (obsid,
   * coarse_chan), which Spark asks for only when the scan reports a
   * key-grouped layout, that is for one-channel (gpubox) files. */
 case class VisPartition(file: VisFile, timeStart: Int, timeEnd: Int)
@@ -334,11 +361,10 @@ final class VisColumns(required: StructType) {
   }
 }
 
-/** The (frequency, polarisation) cells of one gpubox baseline row, uvfits
-  * group or uvh5 blt row, pol fastest: `hz` per frequency, `nFine` fine
-  * channels per coarse channel, the first of them in coarse channel
-  * `chan0`. */
-final class CellAxis(nFine: Int, hz: Array[Double], pols: Seq[String], chan0: Int = 0) {
+/** The (frequency, polarisation) cells of one uvfits group or uvh5 blt
+  * row, pol fastest: `hz` per frequency, `nFine` fine channels per coarse
+  * channel. */
+final class CellAxis(nFine: Int, hz: Array[Double], pols: Seq[String]) {
   private val polBytes = pols.map(_.getBytes(StandardCharsets.UTF_8)).toArray
   val size: Int = hz.length * polBytes.length
 
@@ -348,7 +374,7 @@ final class CellAxis(nFine: Int, hz: Array[Double], pols: Seq[String], chan0: In
     var c = 0
     while (c < n) {
       val f = (a + c) / nPol
-      if (out.coarseChan != null) out.coarseChan.putInt(from + c, chan0 + f / nFine)
+      if (out.coarseChan != null) out.coarseChan.putInt(from + c, f / nFine)
       if (out.freqHz != null) out.freqHz.putDouble(from + c, hz(f))
       if (out.pol != null) out.pol.putByteArray(from + c, polBytes((a + c) % nPol))
       c += 1
@@ -381,64 +407,91 @@ case class FitsFile(path: String, head: Fits.Header, obsid: Long, chan: Int,
                     freq0Hz: Double, dfHz: Double) extends VisFile {
   override def coarseChan: Option[Int] = Some(chan)
 
-  /** Walks the (data, weights) header pairs from the primary up to the
-    * first integration past the slice, checking each HDU's shape; no
-    * later header is read. A file that ends before every integration of
-    * the slice has its HDUs, or holds one twice, fails typed rather than
-    * yielding fewer or extra rows. Rows are filled a chunk at a time, one
-    * baseline row being a group of cells: ant1/ant2 from the row index,
-    * freq_hz from COARSE and the fine index, pol from POLS, flag from
-    * weight <= 0 and nsample from |weight|, as uvfits does. Only vis_re and
-    * vis_im read the data HDU and only flag and nsample the weights HDU. */
+  /** Decodes integrations [t0, t1) in series order, the order
+    * [[VisScan.Order]] names: baselines as `VisGenerator.baselinePairs`
+    * lists them (ant1, then ant2), then pol by name, then frequency, then
+    * time. A group of cells is one baseline's series, (pol, fine channel,
+    * integration), walked by a [[GroupCursor]]. Per chunk of baselines it
+    * reads, for each integration, one contiguous run of their data rows
+    * and one of their weights, then gathers the cells; a baseline larger
+    * than a chunk is read once and gathered in parts. So the buffers hold
+    * at most max([[VisSource.Chunk]], one baseline's series) cells,
+    * whatever the number of baselines. [[Fits.integrations]] seeks to
+    * `t0`'s headers and reads none past `t1`; a file that ends before
+    * every integration of [t0, t1) has its HDUs, holds one twice or out
+    * of order, fails typed rather than yielding fewer, extra or misordered
+    * rows. ant1/ant2 come from the row index, freq_hz from COARSE and the
+    * fine index, pol from POLS, flag from weight <= 0 and nsample from
+    * |weight|, as uvfits does. Only vis_re and vis_im read the data HDU
+    * and only flag and nsample the weights HDU. */
   override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
-    val hdus = Fits.integrations(raf, head, t1).filter(_._1.int("TIMEIDX") >= t0)
+    val hdus = Fits.integrations(raf, head, t0, t1)
     if (hdus.length != t1 - t0)
       throw new CorruptInputException(path, raf.length(),
         s"integrations [$t0, $t1) have ${hdus.length} HDU pairs, not ${t1 - t0}")
-    val ts = hdus.map(_._1.int("TIMEIDX"))
-    val jds = hdus.map(_._1.double("TIMEJD"))
+    val nT = hdus.length
+    val ts = hdus.map(_._1.int("TIMEIDX")).toArray
+    val jds = hdus.map(_._1.double("TIMEJD")).toArray
     val bls = VisGenerator.baselinePairs(nAnts)
     val nPol = pols.length
-    val axis = new CellAxis(nFine,
-      Array.tabulate(nFine)(k => freq0Hz + (chan * nFine + k) * dfHz), pols, chan)
-    val cur = new GroupCursor(hdus.length.toLong * bls.length, axis.size)
+    val hz = Array.tabulate(nFine)(k => freq0Hz + (chan * nFine + k) * dfHz)
+    // the file's pol and fine-channel indices in ascending name and frequency
+    val polAt = pols.indices.sortBy(pols).toArray
+    val fineAt = hz.indices.sortBy(hz(_)).toArray
+    val polBytes = pols.map(_.getBytes(StandardCharsets.UTF_8)).toArray
+    val row = nFine * nPol // cells of one baseline in one integration
+    val cur = new GroupCursor(bls.length, nT * row)
     val needVis = out.any(out.visRe, out.visIm)
     val needWts = out.any(out.flag, out.nsample)
-    val vis = ByteBuffer.wrap(new Array[Byte](8 * cur.perChunk * cur.cellsPerChunk))
-    val wts = ByteBuffer.wrap(new Array[Byte](4 * cur.perChunk * nPol))
+    val vis = ByteBuffer.wrap(new Array[Byte](if (needVis) 8 * cur.perChunk * nT * row else 0))
+    val wts = ByteBuffer.wrap(new Array[Byte](if (needWts) 4 * cur.perChunk * nT * nPol else 0))
     def read(h: Fits.Header, at: Long, into: ByteBuffer, from: Int, len: Int): Unit = {
       raf.seek(h.dataOffset + at)
       raf.readFully(into.array(), from, len)
     }
     () => if (!cur.advance()) 0 else {
-      // the chunk's groups, a run of baselines of one integration at a time
-      var j = 0
-      while (j < cur.n) {
-        val i = ((cur.g + j) / bls.length).toInt
-        val b = ((cur.g + j) % bls.length).toInt
-        val k = math.min(cur.n - j, bls.length - b)
-        if (needVis) read(hdus(i)._1, 8L * (b.toLong * axis.size + cur.a), vis,
-          8 * j * cur.m, 8 * k * cur.m)
-        if (needWts) read(hdus(i)._2, 4L * b * nPol, wts, 4 * j * nPol, 4 * k * nPol)
-        for (g <- j until j + k) {
-          val (a1, a2) = bls(b + g - j)
-          out.putTime(g * cur.m, cur.m, obsid, ts(i), jds(i))
-          out.putBaseline(g * cur.m, cur.m, a1, a2)
-          axis.put(out, g * cur.m, cur.a, cur.m)
-        }
-        j += k
+      val n = cur.n
+      // baselines [g, g + n) of each integration, unless this chunk is a
+      // later part of a baseline already read
+      if (cur.a == 0) for (i <- 0 until nT) {
+        if (needVis) read(hdus(i)._1, 8L * cur.g * row, vis, 8 * i * n * row, 8 * n * row)
+        if (needWts) read(hdus(i)._2, 4L * cur.g * nPol, wts, 4 * i * n * nPol, 4 * n * nPol)
       }
-      val rows = cur.n * cur.m
+      val rows = n * cur.m
+      if (out.obsid != null) out.obsid.putLongs(0, rows, obsid)
+      if (out.coarseChan != null) out.coarseChan.putInts(0, rows, chan)
       var r = 0
-      while (r < rows) {
-        if (out.visRe != null) out.visRe.putDouble(r, vis.getFloat(8 * r).toDouble)
-        if (out.visIm != null) out.visIm.putDouble(r, vis.getFloat(8 * r + 4).toDouble)
-        if (needWts) {
-          val w = wts.getFloat(4 * (r / cur.m * nPol + (cur.a + r % cur.m) % nPol))
-          if (out.flag != null) out.flag.putBoolean(r, w <= 0f)
-          if (out.nsample != null) out.nsample.putDouble(r, math.abs(w).toDouble)
+      var j = 0
+      while (j < n) {
+        val (a1, a2) = bls((cur.g + j).toInt)
+        out.putBaseline(r, cur.m, a1, a2)
+        // cell a of a series is (pol rank, fine rank, integration), time fastest
+        var i = cur.a % nT
+        var f = cur.a / nT % nFine
+        var q = cur.a / nT / nFine
+        val end = r + cur.m
+        while (r < end) {
+          val p = polAt(q)
+          val k = fineAt(f)
+          if (out.timeIdx != null) out.timeIdx.putInt(r, ts(i))
+          if (out.timeJd != null) out.timeJd.putDouble(r, jds(i))
+          if (out.freqHz != null) out.freqHz.putDouble(r, hz(k))
+          if (out.pol != null) out.pol.putByteArray(r, polBytes(p))
+          if (needVis) {
+            val v = 8 * ((i * n + j) * row + k * nPol + p)
+            if (out.visRe != null) out.visRe.putDouble(r, vis.getFloat(v).toDouble)
+            if (out.visIm != null) out.visIm.putDouble(r, vis.getFloat(v + 4).toDouble)
+          }
+          if (needWts) {
+            val w = wts.getFloat(4 * ((i * n + j) * nPol + p))
+            if (out.flag != null) out.flag.putBoolean(r, w <= 0f)
+            if (out.nsample != null) out.nsample.putDouble(r, math.abs(w).toDouble)
+          }
+          i += 1
+          if (i == nT) { i = 0; f += 1; if (f == nFine) { f = 0; q += 1 } }
+          r += 1
         }
-        r += 1
+        j += 1
       }
       rows
     }

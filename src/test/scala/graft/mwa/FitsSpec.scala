@@ -68,9 +68,9 @@ class FitsSpec extends SparkSpec {
   }
 
   test("time/channel pushdown prunes (file, HDU-slice) partitions") {
-    // 2 files x ceil(6/4)=2 slices -> 4 partitions unfiltered; Spark runs
-    // each gpubox file's slices as one (obsid, coarse_chan) key group
-    assert(splits() == 4)
+    // one split per file -> 2 partitions unfiltered, each file one
+    // (obsid, coarse_chan) key group
+    assert(splits() == 2)
     assert(load().rdd.getNumPartitions == 2)
     assert(splits(LessThan("time_idx", 2), EqualTo("coarse_chan", 1)) == 1)
     val q = load().filter(col("time_idx") < 2 && col("coarse_chan") === 1)

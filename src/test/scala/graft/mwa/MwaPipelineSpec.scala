@@ -26,6 +26,35 @@ class MwaPipelineSpec extends SparkSpec {
     assert(counts.toSeq == Seq(spec.nTimes - 1L))
   }
 
+  test("diff pairs across a missing integration and drops only each series' last row") {
+    // integration 5 missing from one series: its time 4 pairs with time 6
+    val inSeries = col("ant1") === 1 && col("ant2") === 3 && col("pol") === "YY" &&
+      col("freq_hz") === spec.freq0Hz + 3 * spec.dfHz
+    val vis = VisGenerator.vis(spark, spec).filter(!(inSeries && col("time_idx") === 5))
+    // the window spec the diff used before it ordered by frequency: one
+    // series per partition, its last row dropped for a null successor
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("obsid"),
+      col("coarse_chan"), col("ant1"), col("ant2"), col("freq_hz"), col("pol"))
+      .orderBy(col("time_idx"))
+    val next = Seq("vis_re", "vis_im", "flag", "nsample").zipWithIndex
+      .map { case (c, i) => lead(col(c), 1).over(w).as(s"__n$i") }
+    val inline = vis.select(vis.columns.map(col) ++ next: _*)
+      .filter(col("__n0").isNotNull)
+      .withColumn("vis_re", col("__n0") - col("vis_re"))
+      .withColumn("vis_im", col("__n1") - col("vis_im"))
+      .withColumn("flag", col("flag") || col("__n2"))
+      .withColumn("nsample", (col("nsample") + col("__n3")) / 2)
+      .drop("__n0", "__n1", "__n2", "__n3")
+    val d = VisOps.diff(vis)
+    assert(d.columns.toSeq == inline.columns.toSeq)
+    assert(d.exceptAll(inline).isEmpty && inline.exceptAll(d).isEmpty)
+    // exactly one row fewer per series
+    val series = vis.select("ant1", "ant2", "freq_hz", "pol").distinct().count()
+    assert(d.count() == vis.count() - series)
+    val bridged = d.filter(inSeries).select("time_idx").collect().map(_.getInt(0))
+    assert(bridged.sorted.toSeq == (0 until spec.nTimes - 1).filter(_ != 5))
+  }
+
   test("INS reduces to (time, freq, pol) cells with baseline counts") {
     val cfg = GraftConfig(spectrumType = SpectrumType.Cross, removeFlaggedAnts = false)
     val insDf = VisOps.ins(VisOps.diff(VisOps.selectSurface(

@@ -1,20 +1,24 @@
 package graft.sources
 
+import java.nio.file.{Files, Paths}
 import graft.SparkSpec
 import graft.mwa.{Fits, GraftConfig, MatchFilter, Uvh5, VisGenerator, VisOps, VisStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.{KeyGroupedPartitioning, SinglePartition}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** The layout the `graft-vis` scan reports, and the plans Spark builds
-  * from it: gpubox splits are key-grouped on (obsid, coarse_chan), so the
-  * SSINS diff window and INS aggregate run with no exchange; uvfits, uvh5
-  * and the Parquet `VisStore` report nothing, and keep theirs. Fixtures as
+  * from it: gpubox splits, one per file, are key-grouped on (obsid,
+  * coarse_chan) and their rows come in the diff window's order, so the
+  * SSINS diff window and INS aggregate run with no exchange and no sort;
+  * uvfits, uvh5 and the Parquet `VisStore` report nothing, and keep both.
+  * Fixtures as
   * in [[VisSourceSpec]]: 17 integrations, 4 antennas, 2 coarse x 8 fine
   * channels, 2 pols. */
 class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
@@ -63,6 +67,51 @@ class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(ins.exceptAll(generated).isEmpty && generated.exceptAll(ins).isEmpty)
   }
 
+  /** The sorts and shuffle exchanges under the diff's window, the one
+    * partitioned by antenna. */
+  private def underWindow(df: DataFrame): (Int, Int) = {
+    val windows = collect(plan(df)) {
+      case w: WindowExec if w.partitionSpec.exists(_.references.exists(_.name == "ant1")) => w
+    }
+    assert(windows.length == 1)
+    (collect(windows.head.child) { case s: SortExec => s }.length,
+      collect(windows.head.child) { case e: ShuffleExchangeExec => e }.length)
+  }
+
+  test("a gpubox scan reports the diff window's order: no sort and no exchange under it") {
+    val vis = load(Fits.ensureFixture())
+    val ins = insOf(vis)
+    assert(scanOf(ins).outputOrdering.map(_.child.references.head.name) == VisScan.Order)
+    assert(underWindow(ins) == (0, 0))
+    assert(underWindow(MatchFilter(ins, cfg)) == (0, 0))
+    // a projection that lacks an order column reports no order
+    val narrow = load(Fits.ensureFixture()).select("obsid", "coarse_chan", "vis_re")
+    assert(scanOf(narrow).outputOrdering.isEmpty)
+  }
+
+  test("two gpubox files of one (obsid, coarse_chan) bring the sort back, with the one-file INS") {
+    // each coarse channel in two files of one (obsid, coarse_chan), the
+    // pols split between them: key groups of two splits, so Spark drops the
+    // reported order and sorts, still with no exchange
+    val root = Paths.get(tmpDir("graft_vis_layout_twofiles"))
+    val bothDir = Files.createDirectories(root.resolve("both"))
+    val halves = Seq(Seq("XX", "YY"), Seq("XY", "YX")).zipWithIndex.map { case (pols, i) =>
+      val dir = root.resolve(s"half$i")
+      for (f <- Fits.writeVis(dir, Fits.fixtureSpec.copy(pols = pols)))
+        Files.copy(f, bothDir.resolve(f.getFileName.toString.replace("_00.fits", s"_0$i.fits")))
+      dir.toString
+    }
+    val both = insOf(load(bothDir.toString))
+    assert(underWindow(both) == (1, 0))
+    // each INS cell is one pol's, from one file, so it equals that file's
+    // own INS, planned with no sort
+    val oneFile = halves.map(d => insOf(load(d)))
+    oneFile.foreach(ins => assert(underWindow(ins) == (0, 0)))
+    val union = oneFile.reduce(_ unionByName _)
+    assert(both.count() == 16L * 16 * 4)
+    assert(both.exceptAll(union).isEmpty && union.exceptAll(both).isEmpty)
+  }
+
   test("uvfits, uvh5 and the Parquet VisStore report no layout and keep the exchange") {
     val store = tmpDir("graft_vis_layout_store")
     VisStore.write(load(Fits.ensureFixture()), store)
@@ -72,6 +121,7 @@ class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "parquet" -> VisStore.read(spark, store))
     for ((name, vis) <- inputs) withClue(name) {
       assert(shufflesUnderIns(insOf(vis)) > 0)
+      assert(underWindow(insOf(vis)) == (1, 1))
       assert(insOf(vis).count() == 16L * 16 * 2)
     }
     for ((name, vis) <- inputs.take(2)) withClue(name) {
@@ -81,12 +131,12 @@ class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("a projection without obsid or coarse_chan falls back to an unknown layout") {
     val dir = Fits.ensureFixture()
-    // 2 files x 5 slices: key groups only while both key columns are read
+    // one split per file: key groups only while both key columns are read
     assert(load(dir).queryExecution.toRdd.getNumPartitions == 2)
     for (cols <- Seq(Seq("coarse_chan", "vis_re"), Seq("obsid", "vis_re"))) withClue(cols) {
       val df = load(dir).select(cols.map(col): _*)
       assert(!scanOf(df).outputPartitioning.isInstanceOf[KeyGroupedPartitioning])
-      assert(df.queryExecution.toRdd.getNumPartitions == 10)
+      assert(df.queryExecution.toRdd.getNumPartitions == 2)
     }
     // a pruned read as the benchmark sends it: one channel x 2
     // integrations, count + sum; the partial and final aggregates keep

@@ -47,12 +47,14 @@ class VisSourceSpec extends SparkSpec {
   }
 
   test("plans one partition per (coarse_chan, time-slice)") {
-    // per file: ceil(17/4) = 5 slices; Spark runs a gpubox file's slices,
-    // one (obsid, coarse_chan) key group, as one RDD partition
+    // a gpubox file, one (obsid, coarse_chan) key group, is one split and
+    // one RDD partition; uvfits and uvh5 split per file into ceil(17/4) = 5
+    // time slices
     for (in <- inputs) withClue(in.name) {
       val df = load(in.dir())
-      assert(splits(df) == in.files * 5)
-      assert(df.rdd.getNumPartitions == (if (in.perChan) in.files else in.files * 5))
+      val parts = if (in.perChan) in.files else in.files * 5
+      assert(splits(df) == parts)
+      assert(df.rdd.getNumPartitions == parts)
     }
   }
 
@@ -65,15 +67,15 @@ class VisSourceSpec extends SparkSpec {
   }
 
   test("filter pushdown prunes (time, chan) partitions at the source") {
-    // pushFilters -> planInputPartitions, gpubox: 2 files x 5 slices; time_idx < 4 keeps
-    // slice [0,4) per file; coarse_chan = 1 keeps one file
+    // pushFilters -> planInputPartitions, gpubox: one split per file, over
+    // the integrations the time filters keep; coarse_chan = 1 keeps one file
     val dir = Fits.ensureFixture()
     def partsWith(fs: Filter*) = {
       val b = new VisScanBuilder(dir)
       b.pushFilters(fs.toArray)
       b.build().toBatch.planInputPartitions().length
     }
-    assert(partsWith() == 10)
+    assert(partsWith() == 2)
     assert(partsWith(LessThan("time_idx", 4)) == 2)
     assert(partsWith(LessThan("time_idx", 4), EqualTo("coarse_chan", 1)) == 1)
     assert(partsWith(EqualTo("time_idx", 0)) == 2)
@@ -91,7 +93,7 @@ class VisSourceSpec extends SparkSpec {
         assert(q.count() == rows)
       }
       check(col("time_idx") < 4, in.files, in.files, 4 * 2 * perChanRows)
-      check(col("coarse_chan") === 1, (if (in.perChan) 1 else in.files) * 5, 1,
+      check(col("coarse_chan") === 1, if (in.perChan) 1 else in.files * 5, 1,
         17 * perChanRows)
       check(col("time_idx") < 4 && col("coarse_chan") === 1, 1, 1, 4 * perChanRows)
     }
@@ -198,17 +200,29 @@ class VisSourceSpec extends SparkSpec {
     * starts with `find` in header record `record` rewritten to `card`,
     * keeping the first `keep` bytes. */
   private def corrupted(record: Int, find: String, card: String,
-                        keep: Int = Int.MaxValue): String = {
+                        keep: Int = Int.MaxValue): String =
+    rewritten(Seq((record, find, card)), keep)
+
+  /** [[corrupted]] with every (record, find, card) edit applied. */
+  private def rewritten(edits: Seq[(Int, String, String)], keep: Int = Int.MaxValue): String = {
     val rec = Fits.RecordLen
     val bytes = Files.readAllBytes(gpubox).take(keep)
-    val text = new String(bytes, record * rec, rec, "US-ASCII")
-    val at = record * rec + (0 until rec by Fits.CardLen)
-      .find(i => text.startsWith(find, i)).get
-    card.getBytes("US-ASCII").copyToArray(bytes, at)
+    for ((record, find, card) <- edits) {
+      val text = new String(bytes, record * rec, rec, "US-ASCII")
+      val at = record * rec + (0 until rec by Fits.CardLen)
+        .find(i => text.startsWith(find, i)).get
+      card.getBytes("US-ASCII").copyToArray(bytes, at)
+    }
     val dir = Paths.get(tmpDir("graft_fits_corrupt_"))
     Files.write(dir.resolve(gpubox.getFileName), bytes)
     dir.resolve(gpubox.getFileName).toString
   }
+
+  /** The header records of [[gpubox]]'s data and weights HDUs of
+    * integration `t`. */
+  private def recordsOf(t: Int): Seq[Int] = Fits.readHeaders(gpubox.toString)
+    .filter(h => h.has("TIMEIDX") && h.int("TIMEIDX") == t)
+    .map(h => (h.offset / Fits.RecordLen).toInt)
 
   test("a FITS header with a size past EOF and 2 GiB, or a bad size card, fails typed") {
     // record 1 is the first data IMAGE header, right after the primary's
@@ -296,6 +310,37 @@ class VisSourceSpec extends SparkSpec {
     val c = corruptCause(e)
     assert(c.path == path && c.offset == hd.offset)
     assert(c.getMessage.contains("NAXIS2 = '12x' is not a number"), c.getMessage)
+  }
+
+  test("a gpubox file whose integrations are out of order fails typed") {
+    // integrations 1 and 2 swap TIMEIDX on both their HDUs: each count
+    // check passes, but the rows would reach the diff window out of order
+    val swapped = rewritten(Seq(1 -> 2, 2 -> 1).flatMap { case (t, to) =>
+      recordsOf(t).map(r => (r, "TIMEIDX", Fits.cardInt("TIMEIDX", to)))
+    })
+    val at = recordsOf(2).head.toLong * Fits.RecordLen
+    val reason = "TIMEIDX 1 follows TIMEIDX 2: integrations out of order"
+    val dir = Paths.get(swapped).getParent.toString
+    checkTyped(swapped, at, reason)(Fits.readHeaders(swapped))
+    checkTyped(swapped, at, reason)(load(dir).count())
+    // a read from integration 2 lands on TIMEIDX 1, so it walks from the
+    // primary and meets the same disorder
+    checkTyped(swapped, at, reason)(load(dir).filter(col("time_idx") >= 2).count())
+  }
+
+  test("a gpubox read seeks to its first integration: an earlier header is never read") {
+    // integration 1's data header made malformed: a read from integration
+    // 3 seeks by integration 0's stride and never meets it
+    val path = corrupted(recordsOf(1).head, "NAXIS2", Fits.card("NAXIS2", "12x"))
+    val dir = Paths.get(path).getParent.toString
+    val chan = Fits.readPrimary(gpubox.toString).int("COARSE")
+    val late = load(dir).filter(col("time_idx") >= 3)
+    val intact = load(Fits.ensureFixture())
+      .filter(col("time_idx") >= 3 && col("coarse_chan") === chan)
+    assert(late.count() == 14L * 10 * 8 * 2)
+    assert(late.exceptAll(intact).isEmpty && intact.exceptAll(late).isEmpty)
+    checkTyped(path, recordsOf(1).head.toLong * Fits.RecordLen,
+      "NAXIS2 = '12x' is not a number")(load(dir).count())
   }
 
   /** One observation written in all three formats under `name`. */

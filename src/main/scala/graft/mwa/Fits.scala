@@ -4,7 +4,6 @@ import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream, Random
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
-import scala.util.Try
 
 /** Real FITS binary I/O (NASA FITS 4.0 standard: 2880-byte logical records,
   * 80-character header cards, big-endian data units) — the actual on-disk
@@ -20,10 +19,11 @@ import scala.util.Try
   * data is stored; a reader derives ant1/ant2, frequency and pol from the
   * position in the array and the primary's keywords. No real MWAX file is
   * in the repository, so this is the shape, not certified compatibility:
-  * the writer defines the fixture. The DSv2 source plans one Spark
-  * partition per file, over the integrations its time filters keep, and
-  * the reader seeks to the first of them and decodes only the HDUs in
-  * that range — so time/channel pushdown prunes real bytes, like the
+  * the writer defines the fixture. Integration t is the file's t-th
+  * (data, weights) HDU pair, with TIMEIDX = t: the time index the DSv2
+  * source prunes on. It plans one Spark partition per file, over the
+  * integrations its time filters keep, and the reader decodes only their
+  * HDUs — so time/channel pushdown prunes real bytes, like the
   * reference's gpubox-file x time-batch read planning.
   */
 object Fits {
@@ -190,8 +190,8 @@ object Fits {
   }
 
   /** All HDU headers of a file, in order. A primary header with a COARSE
-    * card declares a gpubox file, whose integrations are checked as
-    * [[integrations]] checks them. */
+    * card declares a gpubox file, whose NTIMES integrations are read and
+    * checked as [[integrations]] reads them. */
   def readHeaders(path: String): Seq[Header] = {
     val raf = new RandomAccessFile(path, "r")
     try readHeader(raf, 0L, path) match {
@@ -225,25 +225,20 @@ object Fits {
 
   // ------------------------------------------------ MWAX-shaped gpubox files
 
-  /** The integrations of the gpubox file open in `raf` whose primary
-    * header is `primary`, as (data, weights) header pairs in file order,
-    * from integration `t0` on. The walk ends at the end of the file or at
-    * the first data HDU whose TIMEIDX is `t1` or more; no header after
-    * that one is read. Each HDU is checked against the shape the
-    * primary's NFINE, POLS and NANTS give: a float32 data IMAGE of NFINE x
-    * pols x 2 by baselines, then a float32 weights IMAGE of pols by
-    * baselines with the same TIMEIDX. A wrong BITPIX or shape is a
-    * [[CorruptInputException]] at the offending header's offset, a data
-    * HDU with no weights HDU after it one at the offset where the weights
-    * header should start, and a data HDU whose TIMEIDX is not greater than
-    * the previous one's one at its own offset: a reader relies on the
-    * file's time order.
-    *
-    * Every integration of an MWAX file has one size, so for `t0` > 0 the
-    * walk starts at the header integration 0's stride puts `t0` at, when
-    * that header is a data HDU of the right shape with TIMEIDX = `t0`;
-    * only a file where it is not walks from the primary, and then the
-    * pairs before `t0` are dropped. */
+  /** Integrations [`t0`, `t1`) of the gpubox file open in `raf` whose
+    * primary header is `primary`, as (data, weights) header pairs; `t1` is
+    * bounded by the primary's NTIMES. Integration t is the file's t-th
+    * pair: every integration of an MWAX file has one size, so its data
+    * header starts at integration 0's offset + t x integration 0's stride
+    * (its data header to the end of its weights HDU). Integration 0's pair
+    * and the pairs of [`t0`, `t1`) are the only headers read. Each HDU is
+    * checked against the shape the primary's NFINE, POLS and NANTS give: a
+    * float32 data IMAGE of NFINE x pols x 2 by baselines, then a float32
+    * weights IMAGE of pols by baselines, both with TIMEIDX = t. A wrong
+    * BITPIX, shape or TIMEIDX is a [[CorruptInputException]] at the
+    * offending header's offset, a missing data or weights header one at
+    * the offset where it should start, or at the end of a file that ends
+    * before it. */
   def integrations(raf: RandomAccessFile, primary: Header, t0: Int = 0,
                    t1: Int = Int.MaxValue): IndexedSeq[(Header, Header)] = {
     val path = primary.path
@@ -258,37 +253,24 @@ object Fits {
           s"not $naxis1 x $nBl (NAXIS1 x NAXIS2 from NFINE, POLS and NANTS)")
       h
     }
-    def pair(h: Header): (Header, Header) = {
-      val data = shaped(h, dataAxis, "data")
-      val t = data.int("TIMEIDX")
+    def missing(t: Int, what: String, at: Long) = new CorruptInputException(path,
+      math.min(at, raf.length()), s"integration $t has no $what HDU at byte $at")
+    def pair(t: Int, at: Long): (Header, Header) = {
+      val data = shaped(readHeader(raf, at, path).getOrElse(throw missing(t, "data", at)),
+        dataAxis, "data")
+      if (data.int("TIMEIDX") != t)
+        throw data.corrupt(s"TIMEIDX ${data.int("TIMEIDX")} where integration $t belongs")
       val weights = readHeader(raf, data.nextHduOffset, path)
         .filter(w => w.has("TIMEIDX") && w.int("TIMEIDX") == t)
-        .getOrElse(throw new CorruptInputException(path, data.nextHduOffset,
-          s"integration $t has no weights HDU"))
+        .getOrElse(throw missing(t, "weights", data.nextHduOffset))
       data -> shaped(weights, nPol, "weights")
     }
-    def walk(from: Option[Header]): IndexedSeq[(Header, Header)] = {
-      val out = IndexedSeq.newBuilder[(Header, Header)]
-      var last = Int.MinValue
-      var next = from
-      while (next.exists(_.int("TIMEIDX") < t1)) {
-        val (data, weights) = pair(next.get)
-        val t = data.int("TIMEIDX")
-        if (t <= last)
-          throw data.corrupt(s"TIMEIDX $t follows TIMEIDX $last: integrations out of order")
-        last = t
-        if (t >= t0) out += data -> weights
-        next = readHeader(raf, weights.nextHduOffset, path)
-      }
-      out.result()
+    val end = math.min(t1, primary.int("NTIMES"))
+    if (t0 >= end) IndexedSeq.empty else {
+      val first = pair(0, primary.nextHduOffset)
+      val stride = first._2.nextHduOffset - first._1.offset
+      (t0 until end).map(t => if (t == 0) first else pair(t, first._1.offset + t * stride))
     }
-    val first = readHeader(raf, primary.nextHduOffset, path)
-    val seeked = if (t0 <= 0) None else first.flatMap { d0 =>
-      val at = d0.offset + t0 * (pair(d0)._2.nextHduOffset - d0.offset)
-      Try(readHeader(raf, at, path).map(shaped(_, dataAxis, "data"))
-        .filter(_.int("TIMEIDX") == t0)).toOption.flatten
-    }
-    walk(seeked.orElse(first))
   }
 
   /** Write one observation as per-coarse-channel gpubox FITS files in the
@@ -405,7 +387,8 @@ object Fits {
       val cells: Long = (3 to header.int("NAXIS")).map(i => header.long(s"NAXIS$i")).product
       val groupBytes: Long = 4L * pcount + 12L * cells
       checkChunk(header, 4L * pcount, "group parameter block")
-      private def offset(g: Long): Long = header.dataOffset + groupBytes * g
+      /** The byte offset of group `g`. */
+      def offset(g: Long): Long = header.dataOffset + groupBytes * g
 
       /** Check that groups [g, g + n) lie inside the file. */
       def check(g: Long, n: Long): Unit =

@@ -21,18 +21,15 @@ object ReadOps {
       lit(layout.nFine)).cast("int")
 
   /** `flag_init` (MWA convention, public SSINS/pyuvdata semantics): flag
-    * the coarse-band edge fine channels, the coarse-band center fine
-    * channel, and the first `initTimes` integrations — the samples known
-    * a-priori to be corrupted by the polyphase filterbank roll-off and
-    * receiver settling. */
-  def flagInit(vis: DataFrame, layout: FreqLayout,
-               edgeChannels: Int = 1, flagCenter: Boolean = true,
-               initTimes: Int = 1): DataFrame = {
+    * the fine channel at each coarse-band edge, the coarse-band center
+    * fine channel, and the first integration — the samples known a-priori
+    * to be corrupted by the polyphase filterbank roll-off and receiver
+    * settling. */
+  def flagInit(vis: DataFrame, layout: FreqLayout): DataFrame = {
     val pos = finePos(layout)
-    val edge = pos < edgeChannels || pos >= layout.nFine - edgeChannels
-    val center = if (flagCenter) pos === layout.nFine / 2 else lit(false)
+    val edge = pos === 0 || pos === layout.nFine - 1
     vis.withColumn("flag",
-      col("flag") || edge || center || col("time_idx") < initTimes)
+      col("flag") || edge || pos === layout.nFine / 2 || col("time_idx") < 1)
   }
 
   /** `flag_choice`: "original" keeps the flags that came with the data;

@@ -375,8 +375,8 @@ object MwaQueries {
     * as standard MWAX-shaped gpubox FITS (2880-byte records, a float32
     * data IMAGE and a weights IMAGE per integration, big-endian —
     * Fits.writeVis) carrying the portable fixture's dyadic values, read
-    * back through the DSv2 source's (file, time-slice) partition planning,
-    * and every decoded cell is matched against the oracle's independent
+    * back through the DSv2 source's partition planning, one split per
+    * whole gpubox file, and every decoded cell is matched against the oracle's independent
     * re-derivation of the same arithmetic. The values are exact in float32
     * and round-trip big-endian encoding bit-exactly, so any header-walk,
     * offset, coordinate or endianness defect breaks the hash. */

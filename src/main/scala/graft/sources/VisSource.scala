@@ -160,7 +160,6 @@ class MixedVisFormatsException(msg: String) extends IllegalArgumentException(msg
   * decoded natively here) is the honest contract. */
 object MsFormat {
   val Ext = ".ms"
-  def hasMs(path: String): Boolean = VisSource.inputs(path).contains(Ext)
   def unsupported(found: Seq[String]): MsNotSupportedException =
     new MsNotSupportedException(
       s"CASA MeasurementSet input is typed and validated but not decoded " +
@@ -416,21 +415,18 @@ case class FitsFile(path: String, head: Fits.Header, obsid: Long, chan: Int,
     * and one of their weights, then gathers the cells; a baseline larger
     * than a chunk is read once and gathered in parts. So the buffers hold
     * at most max([[VisSource.Chunk]], one baseline's series) cells,
-    * whatever the number of baselines. [[Fits.integrations]] seeks to
-    * `t0`'s headers and reads none past `t1`; a file that ends before
-    * every integration of [t0, t1) has its HDUs, holds one twice or out
-    * of order, fails typed rather than yielding fewer, extra or misordered
-    * rows. ant1/ant2 come from the row index, freq_hz from COARSE and the
+    * whatever the number of baselines. time_idx is the integration's
+    * position in the file: [[Fits.integrations]] reads integration t's
+    * headers where integration 0's stride puts them and checks that they
+    * carry TIMEIDX = t, so a missing, repeated or misplaced integration
+    * fails typed rather than yielding fewer, extra or misordered rows.
+    * ant1/ant2 come from the row index, freq_hz from COARSE and the
     * fine index, pol from POLS, flag from weight <= 0 and nsample from
     * |weight|, as uvfits does. Only vis_re and vis_im read the data HDU
     * and only flag and nsample the weights HDU. */
   override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
     val hdus = Fits.integrations(raf, head, t0, t1)
-    if (hdus.length != t1 - t0)
-      throw new CorruptInputException(path, raf.length(),
-        s"integrations [$t0, $t1) have ${hdus.length} HDU pairs, not ${t1 - t0}")
     val nT = hdus.length
-    val ts = hdus.map(_._1.int("TIMEIDX")).toArray
     val jds = hdus.map(_._1.double("TIMEJD")).toArray
     val bls = VisGenerator.baselinePairs(nAnts)
     val nPol = pols.length
@@ -473,7 +469,7 @@ case class FitsFile(path: String, head: Fits.Header, obsid: Long, chan: Int,
         while (r < end) {
           val p = polAt(q)
           val k = fineAt(f)
-          if (out.timeIdx != null) out.timeIdx.putInt(r, ts(i))
+          if (out.timeIdx != null) out.timeIdx.putInt(r, t0 + i)
           if (out.timeJd != null) out.timeJd.putDouble(r, jds(i))
           if (out.freqHz != null) out.freqHz.putDouble(r, hz(k))
           if (out.pol != null) out.pol.putByteArray(r, polBytes(p))
@@ -539,7 +535,8 @@ private[sources] final class GroupCursor(count: Long, cells: Int) {
 
 /** A uvfits (FITS random-groups) file: whole-observation geometry from
   * its primary header. A group is one (time, baseline) visibility over the
-  * full frequency axis, so a time slice is a seek to group t0*nBaselines
+  * full frequency axis, time-major: integration t is the file's t-th run
+  * of Nbl groups, so a time slice is a seek to group t0*nBaselines
   * while coarse_chan filters stay residual (the reference's pyuvdata read
   * has the same shape: `select` on times subsets groups, frequencies
   * post-filter). */
@@ -549,10 +546,13 @@ case class UvfitsFile(path: String, head: Fits.Header, obsid: Long,
                       jd0: Double, dtDays: Double) extends VisFile {
   override def coarseChan: Option[Int] = None
 
-  /** Unpacks each group's AIPS baseline code and DATE offset and fills one
-    * row per (freq, pol) cell. time_idx/time_jd are re-derived from the
-    * header's time grid so float32 DATE rounding cannot leak into the
-    * output. Every group read is checked, whatever the projection. */
+  /** Unpacks each group's AIPS baseline code and fills one row per (freq,
+    * pol) cell. time_idx is the group's index / Nbl, the index the scan
+    * prunes on, and time_jd JD0 + time_idx x DTDAYS, so float32 DATE
+    * rounding cannot leak into the output. A group whose DATE is not its
+    * integration's (a baseline-major file, say), or whose baseline code
+    * decodes outside the array, fails typed at its offset, whatever the
+    * projection. */
   override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
     val groups = new Fits.Uvfits.Groups(raf, head)
     val axis = new CellAxis(nFine,
@@ -572,14 +572,19 @@ case class UvfitsFile(path: String, head: Fits.Header, obsid: Long,
       else groups.readPart(g0 + cur.g, cur.a, cur.m, buf)
       for (j <- 0 until cur.n) {
         val p = j * (pb + 12 * cur.m)
+        val g = g0 + cur.g + j
+        val t = (g / nBl).toInt
         val bl = math.round(bb.getFloat(p + 12))
         val a1 = bl / 256 - 1
         val a2 = bl % 256 - 1
         if (a1 < 0 || a2 < a1 || a2 >= nAnts)
-          throw new IllegalStateException(s"$path: group ${g0 + cur.g + j} " +
+          throw new CorruptInputException(path, groups.offset(g), s"group $g " +
             s"has baseline code $bl (ant1=$a1, ant2=$a2), outside " +
             s"0 <= ant1 <= ant2 < NANTS=$nAnts")
-        val t = math.round(bb.getFloat(p + 16) / dtDays).toInt
+        val date = bb.getFloat(p + 16)
+        if (math.round(date / dtDays) != t)
+          throw new CorruptInputException(path, groups.offset(g), s"group $g " +
+            s"has DATE $date, not integration $t's (group index / $nBl baselines)")
         val row0 = j * cur.m
         out.putTime(row0, cur.m, obsid, t, jd0 + t * dtDays)
         out.putBaseline(row0, cur.m, a1, a2)
@@ -603,8 +608,8 @@ case class UvfitsFile(path: String, head: Fits.Header, obsid: Long,
 object UvfitsFile {
   def open(path: String): UvfitsFile = {
     val h = Fits.readPrimary(path)
-    require(h.has("GROUPS") && h.int("PCOUNT") > 0,
-      s"$path is not a FITS random-groups (uvfits) file")
+    if (!h.has("GROUPS") || h.int("PCOUNT") <= 0)
+      throw h.corrupt("not a FITS random-groups (uvfits) file: no GROUPS card or PCOUNT <= 0")
     UvfitsFile(path, h, h.long("OBSID"), h.int("NTIMES"), h.int("NANTS"),
       h.int("NFINE"), h.int("NCOARSE"), h.str("POLS").split(',').toSeq,
       h.double("FREQ0"), h.double("DFHZ"), h.double("JD0"), h.double("DTDAYS"))
@@ -636,8 +641,9 @@ case class Uvh5File(path: String, ds: Map[String, Hdf5.Ds], obsid: Long,
     // needs it; its whole slice range is checked against the file first
     def slab(needed: Boolean, name: String, perBlt: Int, chunkElems: Int): Uvh5File.Slab =
       if (!needed) null else {
-        Hdf5.extent(raf, path, ds(name), blt0 * perBlt, nBlt * perBlt)
-        new Uvh5File.Slab(ds(name), chunkElems)
+        val d = Uvh5File.dataset(ds, path, name)
+        Hdf5.extent(raf, path, d, blt0 * perBlt, nBlt * perBlt)
+        new Uvh5File.Slab(d, chunkElems)
       }
     val chunkBlts = cur.perChunk
     val chunkCells = cur.perChunk * cur.cellsPerChunk
@@ -685,16 +691,22 @@ object Uvh5File {
     val raf = new RandomAccessFile(path, "r")
     try {
       val ds = Hdf5.datasets(raf, path)
-      def scalar(n: String): Long = Hdf5.readLongs(raf, path, ds(s"Header/$n"), 0, 1)(0)
+      def header(n: String): Hdf5.Ds = dataset(ds, path, s"Header/$n")
+      def scalar(n: String): Long = Hdf5.readLongs(raf, path, header(n), 0, 1)(0)
       val nFreq = scalar("Nfreqs").toInt
       val nPol = scalar("Npols").toInt
       Uvh5File(path, ds, scalar("obsid"), scalar("Ntimes").toInt,
         scalar("Nbls").toInt, scalar("nfine").toInt,
-        Hdf5.readDoubles(raf, path, ds("Header/freq_array"), 0, nFreq),
-        Hdf5.readLongs(raf, path, ds("Header/polarization_array"), 0, nPol)
+        Hdf5.readDoubles(raf, path, header("freq_array"), 0, nFreq),
+        Hdf5.readLongs(raf, path, header("polarization_array"), 0, nPol)
           .map(Uvh5.PolName).toSeq)
     } finally raf.close()
   }
+
+  /** Dataset `name` of the uvh5 file at `path`; a file without it fails
+    * typed at offset 0, as it names no structure of the file. */
+  def dataset(ds: Map[String, Hdf5.Ds], path: String, name: String): Hdf5.Ds =
+    ds.getOrElse(name, throw new CorruptInputException(path, 0L, s"no $name dataset"))
 
   /** One dataset's chunk buffer, little-endian like the file. */
   final class Slab(val ds: Hdf5.Ds, elems: Int) {

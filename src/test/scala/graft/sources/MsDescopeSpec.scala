@@ -29,6 +29,6 @@ class MsDescopeSpec extends SparkSpec {
     val dir = java.nio.file.Paths.get(tmpDir("graft_ms_neg_"))
     Files.write(dir.resolve("notes.ms"), Array[Byte](1)) // FILE, not table dir
     Files.createDirectories(dir.resolve("subdir"))
-    assert(!MsFormat.hasMs(dir.toString))
+    assert(!VisSource.inputs(dir.toString).contains(MsFormat.Ext))
   }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 import graft.SparkSpec
-import graft.mwa.{Fits, VisGenerator}
+import graft.mwa.{CorruptInputException, Fits, VisGenerator}
 
 /** uvfits (FITS random-groups) source: decode parity with the gpubox
   * decoder, header sizing, time-axis pushdown via group seek, and the AIPS
@@ -68,14 +68,18 @@ class UvfitsSpec extends SparkSpec {
     // group 4's BASELINE parameter (the 4th float) := 512, which decodes to
     // ant1 = 1, ant2 = -1
     val h = Fits.readPrimary(file.toString)
+    val group4 = h.dataOffset + 4L * Fits.Uvfits.groupFloats(spec) * 4
     val raf = new java.io.RandomAccessFile(file.toFile, "rw")
     try {
-      raf.seek(h.dataOffset + 4L * Fits.Uvfits.groupFloats(spec) * 4 + 3 * 4)
+      raf.seek(group4 + 3 * 4)
       raf.writeFloat(512f)
     } finally raf.close()
     val e = intercept[Exception](loadUvfits(dir.toString).collect())
-    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .map(_.getMessage).mkString("\n")
-    assert(msgs.contains(s"$file: group 4 has baseline code 512"), msgs)
+    val c = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case c: CorruptInputException => c }
+      .getOrElse(fail(s"no CorruptInputException in the failure chain of $e"))
+    assert(c.path == file.toString && c.offset == group4)
+    assert(c.getMessage.contains(s"$file: corrupt input at byte $group4: " +
+      "group 4 has baseline code 512"), c.getMessage)
   }
 }

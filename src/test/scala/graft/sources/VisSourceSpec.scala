@@ -224,6 +224,9 @@ class VisSourceSpec extends SparkSpec {
     .filter(h => h.has("TIMEIDX") && h.int("TIMEIDX") == t)
     .map(h => (h.offset / Fits.RecordLen).toInt)
 
+  /** The byte offset of [[gpubox]]'s data header of integration `t`. */
+  private def dataHeaderOf(t: Int): Long = recordsOf(t).head.toLong * Fits.RecordLen
+
   test("a FITS header with a size past EOF and 2 GiB, or a bad size card, fails typed") {
     // record 1 is the first data IMAGE header, right after the primary's
     val rec = Fits.RecordLen
@@ -292,8 +295,8 @@ class VisSourceSpec extends SparkSpec {
   }
 
   test("a gpubox slice's header walk stops past the slice: a corrupt later header fails only its slice") {
-    // the NAXIS2 card of TIMEIDX 5's data header made malformed: the walk
-    // of slice [0, 4) stops at TIMEIDX 4, the walk of slice [4, 8) reads it
+    // the NAXIS2 card of TIMEIDX 5's data header made malformed: a read of
+    // [0, 4) reads no header of integration 5, a read of [4, 8) reads it
     val hd = Fits.readHeaders(gpubox.toString)
       .find(h => h.has("TIMEIDX") && h.int("TIMEIDX") == 5).get
     val path = corrupted((hd.offset / Fits.RecordLen).toInt, "NAXIS2", Fits.card("NAXIS2", "12x"))
@@ -313,19 +316,81 @@ class VisSourceSpec extends SparkSpec {
   }
 
   test("a gpubox file whose integrations are out of order fails typed") {
-    // integrations 1 and 2 swap TIMEIDX on both their HDUs: each count
-    // check passes, but the rows would reach the diff window out of order
+    // integrations 1 and 2 swap TIMEIDX on both their HDUs: the shapes and
+    // the count hold, but position 1 says TIMEIDX 2 and position 2 says 1
     val swapped = rewritten(Seq(1 -> 2, 2 -> 1).flatMap { case (t, to) =>
       recordsOf(t).map(r => (r, "TIMEIDX", Fits.cardInt("TIMEIDX", to)))
     })
-    val at = recordsOf(2).head.toLong * Fits.RecordLen
-    val reason = "TIMEIDX 1 follows TIMEIDX 2: integrations out of order"
+    val reason = "TIMEIDX 2 where integration 1 belongs"
     val dir = Paths.get(swapped).getParent.toString
-    checkTyped(swapped, at, reason)(Fits.readHeaders(swapped))
-    checkTyped(swapped, at, reason)(load(dir).count())
-    // a read from integration 2 lands on TIMEIDX 1, so it walks from the
-    // primary and meets the same disorder
-    checkTyped(swapped, at, reason)(load(dir).filter(col("time_idx") >= 2).count())
+    checkTyped(swapped, dataHeaderOf(1), reason)(Fits.readHeaders(swapped))
+    checkTyped(swapped, dataHeaderOf(1), reason)(load(dir).count())
+    // a read from integration 2 reads integration 0's pair, then lands on
+    // position 2's TIMEIDX 1
+    checkTyped(swapped, dataHeaderOf(2), "TIMEIDX 1 where integration 2 belongs")(
+      load(dir).filter(col("time_idx") >= 2).count())
+  }
+
+  test("a gpubox file whose TIMEIDX skips a value fails typed at the mislabelled header") {
+    // integration 2's HDUs cut out and NTIMES 17 -> 16: the 16 integrations
+    // carry TIMEIDX 0, 1, 3, ..., 16, so position t >= 2 holds TIMEIDX t + 1
+    val Seq(data2, weights2) = Fits.readHeaders(gpubox.toString)
+      .filter(h => h.has("TIMEIDX") && h.int("TIMEIDX") == 2)
+    val bytes = Files.readAllBytes(Paths.get(corrupted(0, "NTIMES", Fits.cardInt("NTIMES", 16))))
+    val dir = Paths.get(tmpDir("graft_fits_skip_"))
+    val path = Files.write(dir.resolve(gpubox.getFileName),
+      bytes.take(data2.offset.toInt) ++ bytes.drop(weights2.nextHduOffset.toInt)).toString
+    checkTyped(path, dataHeaderOf(2), "TIMEIDX 3 where integration 2 belongs")(
+      load(dir.toString).count())
+    // a read of the last two integrations lands on position 15's TIMEIDX 16
+    checkTyped(path, dataHeaderOf(15), "TIMEIDX 16 where integration 15 belongs")(
+      load(dir.toString).filter(col("time_idx") >= 15).count())
+  }
+
+  /** The uvfits fixture's one file. */
+  private lazy val uvfits = Paths.get(VisSource.inputs(Fits.Uvfits.ensureFixture())(".uvfits").head)
+
+  test("a uvfits file that is not random groups, or whose groups are out of time order, fails typed") {
+    val spec = Fits.fixtureSpec
+    val nBl = Fits.Uvfits.nBaselines(spec.nAnts)
+    val head = Fits.readPrimary(uvfits.toString)
+    val groupBytes = 4 * Fits.Uvfits.groupFloats(spec)
+    def offset(g: Int): Long = head.dataOffset + groupBytes.toLong * g
+    /** A copy of [[uvfits]], alone in a new directory, with `patch` applied. */
+    def patched(patch: Array[Byte] => Array[Byte]): String = {
+      val dir = Paths.get(tmpDir("graft_uvfits_corrupt_"))
+      Files.write(dir.resolve(uvfits.getFileName), patch(Files.readAllBytes(uvfits))).toString
+    }
+    // a read of time_idx < 4 is one slice, [0, 4), failing at `first`; a
+    // full read fails in whichever of its 5 slices fails first
+    def check(path: String, reason: String, first: Long, others: Long*): Unit = {
+      val dir = Paths.get(path).getParent.toString
+      val c = corruptCause(intercept[Exception](load(dir).count()))
+      assert(c.path == path && (first +: others).contains(c.offset) &&
+        c.getMessage.contains(reason), c.getMessage)
+      checkTyped(path, first, reason)(load(dir).filter(col("time_idx") < 4).count())
+    }
+    // no GROUPS card: refused when the scan is planned, at the primary
+    check(patched { b =>
+      val at = new String(b, 0, head.dataOffset.toInt, "US-ASCII").indexOf("GROUPS  =")
+      (" " * Fits.CardLen).getBytes("US-ASCII").copyToArray(b, at)
+      b
+    }, "not a FITS random-groups (uvfits) file", 0)
+    // group 5 (integration 0) dated integration 3
+    check(patched { b =>
+      ByteBuffer.wrap(b).putFloat((offset(5) + 16).toInt, (3 * spec.dtDays).toFloat)
+      b
+    }, s"group 5 has DATE ${(3 * spec.dtDays).toFloat}, not integration 0's", offset(5))
+    // baseline-major: group bl * NTIMES + t holds (t, bl), so group 1
+    // holds integration 1 where integration 0 belongs, and each later
+    // slice's first group is misplaced too
+    check(patched { b =>
+      val out = b.clone()
+      for (t <- 0 until spec.nTimes; bl <- 0 until nBl)
+        System.arraycopy(b, offset(t * nBl + bl).toInt, out,
+          offset(bl * spec.nTimes + t).toInt, groupBytes)
+      out
+    }, "has DATE", offset(1), (4 until spec.nTimes by VisScan.Slice).map(t => offset(t * nBl)): _*)
   }
 
   test("a gpubox read seeks to its first integration: an earlier header is never read") {
@@ -339,8 +404,7 @@ class VisSourceSpec extends SparkSpec {
       .filter(col("time_idx") >= 3 && col("coarse_chan") === chan)
     assert(late.count() == 14L * 10 * 8 * 2)
     assert(late.exceptAll(intact).isEmpty && intact.exceptAll(late).isEmpty)
-    checkTyped(path, recordsOf(1).head.toLong * Fits.RecordLen,
-      "NAXIS2 = '12x' is not a number")(load(dir).count())
+    checkTyped(path, dataHeaderOf(1), "NAXIS2 = '12x' is not a number")(load(dir).count())
   }
 
   /** One observation written in all three formats under `name`. */
@@ -539,5 +603,18 @@ class VisSourceSpec extends SparkSpec {
     check(patchedUvh5((_, _) => (), 40), 0, "superblock of 72 bytes runs past end of file")
     check(patchedUvh5((b, _) => b(rootOh.toInt) = 2), rootOh,
       "object header version 2 is not 1")
+    // a /Header dataset renamed away fails when the scan is planned, a
+    // /Data one when a column that needs it is read
+    def renamed(name: String): String = patchedUvh5 { (b, _) =>
+      val at = b.indexOfSlice((name + "\u0000").getBytes("US-ASCII").toSeq)
+      assert(at > 0)
+      b(at + name.length - 1) = 'X'
+    }
+    val noNfreqs = renamed("Nfreqs")
+    checkTyped(noNfreqs, 0, "no Header/Nfreqs dataset")(
+      load(Paths.get(noNfreqs).getParent.toString).count())
+    val noVisdata = renamed("visdata")
+    checkTyped(noVisdata, 0, "no Data/visdata dataset")(
+      load(Paths.get(noVisdata).getParent.toString).select("vis_re").collect())
   }
 }

@@ -34,6 +34,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 BASE="${1:-HEAD}"
 NAMES="${2:-}"
+SF="$HOME/testdata/sf0.01"
 if [ -z "$NAMES" ]; then
   FILES=$(git diff --name-only "$BASE" -- 'src/main/scala/graft/' | grep '\.scala$' || true)
   [ -z "$FILES" ] && { echo "no changed engine sources vs $BASE"; exit 0; }
@@ -63,9 +64,9 @@ print(','.join(sorted(hits)))")
 fi
 echo "scoped sweep: $NAMES"
 OUT=$(mktemp -d /tmp/graft_scoped.XXXX)
-sbt --batch "runMain graft.Verify /root/testdata/sf0.01 $OUT $NAMES" \
+trap 'rm -rf "$OUT"' EXIT
+sbt --batch "runMain graft.Verify $SF $OUT $NAMES" \
   2>&1 | grep -E '\[verify\]|error\]:' | grep -v INFO || true
-python3 tools/selfcheck.py /root/testdata/sf0.01 "$OUT" "" --scoped
-rc=$?
-rm -rf "$OUT"
-exit $rc
+# every swept query is checked: one that crashed in Verify dumped no
+# output and FAILs, so the sweep exits non-zero
+python3 tools/selfcheck.py "$SF" "$OUT" "" --only="$NAMES"

@@ -21,7 +21,7 @@ def floats_differ(a, b):
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-def main(sf_dir, out_dir, skip=(), scoped=False):
+def main(sf_dir, out_dir, skip=(), only=None):
     con = duckdb.connect()
     import os
     for t in TABLES:
@@ -34,18 +34,17 @@ def main(sf_dir, out_dir, skip=(), scoped=False):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     ok = bad = 0
     for name, sql in sorted(oracle.items()):
+        if only is not None and name not in only:
+            continue  # a scoped Verify ran only the queries under test
         if name in skip:
             print(f"skip {name}")
             continue
-        # read the engine output FIRST: a scoped Verify run dumps only a
-        # few queries, and running every other oracle (some are ~30 min
-        # all-pairs joins) just to report "output missing" wastes the
-        # whole iteration loop
+        # read the engine output FIRST: a query that crashed in Verify
+        # dumped nothing, and running its oracle just to report that wastes
+        # the iteration loop
         try:
             got = pd.read_parquet(f"{out_dir}/{name}")
         except Exception as e:
-            if scoped:  # a scoped Verify dumped only the queries under test
-                continue
             print(f"FAIL {name}: spark output missing: {e}")
             bad += 1
             continue
@@ -106,10 +105,11 @@ def main(sf_dir, out_dir, skip=(), scoped=False):
     return 1 if bad else 0
 
 if __name__ == "__main__":
-    # usage: selfcheck.py SF_DIR OUT_DIR [skip1,skip2,...] [--scoped]
-    # --scoped: silently skip queries with no engine output (a scoped
-    # Verify run dumped only the queries under test) instead of failing
-    argv = [a for a in sys.argv[1:] if a != "--scoped"]
-    scoped = "--scoped" in sys.argv
+    # usage: selfcheck.py SF_DIR OUT_DIR [skip1,skip2,...] [--only=q1,q2,...]
+    # --only: check just these queries (the ones a scoped Verify ran); one
+    # of them with no engine output, because it crashed, still FAILs
+    argv = [a for a in sys.argv[1:] if not a.startswith("--only=")]
+    only = next((set(a[len("--only="):].split(",")) for a in sys.argv[1:]
+                 if a.startswith("--only=")), None)
     skip = tuple(argv[2].split(",")) if len(argv) > 2 and argv[2] else ()
-    sys.exit(main(argv[0], argv[1], skip, scoped))
+    sys.exit(main(argv[0], argv[1], skip, only))

@@ -375,12 +375,11 @@ object Fits {
       path
     }
 
-    /** The random-groups layout of the uvfits primary HDU `header` of the
-      * file open in `raf`: per group, PCOUNT float parameters, then
-      * `cells` (re, im, weight) float triples in pol-fastest order. The
-      * fixed group size makes a time slice a seek; groups are read a chunk
-      * at a time and no byte of a pruned group is read. */
-    final class Groups(raf: RandomAccessFile, val header: Header) {
+    /** The random-groups layout of the uvfits primary HDU `header`: per
+      * group, PCOUNT float parameters, then `cells` (re, im, weight)
+      * float triples in pol-fastest order. The fixed group size makes any
+      * group a seek, and a run of a group's cells one read. */
+    final case class Groups(header: Header) {
       val pcount: Int = header.int("PCOUNT")
       if (header.int("NAXIS2") != 3)
         throw header.corrupt(s"NAXIS2 = ${header.int("NAXIS2")}, expected 3 (re, im, weight)")
@@ -390,24 +389,9 @@ object Fits {
       /** The byte offset of group `g`. */
       def offset(g: Long): Long = header.dataOffset + groupBytes * g
 
-      /** Check that groups [g, g + n) lie inside the file. */
-      def check(g: Long, n: Long): Unit =
+      /** Check that groups [g, g + n) lie inside the file open in `raf`. */
+      def check(raf: RandomAccessFile, g: Long, n: Long): Unit =
         checkRead(raf, header.path, offset(g), groupBytes * n, s"slice of $n groups")
-
-      /** Whole groups [g, g + n) into `buf` from index 0. */
-      def read(g: Long, n: Int, buf: Array[Byte]): Unit = {
-        raf.seek(offset(g))
-        raf.readFully(buf, 0, (groupBytes * n).toInt)
-      }
-
-      /** Group `g`'s parameters, then its cells [a, a + n), into `buf` from
-        * index 0: the layout of one group holding only those cells. */
-      def readPart(g: Long, a: Int, n: Int, buf: Array[Byte]): Unit = {
-        raf.seek(offset(g))
-        raf.readFully(buf, 0, 4 * pcount)
-        raf.seek(offset(g) + 4L * pcount + 12L * a)
-        raf.readFully(buf, 4 * pcount, 12 * n)
-      }
     }
 
     /** The shared uvfits fixture (same geometry/values as the mwa10 gpubox

@@ -20,9 +20,10 @@ import java.nio.file.{Files, Path}
   *   - datatypes: fixed-point (i8/i64), IEEE float (f32/f64), and the
   *     2-member {r,i} float32 compound h5py uses for complex64
   *
-  * Contiguous layout is what makes the Spark source scale: a time-slice
-  * of the blt-major visdata array is a contiguous byte range, so
-  * partition pruning is a seek, exactly like the uvfits group seek.
+  * Contiguous layout is what makes the Spark source scale: one coarse
+  * channel of one blt row of the (blt, frequency, pol) visdata array is a
+  * contiguous byte range, so a split's read is a seek per blt, exactly
+  * like the uvfits group seek.
   */
 object Hdf5 {
 
@@ -413,16 +414,8 @@ object Hdf5 {
     offset
   }
 
-  /** Read `n` elements starting at element `from` of a contiguous dataset
-    * into `buf` from index 0 — a single seek + bulk read, the
-    * partition-pruning primitive. */
-  def readInto(raf: RandomAccessFile, path: String, ds: Ds, from: Long, n: Int,
-               buf: Array[Byte]): Unit = {
-    raf.seek(extent(raf, path, ds, from, n))
-    raf.readFully(buf, 0, n * ds.dtype.size)
-  }
-
-  /** [[readInto]] a new little-endian buffer (metadata-sized reads). */
+  /** Elements [from, from + n) of a contiguous dataset, checked by
+    * [[extent]], in a new little-endian buffer (metadata-sized reads). */
   def readBytesOf(raf: RandomAccessFile, path: String, ds: Ds, from: Long,
                   n: Int): ByteBuffer = {
     val offset = extent(raf, path, ds, from, n)

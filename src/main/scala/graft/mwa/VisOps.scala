@@ -12,17 +12,18 @@ import org.apache.spark.sql.functions._
   * ant1, ant2, pol) and orders by (freq_hz, time_idx); the INS groupBy keys
   * on (obsid, coarse_chan, time, freq, pol). coarse_chan is a function of
   * freq_hz, so neither extra key changes a result, but both let Spark use
-  * the layout a source reports. Each gpubox file holds one (obsid,
-  * coarse_chan) (SURVEY §1.3); the `graft-vis` scan reports its splits
-  * key-grouped on those two columns, one split per file, and each split's
-  * rows in W1's order. So on gpubox input W1 and the INS run in the scan's
-  * tasks with no exchange and no sort: scan, filter, window, then the
-  * partial and final aggregates. Two gpubox files of one (obsid,
+  * the layout a source reports. The `graft-vis` scan plans one split per
+  * (file, coarse channel) in every format (a gpubox file holds one
+  * (obsid, coarse_chan), SURVEY §1.3; a uvfits or uvh5 file all of an
+  * observation's), reports its splits key-grouped on those two columns,
+  * and each split's rows in W1's order. So on raw input W1 and the INS run
+  * in the scan's tasks with no exchange and no sort: scan, filter, window,
+  * then the partial and final aggregates. Two files of one (obsid,
   * coarse_chan) bring the sort back (Spark drops a reported order when a
-  * key group holds more than one split). Over uvfits, uvh5, the Parquet
-  * `VisStore` or a generated frame, nothing reports a layout: W1
-  * hash-shuffles and sorts every visibility, and the INS shuffles again,
-  * carrying only partial aggregates. The INS reduction collapses
+  * key group holds more than one split). Over the Parquet `VisStore` or a
+  * generated frame nothing reports a layout: W1 hash-shuffles and sorts
+  * every visibility, and the INS shuffles again, carrying only partial
+  * aggregates. The INS reduction collapses
   * |baselines| x rows into (time, freq, pol) cells; the z-score (W2)
   * shuffles that reduced spectrum.
   */

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
@@ -27,20 +27,19 @@ import graft.mwa.{CorruptInputException, Fits, Hdf5, Uvh5, VisGenerator}
   * (`processors.py:23-38`): a single [[VisScan]] plans the work along
   * the two axes the reference's batched reader splits it by
   * (`processors.py:166-172`, gpubox files × time batches; a gpubox file
-  * is one coarse channel): ONE InputPartition per gpubox file, over the
-  * integrations the time filters keep, and one per (file, time-slice) of
-  * [[VisScan.Slice]] integrations for uvfits and uvh5. Only two things
-  * differ per format, both behind [[VisFile]]: the planning-time metadata
-  * parse and the fill of one time range, a chunk at a time, into the 13-column
+  * is one coarse channel): ONE InputPartition per (file, coarse channel),
+  * over the integrations the time filters keep, for every format. Only
+  * two things differ per format, both behind [[VisFile]]: the
+  * planning-time metadata parse and the block read of one channel's
+  * cells; one gather fills them, a chunk at a time, into the 13-column
   * layout. Listing, pruning, projection, the file handle and the reused
   * column vectors exist once. The scan is columnar and implements
   * SupportsPushDownRequiredColumns, so narrow projections (e.g. the
   * metadata-only time scan, S3) fill, and read, only the columns they
-  * need. Over gpubox files it also reports its layout, (obsid,
-  * coarse_chan) key groups (see [[VisScan.outputPartitioning]]), and each
-  * split's row order, the SSINS diff window's (see
-  * [[VisScan.outputOrdering]]), so the diff window and INS aggregate run
-  * with no shuffle and no sort.
+  * need. It also reports its layout, (obsid, coarse_chan) key groups
+  * (see [[VisScan.outputPartitioning]]), and each split's row order, the
+  * SSINS diff window's (see [[VisScan.outputOrdering]]), so the diff
+  * window and INS aggregate run with no shuffle and no sort.
   */
 class VisSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-vis"
@@ -174,13 +173,8 @@ class MsNotSupportedException(msg: String)
     extends UnsupportedOperationException(msg)
 
 object VisScan {
-  /** Integrations per uvfits or uvh5 partition: a short slice lets time
-    * filters prune. A gpubox partition is a whole file instead (see
-    * [[VisScan.planInputPartitions]]). */
-  val Slice = 4
-
-  /** The order of a gpubox split's rows: the diff window's partition keys,
-    * then its order keys (`VisOps.diff`). */
+  /** The order of a split's rows: the diff window's partition keys, then
+    * its order keys (`VisOps.diff`). */
   val Order: Seq[String] =
     Seq("obsid", "coarse_chan", "ant1", "ant2", "pol", "freq_hz", "time_idx")
 
@@ -207,22 +201,17 @@ object VisScan {
     case _ => true
   }
 
-  /** Can a partition of time slice [t0, t1) hold a row the pushed filters
-    * accept? `chan` is the partition's one coarse channel, or None when
-    * it spans them all (coarse_chan filters then stay residual). */
-  def keep(chan: Option[Int], t0: Int, t1: Int,
-           pushed: Array[sources.Filter]): Boolean =
-    chan.forall(c => pushed.forall(f => sat(f, "coarse_chan", c))) &&
-      (t0 until t1).exists(t => pushed.forall(f => sat(f, "time_idx", t)))
+  /** Does value v of axis `name` pass every pushed filter? */
+  def keeps(pushed: Array[sources.Filter], name: String, v: Int): Boolean =
+    pushed.forall(f => sat(f, name, v))
 }
 
 /** The scan over one directory's files of family `ext`: parses each
   * file's metadata once, at planning time (no payload bytes), and plans
-  * the partitions the pushed time_idx/coarse_chan filters keep: one per
-  * gpubox file, covering the integrations from the first to the last one
-  * the filters keep, and one per (file, time-slice of [[VisScan.Slice]])
-  * for uvfits and uvh5. Over gpubox files it reports both its layout and
-  * each split's row order. */
+  * one split per (file, coarse channel the pushed coarse_chan filters
+  * keep), covering the integrations from the first to the last one the
+  * time_idx filters keep. It reports both its layout and each split's row
+  * order. */
 class VisScan(path: String, ext: String, files: Seq[String],
               required: StructType, pushed: Array[sources.Filter])
     extends Scan with Batch with SupportsReportPartitioning with SupportsReportOrdering {
@@ -232,39 +221,30 @@ class VisScan(path: String, ext: String, files: Seq[String],
     s"graft-vis $ext path=$path PushedFilters: [${pushed.mkString(", ")}]"
 
   private lazy val parsed: Seq[VisFile] = files.map(VisSource.formats(ext))
-  private lazy val gpubox = parsed.forall(_.coarseChan.isDefined)
   private lazy val kept: Seq[VisPartition] = parsed.flatMap { f =>
-    if (f.coarseChan.isDefined) {
-      val ts = (0 until f.nTimes).filter(t => VisScan.keep(f.coarseChan, t, t + 1, pushed))
-      ts.headOption.map(t0 => VisPartition(f, t0, ts.last + 1))
-    } else for {
-      t0 <- 0 until f.nTimes by VisScan.Slice
-      t1 = math.min(t0 + VisScan.Slice, f.nTimes)
-      if VisScan.keep(None, t0, t1, pushed)
-    } yield VisPartition(f, t0, t1)
+    val ts = (0 until f.nTimes).filter(VisScan.keeps(pushed, "time_idx", _))
+    for (c <- f.chans if VisScan.keeps(pushed, "coarse_chan", c); t0 <- ts.headOption)
+      yield VisPartition(f, c, t0, ts.last + 1)
   }
 
   override def planInputPartitions(): Array[InputPartition] = kept.toArray
 
-  /** A gpubox file holds one (obsid, coarse_chan), so gpubox splits are
-    * key-grouped on `identity(obsid), identity(coarse_chan)`: Spark runs
-    * each key's files as one task, and an operator clustered on both keys
-    * (and possibly more) needs no exchange. Spark drops the report when
-    * the scan's output lacks either column. uvfits and uvh5 files span the
-    * band, so they report no layout. */
+  /** A split holds one (obsid, coarse_chan), so the splits are key-grouped
+    * on `identity(obsid), identity(coarse_chan)`: Spark runs each key's
+    * splits as one task, and an operator clustered on both keys (and
+    * possibly more) needs no exchange. Spark drops the report when the
+    * scan's output lacks either column. */
   override def outputPartitioning(): Partitioning =
-    if (gpubox)
-      new KeyGroupedPartitioning(Array[Expression](Expressions.identity("obsid"),
-        Expressions.identity("coarse_chan")), kept.map(_.key).distinct.length)
-    else new UnknownPartitioning(kept.length)
+    new KeyGroupedPartitioning(Array[Expression](Expressions.identity("obsid"),
+      Expressions.identity("coarse_chan")), kept.map(_.key).distinct.length)
 
-  /** A gpubox split's rows come in [[VisScan.Order]], all ascending, so the
-    * diff window over one key group needs no sort. Reported only when the
+  /** A split's rows come in [[VisScan.Order]], all ascending, so the diff
+    * window over one key group needs no sort. Reported only when the
     * output holds every column of that order; Spark keeps it only for key
     * groups of one split, so two files of one (obsid, coarse_chan) bring
     * the sort back. */
   override def outputOrdering(): Array[SortOrder] =
-    if (gpubox && VisScan.Order.forall(required.fieldNames.contains))
+    if (VisScan.Order.forall(required.fieldNames.contains))
       VisScan.Order.map(c => Expressions.sort(Expressions.column(c),
         SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)).toArray
     else Array.empty
@@ -275,13 +255,11 @@ class VisScan(path: String, ext: String, files: Seq[String],
     new VisReaderFactory(required)
 }
 
-/** One split: integrations [timeStart, timeEnd) of one file, a whole
-  * gpubox file or a uvfits/uvh5 time slice. Its partition key is (obsid,
-  * coarse_chan), which Spark asks for only when the scan reports a
-  * key-grouped layout, that is for one-channel (gpubox) files. */
-case class VisPartition(file: VisFile, timeStart: Int, timeEnd: Int)
+/** One split: coarse channel `chan` of one file over integrations
+  * [timeStart, timeEnd). Its partition key is (obsid, chan). */
+case class VisPartition(file: VisFile, chan: Int, timeStart: Int, timeEnd: Int)
     extends HasPartitionKey {
-  def key: (Long, Int) = (file.obsid, file.coarseChan.get)
+  def key: (Long, Int) = (file.obsid, chan)
   override def partitionKey(): InternalRow = InternalRow(key._1, key._2)
 }
 
@@ -303,7 +281,7 @@ class VisPartitionReader(part: VisPartition, required: StructType)
   private val out = new VisColumns(required)
   private val raf = new RandomAccessFile(part.file.path, "r")
   private val fill: () => Int =
-    try part.file.decode(raf, part.timeStart, part.timeEnd, out)
+    try part.file.decode(raf, part.chan, part.timeStart, part.timeEnd, out)
     catch { case e: Throwable => raf.close(); throw e }
 
   override def next(): Boolean = {
@@ -342,59 +320,136 @@ final class VisColumns(required: StructType) {
   val batch = new ColumnarBatch(
     required.fieldNames.map(n => all(VisSource.schema.fieldIndex(n)): ColumnVector))
 
-  def any(vs: WritableColumnVector*): Boolean = vs.exists(_ != null)
   def reset(): Unit = all.foreach(v => if (v != null) v.reset())
-
-  /** Rows [from, from + n) of one integration: obsid, time_idx, time_jd. */
-  def putTime(from: Int, n: Int, obs: Long, t: Int, jd: Double): Unit = {
-    if (obsid != null) obsid.putLongs(from, n, obs)
-    if (timeIdx != null) timeIdx.putInts(from, n, t)
-    if (timeJd != null) timeJd.putDoubles(from, n, jd)
-  }
-
-  /** Rows [from, from + n) of one baseline: ant1, ant2, baseline. */
-  def putBaseline(from: Int, n: Int, a1: Int, a2: Int): Unit = {
-    if (ant1 != null) ant1.putInts(from, n, a1)
-    if (ant2 != null) ant2.putInts(from, n, a2)
-    if (baseline != null) baseline.putLongs(from, n, a1.toLong * 2048 + a2)
-  }
-}
-
-/** The (frequency, polarisation) cells of one uvfits group or uvh5 blt
-  * row, pol fastest: `hz` per frequency, `nFine` fine channels per coarse
-  * channel. */
-final class CellAxis(nFine: Int, hz: Array[Double], pols: Seq[String]) {
-  private val polBytes = pols.map(_.getBytes(StandardCharsets.UTF_8)).toArray
-  val size: Int = hz.length * polBytes.length
-
-  /** Cells [a, a + n) into rows [from, from + n): coarse_chan, freq_hz, pol. */
-  def put(out: VisColumns, from: Int, a: Int, n: Int): Unit = {
-    val nPol = polBytes.length
-    var c = 0
-    while (c < n) {
-      val f = (a + c) / nPol
-      if (out.coarseChan != null) out.coarseChan.putInt(from + c, f / nFine)
-      if (out.freqHz != null) out.freqHz.putDouble(from + c, hz(f))
-      if (out.pol != null) out.pol.putByteArray(from + c, polBytes((a + c) % nPol))
-      c += 1
-    }
-  }
 }
 
 /** One input file with its planning metadata, parsed once when the scan
-  * is planned and carried in every partition of the file. */
+  * is planned and carried in every split of the file. Every format holds
+  * the same series: per coarse channel, per baseline as
+  * `VisGenerator.baselinePairs(nAnts)` lists them, cells of (pol, fine
+  * channel, integration). Integration t is the file's t-th time block and
+  * ant1/ant2 come from the position; each format checks what the file
+  * says about them against the position. One gather ([[decode]]) serves
+  * every format, which supplies only its block read ([[blocks]]). */
 sealed trait VisFile extends Serializable {
   def path: String
   def obsid: Long
   def nTimes: Int
-  /** The file's one coarse channel, if it holds only one (gpubox). */
-  def coarseChan: Option[Int]
-  /** The decode of time slice [t0, t1) of the file open in `raf` into
-    * `out`'s columns, in [[VisSource.schema]] row order: each call of the
-    * returned function fills the next chunk of at most
-    * [[VisSource.Chunk]] rows and returns its row count, 0 at the end.
-    * Header reads and size checks happen before this returns. */
-  def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int
+  def nAnts: Int
+  def nFine: Int
+  def pols: Seq[String]
+  /** The coarse channels the file holds, one split each. */
+  def chans: Seq[Int]
+  /** The frequency of fine channel k of coarse channel `chan`. */
+  def hz(chan: Int, k: Int): Double
+
+  /** The block read of coarse channel `chan` over integrations [t0, t1) of
+    * the file open in `raf`, for chunks of at most `baselines` baselines,
+    * with its header reads and range checks done before this returns. A
+    * call (i, g, n) stages integration t0 + i's cells of baselines
+    * [g, g + n) into the returned [[Stage]], reading only what the stage
+    * holds. */
+  protected def blocks(raf: RandomAccessFile, chan: Int, t0: Int, t1: Int, out: VisColumns,
+                       baselines: Int): (Stage, (Int, Long, Int) => Unit)
+
+  /** Decodes coarse channel `chan` over integrations [t0, t1) of the file
+    * open in `raf` into `out`'s columns, in series order, the order
+    * [[VisScan.Order]] names: baselines (ant1, then ant2), then pol by
+    * name, then frequency, then time. Each call of the returned function
+    * fills the next chunk of at most [[VisSource.Chunk]] rows and returns
+    * its row count, 0 at the end. A [[GroupCursor]] walks the baselines'
+    * series: per chunk of baselines, one block read per integration, then
+    * the gather of their cells; a baseline larger than a chunk is read
+    * once and gathered in parts. So the buffers hold at most
+    * max([[VisSource.Chunk]], one baseline's series) cells, whatever the
+    * number of baselines. Header reads and size checks happen before this
+    * returns. */
+  final def decode(raf: RandomAccessFile, chan: Int, t0: Int, t1: Int,
+                   out: VisColumns): () => Int = {
+    val nT = t1 - t0
+    val nPol = pols.length
+    val bls = VisGenerator.baselinePairs(nAnts)
+    val freqs = Array.tabulate(nFine)(hz(chan, _))
+    // the file's pol and fine-channel indices in ascending name and frequency
+    val polAt = pols.indices.sortBy(pols).toArray
+    val fineAt = freqs.indices.sortBy(freqs(_)).toArray
+    val polBytes = pols.map(_.getBytes(StandardCharsets.UTF_8)).toArray
+    val cur = new GroupCursor(bls.length, nT * nFine * nPol)
+    val (st, read) = blocks(raf, chan, t0, t1, out, cur.perChunk)
+    () => if (!cur.advance()) 0 else {
+      val n = cur.n
+      // baselines [g, g + n) of each integration, unless this chunk is a
+      // later part of a baseline already read
+      if (cur.a == 0) for (i <- 0 until nT) read(i, cur.g, n)
+      val rows = n * cur.m
+      if (out.obsid != null) out.obsid.putLongs(0, rows, obsid)
+      if (out.coarseChan != null) out.coarseChan.putInts(0, rows, chan)
+      var r = 0
+      var j = 0
+      while (j < n) {
+        val (a1, a2) = bls((cur.g + j).toInt)
+        if (out.ant1 != null) out.ant1.putInts(r, cur.m, a1)
+        if (out.ant2 != null) out.ant2.putInts(r, cur.m, a2)
+        if (out.baseline != null) out.baseline.putLongs(r, cur.m, a1.toLong * 2048 + a2)
+        // cell a of a series is (pol rank, fine rank, integration), time fastest
+        var i = cur.a % nT
+        var f = cur.a / nT % nFine
+        var q = cur.a / nT / nFine
+        val end = r + cur.m
+        while (r < end) {
+          val p = polAt(q)
+          val k = fineAt(f)
+          val s = i * n + j
+          val c = (s * nFine + k) * nPol + p
+          val w = if (st.perFine) c else s * nPol + p
+          if (out.timeIdx != null) out.timeIdx.putInt(r, t0 + i)
+          if (out.timeJd != null) out.timeJd.putDouble(r, st.jd(s))
+          if (out.freqHz != null) out.freqHz.putDouble(r, freqs(k))
+          if (out.pol != null) out.pol.putByteArray(r, polBytes(p))
+          if (out.visRe != null) out.visRe.putDouble(r, st.vis.getFloat(8 * c).toDouble)
+          if (out.visIm != null) out.visIm.putDouble(r, st.vis.getFloat(8 * c + 4).toDouble)
+          if (out.flag != null) out.flag.putBoolean(r, st.flag(w) != 0)
+          if (out.nsample != null) out.nsample.putDouble(r, st.ns.getFloat(4 * w).toDouble)
+          i += 1
+          if (i == nT) { i = 0; f += 1; if (f == nFine) { f = 0; q += 1 } }
+          r += 1
+        }
+        j += 1
+      }
+      rows
+    }
+  }
+}
+
+/** One chunk's cells as a block read leaves them for the gather in
+  * [[VisFile.decode]], for chunks of at most `baselines` baselines over
+  * `nT` integrations of `nFine` x `nPol` cells, in the file's byte
+  * `order`, so a read can land in it directly. For integration i and
+  * baseline j of a chunk of n baselines, s = i x n + j: time_jd is at s,
+  * cell (fine channel k, pol p) at c = (s x nFine + k) x nPol + p, its
+  * (re, im) float32 pair at byte 8c of `vis`; its flag byte (set when
+  * flagged) and float32 nsample are at w = c when `perFine`, else at
+  * w = s x nPol + p (one weight per baseline and pol, as gpubox stores
+  * it), byte w of `flag` and 4w of `ns`. Only the buffers of `out`'s
+  * required columns are allocated. */
+private[sources] final class Stage(out: VisColumns, baselines: Int, nT: Int, nFine: Int,
+                                   nPol: Int, order: ByteOrder, val perFine: Boolean) {
+  private val series = baselines * nT
+  private val weights = series * (if (perFine) nFine else 1) * nPol
+  private def bytes(need: Boolean, n: Int) = if (!need) null else
+    ByteBuffer.wrap(new Array[Byte](n)).order(order)
+  val jd: Array[Double] = if (out.timeJd != null) new Array[Double](series) else null
+  val needVis: Boolean = out.visRe != null || out.visIm != null
+  val vis: ByteBuffer = bytes(needVis, 8 * series * nFine * nPol)
+  val flag: Array[Byte] = if (out.flag != null) new Array[Byte](weights) else null
+  val ns: ByteBuffer = bytes(out.nsample != null, 4 * weights)
+  val needWeights: Boolean = flag != null || ns != null
+
+  /** A FITS weight x at index w: flagged when x <= 0, nsample |x|. */
+  def putWeight(w: Int, x: Float): Unit = {
+    if (flag != null) flag(w) = if (x <= 0f) 1 else 0
+    if (ns != null) ns.putFloat(4 * w, math.abs(x))
+  }
 }
 
 /** A gpubox FITS file in the MWAX shape ([[Fits.integrations]]): one
@@ -404,92 +459,40 @@ sealed trait VisFile extends Serializable {
 case class FitsFile(path: String, head: Fits.Header, obsid: Long, chan: Int,
                     nTimes: Int, nAnts: Int, nFine: Int, pols: Seq[String],
                     freq0Hz: Double, dfHz: Double) extends VisFile {
-  override def coarseChan: Option[Int] = Some(chan)
+  override def chans: Seq[Int] = Seq(chan)
+  override def hz(c: Int, k: Int): Double = freq0Hz + (c * nFine + k) * dfHz
 
-  /** Decodes integrations [t0, t1) in series order, the order
-    * [[VisScan.Order]] names: baselines as `VisGenerator.baselinePairs`
-    * lists them (ant1, then ant2), then pol by name, then frequency, then
-    * time. A group of cells is one baseline's series, (pol, fine channel,
-    * integration), walked by a [[GroupCursor]]. Per chunk of baselines it
-    * reads, for each integration, one contiguous run of their data rows
-    * and one of their weights, then gathers the cells; a baseline larger
-    * than a chunk is read once and gathered in parts. So the buffers hold
-    * at most max([[VisSource.Chunk]], one baseline's series) cells,
-    * whatever the number of baselines. time_idx is the integration's
-    * position in the file: [[Fits.integrations]] reads integration t's
-    * headers where integration 0's stride puts them and checks that they
-    * carry TIMEIDX = t, so a missing, repeated or misplaced integration
-    * fails typed rather than yielding fewer, extra or misordered rows.
-    * ant1/ant2 come from the row index, freq_hz from COARSE and the
-    * fine index, pol from POLS, flag from weight <= 0 and nsample from
-    * |weight|, as uvfits does. Only vis_re and vis_im read the data HDU
-    * and only flag and nsample the weights HDU. */
-  override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
+  /** Per integration, one contiguous run of the baselines' data rows, read
+    * straight into the stage, and one of their weights, one per (baseline,
+    * pol). [[Fits.integrations]] reads integration t's headers where
+    * integration 0's stride puts them and checks that they carry
+    * TIMEIDX = t, so a missing, repeated or misplaced integration fails
+    * typed rather than yielding fewer, extra or misordered rows. time_jd
+    * is the data header's TIMEJD, flag weight <= 0 and nsample |weight|,
+    * as uvfits does. Only vis_re and vis_im read the data HDU and only
+    * flag and nsample the weights HDU. */
+  override protected def blocks(raf: RandomAccessFile, c: Int, t0: Int, t1: Int,
+                                out: VisColumns, baselines: Int) = {
     val hdus = Fits.integrations(raf, head, t0, t1)
-    val nT = hdus.length
     val jds = hdus.map(_._1.double("TIMEJD")).toArray
-    val bls = VisGenerator.baselinePairs(nAnts)
     val nPol = pols.length
-    val hz = Array.tabulate(nFine)(k => freq0Hz + (chan * nFine + k) * dfHz)
-    // the file's pol and fine-channel indices in ascending name and frequency
-    val polAt = pols.indices.sortBy(pols).toArray
-    val fineAt = hz.indices.sortBy(hz(_)).toArray
-    val polBytes = pols.map(_.getBytes(StandardCharsets.UTF_8)).toArray
-    val row = nFine * nPol // cells of one baseline in one integration
-    val cur = new GroupCursor(bls.length, nT * row)
-    val needVis = out.any(out.visRe, out.visIm)
-    val needWts = out.any(out.flag, out.nsample)
-    val vis = ByteBuffer.wrap(new Array[Byte](if (needVis) 8 * cur.perChunk * nT * row else 0))
-    val wts = ByteBuffer.wrap(new Array[Byte](if (needWts) 4 * cur.perChunk * nT * nPol else 0))
-    def read(h: Fits.Header, at: Long, into: ByteBuffer, from: Int, len: Int): Unit = {
-      raf.seek(h.dataOffset + at)
-      raf.readFully(into.array(), from, len)
-    }
-    () => if (!cur.advance()) 0 else {
-      val n = cur.n
-      // baselines [g, g + n) of each integration, unless this chunk is a
-      // later part of a baseline already read
-      if (cur.a == 0) for (i <- 0 until nT) {
-        if (needVis) read(hdus(i)._1, 8L * cur.g * row, vis, 8 * i * n * row, 8 * n * row)
-        if (needWts) read(hdus(i)._2, 4L * cur.g * nPol, wts, 4 * i * n * nPol, 4 * n * nPol)
+    val row = nFine * nPol
+    val st = new Stage(out, baselines, t1 - t0, nFine, nPol, ByteOrder.BIG_ENDIAN,
+      perFine = false)
+    val wts = ByteBuffer.wrap(new Array[Byte](if (st.needWeights) 4 * baselines * nPol else 0))
+    st -> { (i: Int, g: Long, n: Int) =>
+      val (data, weights) = hdus(i)
+      val s0 = i * n
+      if (st.jd != null) util.Arrays.fill(st.jd, s0, s0 + n, jds(i))
+      if (st.needVis) {
+        raf.seek(data.dataOffset + 8L * g * row)
+        raf.readFully(st.vis.array(), 8 * s0 * row, 8 * n * row)
       }
-      val rows = n * cur.m
-      if (out.obsid != null) out.obsid.putLongs(0, rows, obsid)
-      if (out.coarseChan != null) out.coarseChan.putInts(0, rows, chan)
-      var r = 0
-      var j = 0
-      while (j < n) {
-        val (a1, a2) = bls((cur.g + j).toInt)
-        out.putBaseline(r, cur.m, a1, a2)
-        // cell a of a series is (pol rank, fine rank, integration), time fastest
-        var i = cur.a % nT
-        var f = cur.a / nT % nFine
-        var q = cur.a / nT / nFine
-        val end = r + cur.m
-        while (r < end) {
-          val p = polAt(q)
-          val k = fineAt(f)
-          if (out.timeIdx != null) out.timeIdx.putInt(r, t0 + i)
-          if (out.timeJd != null) out.timeJd.putDouble(r, jds(i))
-          if (out.freqHz != null) out.freqHz.putDouble(r, hz(k))
-          if (out.pol != null) out.pol.putByteArray(r, polBytes(p))
-          if (needVis) {
-            val v = 8 * ((i * n + j) * row + k * nPol + p)
-            if (out.visRe != null) out.visRe.putDouble(r, vis.getFloat(v).toDouble)
-            if (out.visIm != null) out.visIm.putDouble(r, vis.getFloat(v + 4).toDouble)
-          }
-          if (needWts) {
-            val w = wts.getFloat(4 * ((i * n + j) * nPol + p))
-            if (out.flag != null) out.flag.putBoolean(r, w <= 0f)
-            if (out.nsample != null) out.nsample.putDouble(r, math.abs(w).toDouble)
-          }
-          i += 1
-          if (i == nT) { i = 0; f += 1; if (f == nFine) { f = 0; q += 1 } }
-          r += 1
-        }
-        j += 1
+      if (st.needWeights) {
+        raf.seek(weights.dataOffset + 4L * g * nPol)
+        raf.readFully(wts.array(), 0, 4 * n * nPol)
+        for (w <- 0 until n * nPol) st.putWeight(s0 * nPol + w, wts.getFloat(4 * w))
       }
-      rows
     }
   }
 }
@@ -502,17 +505,15 @@ object FitsFile {
   }
 }
 
-/** Walks whole groups (uvfits) or blt rows (uvh5) of `cells` cells each,
-  * `count` of them, a chunk at a time: as many whole ones as fit
-  * [[VisSource.Chunk]] rows, or, when one alone is larger, parts of one. */
+/** Walks `count` series of `cells` cells each (one baseline's cells), a
+  * chunk at a time: as many whole ones as fit [[VisSource.Chunk]] rows,
+  * or, when one alone is larger, parts of one. */
 private[sources] final class GroupCursor(count: Long, cells: Int) {
   val whole: Boolean = cells <= VisSource.Chunk
-  /** Groups per chunk at most. */
+  /** Series per chunk at most. */
   val perChunk: Int =
     if (whole) math.min(VisSource.Chunk / math.max(1, cells), count).toInt else 1
-  /** Cells per group in a chunk at most. */
-  val cellsPerChunk: Int = math.min(cells, VisSource.Chunk)
-  /** The current chunk: groups [g, g + n), cells [a, a + m) of each. */
+  /** The current chunk: series [g, g + n), cells [a, a + m) of each. */
   var g = 0L
   var a = 0
   var n = 0
@@ -527,166 +528,181 @@ private[sources] final class GroupCursor(count: Long, cells: Int) {
     if (g == count) { n = 0; false }
     else {
       n = math.min(perChunk.toLong, count - g).toInt
-      m = math.min(cellsPerChunk, cells - a)
+      m = math.min(VisSource.Chunk, cells - a)
       true
     }
   }
 }
 
 /** A uvfits (FITS random-groups) file: whole-observation geometry from
-  * its primary header. A group is one (time, baseline) visibility over the
-  * full frequency axis, time-major: integration t is the file's t-th run
-  * of Nbl groups, so a time slice is a seek to group t0*nBaselines
-  * while coarse_chan filters stay residual (the reference's pyuvdata read
-  * has the same shape: `select` on times subsets groups, frequencies
-  * post-filter). */
-case class UvfitsFile(path: String, head: Fits.Header, obsid: Long,
+  * its primary header, checked when the scan is planned. A group is one
+  * (time, baseline) visibility over the whole band, time-major:
+  * integration t is the file's t-th run of Nbl groups. Its cells run
+  * (frequency, pol) with pol fastest, so one coarse channel's cells are
+  * one contiguous run in every group, and a split reads only that run and
+  * the group's parameters. */
+case class UvfitsFile(path: String, groups: Fits.Uvfits.Groups, obsid: Long,
                       nTimes: Int, nAnts: Int, nFine: Int, nCoarse: Int,
                       pols: Seq[String], freq0Hz: Double, dfHz: Double,
                       jd0: Double, dtDays: Double) extends VisFile {
-  override def coarseChan: Option[Int] = None
+  override def chans: Seq[Int] = 0 until nCoarse
+  override def hz(c: Int, k: Int): Double = freq0Hz + (c * nFine + k) * dfHz
 
-  /** Unpacks each group's AIPS baseline code and fills one row per (freq,
-    * pol) cell. time_idx is the group's index / Nbl, the index the scan
-    * prunes on, and time_jd JD0 + time_idx x DTDAYS, so float32 DATE
-    * rounding cannot leak into the output. A group whose DATE is not its
-    * integration's (a baseline-major file, say), or whose baseline code
-    * decodes outside the array, fails typed at its offset, whatever the
-    * projection. */
-  override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
-    val groups = new Fits.Uvfits.Groups(raf, head)
-    val axis = new CellAxis(nFine,
-      Array.tabulate(nCoarse * nFine)(f => freq0Hz + f * dfHz), pols)
-    if (groups.pcount < Fits.Uvfits.PCount || groups.cells != axis.size)
-      throw head.corrupt(s"groups of ${groups.pcount} parameters and ${groups.cells} " +
-        s"cells, expected >= ${Fits.Uvfits.PCount} and NCOARSE x NFINE x pols = ${axis.size}")
-    val nBl = Fits.Uvfits.nBaselines(nAnts)
-    val g0 = t0.toLong * nBl
-    val cur = new GroupCursor((t1 - t0).toLong * nBl, axis.size)
-    groups.check(g0, (t1 - t0).toLong * nBl)
+  /** Per group, its parameters and coarse channel `c`'s (re, im, weight)
+    * triples. The group of integration t and baseline b must carry a
+    * DATE that rounds to t and b's AIPS baseline code, whatever the
+    * projection, or the read fails typed at the group's offset (a
+    * baseline-major file, say). time_jd is JD0 + t x DTDAYS, so float32
+    * DATE rounding cannot leak into the output. */
+  override protected def blocks(raf: RandomAccessFile, c: Int, t0: Int, t1: Int,
+                                out: VisColumns, baselines: Int) = {
+    val bls = VisGenerator.baselinePairs(nAnts)
+    val nBl = bls.length
+    groups.check(raf, t0.toLong * nBl, (t1 - t0).toLong * nBl)
+    val row = nFine * pols.length
+    val st = new Stage(out, baselines, t1 - t0, nFine, pols.length, ByteOrder.BIG_ENDIAN,
+      perFine = true)
     val pb = 4 * groups.pcount
-    val buf = new Array[Byte](cur.perChunk * (pb + 12 * cur.cellsPerChunk))
-    val bb = ByteBuffer.wrap(buf)
-    () => if (!cur.advance()) 0 else {
-      if (cur.whole) groups.read(g0 + cur.g, cur.n, buf)
-      else groups.readPart(g0 + cur.g, cur.a, cur.m, buf)
-      for (j <- 0 until cur.n) {
-        val p = j * (pb + 12 * cur.m)
-        val g = g0 + cur.g + j
-        val t = (g / nBl).toInt
-        val bl = math.round(bb.getFloat(p + 12))
-        val a1 = bl / 256 - 1
-        val a2 = bl % 256 - 1
-        if (a1 < 0 || a2 < a1 || a2 >= nAnts)
-          throw new CorruptInputException(path, groups.offset(g), s"group $g " +
-            s"has baseline code $bl (ant1=$a1, ant2=$a2), outside " +
-            s"0 <= ant1 <= ant2 < NANTS=$nAnts")
-        val date = bb.getFloat(p + 16)
+    val bb = ByteBuffer.wrap(new Array[Byte](pb + 12 * row))
+    st -> { (i: Int, b0: Long, n: Int) =>
+      val t = t0 + i
+      for (j <- 0 until n) {
+        val b = (b0 + j).toInt
+        val g = t.toLong * nBl + b
+        raf.seek(groups.offset(g))
+        raf.readFully(bb.array(), 0, pb)
+        raf.seek(groups.offset(g) + pb + 12L * c * row)
+        raf.readFully(bb.array(), pb, 12 * row)
+        val date = bb.getFloat(16)
         if (math.round(date / dtDays) != t)
           throw new CorruptInputException(path, groups.offset(g), s"group $g " +
             s"has DATE $date, not integration $t's (group index / $nBl baselines)")
-        val row0 = j * cur.m
-        out.putTime(row0, cur.m, obsid, t, jd0 + t * dtDays)
-        out.putBaseline(row0, cur.m, a1, a2)
-        axis.put(out, row0, cur.a, cur.m)
-        var c = 0
-        while (c < cur.m) {
-          val base = p + pb + 12 * c
-          val wt = bb.getFloat(base + 8)
-          if (out.visRe != null) out.visRe.putDouble(row0 + c, bb.getFloat(base).toDouble)
-          if (out.visIm != null) out.visIm.putDouble(row0 + c, bb.getFloat(base + 4).toDouble)
-          if (out.flag != null) out.flag.putBoolean(row0 + c, wt <= 0f)
-          if (out.nsample != null) out.nsample.putDouble(row0 + c, math.abs(wt).toDouble)
-          c += 1
+        val code = math.round(bb.getFloat(12))
+        val (a1, a2) = bls(b)
+        if (code != 256 * (a1 + 1) + a2 + 1)
+          throw new CorruptInputException(path, groups.offset(g), s"group $g has " +
+            s"baseline code $code where baseline $b of integration $t (ant1=$a1, " +
+            s"ant2=$a2, code ${256 * (a1 + 1) + a2 + 1}) belongs")
+        val at = (i * n + j) * row
+        var k = 0
+        while (k < row) {
+          val x = pb + 12 * k
+          if (st.needVis) {
+            st.vis.putFloat(8 * (at + k), bb.getFloat(x))
+            st.vis.putFloat(8 * (at + k) + 4, bb.getFloat(x + 4))
+          }
+          st.putWeight(at + k, bb.getFloat(x + 8))
+          k += 1
         }
       }
-      cur.n * cur.m
+      if (st.jd != null) util.Arrays.fill(st.jd, i * n, i * n + n, jd0 + t * dtDays)
     }
   }
 }
 
 object UvfitsFile {
+  /** Parses and checks the primary header: random groups of at least
+    * PCOUNT parameters whose cells are NAXIS4 = NCOARSE x NFINE
+    * frequencies by pols, or a [[CorruptInputException]] at the header. */
   def open(path: String): UvfitsFile = {
     val h = Fits.readPrimary(path)
     if (!h.has("GROUPS") || h.int("PCOUNT") <= 0)
       throw h.corrupt("not a FITS random-groups (uvfits) file: no GROUPS card or PCOUNT <= 0")
-    UvfitsFile(path, h, h.long("OBSID"), h.int("NTIMES"), h.int("NANTS"),
-      h.int("NFINE"), h.int("NCOARSE"), h.str("POLS").split(',').toSeq,
+    val f = UvfitsFile(path, Fits.Uvfits.Groups(h), h.long("OBSID"), h.int("NTIMES"),
+      h.int("NANTS"), h.int("NFINE"), h.int("NCOARSE"), h.str("POLS").split(',').toSeq,
       h.double("FREQ0"), h.double("DFHZ"), h.double("JD0"), h.double("DTDAYS"))
+    val nFreq = f.nCoarse.toLong * f.nFine
+    if (h.long("NAXIS4") != nFreq)
+      throw h.corrupt(s"NAXIS4 = ${h.long("NAXIS4")} frequencies, not NCOARSE x NFINE = $nFreq")
+    if (f.groups.pcount < Fits.Uvfits.PCount || f.groups.cells != nFreq * f.pols.length)
+      throw h.corrupt(s"groups of ${f.groups.pcount} parameters and ${f.groups.cells} " +
+        s"cells, expected >= ${Fits.Uvfits.PCount} and NCOARSE x NFINE x pols = " +
+        s"${nFreq * f.pols.length}")
+    f
   }
 }
 
 /** A uvh5 (HDF5) file: its dataset map and the /Header scalars + tiny
-  * freq/pol arrays. The /Data arrays are blt-major with contiguous layout,
-  * so a time slice is a contiguous element range of every dataset —
-  * pruning is a seek, like the uvfits group seek; coarse_chan filters stay
-  * residual (each blt row carries the whole frequency axis). */
+  * freq/pol arrays, checked when the scan is planned. The /Data arrays
+  * are (blt, frequency, pol) with contiguous layout and blt time-major,
+  * so one coarse channel of one blt row is a contiguous element range of
+  * each, and a split reads only those ranges. */
 case class Uvh5File(path: String, ds: Map[String, Hdf5.Ds], obsid: Long,
-                    nTimes: Int, nBls: Int, nFine: Int, freqs: Array[Double],
+                    nTimes: Int, nAnts: Int, nFine: Int, freqs: Array[Double],
                     pols: Seq[String]) extends VisFile {
-  override def coarseChan: Option[Int] = None
+  override def chans: Seq[Int] = 0 until freqs.length / nFine
+  override def hz(c: Int, k: Int): Double = freqs(c * nFine + k)
 
-  /** Reads, a chunk at a time, only the datasets the required columns
-    * need, over the slice's blt range [blt0, blt0 + nBlt) and cell range
-    * [blt0*F*P, (blt0 + nBlt)*F*P) — bytes outside the slice are never
-    * touched, and each range is checked against the file up front.
-    * time_idx is the blt's time ordinal (blt / Nbls), bit-identical to the
-    * other decoders. */
-  override def decode(raf: RandomAccessFile, t0: Int, t1: Int, out: VisColumns): () => Int = {
-    val axis = new CellAxis(nFine, freqs, pols)
+  /** Per integration, the blts' `ant_1_array`/`ant_2_array` entries, which
+    * must name the baseline the position puts there, whatever the
+    * projection, or the read fails typed at the first misplaced entry (a
+    * baseline-major file, say); then, per blt, coarse channel `c`'s range
+    * of only the datasets the required columns need, straight into the
+    * stage. Each dataset's element size and range over the split are
+    * checked against the file first. time_jd comes from time_array verbatim (pyuvdata
+    * semantics): deriving the grid step by subtracting two ~2.46e6 JDs
+    * cancels ~18 bits and perturbs reconstructed times in the last ulps. */
+  override protected def blocks(raf: RandomAccessFile, c: Int, t0: Int, t1: Int,
+                                out: VisColumns, baselines: Int) = {
+    val bls = VisGenerator.baselinePairs(nAnts)
+    val nBls = bls.length
+    val perBlt = freqs.length * pols.length
+    val row = nFine * pols.length
     val blt0 = t0.toLong * nBls
     val nBlt = (t1 - t0).toLong * nBls
-    val cur = new GroupCursor(nBlt, axis.size)
-    // one dataset's reused chunk buffer, or null if no required column
-    // needs it; its whole slice range is checked against the file first
-    def slab(needed: Boolean, name: String, perBlt: Int, chunkElems: Int): Uvh5File.Slab =
+    val st = new Stage(out, baselines, t1 - t0, nFine, pols.length, ByteOrder.LITTLE_ENDIAN,
+      perFine = true)
+    // dataset `name` of `size`-byte elements with a buffer of `elems`, or
+    // null if not `needed`; its elements [from, from + n) are checked
+    // against the file first
+    def slab(needed: Boolean, name: String, size: Int, elems: Int, from: Long, n: Long) =
       if (!needed) null else {
         val d = Uvh5File.dataset(ds, path, name)
-        Hdf5.extent(raf, path, d, blt0 * perBlt, nBlt * perBlt)
-        new Uvh5File.Slab(d, chunkElems)
+        if (d.dtype.size != size) throw new CorruptInputException(path, d.dataAddr,
+          s"$name has ${d.dtype.size}-byte elements, not $size")
+        Hdf5.extent(raf, path, d, from, n)
+        new Uvh5File.Slab(d, elems)
       }
-    val chunkBlts = cur.perChunk
-    val chunkCells = cur.perChunk * cur.cellsPerChunk
-    val a1s = slab(out.any(out.ant1, out.ant2, out.baseline), "Header/ant_1_array", 1, chunkBlts)
-    val a2s = slab(out.any(out.ant1, out.ant2, out.baseline), "Header/ant_2_array", 1, chunkBlts)
-    // time_jd comes from time_array VERBATIM (pyuvdata semantics) — deriving
-    // the grid step by subtracting two ~2.46e6 JDs cancels ~18 bits and
-    // perturbs reconstructed times in the last ulps
-    val times = slab(out.timeJd != null, "Header/time_array", 1, chunkBlts)
-    val vis = slab(out.any(out.visRe, out.visIm), "Data/visdata", axis.size, chunkCells)
-    val flg = slab(out.flag != null, "Data/flags", axis.size, chunkCells)
-    val nsm = slab(out.nsample != null, "Data/nsamples", axis.size, chunkCells)
-    def read(s: Uvh5File.Slab, from: Long, n: Int): Unit =
-      if (s != null) Hdf5.readInto(raf, path, s.ds, from, n, s.buf)
-    () => if (!cur.advance()) 0 else {
-      val blt = blt0 + cur.g
-      val cells = cur.n * cur.m
-      Seq(a1s, a2s, times).foreach(read(_, blt, cur.n))
-      Seq(vis, flg, nsm).foreach(read(_, blt * axis.size + cur.a, cells))
-      for (j <- 0 until cur.n) {
-        val row0 = j * cur.m
-        out.putTime(row0, cur.m, obsid, ((blt + j) / nBls).toInt,
-          if (times == null) 0.0 else times.bb.getDouble(8 * j))
-        if (a1s != null)
-          out.putBaseline(row0, cur.m, a1s.bb.getLong(8 * j).toInt, a2s.bb.getLong(8 * j).toInt)
-        axis.put(out, row0, cur.a, cur.m)
+    def perBaseline(name: String, needed: Boolean) = slab(needed, name, 8, baselines, blt0, nBlt)
+    def perCell(name: String, needed: Boolean, size: Int) = slab(needed, name, size, 0,
+      blt0 * perBlt + c * row, if (nBlt == 0) 0 else (nBlt - 1) * perBlt + row)
+    val a1s = perBaseline("Header/ant_1_array", needed = true)
+    val a2s = perBaseline("Header/ant_2_array", needed = true)
+    val times = perBaseline("Header/time_array", st.jd != null)
+    val vis = perCell("Data/visdata", st.needVis, 8)
+    val flg = perCell("Data/flags", st.flag != null, 1)
+    val nsm = perCell("Data/nsamples", st.ns != null, 4)
+    // elements [from, from + n) of `s`'s dataset into `into` from byte `at`
+    def read(s: Uvh5File.Slab, from: Long, n: Int, into: Array[Byte], at: Int): Unit = {
+      raf.seek(s.ds.dataAddr + from * s.ds.dtype.size)
+      raf.readFully(into, at, n * s.ds.dtype.size)
+    }
+    st -> { (i: Int, g: Long, n: Int) =>
+      val blt = (t0 + i).toLong * nBls + g
+      for (s <- Seq(a1s, a2s, times) if s != null) read(s, blt, n, s.buf, 0)
+      for (j <- 0 until n) {
+        val (a1, a2) = bls((g + j).toInt)
+        val (x1, x2) = (a1s.bb.getLong(8 * j), a2s.bb.getLong(8 * j))
+        if (x1 != a1 || x2 != a2)
+          throw new CorruptInputException(path,
+            (if (x1 != a1) a1s else a2s).ds.dataAddr + 8 * (blt + j),
+            s"blt ${blt + j} holds baseline ($x1, $x2) where baseline ${g + j} " +
+              s"of integration ${t0 + i} ($a1, $a2) belongs")
+        val s = i * n + j
+        if (times != null) st.jd(s) = times.bb.getDouble(8 * j)
+        val from = (blt + j) * perBlt + c * row
+        if (vis != null) read(vis, from, row, st.vis.array(), 8 * s * row)
+        if (flg != null) read(flg, from, row, st.flag, s * row)
+        if (nsm != null) read(nsm, from, row, st.ns.array(), 4 * s * row)
       }
-      var c = 0
-      while (c < cells) {
-        if (out.visRe != null) out.visRe.putDouble(c, vis.bb.getFloat(8 * c).toDouble)
-        if (out.visIm != null) out.visIm.putDouble(c, vis.bb.getFloat(8 * c + 4).toDouble)
-        if (out.flag != null) out.flag.putBoolean(c, flg.buf(c) != 0)
-        if (out.nsample != null) out.nsample.putDouble(c, nsm.bb.getFloat(4 * c).toDouble)
-        c += 1
-      }
-      cells
     }
   }
 }
 
 object Uvh5File {
   /** Parses the dataset map and the /Header metadata through one handle;
-    * no /Data bytes are touched. */
+    * no /Data bytes are touched. Nfreqs must be a multiple of nfine, or
+    * the open fails typed at nfine. */
   def open(path: String): Uvh5File = {
     val raf = new RandomAccessFile(path, "r")
     try {
@@ -695,8 +711,12 @@ object Uvh5File {
       def scalar(n: String): Long = Hdf5.readLongs(raf, path, header(n), 0, 1)(0)
       val nFreq = scalar("Nfreqs").toInt
       val nPol = scalar("Npols").toInt
-      Uvh5File(path, ds, scalar("obsid"), scalar("Ntimes").toInt,
-        scalar("Nbls").toInt, scalar("nfine").toInt,
+      val nAnts = scalar("Nants_data").toInt
+      val nFine = scalar("nfine").toInt
+      if (nFine <= 0 || nFreq % nFine != 0)
+        throw new CorruptInputException(path, header("nfine").dataAddr,
+          s"Nfreqs $nFreq is not a multiple of nfine $nFine")
+      Uvh5File(path, ds, scalar("obsid"), scalar("Ntimes").toInt, nAnts, nFine,
         Hdf5.readDoubles(raf, path, header("freq_array"), 0, nFreq),
         Hdf5.readLongs(raf, path, header("polarization_array"), 0, nPol)
           .map(Uvh5.PolName).toSeq)
@@ -708,7 +728,7 @@ object Uvh5File {
   def dataset(ds: Map[String, Hdf5.Ds], path: String, name: String): Hdf5.Ds =
     ds.getOrElse(name, throw new CorruptInputException(path, 0L, s"no $name dataset"))
 
-  /** One dataset's chunk buffer, little-endian like the file. */
+  /** One dataset's read buffer, little-endian like the file. */
   final class Slab(val ds: Hdf5.Ds, elems: Int) {
     val buf = new Array[Byte](elems * ds.dtype.size)
     val bb: ByteBuffer = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import graft.SparkSpec
 import graft.mwa.{CorruptInputException, Fits, VisGenerator}
+import org.apache.spark.sql.sources.{EqualTo, LessThan}
 
 /** uvfits (FITS random-groups) source: decode parity with the gpubox
   * decoder, header sizing, time-axis pushdown via group seek, and the AIPS
@@ -40,14 +41,18 @@ class UvfitsSpec extends SparkSpec {
   }
 
   test("time filters prune group-slices at the source (seek, no decode)") {
-    // 17 times, slice 4 -> 5 slices; one file covers all channels
-    assert(loadUvfits().rdd.getNumPartitions == 5)
+    // one split per coarse channel of the one file, over the integrations
+    // the time filters keep: a seek to the first kept group
+    val ranges = VisSourceSpec.ranges(Fits.Uvfits.ensureFixture()) _
+    assert(loadUvfits().rdd.getNumPartitions == 2)
+    assert(ranges(Seq(LessThan("time_idx", 4))) == Seq((0, 0, 4), (1, 0, 4)))
     val pruned = loadUvfits().filter("time_idx < 4")
-    assert(pruned.rdd.getNumPartitions == 1)
+    assert(pruned.rdd.getNumPartitions == 2)
     assert(pruned.count() == 4 * 10 * 16 * 2)
-    // coarse_chan filters stay residual (groups span the freq axis) but
-    // still evaluate correctly row-level
+    // a coarse_chan filter keeps one channel's split
+    assert(ranges(Seq(EqualTo("coarse_chan", 1))) == Seq((1, 0, 17)))
     val chan = loadUvfits().filter("coarse_chan = 1")
+    assert(chan.rdd.getNumPartitions == 1)
     assert(chan.count() == 17 * 10 * 8 * 2)
   }
 

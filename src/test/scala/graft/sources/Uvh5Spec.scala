@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.mwa.{Fits, Hdf5, Uvh5}
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThan}
 
 /** uvh5 (minimal HDF5) source: structural round-trip of the HDF5 subset,
   * decode parity with the gpubox path, and seek-based time pruning. */
@@ -48,9 +49,15 @@ class Uvh5Spec extends SparkSpec {
   }
 
   test("time filters prune blt-slices at the source (contiguous seek)") {
-    assert(loadUvh5().rdd.getNumPartitions == 5) // ceil(17/4)
+    // one split per coarse channel, over the integrations the time filters
+    // keep: one seek per blt row to the channel's contiguous range
+    val ranges = VisSourceSpec.ranges(Uvh5.ensureFixture()) _
+    assert(loadUvh5().rdd.getNumPartitions == 2)
+    assert(ranges(Seq(LessThan("time_idx", 4))) == Seq((0, 0, 4), (1, 0, 4)))
     val pruned = loadUvh5().filter("time_idx < 4")
-    assert(pruned.rdd.getNumPartitions == 1)
+    assert(pruned.rdd.getNumPartitions == 2)
     assert(pruned.count() == 4 * 10 * 16 * 2)
+    assert(ranges(Seq(EqualTo("coarse_chan", 1), GreaterThanOrEqual("time_idx", 15))) ==
+      Seq((1, 15, 17)))
   }
 }

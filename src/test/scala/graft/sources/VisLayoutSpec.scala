@@ -14,19 +14,23 @@ import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** The layout the `graft-vis` scan reports, and the plans Spark builds
-  * from it: gpubox splits, one per file, are key-grouped on (obsid,
-  * coarse_chan) and their rows come in the diff window's order, so the
-  * SSINS diff window and INS aggregate run with no exchange and no sort;
-  * uvfits, uvh5 and the Parquet `VisStore` report nothing, and keep both.
-  * Fixtures as
-  * in [[VisSourceSpec]]: 17 integrations, 4 antennas, 2 coarse x 8 fine
-  * channels, 2 pols. */
+  * from it: splits, one per (file, coarse channel) in every format, are
+  * key-grouped on (obsid, coarse_chan) and their rows come in the diff
+  * window's order, so the SSINS diff window and INS aggregate run with no
+  * exchange and no sort; the Parquet `VisStore` reports nothing, and
+  * keeps both. Fixtures as in [[VisSourceSpec]]: 17 integrations, 4
+  * antennas, 2 coarse x 8 fine channels, 2 pols. */
 class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val cfg = GraftConfig(removeFlaggedAnts = false)
 
   private def load(dir: String) = spark.read.format("graft-vis")
     .option("path", dir).load()
+
+  /** The fixture directory of each format. */
+  private def fixtures: Seq[(String, String)] = Seq(
+    "gpubox" -> Fits.ensureFixture(), "uvfits" -> Fits.Uvfits.ensureFixture(),
+    "uvh5" -> Uvh5.ensureFixture())
 
   private def insOf(vis: DataFrame): DataFrame =
     VisOps.ins(VisOps.diff(VisOps.selectSurface(vis, cfg)))
@@ -51,20 +55,22 @@ class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a gpubox SSINS chain runs from the scan to the INS with no shuffle") {
-    val vis = load(Fits.ensureFixture())
-    assert(scanOf(vis).outputPartitioning.isInstanceOf[KeyGroupedPartitioning])
-    val ins = insOf(vis)
-    assert(shufflesUnderIns(ins) == 0)
-    assert(collect(plan(ins)) { case e: ShuffleExchangeExec => e }.isEmpty)
-    // the match filter's own grouping is the chain's one exchange, above the INS
-    val flags = MatchFilter(ins, cfg)
-    assert(shufflesUnderIns(flags) == 0)
-    assert(collect(plan(flags)) { case e: ShuffleExchangeExec => e }.length == 1)
     // the same cells as the INS of the same rows with no layout reported
     val generated = insOf(VisGenerator.portable(spark, Fits.fixtureSpec))
-    assert(ins.columns.toSeq == generated.columns.toSeq)
-    assert(ins.count() == 16L * 16 * 2) // (nTimes-1) x freqs x pols
-    assert(ins.exceptAll(generated).isEmpty && generated.exceptAll(ins).isEmpty)
+    for ((name, dir) <- fixtures) withClue(name) {
+      val vis = load(dir)
+      assert(scanOf(vis).outputPartitioning.isInstanceOf[KeyGroupedPartitioning])
+      val ins = insOf(vis)
+      assert(shufflesUnderIns(ins) == 0)
+      assert(collect(plan(ins)) { case e: ShuffleExchangeExec => e }.isEmpty)
+      // the match filter's own grouping is the chain's one exchange, above the INS
+      val flags = MatchFilter(ins, cfg)
+      assert(shufflesUnderIns(flags) == 0)
+      assert(collect(plan(flags)) { case e: ShuffleExchangeExec => e }.length == 1)
+      assert(ins.columns.toSeq == generated.columns.toSeq)
+      assert(ins.count() == 16L * 16 * 2) // (nTimes-1) x freqs x pols
+      assert(ins.exceptAll(generated).isEmpty && generated.exceptAll(ins).isEmpty)
+    }
   }
 
   /** The sorts and shuffle exchanges under the diff's window, the one
@@ -79,14 +85,15 @@ class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a gpubox scan reports the diff window's order: no sort and no exchange under it") {
-    val vis = load(Fits.ensureFixture())
-    val ins = insOf(vis)
-    assert(scanOf(ins).outputOrdering.map(_.child.references.head.name) == VisScan.Order)
-    assert(underWindow(ins) == (0, 0))
-    assert(underWindow(MatchFilter(ins, cfg)) == (0, 0))
-    // a projection that lacks an order column reports no order
-    val narrow = load(Fits.ensureFixture()).select("obsid", "coarse_chan", "vis_re")
-    assert(scanOf(narrow).outputOrdering.isEmpty)
+    for ((name, dir) <- fixtures) withClue(name) {
+      val ins = insOf(load(dir))
+      assert(scanOf(ins).outputOrdering.map(_.child.references.head.name) == VisScan.Order)
+      assert(underWindow(ins) == (0, 0))
+      assert(underWindow(MatchFilter(ins, cfg)) == (0, 0))
+      // a projection that lacks an order column reports no order
+      val narrow = load(dir).select("obsid", "coarse_chan", "vis_re")
+      assert(scanOf(narrow).outputOrdering.isEmpty)
+    }
   }
 
   test("two gpubox files of one (obsid, coarse_chan) bring the sort back, with the one-file INS") {
@@ -112,20 +119,22 @@ class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(both.exceptAll(union).isEmpty && union.exceptAll(both).isEmpty)
   }
 
-  test("uvfits, uvh5 and the Parquet VisStore report no layout and keep the exchange") {
+  test("the Parquet VisStore reports no layout and keeps the exchange") {
     val store = tmpDir("graft_vis_layout_store")
     VisStore.write(load(Fits.ensureFixture()), store)
-    val inputs = Seq(
-      "uvfits" -> load(Fits.Uvfits.ensureFixture()),
-      "uvh5" -> load(Uvh5.ensureFixture()),
-      "parquet" -> VisStore.read(spark, store))
-    for ((name, vis) <- inputs) withClue(name) {
-      assert(shufflesUnderIns(insOf(vis)) > 0)
-      assert(underWindow(insOf(vis)) == (1, 1))
-      assert(insOf(vis).count() == 16L * 16 * 2)
-    }
-    for ((name, vis) <- inputs.take(2)) withClue(name) {
-      assert(!scanOf(vis).outputPartitioning.isInstanceOf[KeyGroupedPartitioning])
+    val ins = insOf(VisStore.read(spark, store))
+    assert(shufflesUnderIns(ins) > 0)
+    assert(underWindow(ins) == (1, 1))
+    assert(ins.count() == 16L * 16 * 2)
+  }
+
+  test("a one-channel two-integration uvfits or uvh5 read plans one input partition") {
+    for ((name, dir) <- fixtures.tail) withClue(name) {
+      val read = load(dir).filter(col("coarse_chan") === 1 &&
+        col("time_idx") >= 5 && col("time_idx") < 7)
+      assert(scanOf(read).batch.planInputPartitions().length == 1)
+      assert(read.queryExecution.toRdd.getNumPartitions == 1)
+      assert(read.count() == 2L * 10 * 8 * 2)
     }
   }
 

@@ -19,13 +19,12 @@ import org.apache.spark.sql.types.StructType
   * for the whole band. */
 class VisSourceSpec extends SparkSpec {
 
-  /** `files` is the file count, `perChan` whether coarse_chan can prune. */
-  private case class Input(name: String, ext: String, dir: () => String,
-                           files: Int, perChan: Boolean)
+  /** `files` is the file count. */
+  private case class Input(name: String, ext: String, dir: () => String, files: Int)
   private val inputs = Seq(
-    Input("gpubox fits", ".fits", () => Fits.ensureFixture(), 2, perChan = true),
-    Input("uvfits", ".uvfits", () => Fits.Uvfits.ensureFixture(), 1, perChan = false),
-    Input("uvh5", ".uvh5", () => Uvh5.ensureFixture(), 1, perChan = false))
+    Input("gpubox fits", ".fits", () => Fits.ensureFixture(), 2),
+    Input("uvfits", ".uvfits", () => Fits.Uvfits.ensureFixture(), 1),
+    Input("uvh5", ".uvh5", () => Uvh5.ensureFixture(), 1))
 
   private def load(dir: String) = spark.read.format("graft-vis")
     .option("path", dir).load()
@@ -38,7 +37,7 @@ class VisSourceSpec extends SparkSpec {
     scans.head.output.map(_.name)
   }
 
-  /** The source's own (file, time-slice) partitions for `df`'s one scan,
+  /** The source's own (file, coarse channel) splits for `df`'s one scan,
     * as planned with the filters pushed into it. */
   private def splits(df: org.apache.spark.sql.DataFrame): Int = {
     val scans = df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }
@@ -46,15 +45,14 @@ class VisSourceSpec extends SparkSpec {
     scans.head.batch.planInputPartitions().length
   }
 
-  test("plans one partition per (coarse_chan, time-slice)") {
-    // a gpubox file, one (obsid, coarse_chan) key group, is one split and
-    // one RDD partition; uvfits and uvh5 split per file into ceil(17/4) = 5
-    // time slices
+  test("plans one partition per (file, coarse_chan)") {
+    // every format plans one split per (file, coarse channel): a gpubox
+    // file holds one channel, a uvfits or uvh5 file both; each split is
+    // one (obsid, coarse_chan) key group and one RDD partition
     for (in <- inputs) withClue(in.name) {
       val df = load(in.dir())
-      val parts = if (in.perChan) in.files else in.files * 5
-      assert(splits(df) == parts)
-      assert(df.rdd.getNumPartitions == parts)
+      assert(splits(df) == 2)
+      assert(df.rdd.getNumPartitions == 2)
     }
   }
 
@@ -80,24 +78,21 @@ class VisSourceSpec extends SparkSpec {
     assert(partsWith(LessThan("time_idx", 4), EqualTo("coarse_chan", 1)) == 1)
     assert(partsWith(EqualTo("time_idx", 0)) == 2)
 
-    // end-to-end: every format prunes time slices by seek; only
-    // gpubox prunes coarse channels (uvfits groups and uvh5 blt rows span
-    // the band, so there coarse_chan stays a row-level residual)
+    // end-to-end: every format prunes coarse channels to splits and
+    // integrations by seek inside them, one RDD partition per split
     val perChanRows = 10L * 8 * 2 // baselines x fine x pols
-    // gpubox runs as one RDD partition per surviving file
     for (in <- inputs) withClue(in.name) {
-      def check(f: org.apache.spark.sql.Column, parts: Int, files: Int, rows: Long) = {
+      def check(f: org.apache.spark.sql.Column, parts: Int, rows: Long) = {
         val q = load(in.dir()).filter(f)
         assert(splits(q) == parts)
-        assert(q.rdd.getNumPartitions == (if (in.perChan) files else parts))
+        assert(q.rdd.getNumPartitions == parts)
         assert(q.count() == rows)
       }
-      check(col("time_idx") < 4, in.files, in.files, 4 * 2 * perChanRows)
-      check(col("coarse_chan") === 1, if (in.perChan) 1 else in.files * 5, 1,
-        17 * perChanRows)
-      check(col("time_idx") < 4 && col("coarse_chan") === 1, 1, 1, 4 * perChanRows)
+      check(col("time_idx") < 4, 2, 4 * 2 * perChanRows)
+      check(col("coarse_chan") === 1, 1, 17 * perChanRows)
+      check(col("time_idx") < 4 && col("coarse_chan") === 1, 1, 4 * perChanRows)
     }
-    // a filter inside one slice keeps that slice; Spark drops its other rows
+    // a filter inside one split keeps that split; Spark drops its other rows
     val fine = load(dir).filter(col("time_idx") < 2 && col("coarse_chan") === 1)
     assert(splits(fine) == 1)
     assert(fine.rdd.getNumPartitions == 1)
@@ -170,9 +165,9 @@ class VisSourceSpec extends SparkSpec {
           .toOption.contains(file))
       finally fds.close()
     }
-    // the fixture's geometry cut to one time slice: one partition per
-    // file, so one task reads the whole victim and meets the cut mid-read
-    val spec = Fits.fixtureSpec.copy(nTimes = VisScan.Slice)
+    // one split per (file, coarse channel) over every integration, so a
+    // task reads its channel through the whole victim and meets the cut
+    val spec = Fits.fixtureSpec
     for ((in, dir) <- writeAll("trunc", spec)) withClue(in.name) {
       val files = VisSource.inputs(dir)(in.ext).map(Paths.get(_))
       val victim = files.head.toRealPath()
@@ -361,13 +356,11 @@ class VisSourceSpec extends SparkSpec {
       val dir = Paths.get(tmpDir("graft_uvfits_corrupt_"))
       Files.write(dir.resolve(uvfits.getFileName), patch(Files.readAllBytes(uvfits))).toString
     }
-    // a read of time_idx < 4 is one slice, [0, 4), failing at `first`; a
-    // full read fails in whichever of its 5 slices fails first
-    def check(path: String, reason: String, first: Long, others: Long*): Unit = {
+    // a split is one coarse channel over the kept integrations, so a full
+    // read and a read of time_idx < 4 both fail at the first bad group
+    def check(path: String, reason: String, first: Long): Unit = {
       val dir = Paths.get(path).getParent.toString
-      val c = corruptCause(intercept[Exception](load(dir).count()))
-      assert(c.path == path && (first +: others).contains(c.offset) &&
-        c.getMessage.contains(reason), c.getMessage)
+      checkTyped(path, first, reason)(load(dir).count())
       checkTyped(path, first, reason)(load(dir).filter(col("time_idx") < 4).count())
     }
     // no GROUPS card: refused when the scan is planned, at the primary
@@ -376,21 +369,28 @@ class VisSourceSpec extends SparkSpec {
       (" " * Fits.CardLen).getBytes("US-ASCII").copyToArray(b, at)
       b
     }, "not a FITS random-groups (uvfits) file", 0)
+    // NCOARSE x NFINE frequencies that NAXIS4 does not hold: refused when
+    // the scan is planned, before a split is cut from them
+    check(patched { b =>
+      val at = new String(b, 0, head.dataOffset.toInt, "US-ASCII").indexOf("NCOARSE =")
+      Fits.cardInt("NCOARSE", 3).getBytes("US-ASCII").copyToArray(b, at)
+      b
+    }, "NAXIS4 = 16 frequencies, not NCOARSE x NFINE = 24", 0)
     // group 5 (integration 0) dated integration 3
     check(patched { b =>
       ByteBuffer.wrap(b).putFloat((offset(5) + 16).toInt, (3 * spec.dtDays).toFloat)
       b
     }, s"group 5 has DATE ${(3 * spec.dtDays).toFloat}, not integration 0's", offset(5))
     // baseline-major: group bl * NTIMES + t holds (t, bl), so group 1
-    // holds integration 1 where integration 0 belongs, and each later
-    // slice's first group is misplaced too
+    // holds integration 1 where integration 0 belongs: every split's first
+    // bad group
     check(patched { b =>
       val out = b.clone()
       for (t <- 0 until spec.nTimes; bl <- 0 until nBl)
         System.arraycopy(b, offset(t * nBl + bl).toInt, out,
           offset(bl * spec.nTimes + t).toInt, groupBytes)
       out
-    }, "has DATE", offset(1), (4 until spec.nTimes by VisScan.Slice).map(t => offset(t * nBl)): _*)
+    }, "has DATE", offset(1))
   }
 
   test("a gpubox read seeks to its first integration: an earlier header is never read") {
@@ -459,9 +459,10 @@ class VisSourceSpec extends SparkSpec {
 
   test("chunk boundaries inside an HDU, a group slice and a blt slice lose no row") {
     // 13 antennas (91 baselines) x 46 channels x 2 pols: a gpubox HDU holds
-    // 4186 = 4096 + 90 rows, a uvfits group or uvh5 blt row 92 cells (44
-    // per chunk), a 3-integration slice 25116 rows; then 2080 channels: one
-    // group or blt row holds 4160 = 4096 + 64 cells, split across chunks
+    // 4186 = 4096 + 90 rows, and in every format a split's baseline holds
+    // 3 integrations x 23 fine x 2 pols = 138 cells (29 per chunk); then
+    // 1040 fine channels: one baseline's 4160 = 4096 + 64 cells are split
+    // across chunks
     val geometries = Seq(
       "hdu" -> VisGenerator.Spec(nTimes = 3, nAnts = 13, nCoarse = 2, nFine = 23),
       "split" -> VisGenerator.Spec(nTimes = 2, nAnts = 2, nCoarse = 2, nFine = 1040))
@@ -616,5 +617,56 @@ class VisSourceSpec extends SparkSpec {
     val noVisdata = renamed("visdata")
     checkTyped(noVisdata, 0, "no Data/visdata dataset")(
       load(Paths.get(noVisdata).getParent.toString).select("vis_re").collect())
+    // a split is one coarse channel of nfine frequencies: an nfine that
+    // does not divide Nfreqs fails when the scan is planned, at nfine
+    var nfine = 0L
+    val badNfine = patchedUvh5 { (b, ds) =>
+      nfine = ds("Header/nfine").dataAddr
+      le(b).putLong(nfine.toInt, 3L)
+    }
+    checkTyped(badNfine, nfine, "Nfreqs 16 is not a multiple of nfine 3")(
+      load(Paths.get(badNfine).getParent.toString).count())
+  }
+
+  test("a baseline-major uvh5 fails typed at the first misplaced blt") {
+    val spec = Fits.fixtureSpec
+    val nBl = Fits.Uvfits.nBaselines(spec.nAnts)
+    val nBlts = spec.nTimes * nBl
+    // every per-blt dataset reordered so that blt bl * NTIMES + t holds
+    // (t, bl); the metadata still says time-major
+    val path = patchedUvh5 { (b, ds) =>
+      val intact = b.clone()
+      for (name <- Seq("Header/ant_1_array", "Header/ant_2_array", "Header/time_array",
+                       "Header/integration_time", "Data/visdata", "Data/flags",
+                       "Data/nsamples")) {
+        val d = ds(name)
+        val per = (d.dataLen / nBlts).toInt
+        for (t <- 0 until spec.nTimes; bl <- 0 until nBl)
+          System.arraycopy(intact, (d.dataAddr + per * (t * nBl + bl)).toInt, b,
+            (d.dataAddr + per * (bl * spec.nTimes + t)).toInt, per)
+      }
+    }
+    // blt 1 holds (integration 1, baseline 0) where baseline 1, (0, 1),
+    // belongs: every split's first misplaced blt, whatever the projection
+    val at = datasetsOf(path)("Header/ant_2_array").dataAddr + 8
+    val reason = "blt 1 holds baseline (0, 0) where baseline 1 of integration 0 (0, 1) belongs"
+    val dir = Paths.get(path).getParent.toString
+    checkTyped(path, at, reason)(load(dir).count())
+    checkTyped(path, at, reason)(load(dir).collect())
+    checkTyped(path, at, reason)(load(dir).filter(col("time_idx") === 0).count())
+    checkTyped(path, at, reason)(
+      load(dir).filter(col("time_idx") === 0).select("time_jd", "vis_re").collect())
+  }
+}
+
+object VisSourceSpec {
+  /** (coarse channel, first integration, end integration) of each split
+    * the scan of `dir` plans with the `pushed` filters. */
+  def ranges(dir: String)(pushed: Seq[Filter]): Seq[(Int, Int, Int)] = {
+    val b = new VisScanBuilder(dir)
+    b.pushFilters(pushed.toArray)
+    b.build().toBatch.planInputPartitions().toSeq.map {
+      case p: VisPartition => (p.chan, p.timeStart, p.timeEnd)
+    }
   }
 }

@@ -25,6 +25,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
     ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.GroupTopKStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.SeriesDiffStrategy)
     // bytes-aware exchange sizing (round-16): per-exchange partition counts
     // derived from plan statistics — the engine-behavior answer to the r15
     // sf10 partition-sizing experiment (BENCH_sf10.json), at the

@@ -3,21 +3,23 @@ package graft.mwa
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.SeriesDiff
 
 /** The visibility-processing surface: select filters (F1-F8), the
   * sky-subtraction diff (W1), the incoherent noise spectrum reduction (G6)
   * and the mean-subtracted z-score (W2).
   *
-  * Scale design: the diff window W1 partitions by (obsid, coarse_chan,
-  * ant1, ant2, pol) and orders by (freq_hz, time_idx); the INS groupBy keys
-  * on (obsid, coarse_chan, time, freq, pol). coarse_chan is a function of
+  * Scale design: the diff W1 is one pass of [[graft.plans.SeriesDiff]],
+  * clustered by (obsid, coarse_chan, ant1, ant2, pol) and ordered by
+  * (freq_hz, time_idx), with no window buffer; the INS groupBy keys on
+  * (obsid, coarse_chan, time, freq, pol). coarse_chan is a function of
   * freq_hz, so neither extra key changes a result, but both let Spark use
   * the layout a source reports. The `graft-vis` scan plans one split per
   * (file, coarse channel) in every format (a gpubox file holds one
   * (obsid, coarse_chan), SURVEY §1.3; a uvfits or uvh5 file all of an
   * observation's), reports its splits key-grouped on those two columns,
   * and each split's rows in W1's order. So on raw input W1 and the INS run
-  * in the scan's tasks with no exchange and no sort: scan, filter, window,
+  * in the scan's tasks with no exchange and no sort: scan, filter, diff,
   * then the partial and final aggregates. Two files of one (obsid,
   * coarse_chan) bring the sort back (Spark drops a reported order when a
   * key group holds more than one split). Over the Parquet `VisStore` or a
@@ -70,27 +72,25 @@ object VisOps {
     * is dropped. Cancels the static sky; noise + transient RFI remain.
     * (`diff` read option, `configurators.py:66`; executed in SSINS.)
     *
-    * The window holds one (baseline, pol)'s rows, ordered by (freq_hz,
-    * time_idx): a row's successor there is the next time of its own series
-    * unless it is the series' last, where the successor's freq_hz differs
-    * (or there is none). freq_hz is an order key, not a partition key,
-    * because Spark normalizes a floating-point partition key and no order a
-    * source reports can then satisfy the window's sort. */
+    * One pass of [[graft.plans.SeriesDiff]] over one (baseline, pol)'s
+    * rows, ordered by (freq_hz, time_idx): a row pairs with the next row
+    * when that row has the same freq_hz under SQL `=` (so NaN pairs with
+    * NaN, -0.0 with 0.0, and a null never pairs), which is the next time
+    * of its own series unless it is the series' last. Null operands give
+    * null, as SQL arithmetic and `OR` do. freq_hz is an order key, not a
+    * clustering key, because Spark normalizes a floating-point clustering
+    * key and no order a source reports can then satisfy the diff's sort. */
   def diff(vis: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("obsid"), col("coarse_chan"), col("ant1"),
-      col("ant2"), col("pol")).orderBy(col("freq_hz"), col("time_idx"))
-    vis
-      .withColumn("__f2", lead(col("freq_hz"), 1).over(w))
-      .withColumn("__re2", lead(col("vis_re"), 1).over(w))
-      .withColumn("__im2", lead(col("vis_im"), 1).over(w))
-      .withColumn("__fl2", lead(col("flag"), 1).over(w))
-      .withColumn("__ns2", lead(col("nsample"), 1).over(w))
-      .filter(col("__f2") === col("freq_hz"))
-      .withColumn("vis_re", col("__re2") - col("vis_re"))
-      .withColumn("vis_im", col("__im2") - col("vis_im"))
-      .withColumn("flag", col("flag") || col("__fl2"))
-      .withColumn("nsample", (col("nsample") + col("__ns2")) / 2)
-      .drop("__f2", "__re2", "__im2", "__fl2", "__ns2")
+    def next(c: String): Column = SeriesDiff.successor(col(c))
+    SeriesDiff(vis,
+      keys = Seq("obsid", "coarse_chan", "ant1", "ant2", "pol").map(col),
+      order = Seq(col("freq_hz"), col("time_idx")),
+      pairs = next("freq_hz") === col("freq_hz"),
+      diffed = Seq(
+        (next("vis_re") - col("vis_re")).as("vis_re"),
+        (next("vis_im") - col("vis_im")).as("vis_im"),
+        (col("flag") || next("flag")).as("flag"),
+        ((col("nsample") + next("nsample")) / 2).as("nsample")))
   }
 
   /** G6 — Incoherent Noise Spectrum: mean over unflagged baselines of |V|

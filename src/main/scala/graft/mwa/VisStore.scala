@@ -10,12 +10,12 @@ import org.apache.spark.sql.functions._
   * Why this layout at 100 TB:
   *  - observation- and channel-scoped queries prune whole directories
   *    (PartitionFilters, zero I/O for untouched channels);
-  *  - the diff window W1 partitions by (obsid, coarse_chan, ant1, ant2,
-  *    pol) and orders by (freq_hz, time_idx). A Parquet scan reports no
-  *    layout, so here W1 still hash-shuffles and sorts every visibility,
-  *    and the INS shuffles its partial aggregates; only the raw gpubox
-  *    scan (`graft-vis`) reports its (obsid, coarse_chan) key groups and
-  *    its rows in W1's order, and runs both with no exchange and no sort;
+  *  - the diff W1 clusters by (obsid, coarse_chan, ant1, ant2, pol) and
+  *    orders by (freq_hz, time_idx). A Parquet scan reports no layout, so
+  *    here W1 still hash-shuffles and sorts every visibility, and the INS
+  *    shuffles its partial aggregates; only the raw-file scan
+  *    (`graft-vis`) reports its (obsid, coarse_chan) key groups and its
+  *    rows in W1's order, and runs both with no exchange and no sort;
   *  - time-slice predicates (F7) ride Parquet row-group stats on time_idx
   *    within each partition file.
   */

@@ -184,7 +184,7 @@ object MwaQueries {
   /** Scale demonstration: the full SSINS chain on a ~5M-row generated
     * observation (24 times x 16 ants (136 baselines) x 12 chans x 32 fine
     * x 4 pols). Exercises generation parallelism, the channel-partitioned
-    * diff window and the early INS reduction at bench scale. */
+    * diff and the early INS reduction at bench scale. */
   private[queries] val mwa06 = QueryDef("mwa06_spectrum_big",
     (s, d) => {
       import graft.mwa._

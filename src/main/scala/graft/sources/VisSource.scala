@@ -38,8 +38,8 @@ import graft.mwa.{CorruptInputException, Fits, Hdf5, Uvh5, VisGenerator}
   * metadata-only time scan, S3) fill, and read, only the columns they
   * need. It also reports its layout, (obsid, coarse_chan) key groups
   * (see [[VisScan.outputPartitioning]]), and each split's row order, the
-  * SSINS diff window's (see [[VisScan.outputOrdering]]), so the diff
-  * window and INS aggregate run with no shuffle and no sort.
+  * SSINS diff's (see [[VisScan.outputOrdering]]), so the diff and INS
+  * aggregate run with no shuffle and no sort.
   */
 class VisSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-vis"
@@ -173,8 +173,8 @@ class MsNotSupportedException(msg: String)
     extends UnsupportedOperationException(msg)
 
 object VisScan {
-  /** The order of a split's rows: the diff window's partition keys, then
-    * its order keys (`VisOps.diff`). */
+  /** The order of a split's rows: the diff's clustering keys, then its
+    * order keys (`VisOps.diff`). */
   val Order: Seq[String] =
     Seq("obsid", "coarse_chan", "ant1", "ant2", "pol", "freq_hz", "time_idx")
 

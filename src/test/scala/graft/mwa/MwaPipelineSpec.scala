@@ -1,11 +1,13 @@
 package graft.mwa
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Golden tests for the MWA chain: diff (W1), INS (G6), z-score (W2) and
   * the match filter (§2.8), against generator-planted RFI. */
-class MwaPipelineSpec extends SparkSpec {
+class MwaPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val spec = VisGenerator.Spec(nTimes = 16, nAnts = 6, nCoarse = 2,
     nFine = 8, pols = Seq("XX", "YY"))
@@ -53,6 +55,74 @@ class MwaPipelineSpec extends SparkSpec {
     assert(d.count() == vis.count() - series)
     val bridged = d.filter(inSeries).select("time_idx").collect().map(_.getInt(0))
     assert(bridged.sorted.toSeq == (0 until spec.nTimes - 1).filter(_ != 5))
+  }
+
+  test("the one-pass diff equals the five-lead window: nulls, NaN, -0.0, one-row series") {
+    import spark.implicits._
+    val fine = ((col("freq_hz") - spec.freq0Hz) / spec.dfHz).cast("int")
+    val t = col("time_idx")
+    def baseline(a1: Int, a2: Int) = col("ant1") === a1 && col("ant2") === a2
+    def nullWhen(c: String, cond: org.apache.spark.sql.Column) =
+      when(cond, lit(null)).otherwise(col(c))
+    val base = VisGenerator.vis(spark, spec)
+      .withColumn("vis_re", nullWhen("vis_re", (t + col("ant1") * 3 + fine) % 7 === 3))
+      .withColumn("vis_im", nullWhen("vis_im", (t * 5 + col("ant2") + fine) % 11 === 4))
+      .withColumn("flag", nullWhen("flag", (t + col("ant2") * 2 + fine) % 9 === 2))
+      .withColumn("nsample", nullWhen("nsample", (t * 3 + col("ant1") + fine) % 13 === 6))
+      // a null freq_hz inside a series, a NaN series, and a series whose
+      // first half is -0.0 Hz and second half 0.0 Hz (SQL = pairs them)
+      .withColumn("freq_hz", when(baseline(0, 1) && fine === 2 && t % 4 === 1, lit(null))
+        .when(baseline(0, 2) && fine === 3, lit(Double.NaN))
+        .when(baseline(1, 2) && fine === 0 && t < spec.nTimes / 2, lit(-0.0))
+        .when(baseline(1, 2) && fine === 0, lit(0.0))
+        .otherwise(col("freq_hz")))
+    // one-row series: a baseline of its own, and a frequency of its own in
+    // a baseline that has other series
+    val single = Seq(
+      (spec.obsid, 0, 2460000.5, 7, 7, 77L, 0, spec.freq0Hz, "XX", 1.0, 2.0, false, 1.0),
+      (spec.obsid, 3, 2460000.5, 2, 3, 23L, 0, 1.0, "XX", 1.0, 2.0, true, 1.0))
+      .toDF(base.columns: _*)
+    val vis = base.unionByName(single)
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    // the fused (whole-stage codegen) pass and the row-iterator pass
+    try for (codegen <- Seq("true", "false")) withClue(s"codegen $codegen: ") {
+      spark.conf.set("spark.sql.codegen.wholeStage", codegen)
+      val d = VisOps.diff(vis)
+      val oracle = MwaPipelineSpec.windowDiff(vis)
+      assert(d.schema == oracle.schema)
+      def same(a: DataFrame, b: DataFrame) = {
+        assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+        // exceptAll groups -0.0 with 0.0; the strings tell them apart
+        assert(a.collect().map(_.toString).sorted.toSeq == b.collect().map(_.toString).sorted.toSeq)
+      }
+      same(d, oracle)
+      val fused = collect(d.queryExecution.executedPlan) {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec
+          if w.child.exists(_.isInstanceOf[graft.plans.SeriesDiffExec]) => w
+      }
+      assert(fused.nonEmpty == codegen.toBoolean)
+      // the data reach each case: -0.0 Hz pairs with 0.0 Hz, NaN with NaN
+      assert(d.filter(col("freq_hz") === 0.0).count() == (spec.nTimes - 1L) * spec.pols.size)
+      assert(d.filter(col("freq_hz").isNaN).count() == (spec.nTimes - 1L) * spec.pols.size)
+      for (c <- Seq("vis_re", "vis_im", "flag", "nsample"))
+        assert(!d.filter(col(c).isNull).isEmpty, c)
+      // the exchange's 64 partitions coalesce, so a task diffs many series
+      val coalesced = {
+        d.collect()
+        collect(d.queryExecution.executedPlan) {
+          case r: org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
+            if r.hasCoalescedPartition => r
+        }
+      }
+      assert(coalesced.nonEmpty)
+      // a filter above the diff reads the diffed columns, not the inputs
+      for (f <- Seq(col("vis_re") > 0, col("flag"), col("nsample").isNull))
+        withClue(f) { same(d.filter(f), oracle.filter(f)) }
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", saved)
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
   }
 
   test("INS reduces to (time, freq, pol) cells with baseline counts") {
@@ -260,5 +330,28 @@ class MwaPipelineSpec extends SparkSpec {
     val n0 = ants.filter(col("ant") === 0).select("north_m").head.getDouble(0)
     assert(java.lang.Double.doubleToRawLongBits(n0) == 0L,
       s"north_m(0) must be +0.0, got bits ${java.lang.Double.doubleToRawLongBits(n0)}")
+  }
+}
+
+object MwaPipelineSpec {
+
+  /** The diff as a window of five `lead`s, the form `VisOps.diff` took
+    * before its one-pass operator: the oracle it must equal. */
+  def windowDiff(vis: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("obsid"),
+      col("coarse_chan"), col("ant1"), col("ant2"), col("pol"))
+      .orderBy(col("freq_hz"), col("time_idx"))
+    vis
+      .withColumn("__f2", lead(col("freq_hz"), 1).over(w))
+      .withColumn("__re2", lead(col("vis_re"), 1).over(w))
+      .withColumn("__im2", lead(col("vis_im"), 1).over(w))
+      .withColumn("__fl2", lead(col("flag"), 1).over(w))
+      .withColumn("__ns2", lead(col("nsample"), 1).over(w))
+      .filter(col("__f2") === col("freq_hz"))
+      .withColumn("vis_re", col("__re2") - col("vis_re"))
+      .withColumn("vis_im", col("__im2") - col("vis_im"))
+      .withColumn("flag", col("flag") || col("__fl2"))
+      .withColumn("nsample", (col("nsample") + col("__ns2")) / 2)
+      .drop("__f2", "__re2", "__im2", "__fl2", "__ns2")
   }
 }

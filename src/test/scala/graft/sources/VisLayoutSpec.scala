@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import graft.SparkSpec
 import graft.mwa.{Fits, GraftConfig, MatchFilter, Uvh5, VisGenerator, VisOps, VisStore}
+import graft.plans.SeriesDiffExec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.{KeyGroupedPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
@@ -15,9 +16,9 @@ import org.apache.spark.sql.functions._
 
 /** The layout the `graft-vis` scan reports, and the plans Spark builds
   * from it: splits, one per (file, coarse channel) in every format, are
-  * key-grouped on (obsid, coarse_chan) and their rows come in the diff
-  * window's order, so the SSINS diff window and INS aggregate run with no
-  * exchange and no sort; the Parquet `VisStore` reports nothing, and
+  * key-grouped on (obsid, coarse_chan) and their rows come in the diff's
+  * order, so the SSINS diff and INS aggregate run with no exchange and no
+  * sort; the Parquet `VisStore` reports nothing, and
   * keeps both. Fixtures as in [[VisSourceSpec]]: 17 integrations, 4
   * antennas, 2 coarse x 8 fine channels, 2 pols. */
 class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
@@ -73,23 +74,24 @@ class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  /** The sorts and shuffle exchanges under the diff's window, the one
-    * partitioned by antenna. */
-  private def underWindow(df: DataFrame): (Int, Int) = {
-    val windows = collect(plan(df)) {
-      case w: WindowExec if w.partitionSpec.exists(_.references.exists(_.name == "ant1")) => w
-    }
-    assert(windows.length == 1)
-    (collect(windows.head.child) { case s: SortExec => s }.length,
-      collect(windows.head.child) { case e: ShuffleExchangeExec => e }.length)
+  /** The sorts and shuffle exchanges under the diff, and that no window
+    * runs between the scan and the INS: the only window left in the chain
+    * is the match filter's z-score, above the INS aggregates. */
+  private def underDiff(df: DataFrame): (Int, Int) = {
+    val diffs = collect(plan(df)) { case d: SeriesDiffExec => d }
+    assert(diffs.length == 1)
+    assert(collect(diffs.head) { case w: WindowExec => w }.isEmpty)
+    (collect(diffs.head.child) { case s: SortExec => s }.length,
+      collect(diffs.head.child) { case e: ShuffleExchangeExec => e }.length)
   }
 
   test("a gpubox scan reports the diff window's order: no sort and no exchange under it") {
     for ((name, dir) <- fixtures) withClue(name) {
       val ins = insOf(load(dir))
       assert(scanOf(ins).outputOrdering.map(_.child.references.head.name) == VisScan.Order)
-      assert(underWindow(ins) == (0, 0))
-      assert(underWindow(MatchFilter(ins, cfg)) == (0, 0))
+      assert(collect(plan(ins)) { case w: WindowExec => w }.isEmpty)
+      assert(underDiff(ins) == (0, 0))
+      assert(underDiff(MatchFilter(ins, cfg)) == (0, 0))
       // a projection that lacks an order column reports no order
       val narrow = load(dir).select("obsid", "coarse_chan", "vis_re")
       assert(scanOf(narrow).outputOrdering.isEmpty)
@@ -109,11 +111,11 @@ class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       dir.toString
     }
     val both = insOf(load(bothDir.toString))
-    assert(underWindow(both) == (1, 0))
+    assert(underDiff(both) == (1, 0))
     // each INS cell is one pol's, from one file, so it equals that file's
     // own INS, planned with no sort
     val oneFile = halves.map(d => insOf(load(d)))
-    oneFile.foreach(ins => assert(underWindow(ins) == (0, 0)))
+    oneFile.foreach(ins => assert(underDiff(ins) == (0, 0)))
     val union = oneFile.reduce(_ unionByName _)
     assert(both.count() == 16L * 16 * 4)
     assert(both.exceptAll(union).isEmpty && union.exceptAll(both).isEmpty)
@@ -124,7 +126,7 @@ class VisLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     VisStore.write(load(Fits.ensureFixture()), store)
     val ins = insOf(VisStore.read(spark, store))
     assert(shufflesUnderIns(ins) > 0)
-    assert(underWindow(ins) == (1, 1))
+    assert(underDiff(ins) == (1, 1))
     assert(ins.count() == 16L * 16 * 2)
   }
 

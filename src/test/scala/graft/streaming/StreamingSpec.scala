@@ -432,6 +432,22 @@ class StreamingSpec extends SparkSpec {
       col("s.nsamples") =!= col("b.nsamples")).count() == 0)
   }
 
+  test("the diff over a stream fails at analysis, with the window's error class") {
+    val tmp = tmpDir("graft_vis_stream_diff")
+    VisGenerator.vis(spark, VisGenerator.Spec(nTimes = 4, nAnts = 3, nCoarse = 1, nFine = 2))
+      .write.mode("overwrite").parquet(tmp)
+    def condition(diff: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+      intercept[org.apache.spark.sql.AnalysisException] {
+        diff(VisStreams.visStream(spark, tmp)).writeStream.format("noop").start().stop()
+      }.getCondition
+    // the form the diff took before its one-pass operator, which Structured
+    // Streaming's checker refuses; the operator must refuse it too, not
+    // diff each micro-batch on its own
+    assert(condition(graft.mwa.MwaPipelineSpec.windowDiff) ==
+      "NON_TIME_WINDOW_NOT_SUPPORTED_IN_STREAMING")
+    assert(condition(VisOps.diff) == "NON_TIME_WINDOW_NOT_SUPPORTED_IN_STREAMING")
+  }
+
   test("processor registry + metadata-only pass + batch plan") {
     val tmp = tmpDir("graft_proc")
     val spec = VisGenerator.Spec(nTimes = 12, nAnts = 4, nCoarse = 2, nFine = 4)
